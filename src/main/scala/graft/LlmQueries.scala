@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Queries.{QFn, Spec}
 import graft.functions.PolyHash.polyhash
+import graft.engine.Pins
 import graft.llm.{Dedup, Multimodal, Similarity, Text}
 
 /** LLM-data-pipeline query registry: dedup (exact / MinHash-LSH / SimHash /
@@ -205,17 +206,17 @@ object LlmQueries {
     * nearDupEmb fixture discipline. */
   private def nearDupPairs(s: SparkSession, d: String): DataFrame =
     fixtureMemo.getOrElseUpdate((s, d, "nearDupPairs"),
-      Dedup.minhashCandidates(nearDupCorpus(s, d), "doc_id", "text",
+      Pins.pin(Dedup.minhashCandidates(nearDupCorpus(s, d), "doc_id", "text",
         shingleWidth = 3, k = 16, bands = 4, minEstJaccard = 0.25,
-        maxBucket = 1000).localCheckpoint(true))
+        maxBucket = 1000)))
 
   /** Session-memoized connected components over [[nearDupPairs]] —
     * the iterative pointer-jumping pass is the expensive half of the
     * q69/q81/q139/q249 chain; ONE materialization serves all four. */
   private def nearDupClusters(s: SparkSession, d: String): DataFrame =
     fixtureMemo.getOrElseUpdate((s, d, "nearDupClusters"),
-      Dedup.duplicateClusters(nearDupPairs(s, d), "doc_a", "doc_b")
-        .localCheckpoint(true))
+      Pins.pin(
+        Dedup.duplicateClusters(nearDupPairs(s, d), "doc_a", "doc_b")))
 
   /** Exact dedup over the dup-injected corpus. */
   private val l6 = Spec("q55_dedup_exact",
@@ -499,7 +500,7 @@ object LlmQueries {
     * `llm/Shaping.scala`): a Verify/Bench run drives every query through
     * ONE SparkSession, and several queries stage the same derived frame
     * — rebuilding it per query re-scans and re-shuffles identically.
-    * `localCheckpoint(eager)` pins the result once; values (and thus
+    * `Pins.pin` materializes the result once; values (and thus
     * gate hashes) are unchanged, only lineage is truncated.
     */
   private val fixtureMemo = scala.collection.concurrent.TrieMap
@@ -516,7 +517,7 @@ object LlmQueries {
           concat(array(element_at(col("embedding"), 1) + lit(0.25d)),
             slice(col("embedding"), lit(2), size(col("embedding")) - 1))
             .as("embedding"))
-      emb.unionByName(exact).unionByName(pert).localCheckpoint(true)
+      Pins.pin(emb.unionByName(exact).unionByName(pert))
     })
 
   /** The q129/q230 shared PQ codebook (m=2 subspaces over the label
@@ -524,8 +525,8 @@ object LlmQueries {
     */
   private def pqLabelCodebooks(s: SparkSession, d: String): DataFrame =
     fixtureMemo.getOrElseUpdate((s, d, "pqCodebooks"),
-      Similarity.pqCodebooks(T(s, d, "embeddings"), "embedding", "label",
-        m = 2, dim = 64).localCheckpoint(true))
+      Pins.pin(Similarity.pqCodebooks(T(s, d, "embeddings"), "embedding",
+        "label", m = 2, dim = 64)))
   private val nearDupEmbSql =
     """SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
          FROM embeddings
@@ -6688,19 +6689,19 @@ object LlmQueries {
   private def dbscanNbrs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     fixtureMemo.getOrElseUpdate((s, d, "dbscanNbrs"), {
-      val raw = graft.llm.Density.epsNeighborPairs(embedLattice2d(s, d),
-        "vec_id", "x", "y", epsMicro = 25000L).localCheckpoint(true)
-      // size the shared checkpoint from its TRUE materialized bytes
+      val raw = Pins.pin(graft.llm.Density.epsNeighborPairs(
+        embedLattice2d(s, d), "vec_id", "x", "y", epsMicro = 25000L))
+      // size the shared pin from its TRUE materialized bytes
       // (r14, the loopParts discipline): the 9-cell join leaves the pair
       // frame at the join's partition count (measured 128 at sf0.1 for a
       // ~1 MB frame), and both density queries then pay that task count
       // in EVERY reader stage. Keyed on `a` so the neighbor-count
       // aggregates read it pre-partitioned. At scale loopParts clamps to
       // the session constant and the frame is left exactly as built.
-      val n = graft.engine.Relational.loopParts(raw)
+      val n = Pins.loopParts(raw)
       if (n < raw.rdd.getNumPartitions) {
-        val sized = raw.repartition(n, col("a")).localCheckpoint(true)
-        graft.engine.Relational.releaseCheckpoint(raw)
+        val sized = Pins.pin(raw.repartition(n, col("a")))
+        Pins.release(raw)
         sized
       } else raw
     })
@@ -7874,8 +7875,7 @@ object LlmQueries {
   private def raterFrame(s: SparkSession, d: String, minFull: Int,
       minHead: Int, minTail: Int): DataFrame =
     raterMemo.getOrElseUpdate((s, d, minFull, minHead, minTail),
-      raterFrameBuild(s, d, minFull, minHead, minTail)
-        .localCheckpoint(true))
+      Pins.pin(raterFrameBuild(s, d, minFull, minHead, minTail)))
 
   private def raterFrameBuild(s: SparkSession, d: String, minFull: Int,
       minHead: Int, minTail: Int): DataFrame = {

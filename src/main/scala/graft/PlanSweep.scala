@@ -31,11 +31,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    calendar-grain frames whose cardinality is bounded by construction,
   *    each with the reason recorded here).
   *
-  * Because most operators `localCheckpoint(eager = true)` their output,
-  * the interesting window/join nodes execute DURING query construction
-  * and vanish from the final plan (the checkpoint re-reads an RDD scan).
-  * The sweep therefore registers a [[QueryExecutionListener]] and audits
-  * every interior `QueryExecution` the build triggers (checkpoints,
+  * Because most operators `Pins.pin` their output (an eager local
+  * checkpoint), the interesting window/join nodes execute DURING query
+  * construction and vanish from the final plan (the pin re-reads an
+  * RDD scan). The sweep therefore registers a [[QueryExecutionListener]]
+  * and audits every interior `QueryExecution` the build triggers (pins,
   * driver-loop collects), not just the returned frame's plan.
   *
   * Usage: `runMain graft.PlanSweep <sfDir>`

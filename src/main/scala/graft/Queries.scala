@@ -2118,8 +2118,8 @@ object Queries {
   /** Session-memoized paired price-cents ECDF frame (split = order-key
     * third, reference s0): the expensive shared half of the KS (q193)
     * and Wasserstein (q306) drift reports — one `ecdfPaired`
-    * materialization serves both (already localCheckpoint'd by the
-    * builder, so the memo only prevents the rebuild). */
+    * materialization serves both (already pinned by the builder, so the
+    * memo only prevents the rebuild). */
   private[graft] def pricePairedEcdf(s: SparkSession, d: String): DataFrame =
     graphMemo.getOrElseUpdate((s, d, "pricePairedEcdf"),
       graft.engine.Relational.ecdfPaired(
@@ -2136,11 +2136,11 @@ object Queries {
           T(s, d, "lineitem").filter(col("l_partkey") % 3 === 0)
         else T(s, d, "lineitem"))
         .select(col("l_orderkey").as("o"), col("l_partkey"))
-      li.select(col("o"), col("l_partkey").as("pa"))
+      Pins.pin(li.select(col("o"), col("l_partkey").as("pa"))
         .join(li.select(col("o"), col("l_partkey").as("pb")), "o")
         .filter(col("pa") < col("pb"))
         .select(col("pa"), col("pb"))
-        .distinct().localCheckpoint(true)
+        .distinct())
     })
 
   /** Session-memoized per-edge triangle support of the (mod-filtered)
@@ -2161,13 +2161,13 @@ object Queries {
     * duplicate-edge-insensitive, so the distinct here changes nothing
     * observable — it only lets ONE join serve both iterative queries. */
   private[graft] def shipmentEdges(s: SparkSession, d: String): DataFrame =
-    graphMemo.getOrElseUpdate((s, d, "shipmentEdges"),
+    graphMemo.getOrElseUpdate((s, d, "shipmentEdges"), Pins.pin(
       T(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
         .join(T(s, d, "orders").select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select(concat(lit("s"), col("l_suppkey").cast("string")).as("src"),
           concat(lit("c"), col("o_custkey").cast("string")).as("dst"))
-        .distinct().localCheckpoint(true))
+        .distinct()))
 
   /** OP-MISC-11 — per-node triangle counts over the co-purchase part
     * graph (degree-oriented enumeration; the oracle enumerates the same
@@ -3511,13 +3511,13 @@ object Queries {
     * the shared cell frame of the spatial-statistics pair q401/q402. */
   private[graft] def quantityGridCells(s: SparkSession,
       d: String): DataFrame =
-    graphMemo.getOrElseUpdate((s, d, "quantityGridCells"),
+    graphMemo.getOrElseUpdate((s, d, "quantityGridCells"), Pins.pin(
       T(s, d, "lineitem")
         .select((col("l_partkey") % 40).as("__gx"),
           (col("l_suppkey") % 40).as("__gy"),
           col("l_quantity").cast("long").as("__q"))
         .groupBy(col("__gx"), col("__gy"))
-        .agg(sum(col("__q")).as("__x")).localCheckpoint(true))
+        .agg(sum(col("__q")).as("__x"))))
 
   /** Session-memoized DIRECTED queen-neighbor pair frame of that grid
     * (`(center gx, gy, xi) × (neighbor xj)`, 8-bounded per cell): the
@@ -3535,11 +3535,10 @@ object Queries {
           struct(lit(dx).as("dx"), lit(dy).as("dy")) }: _*)))
         .withColumn("__nx", col("__gx") + col("__o.dx"))
         .withColumn("__ny", col("__gy") + col("__o.dy"))
-      withOff.join(cells.select(col("__gx").as("__nx"),
+      Pins.pin(withOff.join(cells.select(col("__gx").as("__nx"),
           col("__gy").as("__ny"), col("__x").as("__xj")),
           Seq("__nx", "__ny"))
-        .select(col("__gx"), col("__gy"), col("__xi"), col("__xj"))
-        .localCheckpoint(true)
+        .select(col("__gx"), col("__gy"), col("__xi"), col("__xj")))
     })
 
   /** Shared DuckDB fragment for the grid + queen-neighbor pairs. */

@@ -29,7 +29,7 @@ object Graph {
     * round for no ordering change).
     *
     * Scale shape: the edge list is joined to the degree frame ONCE
-    * up-front (one shuffle on src) and PERSISTED together with the node
+    * up-front (one shuffle on src) and PINNED together with the node
     * list — every round's plan embeds the previous rounds' lineage, so
     * without the cache the edge derivation (often a join + distinct over
     * the fact tables) re-executes once per round per ancestor
@@ -37,34 +37,31 @@ object Graph {
     * sf0.1). Each round is then one src-keyed join (rank is node-grain)
     * + one dst-keyed aggregate — the minimal two-exchange round a
     * synchronous push model admits. The final rank is materialized with
-    * an eager localCheckpoint so both caches can be RELEASED before
-    * returning (same persist-once/checkpoint/release discipline as
-    * `Dedup.fuzzyDuplicates`); it also truncates the iters-deep lineage
-    * for whatever runs downstream.
+    * a scoped pin (docs/SCALE.md "Caching policy"), which also
+    * truncates the iters-deep lineage for whatever runs downstream.
     */
   def pageRankPpm(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, dampPct: Int = 85): DataFrame = {
+      iters: Int, dampPct: Int = 85): DataFrame = Pins.scoped { s =>
     require(iters >= 1, "need at least one round")
     require(dampPct >= 0 && dampPct <= 100, "dampPct is a percentage")
     // e is read four times just to BUILD the two loop frames (src/dst
-    // union for nodes, edge+degree for withDeg) — cache it through the
-    // build, released with the rest
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().persist()
-    // both loop-invariant frames are persisted ALREADY PARTITIONED AND
-    // SORTED on their join keys (r13: cached plans preserve output
-    // ordering, so every round's sort-merge join skips re-sorting the
+    // union for nodes, edge+degree for withDeg)
+    val e = s.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .distinct())
+    // both loop-invariant frames are pinned ALREADY PARTITIONED AND
+    // SORTED on their join keys (r13: pins keep output ordering, so
+    // every round's sort-merge join skips re-sorting the
     // big side — previously each round re-sorted the edge frame; guide
     // §2.4 "establish the partitioning once"), at the DATA-derived
-    // partition count (r14, Relational.loopParts: the cache's count is
+    // partition count (r14, Pins.loopParts: the pin's count is
     // the per-round task count — AQE cannot coalesce an exchange that
-    // must co-partition with a cached frame, and rounds × sessionParts
+    // must co-partition with a pinned frame, and rounds × sessionParts
     // near-empty tasks was the measured bulk of this family at sf0.1).
-    val np = Relational.loopParts(e)
-    val nodes = Relational.loopCache(
+    val np = Pins.loopParts(e)
+    val nodes = s.loopCache(
       e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
       "id", np, skipIfSession = true)
-    val withDeg = Relational.loopCache(e.join(
+    val withDeg = s.loopCache(e.join(
       e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"), "src", np)
     val base = (100L - dampPct) * 10000L
     var rank = nodes.withColumn("rank", lit(1000000L))
@@ -78,11 +75,7 @@ object Graph {
           expr(s"($dampPct * coalesce(__s, CAST(0 AS BIGINT))) DIV 100"))
           .as("rank"))
     }
-    val out = rank.localCheckpoint(true)
-    withDeg.unpersist(false)
-    nodes.unpersist(false)
-    e.unpersist(false)
-    out
+    rank
   }
 
   /** Katz centrality in exact integer ppm (Katz 1953): attenuated walk
@@ -105,18 +98,18 @@ object Graph {
     * beats `attenDiv`. Output: `(id, katz)` for every node.
     *
     * Scale: the [[pageRankPpm]] loop shape minus the degree join —
-    * loop-invariant edge frame persisted pre-partitioned on src, one
+    * loop-invariant edge frame pinned pre-partitioned on src, one
     * inflow aggregate per round; the convergence check is one 1-row
-    * driver read of the persisted edge frame (the timeBounds class).
+    * driver read of the pinned edge frame (the timeBounds class).
     */
   def katzCentralityPpm(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, attenDiv: Int = 8): DataFrame = {
+      iters: Int, attenDiv: Int = 8): DataFrame = Pins.scoped { s =>
     require(iters >= 1, "need at least one round")
     require(attenDiv >= 2, "attenuation divisor must be >= 2")
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
-    val np = Relational.loopParts(e0)
-    val e = Relational.loopCache(e0, "src", np)
+    val np = Pins.loopParts(e0)
+    val e = s.loopCache(e0, "src", np)
     val maxInDeg = e.groupBy(col("dst")).agg(count(lit(1)).as("__d"))
       .agg(max(col("__d"))).collect().headOption
       .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
@@ -126,7 +119,7 @@ object Graph {
         s"$maxInDeg >= attenDiv $attenDiv - the attenuated-walk series " +
         s"DIVERGES; the output is the iters=$iters truncated partial " +
         "sum (exact), not a converged centrality")
-    val nodes = Relational.loopCache(
+    val nodes = s.loopCache(
       e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
       "id", np, skipIfSession = true)
     var x = nodes.withColumn("katz", lit(1000000L))
@@ -140,10 +133,7 @@ object Graph {
         .select(col("id"), (lit(1000000L) +
           coalesce(col("__s"), lit(0L))).as("katz"))
     }
-    val out = x.localCheckpoint(true)
-    nodes.unpersist(false)
-    e.unpersist(false)
-    out
+    x
   }
 
   /** Personalized PageRank in exact integer ppm — [[pageRankPpm]] with
@@ -162,27 +152,27 @@ object Graph {
     * report 0, not absence.
     *
     * Scale: identical loop frames and cost to [[pageRankPpm]] (both
-    * loop invariants persisted pre-partitioned on their join keys; one
+    * loop invariants pinned pre-partitioned on their join keys; one
     * inflow aggregate per round); the seed flag rides the node frame
     * as a column, adding nothing to the per-round shuffle.
     */
   def personalizedPageRankPpm(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, seedCol: String, iters: Int,
-      dampPct: Int = 85): DataFrame = {
+      dampPct: Int = 85): DataFrame = Pins.scoped { s =>
     require(iters >= 1, "need at least one round")
     require(dampPct >= 0 && dampPct <= 100, "dampPct is a percentage")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().persist()
+    val e = s.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .distinct())
     val sd = seeds.select(col(seedCol).as("id")).distinct()
       .withColumn("__seed", lit(1L))
-    val np = Relational.loopParts(e)
-    val nodes = Relational.loopCache(
+    val np = Pins.loopParts(e)
+    val nodes = s.loopCache(
       e.select(explode(array(col("src"), col("dst"))).as("id"))
         .distinct()
         .join(sd, Seq("id"), "left")
         .withColumn("__seed", coalesce(col("__seed"), lit(0L))),
       "id", np)
-    val withDeg = Relational.loopCache(e.join(
+    val withDeg = s.loopCache(e.join(
       e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"), "src", np)
     val base = (100L - dampPct) * 10000L
     var rank = nodes.select(col("id"),
@@ -197,11 +187,7 @@ object Graph {
           expr(s"($dampPct * coalesce(__s, CAST(0 AS BIGINT))) DIV 100"))
           .as("rank"))
     }
-    val out = rank.localCheckpoint(true)
-    withDeg.unpersist(false)
-    nodes.unpersist(false)
-    e.unpersist(false)
-    out
+    rank
   }
 
   /** Canonical undirected edge list: endpoints ordered `u < v`, self-loops
@@ -230,30 +216,25 @@ object Graph {
     * 100 TB) collapses to O(m^1.5) total work, the Chiba–Nishizeki bound.
     * Three shuffles after the orientation build: wedge self-join on the
     * pivot `a`, closing semi-join on `(b, c)`, and the final per-node
-    * aggregate. The oriented frame is persisted once and read three
-    * times; both caches are released before returning.
+    * aggregate. The oriented frame is pinned once and read three
+    * times.
     */
   def triangleCounts(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val e0 = undirected(edges, srcCol, dstCol).persist()
+      dstCol: String): DataFrame = Pins.scoped { s =>
+    val e0 = s.pin(undirected(edges, srcCol, dstCol))
     val deg = e0.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val ou = struct(col("du").as("d"), col("u").as("n"))
     val ov = struct(col("dv").as("d"), col("v").as("n"))
-    val o = e0
+    // pinned: the wedge self-join's map stage and the closing semi-join's
+    // build stage are INDEPENDENT stages of one job, each reading o
+    val o = s.pin(e0
       .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
       .select(
         when(ou < ov, col("u")).otherwise(col("v")).as("a"),
         when(ou < ov, ov).otherwise(ou).as("ob"))
-      .select(col("a"), col("ob").getField("n").as("b"), col("ob"))
-      // EAGER (r14): the wedge self-join's map stage and the closing
-      // semi-join's build stage are INDEPENDENT stages of one job —
-      // with a lazy cache they race and each re-executes the
-      // orientation build (the q330/q60 duplicate-subtree class).
-      // Materializing once up-front is the work the first consumer
-      // paid anyway; readers then scan cached blocks.
-      .localCheckpoint(true)
+      .select(col("a"), col("ob").getField("n").as("b"), col("ob")))
     val wedges = o.select(col("a"), col("b").as("wb"), col("ob").as("owb"))
       .join(o.select(col("a"), col("b").as("wc"), col("ob").as("owc")), "a")
       .filter(col("owb") < col("owc"))
@@ -261,19 +242,9 @@ object Graph {
     val tris = wedges.join(
       o.select(col("a").as("wb"), col("b").as("wc")), Seq("wb", "wc"),
       "left_semi")
-    val out = tris
+    tris
       .select(explode(array(col("a"), col("wb"), col("wc"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("triangles"))
-      .localCheckpoint(true)
-    // o is an eager checkpoint: release its RDD blocks directly (a
-    // DataFrame.unpersist is a no-op on a checkpointed frame)
-    o.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-    e0.unpersist(false)
-    out
   }
 
   /** Per-EDGE triangle support over the undirected graph — for every
@@ -296,26 +267,21 @@ object Graph {
     * wedge-grain.
     */
   def edgeTriangleSupport(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val e0 = undirected(edges, srcCol, dstCol).persist()
+      dstCol: String): DataFrame = Pins.scoped { s =>
+    val e0 = s.pin(undirected(edges, srcCol, dstCol))
     val deg = e0.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val ou = struct(col("du").as("d"), col("u").as("n"))
     val ov = struct(col("dv").as("d"), col("v").as("n"))
-    val o = e0
+    // pinned: the wedge self-join's map stage and the closing semi-join's
+    // build stage are INDEPENDENT stages of one job, each reading o
+    val o = s.pin(e0
       .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
       .select(
         when(ou < ov, col("u")).otherwise(col("v")).as("a"),
         when(ou < ov, ov).otherwise(ou).as("ob"))
-      .select(col("a"), col("ob").getField("n").as("b"), col("ob"))
-      // EAGER (r14): the wedge self-join's map stage and the closing
-      // semi-join's build stage are INDEPENDENT stages of one job —
-      // with a lazy cache they race and each re-executes the
-      // orientation build (the q330/q60 duplicate-subtree class).
-      // Materializing once up-front is the work the first consumer
-      // paid anyway; readers then scan cached blocks.
-      .localCheckpoint(true)
+      .select(col("a"), col("ob").getField("n").as("b"), col("ob")))
     val wedges = o.select(col("a"), col("b").as("wb"), col("ob").as("owb"))
       .join(o.select(col("a"), col("b").as("wc"), col("ob").as("owc")), "a")
       .filter(col("owb") < col("owc"))
@@ -333,19 +299,9 @@ object Graph {
           greatest(col("wb"), col("wc")).as("v")))).as("__e"))
       .select(col("__e.u").as("u"), col("__e.v").as("v"))
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("__s"))
-    val out = e0.join(sup, Seq("u", "v"), "left")
+    e0.join(sup, Seq("u", "v"), "left")
       .select(col("u"), col("v"),
         coalesce(col("__s"), lit(0L)).as("support"))
-      .localCheckpoint(true)
-    // o is an eager checkpoint: release its RDD blocks directly (a
-    // DataFrame.unpersist is a no-op on a checkpointed frame)
-    o.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-    e0.unpersist(false)
-    out
   }
 
   /** k-truss peeling (Cohen 2008): iteratively delete edges whose
@@ -375,8 +331,8 @@ object Graph {
     * frontier-proportional (deleted-edge wedge work), not graph-
     * proportional — the refinement that makes deep peels affordable.
     *
-    * Scale: the loop state is one edge-grain support frame, eagerly
-    * checkpointed per round (flat lineage, the pointer-jump loop
+    * Scale: the loop state is one edge-grain support frame, pinned per
+    * round (flat lineage, the pointer-jump loop
     * discipline); the per-round early-exit count is a 1-row driver
     * read (the timeBounds class). Rounds are bounded by `maxRounds` —
     * real peels converge in a few rounds because each round removes
@@ -385,7 +341,7 @@ object Graph {
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxRounds: Int): DataFrame = {
     require(k >= 3 && maxRounds >= 1, "need k >= 3, maxRounds >= 1")
-    val start = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    val start = Pins.pin(undirected(edges, srcCol, dstCol))
     if (start.isEmpty)
       return start.withColumn("support", lit(0L)).filter(lit(false))
     kTrussFromSupport(edgeTriangleSupport(start, "u", "v"), k, maxRounds)
@@ -395,7 +351,7 @@ object Graph {
     * `(u, v, support)` (= [[edgeTriangleSupport]] of the undirected
     * graph) — the session-memoization face: when the full-enumeration
     * support of the same graph is already computed (the q371/q374
-    * pair), the peel starts from that checkpoint and round 1 costs
+    * pair), the peel starts from that pin and round 1 costs
     * only the filter. Each round picks the cheaper maintenance
     * strategy by measured frontier size: when this round DELETED more
     * edges than survive, a fresh enumeration on the (now much
@@ -414,8 +370,8 @@ object Graph {
     while (round < maxRounds && !done) {
       // ONE aggregate job yields both branch counters (r13 — was: eager
       // del checkpoint + del.count + last.count, three jobs of which
-      // two scan the same frame); `last`'s checkpoint is still eager
-      // (two readers: the output and the next round)
+      // two scan the same frame); `last` is pinned eagerly (two
+      // readers: the output and the next round)
       val cnts = sup.agg(
         sum(when(col("support") >= thresh, 1L).otherwise(0L)).as("k"),
         sum(when(col("support") < thresh, 1L).otherwise(0L)).as("d"))
@@ -424,11 +380,7 @@ object Graph {
         .getOrElse(0L)
       val nDel = Option(cnts.get(1)).map(_.asInstanceOf[Long])
         .getOrElse(0L)
-      last = sup.filter(col("support") >= thresh).localCheckpoint(true)
-      // lazy: only the incremental branch reads it (twice — expand +
-      // anti-join), and its first action materializes the cache
-      val del = sup.filter(col("support") < thresh)
-        .select(col("u"), col("v")).localCheckpoint(false)
+      last = Pins.pin(sup.filter(col("support") >= thresh))
       round += 1
       if (nDel == 0 || round >= maxRounds) done = true
       else if (nDel > nKeep) {
@@ -438,50 +390,63 @@ object Graph {
         sup = edgeTriangleSupport(last.select(col("u"), col("v")),
           "u", "v")
       } else {
-        val g = sup.select(col("u"), col("v"))
-        val adj = g.select(col("u").as("x"), col("v").as("y"))
-          .unionAll(g.select(col("v").as("x"), col("u").as("y")))
-        val deg = adj.groupBy(col("x").as("n"))
-          .agg(count(lit(1)).as("d"))
-        // destroyed triangles: expand each deleted edge from its
-        // lower-degree endpoint, close with the opposite edge
-        val expand = del
-          .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
-          .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
-          .select(col("u"), col("v"),
-            when(col("du") <= col("dv"), col("u")).otherwise(col("v"))
-              .as("__e"),
-            when(col("du") <= col("dv"), col("v")).otherwise(col("u"))
-              .as("__o"))
-          .join(adj.select(col("x").as("__e"), col("y").as("w")),
-            Seq("__e"))
-          .filter(col("w") =!= col("__o"))
-        val tris = expand.join(
-            g.select(col("u").as("__ga"), col("v").as("__gb")),
-            least(col("__o"), col("w")) === col("__ga") &&
-              greatest(col("__o"), col("w")) === col("__gb"),
-            "left_semi")
-          .select(sort_array(array(col("u"), col("v"), col("w")))
-            .as("__t"))
-          .distinct()
-          .select(col("__t").getItem(0).as("a"),
-            col("__t").getItem(1).as("b"), col("__t").getItem(2).as("c"))
-        // each destroyed triangle decrements its SURVIVING edges once
-        val dec = tris.select(explode(array(
-            struct(col("a").as("u"), col("b").as("v")),
-            struct(col("a").as("u"), col("c").as("v")),
-            struct(col("b").as("u"), col("c").as("v")))).as("__e3"))
-          .select(col("__e3.u").as("u"), col("__e3.v").as("v"))
-          .join(del, Seq("u", "v"), "left_anti")
-          .groupBy(col("u"), col("v")).agg(count(lit(1)).as("__dec"))
-        sup = last.join(dec, Seq("u", "v"), "left")
-          .select(col("u"), col("v"),
-            (col("support") - coalesce(col("__dec"), lit(0L)))
-              .as("support"))
-          .localCheckpoint(true)
+        // the deleted edges, read twice (expand + anti-join) by the job
+        // that pins the next support frame — that job materializes them
+        val (del, next) = Pins.pinWith(sup.filter(col("support") < thresh)
+          .select(col("u"), col("v")))(decrement(sup, last, _))
+        Pins.release(del)
+        sup = next
       }
     }
     last
+  }
+
+  /** One incremental [[kTrussFromSupport]] round: the support of the
+    * survivors `last` after deleting `del` from the graph `sup`,
+    * pinned.
+    */
+  private def decrement(sup: DataFrame, last: DataFrame,
+      del: DataFrame): DataFrame = {
+    val g = sup.select(col("u"), col("v"))
+    val adj = g.select(col("u").as("x"), col("v").as("y"))
+      .unionAll(g.select(col("v").as("x"), col("u").as("y")))
+    val deg = adj.groupBy(col("x").as("n"))
+      .agg(count(lit(1)).as("d"))
+    // destroyed triangles: expand each deleted edge from its
+    // lower-degree endpoint, close with the opposite edge
+    val expand = del
+      .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
+      .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
+      .select(col("u"), col("v"),
+        when(col("du") <= col("dv"), col("u")).otherwise(col("v"))
+          .as("__e"),
+        when(col("du") <= col("dv"), col("v")).otherwise(col("u"))
+          .as("__o"))
+      .join(adj.select(col("x").as("__e"), col("y").as("w")),
+        Seq("__e"))
+      .filter(col("w") =!= col("__o"))
+    val tris = expand.join(
+        g.select(col("u").as("__ga"), col("v").as("__gb")),
+        least(col("__o"), col("w")) === col("__ga") &&
+          greatest(col("__o"), col("w")) === col("__gb"),
+        "left_semi")
+      .select(sort_array(array(col("u"), col("v"), col("w")))
+        .as("__t"))
+      .distinct()
+      .select(col("__t").getItem(0).as("a"),
+        col("__t").getItem(1).as("b"), col("__t").getItem(2).as("c"))
+    // each destroyed triangle decrements its SURVIVING edges once
+    val dec = tris.select(explode(array(
+        struct(col("a").as("u"), col("b").as("v")),
+        struct(col("a").as("u"), col("c").as("v")),
+        struct(col("b").as("u"), col("c").as("v")))).as("__e3"))
+      .select(col("__e3.u").as("u"), col("__e3.v").as("v"))
+      .join(del, Seq("u", "v"), "left_anti")
+      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("__dec"))
+    Pins.pin(last.join(dec, Seq("u", "v"), "left")
+      .select(col("u"), col("v"),
+        (col("support") - coalesce(col("__dec"), lit(0L)))
+          .as("support")))
   }
 
   /** Undirected degree histogram — `(degree, n_nodes)`: how many nodes
@@ -518,39 +483,31 @@ object Graph {
     * Scale: each round is one degree aggregate (map-side combined) plus
     * two semi-joins of the edge frame against the (much smaller)
     * survivor set — the edge frame shrinks monotonically, so round cost
-    * decays. Each round's edge frame is EAGERLY checkpointed and the
-    * previous one released (the [[bfsHops]] lineage discipline, made
-    * eager in r14): a round's frame has three INDEPENDENT readers inside
-    * one job — the next degree aggregate and the two survivor semi-join
-    * broadcast builds — and a lazy persist let those stages race and each
-    * re-execute the whole earlier-round chain (the duplicate-subtree
-    * class; measured ~60 s of task time for ~3 s of work on a 1.3 MB
-    * surviving graph at sf0.1). The eager checkpoint is one materializing
-    * job per round, readers scan blocks, and the frame lands at the
-    * AQE-coalesced partition count instead of a cache-frozen session
-    * constant.
+    * decays. Each round's edge frame is pinned and the previous one
+    * released: a round's frame has three INDEPENDENT readers inside one
+    * job — the next degree aggregate and the two survivor semi-join
+    * broadcast builds (a lazy cache measured ~60 s of task time for ~3 s
+    * of work on a 1.3 MB surviving graph at sf0.1). The pin lands at the
+    * AQE-coalesced partition count.
     */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int): DataFrame = {
+      k: Int, rounds: Int): DataFrame = Pins.scoped { s =>
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
-    var e = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    var e = s.pin(undirected(edges, srcCol, dstCol))
     for (_ <- 1 to rounds) {
       val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
         .groupBy("n").agg(count(lit(1)).as("d"))
       val survivors = deg.filter(col("d") >= k).select("n")
-      val next = e.join(survivors.withColumnRenamed("n", "u"), Seq("u"),
-          "left_semi")
+      val next = s.pin(e.join(survivors.withColumnRenamed("n", "u"),
+          Seq("u"), "left_semi")
         .join(survivors.withColumnRenamed("n", "v"), Seq("v"),
           "left_semi")
-        .select("u", "v").localCheckpoint(true)
-      Relational.releaseCheckpoint(e)
+        .select("u", "v"))
+      s.release(e)
       e = next
     }
-    val out = e.select(explode(array(col("u"), col("v"))).as("node"))
+    e.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true)
-    Relational.releaseCheckpoint(e)
-    out
   }
 
   /** Neighbor-set Jaccard similarity for node pairs sharing at least
@@ -569,31 +526,26 @@ object Graph {
     * node-grain frame joined twice.
     */
   def neighborJaccard(edges: DataFrame, srcCol: String, dstCol: String,
-      minCommon: Int): DataFrame = {
+      minCommon: Int): DataFrame = Pins.scoped { s =>
     require(minCommon >= 1, "minCommon must be positive")
     val e = undirected(edges, srcCol, dstCol)
-    val nbrs = e.select(explode(array(
+    val nbrs = s.pin(e.select(explode(array(
         struct(col("u").as("n"), col("v").as("m")),
         struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
-      .select(col("__nm.n").as("n"), col("__nm.m").as("m"))
-      .persist()
-    // node-grain, read by BOTH endpoint joins — checkpointed (audit rule)
-    val deg = nbrs.groupBy(col("n")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+      .select(col("__nm.n").as("n"), col("__nm.m").as("m")))
+    // node-grain, read by BOTH endpoint joins — pinned (audit rule)
+    val deg = s.pin(nbrs.groupBy(col("n")).agg(count(lit(1)).as("deg")))
     val pairs = nbrs.select(col("n").as("a"), col("m"))
       .join(nbrs.select(col("n").as("b"), col("m")), "m")
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
       .filter(col("common") >= minCommon)
-    val out = pairs
+    pairs
       .join(deg.select(col("n").as("a"), col("deg").as("__da")), "a")
       .join(deg.select(col("n").as("b"), col("deg").as("__db")), "b")
       .withColumn("jaccard", round(col("common").cast("double") /
         (col("__da") + col("__db") - col("common")).cast("double"), 6))
       .select(col("a"), col("b"), col("common"), col("jaccard"))
-      .localCheckpoint(true)
-    nbrs.unpersist(false)
-    out
   }
 
   /** Resource-Allocation link-prediction index (Zhou–Lü–Zhang 2009)
@@ -622,19 +574,15 @@ object Graph {
     * the per-pair aggregate, the adjacency anti-join.
     */
   def resourceAllocation(edges: DataFrame, srcCol: String,
-      dstCol: String, minCommon: Int): DataFrame = {
+      dstCol: String, minCommon: Int): DataFrame = Pins.scoped { s =>
     require(minCommon >= 1, "minCommon must be positive")
-    val e = undirected(edges, srcCol, dstCol).persist()
-    val nbrs = e.select(explode(array(
+    val e = s.pin(undirected(edges, srcCol, dstCol))
+    val nbrs = s.pin(e.select(explode(array(
         struct(col("u").as("n"), col("v").as("m")),
         struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
-      .select(col("__nm.n").as("n"), col("__nm.m").as("m"))
-      .persist()
-    // node-grain, eager (r14 — the neighborJaccard audit rule): its
-    // checkpoint job also materializes the nbrs cache BEFORE the wedge
-    // join's independent stages can race it
-    val deg = nbrs.groupBy(col("n")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+      .select(col("__nm.n").as("n"), col("__nm.m").as("m")))
+    // node-grain, read by the wedge join (the neighborJaccard audit rule)
+    val deg = s.pin(nbrs.groupBy(col("n")).agg(count(lit(1)).as("deg")))
     val pairs = nbrs.select(col("n").as("a"), col("m"))
       .join(nbrs.select(col("n").as("b"), col("m")), "m")
       .filter(col("a") < col("b"))
@@ -645,13 +593,9 @@ object Graph {
       .agg(count(lit(1)).as("common"),
         sum(expr("1000000L DIV __dz")).as("ra_micro"))
       .filter(col("common") >= minCommon)
-    val out = pairs
+    pairs
       .join(e.select(col("u").as("a"), col("v").as("b")), Seq("a", "b"),
         "left_anti")
-      .localCheckpoint(true)
-    nbrs.unpersist(false)
-    e.unpersist(false)
-    out
   }
 
   /** Local clustering coefficient per node over the UNDIRECTED graph:
@@ -673,21 +617,18 @@ object Graph {
     * and one left join of the (≤ node-count) triangle frame onto it.
     */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val e = undirected(edges, srcCol, dstCol).persist()
+      dstCol: String): DataFrame = Pins.scoped { s =>
+    val e = s.pin(undirected(edges, srcCol, dstCol))
     val d38 = "decimal(38,0)"
     val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("degree"))
     val tri = triangleCounts(e, "u", "v")
-    val out = deg.filter(col("degree") >= 2)
+    deg.filter(col("degree") >= 2)
       .join(tri, Seq("node"), "left")
       .withColumn("triangles", coalesce(col("triangles"), lit(0L)))
       .withColumn("cc_micro",
         expr(s"(CAST(triangles AS $d38) * 2000000) DIV " +
           s"(CAST(degree AS $d38) * (degree - 1))"))
-      .localCheckpoint(true)
-    e.unpersist(false)
-    out
   }
 
   /** Synchronous label propagation from clamped seeds — the
@@ -704,28 +645,26 @@ object Graph {
     * Scale: per round, one join of the neighbor list against the
     * CURRENT label frame (labels-sized, not edge-sized build side early
     * on) and one (node, label) vote aggregate + per-node window pick.
-    * Label frames are eagerly checkpointed per round (the [[kCorePeel]]
-    * lineage discipline); the neighbor list is persisted once across
-    * all rounds.
+    * Label frames are pinned per round (the [[kCorePeel]] lineage
+    * discipline); the neighbor list is pinned once across all rounds.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, nodeCol: String, labelCol: String,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = Pins.scoped { s =>
     require(rounds >= 1, "rounds must be positive")
     val e = undirected(edges, srcCol, dstCol)
-    // per-round joins key on m — persist the neighbor list partitioned
+    // per-round joins key on m — pin the neighbor list partitioned
     // and sorted on it (r13), or every round re-exchanges the edge-grain
     // frame
     val nbrs0 = e.select(explode(array(
         struct(col("u").as("n"), col("v").as("m")),
         struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
       .select(col("__nm.n").as("n"), col("__nm.m").as("m"))
-    val nbrs = Relational.loopCache(nbrs0, "m",
-      Relational.loopParts(nbrs0))
-    val seed = seeds.select(col(nodeCol).as("n"), col(labelCol).as("label"))
-      .localCheckpoint(true)
+    val nbrs = s.loopCache(nbrs0, "m", Pins.loopParts(nbrs0))
+    val seed = s.pin(
+      seeds.select(col(nodeCol).as("n"), col(labelCol).as("label")))
     var labels = seed
-    for (_ <- 1 to rounds) {
+    for (round <- 1 to rounds) {
       val votes = nbrs
         .join(labels.select(col("n").as("m"), col("label")), "m")
         .groupBy(col("n"), col("label")).agg(count(lit(1)).as("__c"))
@@ -736,9 +675,9 @@ object Graph {
         .filter(col("__r") === 1).select(col("n"), col("label"))
       labels = seed
         .unionByName(pick.join(seed.select("n"), Seq("n"), "left_anti"))
-        .localCheckpoint(true)
+      // the last round's labels are the result, pinned by the scope
+      if (round < rounds) labels = s.pin(labels)
     }
-    nbrs.unpersist(false)
     labels.select(col("n").as("node"), col("label"))
   }
 
@@ -756,7 +695,7 @@ object Graph {
       maxIter: Int = 20): DataFrame = {
     // the CC engine now reads its pair frame exactly ONCE (r13: the
     // both-directions union became a single-pass explode), so the former
-    // protective persist here would only spend cache on a single-reader
+    // protective pin here would only spend storage on a single-reader
     // frame
     val e = edges.filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
     graft.llm.Dedup.duplicateClusters(e, srcCol, dstCol, maxIter)
@@ -768,41 +707,36 @@ object Graph {
     * BFS distance (seeds at 0). Frontier-style rounds: round `i` expands
     * only the nodes first reached at `i−1` (not the whole reached set), so
     * per-round work tracks the frontier size, and the reached set is
-    * re-minimized with one aggregate per round. The edge list is persisted
+    * re-minimized with one aggregate per round. The edge list is pinned
     * pre-partitioned on `src` once; `maxHops` is a fixed unroll (same
-    * posture as [[pageRankPpm]]), and the result is eagerly checkpointed
-    * so the cache can be released and the `maxHops`-deep lineage truncated.
+    * posture as [[pageRankPpm]]), and the result is a scoped pin, which
+    * truncates the `maxHops`-deep lineage.
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
+      seeds: DataFrame, seedCol: String,
+      maxHops: Int): DataFrame = Pins.scoped { s =>
     require(maxHops >= 1, "need at least one hop")
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-    val np = Relational.loopParts(e0)
-    val e = Relational.loopCache(e0, "src", np)
+    val np = Pins.loopParts(e0)
+    val e = s.loopCache(e0, "src", np)
     // Each round reads the previous reached set TWICE (frontier filter +
-    // union), so the per-round frame must be persisted: left as lineage,
+    // union), so the per-round frame must be pinned: left as lineage,
     // the double reference re-executes every earlier round's join per
     // level — 2^maxHops recompute (measured 6.3 s → 2.6 s at 3 hops on
     // the sf0.1 shipment graph just from caching these).
-    var dist = seeds.select(col(seedCol).as("id")).filter(col("id").isNotNull)
-      .distinct().withColumn("hop", lit(0)).persist()
-    val rounds = scala.collection.mutable.Buffer(dist)
+    var dist = s.pin(seeds.select(col(seedCol).as("id"))
+      .filter(col("id").isNotNull).distinct().withColumn("hop", lit(0)))
     for (i <- 1 to maxHops) {
       val next = dist.filter(col("hop") === i - 1)
         .withColumnRenamed("id", "src")
         .join(e, "src")
         .select(col("dst").as("id"), lit(i).as("hop"))
-      dist = Relational.loopShrink(dist.unionByName(next)
-        .groupBy("id").agg(min(col("hop")).as("hop")), "id", np).persist()
-      rounds += dist
+      dist = s.pin(Pins.loopShrink(dist.unionByName(next)
+        .groupBy("id").agg(min(col("hop")).as("hop")), "id", np))
     }
-    val out = dist.withColumn("hop", col("hop").cast("int"))
-      .localCheckpoint(true)
-    rounds.foreach(_.unpersist(false))
-    e.unpersist(false)
-    out
+    dist.withColumn("hop", col("hop").cast("int"))
   }
 
   /** Per-community modularity contributions (Newman & Girvan, PRE
@@ -826,11 +760,10 @@ object Graph {
     */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
       assign: DataFrame, nodeCol: String,
-      communityCol: String): DataFrame = {
-    // eager: the broadcast m build, deg, and both eIn join sides read
-    // this concurrently inside the one out-building job — a lazy cache
-    // loses the race and re-runs the undirected() distinct per reader
-    val e = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+      communityCol: String): DataFrame = Pins.scoped { s =>
+    // pinned: the broadcast m build, deg, and both eIn join sides read
+    // this concurrently inside the one out-building job
+    val e = s.pin(undirected(edges, srcCol, dstCol))
     val m = e.agg(count(lit(1)).as("__m"))
     val asg = assign.select(col(nodeCol).as("__node"),
       col(communityCol).as("community"))
@@ -847,7 +780,7 @@ object Graph {
       .filter(col("__cu") === col("__cv"))
       .groupBy(col("__cu").as("community"))
       .agg(count(lit(1)).as("e_in"))
-    val out = byComm.join(eIn, Seq("community"), "left")
+    byComm.join(eIn, Seq("community"), "left")
       .withColumn("e_in", coalesce(col("e_in"), lit(0L)))
       .crossJoin(broadcast(m))
       .withColumn("q_contrib", round(expr(
@@ -856,9 +789,6 @@ object Graph {
           "* (CAST(deg_sum AS DOUBLE) / CAST(2 * __m AS DOUBLE))"), 6))
       .select(col("community"), col("n_nodes"), col("e_in"),
         col("deg_sum"), col("q_contrib"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(e)
-    out
   }
 
   /** Degree assortativity (Newman, PRL 2002): the Pearson correlation
@@ -876,8 +806,8 @@ object Graph {
     * degree map per endpoint, collapsed to a single row. Edge-linear.
     */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val e = undirected(edges, srcCol, dstCol).persist()
+      dstCol: String): DataFrame = Pins.scoped { s =>
+    val e = s.pin(undirected(edges, srcCol, dstCol))
     val deg = e.select(explode(array(col("u"), col("v"))).as("__node"))
       .groupBy(col("__node")).agg(count(lit(1)).as("__deg"))
     val pairs = e
@@ -885,7 +815,7 @@ object Graph {
         Seq("u"))
       .join(deg.select(col("__node").as("v"), col("__deg").as("__dv")),
         Seq("v"))
-    val out = pairs
+    pairs
       .agg(count(lit(1)).as("__m"),
         sum(col("__du") + col("__dv")).as("sx"),
         sum(col("__du") * col("__dv") * 2L).as("sxy"),
@@ -900,9 +830,6 @@ object Graph {
           "/ (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) " +
           "- CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END"), 6))
       .select(col("__m").as("m"), col("r"))
-      .localCheckpoint(true)
-    e.unpersist(false)
-    out
   }
 
   /** Deterministic negative-edge sampling for link-prediction /
@@ -927,20 +854,19 @@ object Graph {
     * are key-equi; nothing is pairwise.
     */
   def negativeEdgeSamples(edges: DataFrame, srcCol: String,
-      dstCol: String, k: Int, oversample: Int): DataFrame = {
+      dstCol: String, k: Int,
+      oversample: Int): DataFrame = Pins.scoped { s =>
     require(oversample >= k && k >= 1, "need oversample >= k >= 1")
-    // eager (the modularity rationale): the final job reads e via
-    // undirectedKeys while the draws side re-reads indexed — lazy
-    // caches on either frame race their concurrent readers
-    val e = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    // pinned (the modularity rationale): the final job reads e via
+    // undirectedKeys while the draws side re-reads indexed
+    val e = s.pin(undirected(edges, srcCol, dstCol))
     val nodes = e.select(explode(array(col("u"), col("v"))).as("id")).distinct()
     // id-ordered node index via the distributed two-level rank — the
     // former corpus-grain Window.orderBy(id) was the one
     // single-partition sort in the graph family (round 10).
-    val indexed = graft.engine.Relational
+    val indexed = s.pin(Relational
       .globalRank(nodes, Seq(col("id")), "__rk1")
-      .withColumn("__idx", col("__rk1") - 1).drop("__rk1")
-      .localCheckpoint(true)
+      .withColumn("__idx", col("__rk1") - 1).drop("__rk1"))
     val nV = indexed.agg(count(lit(1)).as("__n"))
     val draws = indexed.select(col("id").as("u"))
       .crossJoin(broadcast(nV))
@@ -956,7 +882,7 @@ object Graph {
         struct(col("u"), col("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("__uv"))
       .select(col("__uv.u").as("u"), col("__uv.v").as("v"))
-    val out = draws
+    draws
       .filter(col("neg_id") =!= col("u"))
       .join(undirectedKeys.withColumnRenamed("v", "neg_id"),
         Seq("u", "neg_id"), "left_anti")
@@ -967,10 +893,6 @@ object Graph {
           .orderBy(col("j"))))
       .filter(col("__rk") <= k)
       .select(col("u"), col("j"), col("neg_id"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(indexed)
-    graft.engine.Relational.releaseCheckpoint(e)
-    out
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM 1999), `iters` synchronous
@@ -985,10 +907,10 @@ object Graph {
     * hub) 0.
     *
     * Scale shape: identical to [[pageRankPpm]] — the distinct edge list
-    * and node frame are persisted pre-partitioned on their join keys
+    * and node frame are pinned pre-partitioned on their join keys
     * once, each round is one src-keyed join + one dst-keyed aggregate
-    * per direction, the max is a one-row broadcast, and the result is
-    * eagerly checkpointed so both caches release before returning.
+    * per direction, the max is a one-row broadcast, and the result is a
+    * scoped pin.
     *
     * Output: `(id, hub, auth)` for every node.
     */
@@ -1006,34 +928,29 @@ object Graph {
     * convention). Output ONE row: `(anchor0, ecc1, n_reached1,
     * anchor1, ecc2, n_reached2)`.
     *
-    * Scale: 2·maxHops frontier joins on the persisted edge frame —
+    * Scale: 2·maxHops frontier joins on the pinned edge frame —
     * the [[bfsHops]] cost model twice, with the edge
-    * distinct/repartition/persist paid ONCE.
+    * distinct/repartition/pin paid ONCE.
     */
   def pseudoDiameter(edges: DataFrame, srcCol: String, dstCol: String,
-      maxHops: Int): DataFrame = {
+      maxHops: Int): DataFrame = Pins.scoped { s =>
     require(maxHops >= 1, "need at least one hop")
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-    val np = Relational.loopParts(e0)
-    val e = Relational.loopCache(e0, "src", np)
+    val np = Pins.loopParts(e0)
+    val e = s.loopCache(e0, "src", np)
     def sweep(seed: DataFrame): DataFrame = {
-      var dist = seed.withColumn("hop", lit(0)).persist()
-      val rounds = scala.collection.mutable.Buffer(dist)
+      var dist = s.pin(seed.withColumn("hop", lit(0)))
       for (i <- 1 to maxHops) {
         val next = dist.filter(col("hop") === i - 1)
           .withColumnRenamed("id", "src")
           .join(e, "src")
           .select(col("dst").as("id"), lit(i).as("hop"))
-        dist = Relational.loopShrink(dist.unionByName(next)
-          .groupBy("id").agg(min(col("hop")).as("hop")), "id", np)
-          .persist()
-        rounds += dist
+        dist = s.pin(Pins.loopShrink(dist.unionByName(next)
+          .groupBy("id").agg(min(col("hop")).as("hop")), "id", np))
       }
-      val out = dist.localCheckpoint(true)
-      rounds.foreach(_.unpersist(false))
-      out
+      dist
     }
     // farthest node, ties to the smallest id: one agg of (hop, id)
     // pairs via max_by on the (hop, negated-lexico) struct is not
@@ -1046,12 +963,12 @@ object Graph {
     val a0 = e.select(explode(array(col("src"), col("dst"))).as("id"))
       .agg(min(col("id")).as("id"))
     val d1 = sweep(a0.select("id"))
-    val f1 = far(d1).localCheckpoint(true)
+    val f1 = s.pin(far(d1))
     val n1 = d1.agg(count(lit(1)).as("n_reached1"))
     val d2 = sweep(f1.select("id"))
     val f2 = far(d2)
     val n2 = d2.agg(count(lit(1)).as("n_reached2"))
-    val out = a0.select(col("id").as("anchor0"))
+    a0.select(col("id").as("anchor0"))
       .crossJoin(f1.select(col("id").as("anchor1"),
         col("ecc").as("ecc1")))
       .crossJoin(broadcast(n1))
@@ -1061,37 +978,33 @@ object Graph {
         col("n_reached1").cast("long").as("n_reached1"),
         col("anchor1"), col("ecc2").cast("int").as("ecc2"),
         col("n_reached2").cast("long").as("n_reached2"))
-      .localCheckpoint(true)
-    e.unpersist(false)
-    out
   }
 
   def hitsPpm(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int): DataFrame = {
+      iters: Int): DataFrame = Pins.scoped { s =>
     require(iters >= 1, "need at least one round")
-    // TWO pre-partitioned cached copies of the edge list, one per join
+    // TWO pre-partitioned pinned copies of the edge list, one per join
     // key (r13, guide §2.4 "remove shuffles outright"): each round joins
     // on src (hub propagation) AND on dst (auth propagation), and a
-    // single (src,dst)-hash-partitioned cache satisfied neither, so
+    // single (src,dst)-hash-partitioned pin satisfied neither, so
     // every round re-exchanged the EDGE-grain frame twice on top of the
     // two unavoidable aggregate exchanges (4 edge-grain exchanges/round
     // → 2). eDst also makes round-1's indegree aggregate exchange-free.
-    // The rank frames come back from normRaw's localCheckpoint still
-    // hash-partitioned on id (checkpoint preserves partitioning), so
-    // the per-round joins are fully co-partitioned. Cost: 2× edge cache
-    // (the persist-once loop-frame discipline, spent twice).
+    // The rank frames come back from normRaw's pin still
+    // hash-partitioned on id (a pin preserves partitioning), so
+    // the per-round joins are fully co-partitioned. Cost: 2× edge pin.
     val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
-    val np = Relational.loopParts(eRaw)
-    val eSrc = Relational.loopCache(eRaw, "src", np)
-    val eDst = Relational.loopCache(eSrc, "dst", np)
+    val np = Pins.loopParts(eRaw)
+    val eSrc = s.loopCache(eRaw, "src", np)
+    val eDst = s.loopCache(eSrc, "dst", np)
     val e = eSrc
-    val nodes = Relational.loopCache(
+    val nodes = s.loopCache(
       e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
       "id", np, skipIfSession = true)
     // each round's raw frame has TWO readers (the max scalar and the
-    // next-round join) and sits on an iters-deep lineage — materialize
-    // it eagerly or every normalization recomputes the whole history
+    // next-round join) and sits on an iters-deep lineage — pin it or
+    // every normalization recomputes the whole history
     // (measured 25 s -> ~5 s at sf0.1 for the 2-round gate graph).
     // Intermediate frames carry only ACTIVE nodes: an absent node is a
     // 0 in the next round's inner-join sums either way, zeros never
@@ -1099,7 +1012,7 @@ object Graph {
     // zeros — so the all-nodes left-join runs ONCE per output column,
     // not once per round (round-10 rewrite; values are bit-identical).
     def normRaw(raw0: DataFrame, c: String): DataFrame = {
-      val raw = raw0.localCheckpoint(true)
+      val raw = s.pin(raw0)
       val mx = raw.agg(max(col(c)).as("__mx"))
       raw.crossJoin(broadcast(mx))
         .select(col("id"), when(col("__mx").isNull || col("__mx") === 0L,
@@ -1126,13 +1039,8 @@ object Graph {
         .groupBy(col("src").as("id")).agg(sum(col("auth")).as("hub")),
         "hub")
     }
-    val out = expand(hub, "hub").join(expand(auth, "auth"), Seq("id"))
+    expand(hub, "hub").join(expand(auth, "auth"), Seq("id"))
       .select(col("id"), col("hub"), col("auth"))
-      .localCheckpoint(true)
-    nodes.unpersist(false)
-    eDst.unpersist(false)
-    eSrc.unpersist(false)
-    out
   }
 
   /** Multi-source BFS over the UNDIRECTED graph: min-hop distance from
@@ -1144,42 +1052,35 @@ object Graph {
     * (ANF/HyperBall lineage), and every downstream statistic is a pure
     * aggregate of this frame.
     *
-    * Same round discipline as [[bfsHops]] (persist per round — the
-    * frame is read twice per level; eager checkpoint + release at the
-    * end), except the frontier carries the seed key, so each round is
-    * one src-keyed join + one (seed,id) min-aggregate — cost is
-    * O(hops · Σ_seeds reached-edges), linear in the seed count, never
-    * all-pairs.
+    * Same round discipline as [[bfsHops]] (pin per round — the
+    * frame is read twice per level), except the frontier carries the
+    * seed key, so each round is one src-keyed join + one (seed,id)
+    * min-aggregate — cost is O(hops · Σ_seeds reached-edges), linear in
+    * the seed count, never all-pairs.
     */
   def multiSourceBfs(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
+      seeds: DataFrame, seedCol: String,
+      maxHops: Int): DataFrame = Pins.scoped { s =>
     require(maxHops >= 1, "need at least one hop")
     val und = undirected(edges, srcCol, dstCol)
     val e0 = und.select(explode(array(
         struct(col("u").as("src"), col("v").as("dst")),
         struct(col("v").as("src"), col("u").as("dst")))).as("__sd"))
       .select(col("__sd.src").as("src"), col("__sd.dst").as("dst"))
-    val np = Relational.loopParts(e0)
-    val e = Relational.loopCache(e0, "src", np)
-    var dist = seeds.select(col(seedCol).as("seed"))
+    val np = Pins.loopParts(e0)
+    val e = s.loopCache(e0, "src", np)
+    var dist = s.pin(seeds.select(col(seedCol).as("seed"))
       .filter(col("seed").isNotNull).distinct()
-      .withColumn("id", col("seed")).withColumn("hop", lit(0)).persist()
-    val rounds = scala.collection.mutable.Buffer(dist)
+      .withColumn("id", col("seed")).withColumn("hop", lit(0)))
     for (i <- 1 to maxHops) {
       val next = dist.filter(col("hop") === i - 1)
         .select(col("seed"), col("id").as("src"))
         .join(e, "src")
         .select(col("seed"), col("dst").as("id"), lit(i).as("hop"))
-      dist = Relational.loopShrink(dist.unionByName(next)
-        .groupBy("seed", "id").agg(min(col("hop")).as("hop")), "id", np)
-        .persist()
-      rounds += dist
+      dist = s.pin(Pins.loopShrink(dist.unionByName(next)
+        .groupBy("seed", "id").agg(min(col("hop")).as("hop")), "id", np))
     }
-    val out = dist.withColumn("hop", col("hop").cast("int"))
-      .localCheckpoint(true)
-    rounds.foreach(_.unpersist(false))
-    e.unpersist(false)
-    out
+    dist.withColumn("hop", col("hop").cast("int"))
   }
 
   /** Bounded-horizon closeness centrality per seed from a
@@ -1245,14 +1146,13 @@ object Graph {
     * pair aggregate; no all-pairs anywhere.
     */
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
-      minCommon: Int): DataFrame = {
+      minCommon: Int): DataFrame = Pins.scoped { s =>
     require(minCommon >= 1, "minCommon must be positive")
-    val e = undirected(edges, srcCol, dstCol).persist()
-    val nbrs = e.select(explode(array(
+    val e = s.pin(undirected(edges, srcCol, dstCol))
+    val nbrs = s.pin(e.select(explode(array(
         struct(col("u").as("n"), col("v").as("m")),
         struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
-      .select(col("__nm.n").as("n"), col("__nm.m").as("m"))
-      .persist()
+      .select(col("__nm.n").as("n"), col("__nm.m").as("m")))
     val deg = nbrs.groupBy(col("n")).agg(count(lit(1)).as("deg"))
     val pairs = nbrs.select(col("n").as("a"), col("m"))
       .join(nbrs.select(col("n").as("b"), col("m")), "m")
@@ -1263,12 +1163,8 @@ object Graph {
         sum(expr("CAST(round(1000000 / ln(CAST(__dz AS DOUBLE))) " +
           "AS BIGINT)")).as("aa_micro"))
       .filter(col("common") >= minCommon)
-    val out = pairs
+    pairs
       .join(e.select(col("u").as("a"), col("v").as("b")), Seq("a", "b"),
         "left_anti")
-      .localCheckpoint(true)
-    nbrs.unpersist(false)
-    e.unpersist(false)
-    out
   }
 }

@@ -61,115 +61,6 @@ object Relational {
     else df.repartition(target, keys: _*)
   }
 
-  /** Release the RDD blocks behind an eagerly checkpointed frame —
-    * `DataFrame.unpersist` is a no-op on a checkpointed plan (the blocks
-    * hang off the materialized RDD, not the cache manager). The inline
-    * form predates this helper at the triangleCounts/edgeTriangleSupport
-    * sites; new release points go through here.
-    */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  /** Data-derived partition count for the loop-invariant cached frames
-    * of the iterative algorithms (guide §2.2 "fewer, larger reduce
-    * partitions", §2 "make partitioning scale-adaptive"): AQE cannot
-    * coalesce a per-round exchange that must co-partition with a CACHED
-    * frame (the cache is a materialized RDD scan, not an AQE shuffle, so
-    * EnsureRequirements pins the derived side to the cache's partition
-    * count) — which makes the cache's own count the loop's per-round
-    * task count for every round. Sizing it from the session constant
-    * buys `rounds × sessionParts` near-empty tasks on a small graph and
-    * nothing at scale; size it from the DATA instead:
-    * `ceil(plan-estimated bytes / coalescePartitions.minPartitionSize)`
-    * clamped to `[1, sessionParts]` — the same parallelism-first floor
-    * AQE itself applies when it coalesces a free-standing exchange
-    * (measured here: the 64 MB advisory target collapsed a 485k-edge
-    * loop to ONE partition and serialized ~1 s/round of real join+agg
-    * CPU; the 1 MB floor keeps those rounds parallel while still
-    * cutting the 32-task overhead — per-stage task-time SUM was 9.5 s
-    * at 32 tasks vs 1.1 s of actual work). The clamp keeps the
-    * operator's configured parallelism whenever the estimate is large
-    * (any real table at 100 TB — behavior there is unchanged), and a
-    * stats-less plan (LogicalRDD without origin stats reports
-    * defaultSizeInBytes = Long.MaxValue) lands in the same no-change
-    * branch. Reading `optimizedPlan.stats` is driver-side analysis
-    * only — nothing executes.
-    */
-  private[graft] def loopParts(df: DataFrame): Int = {
-    val conf = df.sparkSession.sessionState.conf
-    val sessionParts = math.max(conf.numShufflePartitions, 1)
-    val target = BigInt(math.max(conf.getConf(
-      org.apache.spark.sql.internal.SQLConf
-        .COALESCE_PARTITIONS_MIN_PARTITION_SIZE),
-      1L))
-    val plan = df.queryExecution.optimizedPlan
-    // Plan-stat estimates are size-in-bytes products for joins (a
-    // 58 MB checkpointed edge memo measured 2.19 TB by estimate), and
-    // an eager localCheckpoint FREEZES that estimate into the
-    // LogicalRDD's origin stats. When the frame derives ONLY from
-    // materialized checkpoint RDDs, the block manager knows their TRUE
-    // size — use it, divided by 4 because cached blocks are
-    // DESERIALIZED rows (~4× the serialized bytes the 1 MB floor is
-    // calibrated for). Mixed or unmaterialized leaves keep the
-    // estimate (and its conservative clamp).
-    val leaves = plan.collectLeaves()
-    val ckpt = leaves.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }
-    val bytes: BigInt =
-      if (ckpt.nonEmpty && ckpt.length == leaves.length) {
-        val info = df.sparkSession.sparkContext.getRDDStorageInfo
-        val sizes = ckpt.map(id => info.find(_.id == id)
-          .map(i => BigInt(i.memSize) + BigInt(i.diskSize)))
-        if (sizes.forall(_.isDefined)) sizes.flatten.sum / 4
-        else plan.stats.sizeInBytes
-      } else plan.stats.sizeInBytes
-    if (bytes <= 0) sessionParts
-    else ((bytes + target - 1) / target).min(BigInt(sessionParts))
-      .max(BigInt(1)).toInt
-  }
-
-  /** Build a loop-invariant cache: repartition+sort `df` on its
-    * per-round join key at the data-derived [[loopParts]] count, persist.
-    * With `skipIfSession = true` (for frames whose upstream operator —
-    * typically a `distinct()` on the same key — already hash-partitions
-    * them at the session count), the exchange is added ONLY when the
-    * derived count is smaller: at scale the frame keeps riding the
-    * upstream exchange exactly as before, and on a small graph one tiny
-    * build-time exchange buys `rounds ×` fewer per-round tasks.
-    */
-  private[graft] def loopCache(df: DataFrame, key: String, n: Int,
-      skipIfSession: Boolean = false): DataFrame = {
-    val sessionParts =
-      math.max(df.sparkSession.sessionState.conf.numShufflePartitions, 1)
-    val base = if (skipIfSession && n >= sessionParts) df
-               else df.repartition(n, col(key))
-    base.sortWithinPartitions(key).persist()
-  }
-
-  /** Shrink a PER-ROUND node-grain loop frame to the loop's derived
-    * partition count before persisting — applied ONLY when the derived
-    * count is below the session constant, so at scale this is the
-    * identity and the round keeps its map-side-combined aggregate
-    * exchange untouched. Locally it fixes what AQE cannot: a persisted
-    * per-round frame freezes its aggregate's session-constant partition
-    * count (cached plans are not re-partitioned by AQE), so every
-    * subsequent round's union/map side pays `sessionParts` near-empty
-    * tasks; hash-partitioning on `key` at the loop count also
-    * co-partitions the frontier join with the [[loopCache]]d edge frame
-    * (alias-aware partitioning survives the rename).
-    */
-  private[graft] def loopShrink(df: DataFrame, key: String,
-      n: Int): DataFrame = {
-    val sessionParts =
-      math.max(df.sparkSession.sessionState.conf.numShufflePartitions, 1)
-    if (n >= sessionParts) df else df.repartition(n, col(key))
-  }
-
   /** Distributed global rank: adds `rankCol` = 1-based position of each
     * row under `order`, with NO single-partition window. Two-level range
     * trick generalized to arbitrary sortable keys: range-repartition on
@@ -184,8 +75,8 @@ object Relational {
     * single-partition sort Spark itself warns about, and the first
     * thing that dies at 1000 executors).
     *
-    * The ranged frame is EAGERLY pinned (localCheckpoint) before its
-    * two readers: the local-rank window and the offset aggregate must
+    * The ranged frame is pinned before its two readers: the local-rank
+    * window and the offset aggregate must
     * see the SAME partition boundaries, but each branch re-plans the
     * exchange under AQE, and differently-coalesced upstreams make the
     * range sampler draw different boundaries per branch — then
@@ -196,15 +87,14 @@ object Relational {
     */
   private[graft] def globalRank(df: DataFrame, order: Seq[Column],
       rankCol: String): DataFrame = {
-    // data-derived range-partition count (r14, loopParts): the eager
-    // checkpoint + the two per-branch readers all run at this count,
+    // data-derived range-partition count (r14, loopParts): the pin
+    // + the two per-branch readers all run at this count,
     // and the session constant bought 32 near-empty tasks × 3 stages on
     // a small frame; ranks are partition-count-invariant (offsets), so
     // only the task count changes
-    val nPart = loopParts(df)
-    val part = df.repartitionByRange(nPart, order: _*)
-      .withColumn("__gr_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val nPart = Pins.loopParts(df)
+    val part = Pins.pin(df.repartitionByRange(nPart, order: _*)
+      .withColumn("__gr_pid", spark_partition_id()))
     val local = part.withColumn("__gr_local", row_number().over(
       Window.partitionBy(col("__gr_pid")).orderBy(order: _*)))
     val off = part.groupBy(col("__gr_pid"))
@@ -228,13 +118,12 @@ object Relational {
   private[graft] def globalCumSum(df: DataFrame, order: Seq[Column],
       weight: Column, cumCol: String): DataFrame = {
     // data-derived count — see globalRank
-    val nPart = loopParts(df)
+    val nPart = Pins.loopParts(df)
     // Eager pin before the two readers — same branch-consistent
     // partition-boundary requirement as globalRank (see there).
-    val part = df.repartitionByRange(nPart, order: _*)
+    val part = Pins.pin(df.repartitionByRange(nPart, order: _*)
       .withColumn("__gc_w", weight.cast("long"))
-      .withColumn("__gc_pid", spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn("__gc_pid", spark_partition_id()))
     val local = part.withColumn("__gc_local", sum(col("__gc_w")).over(
       Window.partitionBy(col("__gc_pid")).orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding, 0)))
@@ -1044,26 +933,22 @@ object Relational {
     */
   private[graft] def ecdfPaired(df: DataFrame, splitCol: String,
       refValue: String, valCol: String, lo: Double, hi: Double,
-      nBuckets: Int): DataFrame = {
+      nBuckets: Int): DataFrame = Pins.scoped { s =>
     require(nBuckets >= 1 && hi > lo, "need a positive bucketed range")
     val width = (hi - lo) / nBuckets
     val zero = lit(0L)
     // The (split, value)-grain collapse and the bucketed prefix-sum frame
     // are each read by MULTIPLE downstream consumers, one of which is a
-    // concurrent BroadcastExchange build (curSplits here, `off` below).
-    // A lazy persist() lets those readers RACE the cache build and
-    // re-execute the whole upstream chain per reader (the §17/§18
-    // eager-checkpoint discipline; observed here as x2/x3 stage
-    // re-executions and ~90 s of task time for a 7 MB frame in the
-    // q193/q194 cold build). Checkpoint EAGERLY instead: one linear
-    // build, every reader scans blocks. Both frames are value-lattice ×
-    // splits grain — the documented cost class of this operator family —
-    // so the materialization is as bounded as the `out` checkpoint below.
-    val c = df.filter(col(splitCol).isNotNull && col(valCol).isNotNull)
+    // concurrent BroadcastExchange build (curSplits here, `off` below) —
+    // both pinned (a lazy cache measured x2/x3 stage re-executions and
+    // ~90 s of task time for a 7 MB frame in the q193/q194 cold build).
+    // Both frames are value-lattice × splits grain — the documented cost
+    // class of this operator family — so the pins are as bounded as the
+    // result.
+    val c = s.pin(df.filter(col(splitCol).isNotNull && col(valCol).isNotNull)
       .select(col(splitCol).cast("string").as("__s"),
         col(valCol).cast("long").as("__v"))
-      .groupBy("__s", "__v").agg(count(lit(1)).as("__t"))
-      .localCheckpoint(true)
+      .groupBy("__s", "__v").agg(count(lit(1)).as("__t")))
     val curSplits = c.filter(col("__s") =!= refValue)
       .select("__s").distinct()
     val refC = c.filter(col("__s") === refValue)
@@ -1079,11 +964,10 @@ object Relational {
       lit(nBuckets - 1)).cast("int")
     val wLocal = Window.partitionBy("__s", "__b").orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, 0)
-    val full = merged
+    val full = s.pin(merged
       .withColumn("__b", bucket)
       .withColumn("__local", sum(col("__t")).over(wLocal))
-      .withColumn("__localr", sum(col("__tr")).over(wLocal))
-      .localCheckpoint(true)
+      .withColumn("__localr", sum(col("__tr")).over(wLocal)))
     val wOff = Window.partitionBy("__s").orderBy("__b")
       .rowsBetween(Window.unboundedPreceding, -1)
     val off = full.groupBy("__s", "__b")
@@ -1091,13 +975,10 @@ object Relational {
       .withColumn("__off", coalesce(sum(col("__bt")).over(wOff), zero))
       .withColumn("__offr", coalesce(sum(col("__btr")).over(wOff), zero))
       .select("__s", "__b", "__off", "__offr")
-    val out = full.join(broadcast(off), Seq("__s", "__b"))
+    full.join(broadcast(off), Seq("__s", "__b"))
       .withColumn("__cum", col("__off") + col("__local"))
       .withColumn("__cumr", col("__offr") + col("__localr"))
       .select("__s", "__v", "__t", "__tr", "__cum", "__cumr")
-      .localCheckpoint(true)
-    releaseCheckpoint(full); releaseCheckpoint(c)
-    out
   }
 
   /** Two-sample Kolmogorov–Smirnov drift report: for every split against
@@ -1624,21 +1505,19 @@ object Relational {
     * contract is per-entity series (orders per customer, readings per
     * sensor: 10²–10³ rows/group ⇒ ≤ 10⁶ pairs/group), NOT a global
     * series. Callers with big groups pre-aggregate (e.g. daily means)
-    * first. The ranked input is persisted through the self-join's two
-    * branches (the audit rule), and the group-grain result is
-    * checkpointed so the cache can be released eagerly.
+    * first. The ranked input is pinned through the self-join's two
+    * branches (the audit rule).
     */
   def theilSen(df: DataFrame, groupCols: Seq[String], xCol: String,
-      yCol: String, tiebreakCols: Seq[String]): DataFrame = {
+      yCol: String, tiebreakCols: Seq[String]): DataFrame = Pins.scoped { s =>
     val w = Window.partitionBy(groupCols.map(col): _*)
       .orderBy((col(xCol).asc +: tiebreakCols.map(col(_).asc)): _*)
-    val ranked = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
+    val ranked = s.pin(df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select((groupCols ++ (xCol +: yCol +: tiebreakCols)).map(col): _*)
       .withColumn("__rn", row_number().over(w))
       // __rn now carries the (x, tiebreak) identity; the tiebreak columns
       // themselves stay out of the O(n²) pair frame
-      .drop(tiebreakCols: _*)
-      .persist()
+      .drop(tiebreakCols: _*))
     val a = ranked.select(groupCols.map(col) :+ col(xCol).as("__xa") :+
       col(yCol).as("__ya") :+ col("__rn").as("__ra"): _*)
     val b = ranked.select(groupCols.map(col) :+ col(xCol).as("__xb") :+
@@ -1650,7 +1529,7 @@ object Relational {
         (col("__xb") - col("__xa")).cast("double"), 6))
     val pick = Window.partitionBy(groupCols.map(col): _*)
       .orderBy(col("__slope").asc, col("__ra").asc, col("__rb").asc)
-    val out = slopes
+    slopes
       .withColumn("__k", row_number().over(pick))
       .withColumn("__np", count(lit(1)).over(
         Window.partitionBy(groupCols.map(col): _*)))
@@ -1659,9 +1538,6 @@ object Relational {
       .filter(col("__k") === expr("(__np + 1) DIV 2"))
       .select(groupCols.map(col) :+ col("__np").as("n_pairs") :+
         col("__slope").as("slope"): _*)
-      .localCheckpoint(true)
-    ranked.unpersist(false)
-    out
   }
 
   /** Cohen's kappa from a pre-aggregated confusion/agreement matrix
@@ -1677,14 +1553,13 @@ object Relational {
     * Everything downstream of the caller-supplied cell frame is
     * cell-grain (≤ |A|·|B| rows) — the input is aggregated once by
     * [[cohenKappa]]'s raw-pairs face and never re-scanned (cells are
-    * persisted through the three marginal branches, result
-    * checkpointed, cache released).
+    * pinned through the three marginal branches).
     */
   def cohenKappaFromCells(cellsIn: DataFrame, aCol: String, bCol: String,
-      nCol: String): DataFrame = {
+      nCol: String): DataFrame = Pins.scoped { s =>
     val d38 = "decimal(38,0)"
-    val cells = cellsIn.select(col(aCol).as("__a"), col(bCol).as("__b"),
-      col(nCol).cast(d38).as("__n")).persist()
+    val cells = s.pin(cellsIn.select(col(aCol).as("__a"),
+      col(bCol).as("__b"), col(nCol).cast(d38).as("__n")))
     val tot = cells.agg(sum(col("__n")).as("__tot"),
       sum(when(col("__a") === col("__b"), col("__n"))
         .otherwise(lit(0).cast(d38))).as("__agree"))
@@ -1695,7 +1570,7 @@ object Relational {
     val chance = ma.join(mb, Seq("__cat"), "full_outer")
       .agg(sum(coalesce(col("__ma"), lit(0).cast(d38)) *
         coalesce(col("__mb"), lit(0).cast(d38))).as("__s"))
-    val out = tot.crossJoin(broadcast(chance))
+    tot.crossJoin(broadcast(chance))
       .select(col("__tot").cast("long").as("n"),
         col("__agree").cast("long").as("n_agree"),
         // DIV (integral quotient), not `/`: decimal division rounds at
@@ -1706,9 +1581,6 @@ object Relational {
           (col("__tot") * col("__agree") - col("__s")).cast("double") /
           (col("__tot") * col("__tot") - col("__s")).cast("double"), 6))
           .as("kappa"))
-      .localCheckpoint(true)
-    cells.unpersist(false)
-    out
   }
 
   /** [[cohenKappaFromCells]] over raw rating pairs: rows where either
@@ -1974,7 +1846,9 @@ object Relational {
     val dec = org.apache.spark.sql.types.DecimalType(38, 12)
     val x = col(valueCol).cast(org.apache.spark.sql.types
       .DecimalType(18, 6))
-    val agg = df.filter(col(valueCol).isNotNull)
+    // group-grain frame with TWO readers (ok + degenerate branches):
+    // materialize once or the input is scanned per branch
+    val agg = Pins.pin(df.filter(col(valueCol).isNotNull)
       .select(groupCols.map(col) ++ Seq(x.as("__x"),
         flag.cast("boolean").as("__f")): _*)
       .groupBy(groupCols.map(col): _*)
@@ -1987,10 +1861,7 @@ object Relational {
         sum(when(col("__f"), col("__x") * col("__x")).otherwise(lit(0)))
           .cast(dec).as("ssa"),
         sum(when(!col("__f"), col("__x") * col("__x")).otherwise(lit(0)))
-          .cast(dec).as("ssb"))
-      // group-grain frame with TWO readers (ok + degenerate branches):
-      // materialize once or the input is scanned per branch
-      .localCheckpoint(true)
+          .cast(dec).as("ssb")))
     val ok = welchDerivedSql.foldLeft(
       agg.filter(col("na") >= 2 && col("nb") >= 2)) {
       case (acc, (name, formula)) => acc.withColumn(name, expr(formula))
@@ -2120,22 +1991,21 @@ object Relational {
     */
   def hbosOutliers(df: DataFrame, idCol: String,
       features: Seq[(String, Double, Double, Int)],
-      k: Int): DataFrame = {
+      k: Int): DataFrame = Pins.scoped { s =>
     require(features.nonEmpty && k >= 1, "need features and k >= 1")
     val d38 = "decimal(38,0)"
     val base = df.filter(col(idCol).isNotNull &&
         features.map { case (c, _, _, _) => col(c).isNotNull }
           .reduce(_ && _))
-    // EAGERLY pinned (r14): the |features| histogram broadcast builds
-    // below materialize CONCURRENTLY, and with a lazy cache they race —
-    // each re-executed the whole scan+filter+bin chain (measured: 5
-    // duplicate 3-task scan stages, 4.1 s task time, for one 0.8 s
-    // pass). The row count is unchanged by the projections, so the N
-    // readout rides the same checkpoint.
+    // pinned: the |features| histogram broadcast builds below
+    // materialize CONCURRENTLY (a lazy cache measured 5 duplicate 3-task
+    // scan stages, 4.1 s task time, for one 0.8 s pass). The row count
+    // is unchanged by the projections, so the N readout rides the same
+    // pin.
     // fanOut before the binning was tried and REVERTED (measured 1.45
     // → 2.12 s): the binning is cheap floor arithmetic, so the extra
-    // exchange + 32-partition checkpoint cost more than 3-task decode
-    val binned = features.zipWithIndex.foldLeft(
+    // exchange + 32-partition pin cost more than 3-task decode
+    val binned = s.pin(features.zipWithIndex.foldLeft(
         base.select((col(idCol).as("id") +:
           features.map { case (c, _, _, _) => col(c) }): _*)) {
       case (acc, ((c, lo, hi, nb), i)) =>
@@ -2143,7 +2013,7 @@ object Relational {
         acc.withColumn(s"__b$i", least(greatest(
           floor((col(c).cast("double") - lo) / width), lit(0)),
           lit(nb - 1)).cast("int"))
-    }.localCheckpoint(true)
+    })
     val scored = features.zipWithIndex.foldLeft(binned) {
       case (acc, ((_, _, _, _), i)) =>
         val hist = binned.groupBy(col(s"__b$i"))
@@ -2161,21 +2031,13 @@ object Relational {
     // (non-ANSI) only at N^F >= 1e38; NULLs sorting FIRST ascending
     // would silently promote arbitrary rows into the top-k, so pin them
     // last (same magnitude-bound guard class as momentsSketch/cvm).
-    val out = scored.crossJoin(broadcast(tot))
+    scored.crossJoin(broadcast(tot))
       .withColumn("__crit", crit)
       .orderBy(col("__crit").asc_nulls_last, col("id"))
       .limit(k)
       .select((col("id").as(idCol) +:
         features.indices.map(i => col(s"c_$i"))) :+
         round(score, 6).as("score"): _*)
-      .localCheckpoint(true)
-    // release the pinned binned frame (its only readers are above)
-    binned.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-    out
   }
 
   /** ECOD top-k outliers (Li et al., TKDE 2022): per numeric feature
@@ -2205,12 +2067,11 @@ object Relational {
     * corpus² anywhere.
     */
   def ecodOutliers(df: DataFrame, idCol: String, features: Seq[String],
-      k: Int): DataFrame = {
+      k: Int): DataFrame = Pins.scoped { s =>
     require(features.nonEmpty && k >= 1, "need features and k >= 1")
-    val base = df.filter(col(idCol).isNotNull &&
+    val base = s.pin(df.filter(col(idCol).isNotNull &&
         features.map(col(_).isNotNull).reduce(_ && _))
-      .select((col(idCol).as("id") +: features.map(col)): _*)
-      .persist()
+      .select((col(idCol).as("id") +: features.map(col)): _*))
     val n1 = base.agg(count(lit(1)).as("__n"))
     var cur = base
     features.zipWithIndex.foreach { case (f, i) =>
@@ -2227,7 +2088,7 @@ object Relational {
       .map(i => expr(term(s"__l$i"))).reduce(_ + _)
     val scoreR = features.indices
       .map(i => expr(term(s"__n - __l$i + __k$i"))).reduce(_ + _)
-    val out = cur.crossJoin(broadcast(n1))
+    cur.crossJoin(broadcast(n1))
       .withColumn("score_left", scoreL)
       .withColumn("score_right", scoreR)
       .withColumn("ecod_micro",
@@ -2239,9 +2100,6 @@ object Relational {
       .select((col("id").as(idCol) +: features.map(col)) ++
         Seq(col("score_left"), col("score_right"), col("ecod_micro"),
           col("rank")): _*)
-      .localCheckpoint(true)
-    base.unpersist(false)
-    out
   }
 
   /** Shared engine/oracle difference-in-differences fragments over the
@@ -2917,12 +2775,12 @@ object Relational {
     * anovaF's single aggregate. Two scans of the value column total.
     */
   def brownForsytheF(df: DataFrame, groupCol: String,
-      valueCol: String, scale: Long = 1000000L): DataFrame = {
+      valueCol: String, scale: Long = 1000000L): DataFrame = Pins.scoped { s =>
     require(scale > 0, "scale must be positive")
-    val base = df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
+    val base = s.pin(df
+      .filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
       .select(col(groupCol).cast("string").as("__g"),
-        col(valueCol).cast("long").as("__x"))
-      .persist()
+        col(valueCol).cast("long").as("__x")))
     val byVal = base.groupBy(col("__g"), col("__x"))
       .agg(count(lit(1)).as("__c"))
     val w = org.apache.spark.sql.expressions.Window
@@ -2937,9 +2795,7 @@ object Relational {
       .select(col("__g"),
         expr(s"CAST(CAST(abs(__x - __med) AS DECIMAL(32,6)) / $scale" +
           " AS DECIMAL(18,6))").as("__z"))
-    val out = anovaF(z, "__g", "__z").localCheckpoint(true)
-    base.unpersist(false)
-    out
+    anovaF(z, "__g", "__z")
   }
 
   /** Shared Spark/DuckDB fragment for the Cochran–Armitage z² — the
@@ -3046,9 +2902,8 @@ object Relational {
     */
   def spearmanCorr(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val v = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
-      .select(col(xCol).as("__x"), col(yCol).as("__y"))
-      .persist()
+    val v = Pins.pin(df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
+      .select(col(xCol).as("__x"), col(yCol).as("__y")))
     def ranks(c: String): DataFrame = {
       val counts = v.groupBy(col(c)).agg(count(lit(1)).as("__c"))
       globalCumSum(counts, Seq(col(c)), col("__c"), "__cum")
@@ -4331,15 +4186,12 @@ object Relational {
     // wordLen chained equi-self-joins on a corpus-grain frame are not
     // quadratic, but they ARE wordLen shuffles of the whole input — a
     // misfed corpus-grain frame should fail loudly, not grind
-    // persist + count instead of eager-checkpoint + count (r13,
-    // VERDICT #6): the count is the materializing action, so the guard
-    // costs ONE job, not a checkpoint job plus a count job; the cached
-    // frame serves the downstream readers exactly as the checkpoint did
-    val series = df.filter(col(tCol).isNotNull && col(xCol).isNotNull)
+    // pinWith: the guard count is the materializing job (r13, VERDICT
+    // #6 — ONE job, not a pin job plus a count job)
+    val (series, nSeries) = Pins.pinWith(df
+      .filter(col(tCol).isNotNull && col(xCol).isNotNull)
       .select(col(tCol).cast("long").as("__t"),
-        col(xCol).cast("long").as("__xv"))
-      .persist()
-    val nSeries = series.count()
+        col(xCol).cast("long").as("__xv")))(_.count())
     require(nSeries <= maxSeries,
       s"saxMotifs: series has $nSeries rows > maxSeries=$maxSeries - " +
         "feed a calendar-grain series or raise maxSeries deliberately")
@@ -4395,15 +4247,12 @@ object Relational {
     // structural series bound (the mannKendall maxSeries discipline):
     // the all-pairs window scan is quadratic with an n-row broadcast —
     // a corpus-grain input must fail loudly before the BNLJ builds
-    // persist + count instead of eager-checkpoint + count (r13,
-    // VERDICT #6): the count is the materializing action, so the guard
-    // costs ONE job, not a checkpoint job plus a count job; the cached
-    // frame serves the downstream readers exactly as the checkpoint did
-    val series = df.filter(col(tCol).isNotNull && col(xCol).isNotNull)
+    // pinWith: the guard count is the materializing job (r13, VERDICT
+    // #6 — ONE job, not a pin job plus a count job)
+    val (series, nSeries) = Pins.pinWith(df
+      .filter(col(tCol).isNotNull && col(xCol).isNotNull)
       .select(col(tCol).cast("long").as("__t"),
-        col(xCol).cast("long").as("__xv"))
-      .persist()
-    val nSeries = series.count()
+        col(xCol).cast("long").as("__xv")))(_.count())
     require(nSeries <= maxSeries,
       s"matrixProfile: series has $nSeries rows > maxSeries=" +
         s"$maxSeries - the nearest-neighbor scan is quadratic in the " +
@@ -4509,24 +4358,22 @@ object Relational {
     // data-derived range-partition count (r14) — see globalRank; the
     // boundary closure below already handles ANY partition count
     // (including 1, where it contributes zero pairs)
-    val nPart = loopParts(rows)
+    val nPart = Pins.loopParts(rows)
     val order = col("__xo") +: tiebreakCols.map(col)
-    val part = withR.repartitionByRange(nPart, order: _*)
-      .withColumn("__gc_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val part = Pins.pin(withR.repartitionByRange(nPart, order: _*)
+      .withColumn("__gc_pid", spark_partition_id()))
     // ONE window pass yields the within-partition adjacency sum AND
     // both boundary endpoints (min_by/max_by on the order key) — the
     // ≤ numShufflePartitions result is pinned so its three readers
     // don't re-run the sort
     val w = Window.partitionBy(col("__gc_pid")).orderBy(order: _*)
-    val perPart = part
+    val perPart = Pins.pin(part
       .withColumn("__prev", lag(col("__le"), 1).over(w))
       .groupBy(col("__gc_pid"))
       .agg(coalesce(sum(when(col("__prev").isNotNull,
           abs(col("__le") - col("__prev")))), lit(0L)).as("__sl"),
         min_by(col("__le"), struct(order: _*)).as("__leF"),
-        max_by(col("__le"), struct(order: _*)).as("__leL"))
-      .localCheckpoint(true)
+        max_by(col("__le"), struct(order: _*)).as("__leL")))
     val localAbs = perPart
       .agg(coalesce(sum(col("__sl")), lit(0L)).as("__sLocal"))
     // cross-boundary pairs: |first(le) of the next non-empty partition
@@ -4568,26 +4415,23 @@ object Relational {
     *
     * `maxSeries` is the STRUCTURAL form of that contract (the
     * [[graft.llm.Density.epsNeighborPairs]] `maxCell` discipline): the
-    * series is counted once (one 1-row driver read of the eagerly
-    * checkpointed frame — the timeBounds class) and a longer input
+    * series is counted once (the 1-row driver read whose job pins
+    * the frame — the timeBounds class) and a longer input
     * FAILS LOUDLY instead of broadcasting a corpus-grain frame into an
     * n²-pair BNLJ that no plan sweep can flag (the broadcast hint
-    * legitimizes it). The checkpoint also means the input dataflow runs
+    * legitimizes it). The pin also means the input dataflow runs
     * once, not once per self-join side.
     */
   def mannKendall(df: DataFrame, tCol: String, xCol: String,
       maxSeries: Int = 50000): DataFrame = {
     require(maxSeries >= 2, "maxSeries must be >= 2")
     val d38 = "decimal(38,0)"
-    // persist + count instead of eager-checkpoint + count (r13,
-    // VERDICT #6): the count is the materializing action, so the guard
-    // costs ONE job, not a checkpoint job plus a count job; the cached
-    // frame serves the downstream readers exactly as the checkpoint did
-    val series = df.filter(col(tCol).isNotNull && col(xCol).isNotNull)
+    // pinWith: the guard count is the materializing job (r13, VERDICT
+    // #6 — ONE job, not a pin job plus a count job)
+    val (series, nSeries) = Pins.pinWith(df
+      .filter(col(tCol).isNotNull && col(xCol).isNotNull)
       .select(col(tCol).cast("long").as("__t"),
-        col(xCol).cast("long").as("__xv"))
-      .persist()
-    val nSeries = series.count()
+        col(xCol).cast("long").as("__xv")))(_.count())
     require(nSeries <= maxSeries,
       s"mannKendall: series has $nSeries rows > maxSeries=$maxSeries - " +
         "the S pair sum is quadratic in the series length; feed a " +
@@ -4909,10 +4753,9 @@ object Relational {
     // groups (the globalCumSum construction; __gc_pid keeps the offset
     // frame inside the PlanSweep boundedness proof); partition count
     // data-derived (r14) — see globalRank
-    val nPart = loopParts(rows)
-    val part = vGrain.repartitionByRange(nPart, col("__v"))
-      .withColumn("__gc_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val nPart = Pins.loopParts(rows)
+    val part = Pins.pin(vGrain.repartitionByRange(nPart, col("__v"))
+      .withColumn("__gc_pid", spark_partition_id()))
     val w = Window.partitionBy(col("__gc_pid")).orderBy(col("__v"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val local = (0 until k).foldLeft(part) { (f, i) =>
@@ -5183,10 +5026,9 @@ object Relational {
   def mutualInformation(df: DataFrame, xCol: String,
       yCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val cells = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
+    val cells = Pins.pin(df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("__x"), col(yCol).as("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("__c")))
     val tot = cells.agg(coalesce(sum(col("__c")), lit(0L)).as("n"))
     val margX = cells.groupBy(col("__x"))
       .agg(sum(col("__c")).as("__cx"))
@@ -5342,10 +5184,9 @@ object Relational {
       topK: Int): DataFrame = {
     require(topK >= 1, "topK must be positive")
     val d38 = "decimal(38,0)"
-    val byKey = df.filter(col(keyCol).isNotNull && col(wCol).isNotNull)
+    val byKey = Pins.pin(df.filter(col(keyCol).isNotNull && col(wCol).isNotNull)
       .groupBy(col(keyCol).as("__k"))
-      .agg(sum(col(wCol).cast("long")).as("__w"))
-      .localCheckpoint(true)
+      .agg(sum(col(wCol).cast("long")).as("__w")))
     val tot = byKey.agg(count(lit(1)).as("n_keys"),
       coalesce(sum(col("__w")), lit(0L)).as("w_total"),
       coalesce(sum(col("__w").cast(d38) * col("__w")),
@@ -5383,19 +5224,17 @@ object Relational {
   def cochranQ(df: DataFrame, itemCol: String, treatCol: String,
       valCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val cell = df.filter(col(itemCol).isNotNull &&
+    val cell = Pins.pin(df.filter(col(itemCol).isNotNull &&
         col(treatCol).isNotNull && col(valCol).isNotNull)
       .groupBy(col(itemCol).as("__it"), col(treatCol).as("__tr"))
-      .agg(max(col(valCol).cast("boolean").cast("long")).as("__s"))
-      .localCheckpoint(true)
+      .agg(max(col(valCol).cast("boolean").cast("long")).as("__s")))
     val kf = cell.select(col("__tr")).distinct()
       .agg(count(lit(1)).as("k"))
     val perItem = cell.groupBy(col("__it"))
       .agg(count(lit(1)).as("__m"), sum(col("__s")).as("__r"))
-    val kept = perItem.crossJoin(broadcast(kf))
+    val kept = Pins.pin(perItem.crossJoin(broadcast(kf))
       .filter(col("__m") === col("k"))
-      .select(col("__it"), col("__r"))
-      .localCheckpoint(true)
+      .select(col("__it"), col("__r")))
     val rows = kept.agg(count(lit(1)).as("n_items"),
       coalesce(sum(col("__r")), lit(0L)).as("n_success"),
       coalesce(sum(col("__r").cast(d38) * col("__r")),
@@ -5429,18 +5268,17 @@ object Relational {
     *
     * `maxCells` is the structural lattice-contract guard (the
     * mannKendall maxSeries discipline): the cell frame is counted once
-    * (1-row driver read of the checkpointed frame) and a wider input
+    * (1-row driver read of the pinned frame) and a wider input
     * fails loudly before the cell-pair broadcast join builds.
     */
   def somersGamma(df: DataFrame, xCol: String, yCol: String,
       maxCells: Int = 2000): DataFrame = {
     require(maxCells >= 2, "maxCells must be >= 2")
     val d38 = "decimal(38,0)"
-    val cells = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
+    val cells = Pins.pin(df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).cast("long").as("__x"),
         col(yCol).cast("long").as("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("__c")))
     val nCells = cells.count()
     require(nCells <= maxCells,
       s"somersGamma: $nCells distinct (x, y) cells > maxCells=" +
@@ -5491,21 +5329,19 @@ object Relational {
   def cronbachAlpha(df: DataFrame, idCol: String, itemCol: String,
       scoreCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val cell = df.filter(col(idCol).isNotNull &&
+    val cell = Pins.pin(df.filter(col(idCol).isNotNull &&
         col(itemCol).isNotNull && col(scoreCol).isNotNull)
       .groupBy(col(idCol).as("__id"), col(itemCol).as("__itm"))
       .agg(count(lit(1)).as("__dup"),
-        sum(col(scoreCol).cast("long")).as("__v"))
-      .localCheckpoint(true)
+        sum(col(scoreCol).cast("long")).as("__v")))
     val kf = cell.select(col("__itm")).distinct()
       .agg(count(lit(1)).as("k"))
     val perSubj = cell.groupBy(col("__id"))
       .agg(count(lit(1)).as("__m"), max(col("__dup")).as("__dmax"),
         sum(col("__v")).as("__t"))
-    val kept = perSubj.crossJoin(broadcast(kf))
+    val kept = Pins.pin(perSubj.crossJoin(broadcast(kf))
       .filter(col("__m") === col("k") && col("__dmax") === 1)
-      .select(col("__id"), col("__t"))
-      .localCheckpoint(true)
+      .select(col("__id"), col("__t")))
     val nRow = kept.agg(count(lit(1)).as("n_subjects"),
       coalesce(sum(col("__t")), lit(0L)).as("__st"),
       coalesce(sum(col("__t").cast(d38) * col("__t")),
@@ -5642,14 +5478,13 @@ object Relational {
       .select(col(tCol).as("__t") +: col(xCol).cast("long").as("__xv")
         +: tiebreakCols.map(col): _*)
     // data-derived range-partition count (r14) — see globalRank
-    val nPart = loopParts(base)
+    val nPart = Pins.loopParts(base)
     val ord = col("__t") +: tiebreakCols.map(col)
     // __gc_pid: the exact globalCumSum offset-frame construction (and
     // the name PlanSweep's bounded-window walk recognizes as the
     // ≤ numShufflePartitions-row offset aggregate)
-    val part = base.repartitionByRange(nPart, ord: _*)
-      .withColumn("__gc_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val part = Pins.pin(base.repartitionByRange(nPart, ord: _*)
+      .withColumn("__gc_pid", spark_partition_id()))
     val w = Window.partitionBy(col("__gc_pid")).orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, 0)
     val local = part

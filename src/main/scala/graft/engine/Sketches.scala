@@ -62,18 +62,17 @@ object Sketches {
     * partial aggregation does the heavy lifting); everything downstream
     * — the d-way explode, the `(row, bucket)` totals (≤ d·w rows
     * regardless of input), the min-join — runs on that key-grain frame,
-    * which is persisted because two plan branches read it (the audit
-    * rule), then checkpointed and released. On a true stream the same
+    * which is pinned because two plan branches read it (the audit
+    * rule). On a true stream the same
     * bucket totals would accumulate in `d·w` integers of state; this is
     * the batch face of that sketch.
     */
   def cmsTopK(df: DataFrame, keyCol: String, d: Int = 4, w: Int = 1024,
-      k: Int = 50): DataFrame = {
+      k: Int = 50): DataFrame = Pins.scoped { s =>
     require(d >= 1 && w >= 2 && k >= 1, "need d >= 1, w >= 2, k >= 1")
-    val counts = df.filter(col(keyCol).isNotNull)
+    val counts = s.pin(df.filter(col(keyCol).isNotNull)
       .groupBy(col(keyCol).cast("string").as("key"))
-      .agg(count(lit(1)).as("n"))
-      .persist()
+      .agg(count(lit(1)).as("n")))
     val hashed = counts.select(col("key"), col("n"),
         explode(sequence(lit(0), lit(d - 1))).as("row"))
       .withColumn("bucket", pmod(graft.functions.PolyHash.polyhash(
@@ -86,14 +85,11 @@ object Sketches {
     // TakeOrdered-then-rank: the global cut is per-partition top-k + one
     // k-row merge, so the rank window only ever sees k rows — never the
     // full distinct-key frame (the vocabCoverage discipline).
-    val out = est
+    est
       .orderBy(col("est").desc, col("key").asc).limit(k)
       .withColumn("rank", row_number().over(org.apache.spark.sql.expressions
         .Window.orderBy(col("est").desc, col("key").asc)).cast("int"))
       .select(col("key"), col("n"), col("est"), col("rank"))
-      .localCheckpoint(true)
-    counts.unpersist(false)
-    out
   }
 
   /** Bloom-filter membership audit — build a `d`-hash / `mBits`-bucket
@@ -118,11 +114,11 @@ object Sketches {
     * check joins at probe-key grain. The one-row output ends the plan.
     */
   def bloomAudit(members: DataFrame, memberCol: String, probes: DataFrame,
-      probeCol: String, d: Int = 3, mBits: Int = 4096): DataFrame = {
+      probeCol: String, d: Int = 3,
+      mBits: Int = 4096): DataFrame = Pins.scoped { s =>
     require(d >= 1 && mBits >= 2, "need d >= 1, mBits >= 2")
-    val keys = members.filter(col(memberCol).isNotNull)
-      .select(col(memberCol).cast("string").as("pkey")).distinct()
-      .persist()
+    val keys = s.pin(members.filter(col(memberCol).isNotNull)
+      .select(col(memberCol).cast("string").as("pkey")).distinct())
     val bits = keys
       .select(col("pkey"), explode(sequence(lit(0), lit(d - 1))).as("row"))
       .select(col("row"), pmod(graft.functions.PolyHash.polyhash(
@@ -140,7 +136,7 @@ object Sketches {
       .groupBy(col("pkey")).agg(count(lit(1)).as("__set"))
       .filter(col("__set") === d)
       .select(col("pkey")).withColumn("__h", lit(1L))
-    val out = p
+    p
       .join(keys.withColumn("__m", lit(1L)), Seq("pkey"), "left")
       .join(hits, Seq("pkey"), "left")
       .agg(count(lit(1)).as("n_probes"),
@@ -151,9 +147,6 @@ object Sketches {
       .withColumn("fp_ppm", expr("""CASE WHEN n_probes > n_members
         THEN (n_false_pos * 1000000) DIV (n_probes - n_members)
         ELSE NULL END"""))
-      .localCheckpoint(true)
-    keys.unpersist(false)
-    out
   }
 
   /** HyperLogLog registers (Flajolet/Fusy/Gandouet/Meunier, AofA 2007)
@@ -398,7 +391,7 @@ object Sketches {
     * map-side partials, then a per-group window bounded by the group's
     * distinct count; downstream consumers only ever see ≤ k·|groups|
     * rows. The dedup exchange is pinned at the data-derived
-    * [[graft.engine.Relational.loopParts]] count: with few groups, AQE's
+    * [[graft.engine.Pins.loopParts]] count: with few groups, AQE's
     * byte-targeted coalescing collapsed the final dedup + the partial
     * WindowGroupLimit sort (CPU-bound, tiny-bytes — the q210/q195 class)
     * to 2 tasks; the pin keeps them parallel and clamps to the session
@@ -411,7 +404,7 @@ object Sketches {
     val pre = df.filter(col(valueCol).isNotNull)
       .select(groupCols.map(col) :+ kmvHash(col(valueCol)).as("h"): _*)
     val keys = groupCols.map(col) :+ col("h")
-    pre.repartition(graft.engine.Relational.loopParts(pre), keys: _*)
+    pre.repartition(graft.engine.Pins.loopParts(pre), keys: _*)
       .dropDuplicates(groupCols :+ "h")
       .withColumn("pos", row_number().over(org.apache.spark.sql.expressions
         .Window.partitionBy(groupCols.map(col): _*).orderBy(col("h")))
@@ -451,8 +444,8 @@ object Sketches {
     */
   def kmvPairSimilarity(df: DataFrame, groupCol: String, valueCol: String,
       k: Int = 64): DataFrame = {
-    val sk = kmvSketch(df, Seq(groupCol), valueCol, k)
-      .select(col(groupCol).as("g"), col("h")).localCheckpoint(true)
+    val sk = Pins.pin(kmvSketch(df, Seq(groupCol), valueCol, k)
+      .select(col(groupCol).as("g"), col("h")))
     val gs = sk.select(col("g")).distinct()
     val pairs = gs.select(col("g").as("ga"))
       .join(gs.select(col("g").as("gb")), col("ga") < col("gb"))
@@ -611,13 +604,12 @@ object Sketches {
     * true stream the whole sketch is `d·g` longs.
     */
   def amsF2(df: DataFrame, keyCol: String, d: Int = 5,
-      g: Int = 16): DataFrame = {
+      g: Int = 16): DataFrame = Pins.scoped { s =>
     require(d >= 1 && d % 2 == 1, "need odd d >= 1")
     require(g >= 1, "need g >= 1")
-    val counts = df.filter(col(keyCol).isNotNull)
+    val counts = s.pin(df.filter(col(keyCol).isNotNull)
       .groupBy(col(keyCol).cast("string").as("key"))
-      .agg(count(lit(1)).as("n"))
-      .persist()
+      .agg(count(lit(1)).as("n")))
     val P = 1000000007L
     val K = 2654435761L
     def coef(i: Int): Column = pmod(graft.functions.PolyHash.polyhash(
@@ -649,15 +641,12 @@ object Sketches {
     // err_ppm through DOUBLE: a BIGINT (est - exact) * 1000000 wraps
     // silently once F2 passes ~9.2e12 — well inside the 100 TB regime.
     // The double ratio stays a faithful ppm readout at any magnitude.
-    val out = z.crossJoin(exact)
+    z.crossJoin(exact)
       .select(lit(d).as("d"), lit(g).as("g"), col("f2_est"),
         col("f2_exact"),
         expr("CASE WHEN f2_exact > 0 THEN round(CAST(f2_est - f2_exact " +
           "AS DOUBLE) * 1000000.0 / CAST(f2_exact AS DOUBLE), 6) END")
           .as("err_ppm"))
-      .localCheckpoint(true)
-    counts.unpersist(false)
-    out
   }
 
   /** Equi-join cardinality estimate from count-min inner products
@@ -688,7 +677,7 @@ object Sketches {
     * proportional to data is the two key-grain collapses.
     */
   def cmsJoinSize(dfA: DataFrame, keyA: String, dfB: DataFrame,
-      keyB: String, d: Int = 4, w: Int = 256): DataFrame = {
+      keyB: String, d: Int = 4, w: Int = 256): DataFrame = Pins.scoped { s =>
     require(d >= 1 && w >= 2, "need d >= 1, w >= 2")
     def keyCounts(df: DataFrame, k: String): DataFrame =
       df.filter(col(k).isNotNull)
@@ -702,8 +691,8 @@ object Sketches {
         lit(w)))
       .groupBy(col("row"), col("bucket"))
       .agg(sum(col("n")).as("ct"))
-    val ca = keyCounts(dfA, keyA).persist()
-    val cb = keyCounts(dfB, keyB).persist()
+    val ca = s.pin(keyCounts(dfA, keyA))
+    val cb = s.pin(keyCounts(dfB, keyB))
     val ipRows = table(ca).withColumnRenamed("ct", "cta")
       .join(table(cb).withColumnRenamed("ct", "ctb"),
         Seq("row", "bucket"))
@@ -721,15 +710,11 @@ object Sketches {
     // err_ppm through DOUBLE: BIGINT (est - exact) * 1000000 wraps
     // silently once the join size passes ~9.2e12 — well inside the
     // 100 TB regime (same rationale as [[amsF2]]).
-    val out = est.crossJoin(exact)
+    est.crossJoin(exact)
       .select(lit(d).as("d"), lit(w).as("w"), col("est"), col("exact"),
         expr("CASE WHEN exact > 0 THEN round(CAST(est - exact " +
           "AS DOUBLE) * 1000000.0 / CAST(exact AS DOUBLE), 6) END")
           .as("err_ppm"))
-      .localCheckpoint(true)
-    ca.unpersist(false)
-    cb.unpersist(false)
-    out
   }
 
   /** Cross-column inclusion coefficients from KMV/theta sketches —
@@ -764,8 +749,8 @@ object Sketches {
       df.filter(col(c).isNotNull)
         .select(lit(name).as("colname"), col(c).cast("string").as("v"))
     }.reduce(_ unionByName _)
-    val sk = kmvSketch(union, Seq("colname"), "v", k)
-      .select(col("colname"), col("h")).localCheckpoint(true)
+    val sk = Pins.pin(kmvSketch(union, Seq("colname"), "v", k)
+      .select(col("colname"), col("h")))
     val theta = sk.groupBy(col("colname"))
       .agg(count(lit(1)).as("__nk"), max(col("h")).as("__kth"))
       .withColumn("__theta",

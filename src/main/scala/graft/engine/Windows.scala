@@ -257,12 +257,12 @@ object Windows {
     *
     * Scale: the chain lives at state² grain after transitionCounts'
     * one event scan — loop frames are alphabet-sized; rounds are k
-    * joins of tiny frames (localCheckpoint per round, the pageRankPpm
+    * joins of tiny frames (pinned per round, the pageRankPpm
     * lineage discipline).
     */
   /** Shared loop base of the ppm Markov-chain family ([[absorptionPpm]],
     * [[stationaryPpm]], [[markovEntropyRate]]): the transition matrix
-    * checkpointed EAGERLY once (one job — cuts the event-scan window off
+    * pinned once (one job — cuts the event-scan window off
     * every round's plan, the r13 pageRankPpm lineage discipline) and the
     * state axis derived from it in one explode pass (the r13 single-pass
     * idiom — the union form read `tr` twice).
@@ -270,16 +270,12 @@ object Windows {
   private def chainBase(df: DataFrame, keyCol: String, timeCol: String,
       stateCol: String, tiebreakCols: Seq[String])
       : (DataFrame, DataFrame) = {
-    // (measured, rejected: pre-partitioning tr on the per-round aggregate
-    // key before the checkpoint — the checkpointed LogicalRDD under AQE
-    // reports unknown partitioning, so every round's groupBy re-exchanged
-    // anyway and the extra exchange was pure cost)
-    val tr = transitionCounts(df, keyCol, timeCol, stateCol, tiebreakCols)
-      .select(col("from_state"), col("to_state"), col("p_ppm"))
-      .localCheckpoint(true)
-    val states = tr.select(
+    val tr = Pins.pin(
+      transitionCounts(df, keyCol, timeCol, stateCol, tiebreakCols)
+        .select(col("from_state"), col("to_state"), col("p_ppm")))
+    val states = Pins.pin(tr.select(
         explode(array(col("from_state"), col("to_state"))).as("state"))
-      .distinct().localCheckpoint(true)
+      .distinct())
     (tr, states)
   }
 
@@ -294,8 +290,8 @@ object Windows {
     // the tr join (guide §3.1: the big side is never exchanged) and the
     // round result broadcasts into the states left join — zero exchanges
     // of tr per round, and with only `steps` rounds the plan grows
-    // linearly, so the per-round EAGER checkpoint jobs (r12 shape: one
-    // full QueryExecution + one persisted RDD leaked per round) are gone;
+    // linearly, so the per-round pin jobs (r12 shape: one full
+    // QueryExecution + one pinned RDD leaked per round) are gone;
     // the whole recursion is ONE lazily-planned query.
     var a = states.withColumn("a",
       when(col("state") === target, lit(1000000L)).otherwise(lit(0L)))
@@ -383,7 +379,7 @@ object Windows {
   def markovEntropyRate(df: DataFrame, keyCol: String, timeCol: String,
       stateCol: String, tiebreakCols: Seq[String],
       steps: Int): DataFrame = {
-    // one chainBase call: tr is the checkpointed matrix, so the entropy
+    // one chainBase call: tr is the pinned matrix, so the entropy
     // branch and the stationary iterate share ONE event scan (the
     // previous form called transitionCounts twice — two full scans+windows
     // of the input — because stationaryPpm rebuilt the chain internally)
@@ -397,12 +393,11 @@ object Windows {
       .groupBy(col("from_state").as("state"))
       .agg(sum(col("__t")).as("h_state_micro"))
     // perState feeds BOTH the grand-total aggregate and the final
-    // readout — eagerly checkpointing the (tiny, states-grain) frame
+    // readout — pinning the (tiny, states-grain) frame
     // keeps the 6-round iterate's plan from executing once per reference
-    val perState = pi.join(hState, Seq("state"), "left")
+    val perState = Pins.pin(pi.join(hState, Seq("state"), "left")
       .withColumn("h_state_micro",
-        coalesce(col("h_state_micro"), lit(0L)))
-      .localCheckpoint(true)
+        coalesce(col("h_state_micro"), lit(0L))))
     val total = perState.agg(coalesce(sum(expr(
         "CAST(round(CAST(pi_ppm AS DOUBLE) * h_state_micro / 1000000) " +
           "AS BIGINT)")), lit(0L)).as("entropy_rate_micro"))
@@ -1306,16 +1301,15 @@ object Windows {
     * variant needs a per-entity sequence scan; this one is the
     * aggregate-only industry default.
     *
-    * Scale: one persisted pass over `(key, ts, type)`; per step, one
+    * Scale: one pinned pass over `(key, ts, type)`; per step, one
     * equi-join at ENTITY grain against the step's filtered events plus
     * a conditional-min aggregate — k small and fixed. No windows, no
     * per-entity sort; skew on hot entities is one aggregate key.
     */
   def funnelSteps(events: DataFrame, keyCol: String, timeCol: String,
-      typeCol: String, steps: Seq[String]): DataFrame = {
+      typeCol: String, steps: Seq[String]): DataFrame = Pins.scoped { s =>
     require(steps.nonEmpty, "need at least one funnel step")
-    val base = events.select(col(keyCol), col(timeCol), col(typeCol))
-      .persist()
+    val base = s.pin(events.select(col(keyCol), col(timeCol), col(typeCol)))
     var cur = base.filter(col(typeCol) === steps.head)
       .groupBy(col(keyCol)).agg(min(col(timeCol)).as("t1"))
     for (i <- 2 to steps.size) {
@@ -1326,12 +1320,9 @@ object Windows {
         .agg(min(when(col("__ts") > col(s"t${i - 1}"), col("__ts")))
           .as(s"t$i"))
     }
-    val out = cur.withColumn("n_completed",
+    cur.withColumn("n_completed",
         steps.indices.map(i => when(col(s"t${i + 1}").isNotNull, 1)
           .otherwise(0)).reduce(_ + _))
-      .localCheckpoint(true)
-    base.unpersist(false)
-    out
   }
 
   /** Rolling Pearson correlation over a trailing `n`-row window per

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.PolyHash.polyhash
 import graft.functions.TokenNgrams.tokenNgrams
+import graft.engine.Pins
 
 /** Corpus-level curation operators a large-scale training-data run needs
   * beyond per-document filters: cross-document line deduplication (the
@@ -240,13 +241,13 @@ object Curation {
       addK: Double = 0.5): DataFrame = {
     val toks = docs.select(col(idCol), Text.tokens(col(textCol)).as("toks"))
     // (doc, prev, cur) bigram grain + (doc, w) unigram grain, one pass
-    val grams = toks.select(col(idCol),
+    // 2 readers: the c2 model and the scoring join
+    val grams = Pins.pin(toks.select(col(idCol),
         explode(zip_with(
           slice(col("toks"), lit(1), greatest(size(col("toks")) - 1, lit(0))),
           slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),
           (x, y) => struct(x.as("p"), y.as("w")))).as("bg"))
-      .select(col(idCol), col("bg.p").as("p"), col("bg.w").as("w"))
-      .localCheckpoint(true) // 2 readers: the c2 model and the scoring join
+      .select(col(idCol), col("bg.p").as("p"), col("bg.w").as("w")))
     val uni = toks.select(col(idCol), explode(col("toks")).as("w"))
     val c1 = uni.groupBy(col("w")).agg(count(lit(1)).as("c1"))
     val c2 = grams.groupBy(col("p"), col("w")).agg(count(lit(1)).as("c2"))
@@ -456,30 +457,25 @@ object Curation {
     * finite.
     */
   def sourceUnigramKl(docs: DataFrame, textCol: String,
-      srcCol: String): DataFrame = {
+      srcCol: String): DataFrame = Pins.scoped { s =>
     // the (source, term) aggregate is the expensive frame (one pass over
     // the token stream) and is read FOUR times (source totals, term
-    // totals, corpus total, main join) — persist once, eager-checkpoint
-    // the source-grain result, release (the pageRankPpm discipline)
-    val st = docs
+    // totals, corpus total, main join) — pinned once
+    val st = s.pin(docs
       .select(col(srcCol).as("source"),
         explode(graft.llm.Text.tokens(col(textCol))).as("t"))
-      .groupBy("source", "t").agg(count(lit(1)).as("n_st"))
-      .persist()
-    val s = st.groupBy("source").agg(sum(col("n_st")).as("n_s"))
+      .groupBy("source", "t").agg(count(lit(1)).as("n_st")))
+    val bySrc = st.groupBy("source").agg(sum(col("n_st")).as("n_s"))
     val tt = st.groupBy("t").agg(sum(col("n_st")).as("n_t"))
     val tot = st.select(sum(col("n_st")).as("n"))
     val p = col("n_st").cast("double") / col("n_s").cast("double")
     val ratio = (col("n_st").cast("double") * col("n").cast("double")) /
       (col("n_s").cast("double") * col("n_t").cast("double"))
-    val out = st.join(s, "source").join(tt, "t").crossJoin(broadcast(tot))
+    st.join(bySrc, "source").join(tt, "t").crossJoin(broadcast(tot))
       .groupBy(col("source"), col("n_s").as("n_tokens"))
       .agg(count(lit(1)).as("n_terms"),
         round(sum(p * log(ratio)), 6).as("kl"))
       .select(col("source"), col("n_tokens"), col("n_terms"), col("kl"))
-      .localCheckpoint(true)
-    st.unpersist(false)
-    out
   }
 
   /** Mojibake sequences that mark UTF-8 read back as Latin-1 and
@@ -533,17 +529,16 @@ object Curation {
     * sublinear); the pair dot is a self-join on term with `source_a <
     * source_b` — output and intermediate are bounded by |sources|² and
     * shared vocabulary, never corpus size. The profile frame feeds
-    * three branches (two norm lookups + the dot), so it is persisted
-    * once, the pair-grain result checkpointed, and the cache released.
+    * three branches (two norm lookups + the dot), so it is pinned
+    * (docs/SCALE.md "Caching policy").
     */
   def sourceCosineMatrix(docs: DataFrame, textCol: String,
-      srcCol: String): DataFrame = {
+      srcCol: String): DataFrame = Pins.scoped { s =>
     val d38 = "decimal(38,0)"
-    val st = docs
+    val st = s.pin(docs
       .select(col(srcCol).as("source"),
         explode(graft.llm.Text.tokens(col(textCol))).as("t"))
-      .groupBy("source", "t").agg(count(lit(1)).cast(d38).as("n"))
-      .persist()
+      .groupBy("source", "t").agg(count(lit(1)).cast(d38).as("n")))
     val norms = st.groupBy("source")
       .agg(sum(col("n") * col("n")).as("q"))
     val a = st.select(col("source").as("source_a"), col("t"),
@@ -555,7 +550,7 @@ object Curation {
       .groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("n_shared_terms"),
         sum(col("na") * col("nb")).as("__dot"))
-    val out = dots
+    dots
       .join(broadcast(norms.withColumnRenamed("source", "source_a")
         .withColumnRenamed("q", "__qa")), Seq("source_a"))
       .join(broadcast(norms.withColumnRenamed("source", "source_b")
@@ -564,9 +559,6 @@ object Curation {
         round(col("__dot").cast("double") /
           (sqrt(col("__qa").cast("double")) *
            sqrt(col("__qb").cast("double"))), 6).as("cosine"))
-      .localCheckpoint(true)
-    st.unpersist(false)
-    out
   }
 
   /** Gopher-style document quality flags (Rae et al. 2021 §A1.1.2, the
@@ -656,16 +648,15 @@ object Curation {
     *
     * Scale: everything runs at `(source, term)` grain; the pair frame
     * is a term-keyed self-join bounded by shared vocabulary, never
-    * corpus size. The profile frame feeds both join sides — persisted
-    * once, result checkpointed, cache released.
+    * corpus size. The profile frame feeds both join sides — pinned
+    * (docs/SCALE.md "Caching policy").
     */
   def sourceJensenShannon(docs: DataFrame, textCol: String,
-      srcCol: String): DataFrame = {
-    val st = docs
+      srcCol: String): DataFrame = Pins.scoped { s =>
+    val st = s.pin(docs
       .select(col(srcCol).as("source"),
         explode(graft.llm.Text.tokens(col(textCol))).as("t"))
-      .groupBy("source", "t").agg(count(lit(1)).as("n"))
-      .persist()
+      .groupBy("source", "t").agg(count(lit(1)).as("n")))
     val totals = st.groupBy("source").agg(sum(col("n")).as("__ntot"))
     val prof = st.join(broadcast(totals), "source")
       .select(col("source"), col("t"),
@@ -676,7 +667,7 @@ object Curation {
       col("p").as("__pb"))
     val ln2 = math.log(2.0)
     val pa = col("__pa"); val pb = col("__pb")
-    val out = a.join(b, "t").filter(col("source_a") < col("source_b"))
+    a.join(b, "t").filter(col("source_a") < col("source_b"))
       .groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("n_shared_terms"),
         sum(pa * log(lit(2d) * pa / (pa + pb)) / 2 +
@@ -686,9 +677,6 @@ object Curation {
         lit(ln2 / 2) * (lit(2d) - col("__sa") - col("__sb")), 6))
       .select(col("source_a"), col("source_b"), col("n_shared_terms"),
         col("js"))
-      .localCheckpoint(true)
-    st.unpersist(false)
-    out
   }
 
   /** Per-source boilerplate-line detection — the navigation/footer/cookie
@@ -858,33 +846,29 @@ object Curation {
     * construction.
     */
   def burrowsDelta(docs: DataFrame, textCol: String, sourceCol: String,
-      topM: Int): DataFrame = {
+      topM: Int): DataFrame = Pins.scoped { s =>
     require(topM >= 1, "topM must be positive")
     val d38 = "decimal(38,0)"
-    val counts = docs
+    // pinned: the broadcast top-M build, the totals aggregate and the
+    // grid join read this concurrently (the ecdfPaired race class)
+    val counts = s.pin(docs
       .filter(col(textCol).isNotNull && col(sourceCol).isNotNull)
       .select(col(sourceCol).cast("string").as("__s"),
         explode(Text.tokens(col(textCol))).as("__w"))
-      .groupBy(col("__s"), col("__w")).agg(count(lit(1)).as("__c"))
-      // eager: the broadcast top-M build, the totals aggregate and the
-      // grid join read this concurrently — a lazy cache re-runs the
-      // tokenize+explode+aggregate chain per reader (the ecdfPaired
-      // race class)
-      .localCheckpoint(true)
+      .groupBy(col("__s"), col("__w")).agg(count(lit(1)).as("__c")))
     val top = counts.groupBy(col("__w"))
       .agg(sum(col("__c")).as("__cc"))
       .orderBy(desc("__cc"), asc("__w")).limit(topM)
       .select(col("__w"))
     val totals = counts.groupBy(col("__s"))
       .agg(sum(col("__c")).as("__tot"))
-    val grid = totals.select(col("__s"), col("__tot"))
+    // pinned: the stats aggregate and BOTH self-join branches read the
+    // grid inside one job
+    val grid = s.pin(totals.select(col("__s"), col("__tot"))
       .crossJoin(broadcast(top))
       .join(counts, Seq("__s", "__w"), "left")
       .withColumn("__f",
-        expr("coalesce(__c, CAST(0 AS BIGINT)) * 1000000 DIV __tot"))
-      // eager: the stats aggregate and BOTH self-join branches read the
-      // grid inside one job
-      .localCheckpoint(true)
+        expr("coalesce(__c, CAST(0 AS BIGINT)) * 1000000 DIV __tot")))
     val stats = grid.groupBy(col("__w"))
       .agg(count(lit(1)).as("__d"),
         sum(col("__f")).cast(d38).as("__sf"),
@@ -901,7 +885,7 @@ object Curation {
       .withColumn("__t", expr("CASE WHEN __varnum > 0 THEN " +
         "CAST(abs(__fa - __fb) AS DOUBLE) * CAST(__d AS DOUBLE) " +
         "/ sqrt(CAST(__varnum AS DOUBLE)) ELSE CAST(0.0 AS DOUBLE) END"))
-    val out = terms.groupBy(col("__sa"), col("__sb"))
+    terms.groupBy(col("__sa"), col("__sb"))
       .agg(count(lit(1)).as("m_words"),
         sort_array(collect_list(struct(col("__w"), col("__t"))))
           .as("__terms"))
@@ -910,10 +894,6 @@ object Curation {
           "(acc, x) -> acc + x) / CAST(m_words AS DOUBLE)"), 6))
       .select(col("__sa").as("source_a"), col("__sb").as("source_b"),
         col("m_words"), col("delta"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(grid)
-    graft.engine.Relational.releaseCheckpoint(counts)
-    out
   }
 
   /** Term burstiness: the variance-to-mean ratio (index of dispersion)
@@ -934,20 +914,19 @@ object Curation {
     * move); the D frame is one row on broadcast.
     */
   def termBurstiness(docs: DataFrame, idCol: String, textCol: String,
-      topM: Int): DataFrame = {
+      topM: Int): DataFrame = Pins.scoped { s =>
     require(topM >= 1, "topM must be positive")
     val d38 = "decimal(38,0)"
-    val toks = docs.filter(col(textCol).isNotNull)
+    val toks = s.pin(docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("__id"),
         explode(Text.tokens(col(textCol))).as("__w"))
-      .groupBy(col("__id"), col("__w")).agg(count(lit(1)).as("__c"))
-      .persist()
+      .groupBy(col("__id"), col("__w")).agg(count(lit(1)).as("__c")))
     val top = toks.groupBy(col("__w")).agg(sum(col("__c")).as("__cc"))
       .orderBy(desc("__cc"), asc("__w")).limit(topM)
       .select(col("__w"))
     val dRow = docs.filter(col(textCol).isNotNull)
       .agg(count(lit(1)).as("__D"))
-    val out = toks.join(broadcast(top), Seq("__w"))
+    toks.join(broadcast(top), Seq("__w"))
       .groupBy(col("__w"))
       .agg(count(lit(1)).as("df"),
         sum(col("__c")).as("total"),
@@ -959,9 +938,6 @@ object Curation {
           s"DIV (CAST(__D AS $d38) * total) AS BIGINT)"))
       .select(col("__w").as("term"), col("df"), col("total"),
         col("vmr_micro"))
-      .localCheckpoint(true)
-    toks.unpersist(false)
-    out
   }
 
   /** Good–Turing frequency spectrum (Good, Biometrika 1953): the

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Pins
 import graft.functions.PolyHash.polyhash
 
 /** Deduplication operators: exact (hash group-by), MinHash+LSH (banded
@@ -149,7 +150,7 @@ object Dedup {
 
   /** [[minhashCandidates]] over a pre-built (doc, hs) shingle-set frame —
     * lets callers that also need the sets downstream (the verify stage)
-    * compute/persist them exactly once.
+    * compute/pin them exactly once.
     */
   def minhashCandidatesFromSets(sets: DataFrame, k: Int = 16, bands: Int = 4,
       minEstJaccard: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
@@ -254,31 +255,27 @@ object Dedup {
   def simhashCandidates(docs: DataFrame, idCol: String, textCol: String,
       bits: Int = 64, bands: Int = 4, maxHamming: Int = 3,
       maxBucket: Int = 1000,
-      tokenHashesFn: Column => Column = tokenHashes64): DataFrame = {
+      tokenHashesFn: Column => Column = tokenHashes64)
+      : DataFrame = Pins.scoped { s =>
     require(maxHamming < bands,
       "pigeonhole only guarantees recall for hamming < bands")
     val banded = simhashBanded(docs, idCol, textCol, bits, bands,
       tokenHashesFn)
     // r14: the banded+pruned stream feeds BOTH self-join branches —
-    // unpersisted, the tokenize→simhash→explode→hot-bucket-window chain
+    // unpinned, the tokenize→simhash→explode→hot-bucket-window chain
     // executed once per branch (the prefixFilterCandidates finding).
-    // Persist it; the candidate pair list (≪ corpus by the banding
-    // contract) checkpoints eagerly so the cache releases at return.
-    val pruned = pruneHotBuckets(banded, Seq("band", "slice"), maxBucket)
-      .persist()
+    val pruned = s.pin(
+      pruneHotBuckets(banded, Seq("band", "slice"), maxBucket))
     val a = pruned.select(col("band"), col("slice"), col("doc").as("doc_a"),
       col("sh").as("sh_a"))
     val b = pruned.select(col("band"), col("slice"), col("doc").as("doc_b"),
       col("sh").as("sh_b"))
-    val out = a.join(b, Seq("band", "slice"))
+    a.join(b, Seq("band", "slice"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         hammingDist(col("sh_a"), col("sh_b")).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-      .localCheckpoint(true)
-    pruned.unpersist(false)
-    out
   }
 
   /** Sorted-neighborhood near-dup candidates — the third candidate-pair
@@ -394,22 +391,21 @@ object Dedup {
     * carrying shingle arrays for candidates only.
     * Output: (doc_a, doc_b, jaccard ≥ t) — verified, not candidates.
     *
-    * @note EXECUTES EAGERLY (r14): the verified pair list is
-    *       localCheckpointed at return so the shingle and prefix caches
-    *       release here — the [[verifiedPairs]] contract.
+    * @note EXECUTES EAGERLY (r14): the verified pair list is pinned
+    *       at return — the [[verifiedPairs]] contract.
     */
   def prefixFilterCandidates(docs: DataFrame, idCol: String,
-      textCol: String, shingleWidth: Int, minJaccard: Double): DataFrame = {
+      textCol: String, shingleWidth: Int,
+      minJaccard: Double): DataFrame = Pins.scoped { s =>
     require(minJaccard > 0 && minJaccard <= 1,
       s"minJaccard in (0,1], got $minJaccard")
     // r14: the shingle frame feeds THREE consumers (the prefix stream and
     // both verify-join sides) and the ranked prefix stream feeds BOTH
-    // self-join branches — unpersisted, the plan embedded the whole
+    // self-join branches — unpinned, the plan embedded the whole
     // tokenize→shingle chain three times and the df-rank window chain
     // twice (guide §2.4: the same subtree behind every broadcast build is
-    // still a full re-execution). Persist both; the eager checkpoint of
-    // the bounded verified-pair list below releases them at return.
-    val sets = shingleSets(docs, idCol, textCol, shingleWidth).persist()
+    // still a full re-execution). Pin both.
+    val sets = s.pin(shingleSets(docs, idCol, textCol, shingleWidth))
     // `hs` is a DISTINCT hash set (ShingleHashes dedups), so the per-doc
     // token count is size(hs) read off the array — the former
     // count-over-(doc) window was a second windowed pass over the same
@@ -421,11 +417,10 @@ object Dedup {
       .withColumn("__rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("doc"))
           .orderBy(col("__df"), col("h"))))
-    val prefixes = ranked
+    val prefixes = s.pin(ranked
       .filter(col("__rk") <=
         col("__n") - ceil(lit(minJaccard) * col("__n")) + 1)
-      .select(col("doc"), col("h"), col("__rk"), col("__n"))
-      .persist()
+      .select(col("doc"), col("h"), col("__rk"), col("__n")))
     // Exact PPJoin pruning on the candidate stream (same paper): the
     // LENGTH filter (J ≥ t forces min(na,nb) ≥ t·max(na,nb)) and the
     // PREFIX-POSITIONAL bound (overlap ≤ 1 + min(na−i, nb−j) at the
@@ -447,11 +442,9 @@ object Dedup {
         lit(minJaccard) * (col("a.__n") + col("b.__n")) - 1e-9)
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
       .distinct()
-    // verified pair list ≪ corpus at any real dup rate: checkpoint it
-    // EAGERLY (one job) so the two caches above release here instead of
-    // pinning executor storage for the session lifetime — the
-    // verifiedPairs idiom; callers see the same rows, just materialized.
-    val out = pairs
+    // verified pair list ≪ corpus at any real dup rate — the
+    // verifiedPairs idiom; callers see the same rows, just materialized
+    pairs
       .join(sets.select(col("doc").as("doc_a"), col("hs").as("__sa")),
         Seq("doc_a"))
       .join(sets.select(col("doc").as("doc_b"), col("hs").as("__sb")),
@@ -459,10 +452,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         round(jaccard(col("__sa"), col("__sb")), 6).as("jac"))
       .filter(col("jac") >= minJaccard)
-      .localCheckpoint(true)
-    prefixes.unpersist(false)
-    sets.unpersist(false)
-    out
   }
 
   /** Bounded-output production face of [[prefixFilterCandidates]]: the
@@ -544,7 +533,7 @@ object Dedup {
   /** Duplicate clustering: connected components over a near-dup pair list
     * by iterative min-label propagation (the join-based form of
     * large-star/small-star). Each iteration is one shuffle join + one
-    * aggregate; labels persist across rounds so lineage stays flat. Stops
+    * aggregate; labels are pinned per round so lineage stays flat. Stops
     * at fixpoint (no label changed) or `maxIter`. Output: (doc, cluster)
     * where cluster = the smallest doc id in the component — the canonical
     * survivor for keep-one-per-cluster dedup.
@@ -552,31 +541,28 @@ object Dedup {
   def duplicateClusters(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 10): DataFrame = {
     // partitioned AND sorted on the per-round join key (r13): every
-    // round joins edges on dst — a (src,dst)-hash cache re-exchanged
-    // and re-sorted the edge-grain frame once per round; cached plans
-    // preserve partitioning+ordering, so the per-round SMJ now only
-    // sorts the node-grain label side
+    // round joins edges on dst — a (src,dst)-hash pin re-exchanged
+    // and re-sorted the edge-grain frame once per round; pins keep
+    // partitioning+ordering, so the per-round SMJ now only sorts the
+    // node-grain label side
     // both directions in ONE pass over `pairs` (r13, the q333 explode
     // idiom): a two-branch union reads the caller's pair derivation
-    // twice — and when that derivation is an unmaterialized cache, the
-    // first job computes it twice (the branches race the cache build)
+    // twice
     val edges0 = pairs.select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("__p"))
       .select(col("__p.src").as("src"), col("__p.dst").as("dst"))
       .distinct()
-    // data-derived partition count (r14, Relational.loopParts): the
-    // cache's count is every round's task count — see Graph.pageRankPpm
-    val edges = graft.engine.Relational.loopCache(edges0, "dst",
-      graft.engine.Relational.loopParts(edges0))
+    // data-derived partition count (r14, Pins.loopParts): the pin's
+    // count is every round's task count — see Graph.pageRankPpm
+    val edges = Pins.loopCache(edges0, "dst", Pins.loopParts(edges0))
     // seed each label with min(self, neighbors) — round 1's propagation
     // folded into the init aggregate, so the dominant pair-sized clusters
     // reach their fixpoint one full round (two Spark jobs) earlier
-    var labels = edges.groupBy(col("src"))
+    var labels = Pins.pin(edges.groupBy(col("src"))
       .agg(min(col("dst")).as("__mn"))
       .select(col("src").as("doc"),
-        least(col("src"), col("__mn")).as("cluster"))
-      .localCheckpoint()
+        least(col("src"), col("__mn")).as("cluster")))
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -597,25 +583,22 @@ object Dedup {
       // not 1M.
       val reps = hop.select(col("doc").as("cluster"),
         col("cluster").as("rep_cluster"))
-      // localCheckpoint truncates the plan each round — the pointer-jump
+      // the pin truncates the plan each round — the pointer-jump
       // self-join would otherwise DOUBLE the logical plan per iteration
       // (exponential analysis/optimization cost, OOMs around round 10).
-      // LAZY checkpoint (r13): the convergence count right below is the
-      // materializing action, so checkpoint + count run as ONE Spark job
-      // per round instead of two — same blocks, same rows, half the
-      // per-round job/scheduling overhead.
-      val next = hop.join(reps, Seq("cluster"), "left")
+      // pinWith (r13): the convergence count is the materializing job,
+      // so pin + count run as ONE Spark job per round instead of two.
+      val (next, changed) = Pins.pinWith(hop
+        .join(reps, Seq("cluster"), "left")
         .select(col("doc"), col("old"),
           least(col("cluster"), coalesce(col("rep_cluster"), col("cluster")))
-            .as("cluster"))
-        .localCheckpoint(false)
-      val changed = next.filter(col("cluster") =!= col("old")).count()
-      labels.unpersist() // release the previous round's checkpoint blocks
+            .as("cluster")))(_.filter(col("cluster") =!= col("old")).count())
+      Pins.release(labels)
       labels = next.drop("old")
       converged = changed == 0
       iter += 1
     }
-    edges.unpersist()
+    Pins.release(edges)
     labels
   }
 
@@ -637,46 +620,36 @@ object Dedup {
     * join shingle sets back onto the candidate pairs and compute true
     * Jaccard.
     *
-    * The shingle sets are computed ONCE (persisted — candidates and both
-    * verify-join sides reference them; unpersisted, the tokenize→shingle
+    * The shingle sets are computed ONCE (pinned — candidates and both
+    * verify-join sides reference them; unpinned, the tokenize→shingle
     * chain would run three times), and semi-joined down to
     * candidate-involved docs before the verify join so only plausible
     * pairs carry their heavy hash arrays through a shuffle — at 100 TB
     * candidates ≪ corpus, so the verify join moves a sliver of the data.
-    * The verified pair list (≪ corpus at any real dup rate) is
-    * checkpointed eagerly so both caches release HERE instead of pinning
-    * executor storage for the session lifetime (the cornerSnapClip idiom).
     *
     * @note EXECUTES EAGERLY: the whole shingle→LSH→verify pipeline runs
-    *       when this method is CALLED (the checkpoint materializes it),
+    *       when this method is CALLED (the result is pinned),
     *       not when the returned frame is first consumed — and downstream
     *       filters no longer push into the pipeline. Build it once, where
     *       you mean to run it.
     */
   def fuzzyDuplicates(docs: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, k: Int = 16, bands: Int = 4,
-      minJaccard: Double = 0.7): DataFrame = {
-    val sets = shingleSets(docs, idCol, textCol, shingleWidth).persist()
-    val cands = minhashCandidatesFromSets(sets, k, bands,
-      minEstJaccard = 0.3).persist()
-    // both endpoints in ONE pass over cands (r13 explode idiom): the
-    // two-branch union's first job RACES the lazy cands cache — each
-    // branch recomputed the whole LSH subtree (measured on q60: two
-    // 64-task union stages, 10 s task time, for one cands pass)
+      minJaccard: Double = 0.7): DataFrame = Pins.scoped { s =>
+    val sets = s.pin(shingleSets(docs, idCol, textCol, shingleWidth))
+    val cands = s.pin(minhashCandidatesFromSets(sets, k, bands,
+      minEstJaccard = 0.3))
+    // both endpoints in ONE pass over cands (r13 explode idiom)
     val involved = cands
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc"))
       .distinct()
     val needed = sets.join(involved, Seq("doc"), "left_semi")
-    val verified = cands
+    cands
       .join(needed.select(col("doc").as("doc_a"), col("hs").as("set_a")), "doc_a")
       .join(needed.select(col("doc").as("doc_b"), col("hs").as("set_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         jaccard(col("set_a"), col("set_b")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-      .localCheckpoint()
-    sets.unpersist()
-    cands.unpersist()
-    verified
   }
 
   /** LSH calibration report — the tuning instrument for the
@@ -688,25 +661,23 @@ object Dedup {
     * [[graft.llm.Similarity.recallAtK]]: recall@k instruments the ANN
     * index, this instruments the signature estimator (how tight is the
     * estimate near the action threshold; how often does banding surface
-    * a pair the exact metric would reject). Same persist-once /
-    * checkpoint / release dataflow as [[fuzzyDuplicates]] — the exact
-    * sets ride the verify join only for surfaced candidates.
+    * a pair the exact metric would reject). Same dataflow as
+    * [[fuzzyDuplicates]] — the exact sets ride the verify join only for
+    * surfaced candidates.
     */
   def lshCalibration(docs: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, k: Int = 16, bands: Int = 4,
-      minEstJaccard: Double = 0.25, maxBucket: Int = 1000): DataFrame = {
-    val sets = shingleSets(docs, idCol, textCol, shingleWidth).persist()
-    val cands = minhashCandidatesFromSets(sets, k, bands, minEstJaccard,
-      maxBucket).persist()
-    // both endpoints in ONE pass over cands (r13 explode idiom): the
-    // two-branch union's first job RACES the lazy cands cache — each
-    // branch recomputed the whole LSH subtree (measured on q60: two
-    // 64-task union stages, 10 s task time, for one cands pass)
+      minEstJaccard: Double = 0.25,
+      maxBucket: Int = 1000): DataFrame = Pins.scoped { s =>
+    val sets = s.pin(shingleSets(docs, idCol, textCol, shingleWidth))
+    val cands = s.pin(minhashCandidatesFromSets(sets, k, bands,
+      minEstJaccard, maxBucket))
+    // both endpoints in ONE pass over cands (r13 explode idiom)
     val involved = cands
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc"))
       .distinct()
     val needed = sets.join(involved, Seq("doc"), "left_semi")
-    val out = cands
+    cands
       .join(needed.select(col("doc").as("doc_a"), col("hs").as("set_a")), "doc_a")
       .join(needed.select(col("doc").as("doc_b"), col("hs").as("set_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
@@ -714,10 +685,6 @@ object Dedup {
         round(jaccard(col("set_a"), col("set_b")) * 1000000).cast("long")
           .as("exact_ppm"))
       .withColumn("err_ppm", abs(col("est_ppm") - col("exact_ppm")))
-      .localCheckpoint()
-    sets.unpersist()
-    cands.unpersist()
-    out
   }
 
   /** Similarity-BAND pair mining — similar-but-not-duplicate pairs, the

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.functions._
+import graft.engine.Pins
 
 /** Grid-partitioned density clustering (DBSCAN) over 2-D integer-lattice
   * points — the density companion to [[Similarity]]'s centroid family
@@ -94,13 +95,11 @@ object Density {
     * `noise`.
     */
   def dbscanCore(points: DataFrame, idCol: String, xCol: String,
-      yCol: String, epsMicro: Long, minPts: Int): DataFrame = {
-    val nbrs = epsNeighborPairs(points, idCol, xCol, yCol, epsMicro)
-      .persist()
-    val out = dbscanCoreFromPairs(points, idCol, nbrs, minPts)
-    nbrs.unpersist(false)
-    out
-  }
+      yCol: String, epsMicro: Long, minPts: Int): DataFrame =
+    Pins.scoped { s =>
+      coreRoles(s, points, idCol,
+        s.pin(epsNeighborPairs(points, idCol, xCol, yCol, epsMicro)), minPts)
+    }
 
   /** [[dbscanCore]] over a PRE-BUILT eps-neighbor frame `(a, b)` —
     * the session-memoization face: when several queries share one
@@ -109,33 +108,32 @@ object Density {
     * that checkpoint instead of re-running the 9-cell join.
     */
   def dbscanCoreFromPairs(points: DataFrame, idCol: String,
+      nbrs: DataFrame, minPts: Int): DataFrame =
+    Pins.scoped(coreRoles(_, points, idCol, nbrs, minPts))
+
+  private def coreRoles(s: Pins.Scope, points: DataFrame, idCol: String,
       nbrs: DataFrame, minPts: Int): DataFrame = {
     require(minPts >= 1, "minPts must be positive")
     // node-grain, two readers (the core-id broadcast build and the final
-    // left join's stream side) — eager checkpoint so the independent
-    // stages scan blocks instead of racing a lazy plan (the
-    // duplicate-subtree class), released once the output is pinned
-    val counts = points.select(col(idCol).as("id"))
+    // left join's stream side) — pinned so the independent stages scan
+    // blocks
+    val counts = s.pin(points.select(col(idCol).as("id"))
       .join(nbrs.groupBy(col("a").as("id"))
         .agg(count(lit(1)).as("__c")), Seq("id"), "left")
       .withColumn("n_eps", coalesce(col("__c"), lit(0L)) + 1L)
-      .select(col("id"), col("n_eps"))
-      .localCheckpoint(true)
+      .select(col("id"), col("n_eps")))
     val coreIds = counts.filter(col("n_eps") >= minPts)
       .select(col("id").as("__core"))
     val hasCoreNbr = nbrs
       .join(coreIds, nbrs("b") === coreIds("__core"), "left_semi")
       .select(col("a").as("id")).distinct()
       .withColumn("__nearCore", lit(true))
-    val out = counts.join(hasCoreNbr, Seq("id"), "left")
+    counts.join(hasCoreNbr, Seq("id"), "left")
       .withColumn("role",
         when(col("n_eps") >= minPts, lit("core"))
           .when(col("__nearCore"), lit("border"))
           .otherwise(lit("noise")))
       .select(col("id"), col("n_eps"), col("role"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(counts)
-    out
   }
 
   /** Full DBSCAN labeling: `(id, role, cluster)` — clusters are the
@@ -147,21 +145,19 @@ object Density {
     * engine cannot reproduce); noise reports a null cluster.
     */
   def dbscanClusters(points: DataFrame, idCol: String, xCol: String,
-      yCol: String, epsMicro: Long, minPts: Int): DataFrame = {
-    val nbrs = epsNeighborPairs(points, idCol, xCol, yCol, epsMicro)
-      .persist()
-    val out = dbscanClustersFromPairsGeo(points, idCol, xCol, yCol,
-      epsMicro, nbrs, minPts)
-    nbrs.unpersist(false)
-    out
-  }
+      yCol: String, epsMicro: Long, minPts: Int): DataFrame =
+    Pins.scoped { s =>
+      dbscanClustersImpl(s, points, idCol,
+        s.pin(epsNeighborPairs(points, idCol, xCol, yCol, epsMicro)),
+        minPts, Some((xCol, yCol, epsMicro)))
+    }
 
   /** [[dbscanClusters]] over a PRE-BUILT eps-neighbor frame — see
     * [[dbscanCoreFromPairs]] for the memoization contract.
     */
   def dbscanClustersFromPairs(points: DataFrame, idCol: String,
       nbrs: DataFrame, minPts: Int): DataFrame =
-    dbscanClustersImpl(points, idCol, nbrs, minPts, None)
+    Pins.scoped(dbscanClustersImpl(_, points, idCol, nbrs, minPts, None))
 
   /** [[dbscanClustersFromPairs]] WITH the point geometry — the
     * boundary-pair reduction face (guide §2.3 "shuffle fewer bytes" /
@@ -190,29 +186,25 @@ object Density {
   def dbscanClustersFromPairsGeo(points: DataFrame, idCol: String,
       xCol: String, yCol: String, epsMicro: Long,
       nbrs: DataFrame, minPts: Int): DataFrame =
-    dbscanClustersImpl(points, idCol, nbrs, minPts,
-      Some((xCol, yCol, epsMicro)))
+    Pins.scoped(dbscanClustersImpl(_, points, idCol, nbrs, minPts,
+      Some((xCol, yCol, epsMicro))))
 
-  private def dbscanClustersImpl(points: DataFrame, idCol: String,
-      nbrs: DataFrame, minPts: Int,
+  private def dbscanClustersImpl(s: Pins.Scope, points: DataFrame,
+      idCol: String, nbrs: DataFrame, minPts: Int,
       geom: Option[(String, String, Long)]): DataFrame = {
     require(minPts >= 1, "minPts must be positive")
-    // every multi-reader frame here is EAGERLY checkpointed (r14): the
-    // readers are broadcast builds and semi-joins that run as independent
-    // stages of one job, so a lazy persist lets them race and re-execute
-    // the subtree (the duplicate-subtree class) — and a lazy cache also
-    // freezes the session-constant partition count into every reader
-    // stage, where the checkpoint lands AQE-coalesced (measured at sf0.1:
-    // 32-task reader stages over node-grain frames of a 2k-point
-    // geometry, 15 s of task time for sub-second work)
-    val counts = points.select(col(idCol).as("id"))
+    // every multi-reader frame here is pinned (r14): the readers are
+    // broadcast builds and semi-joins that run as independent stages of
+    // one job — and a lazy cache also freezes the session-constant
+    // partition count into every reader stage, where the pin lands
+    // AQE-coalesced (measured at sf0.1: 32-task reader stages over
+    // node-grain frames of a 2k-point geometry, 15 s of task time for
+    // sub-second work)
+    val counts = s.pin(points.select(col(idCol).as("id"))
       .join(nbrs.groupBy(col("a").as("id"))
         .agg(count(lit(1)).as("__c")), Seq("id"), "left")
-      .withColumn("n_eps", coalesce(col("__c"), lit(0L)) + 1L)
-      .localCheckpoint(true)
-    val core = counts.filter(col("n_eps") >= minPts).select(col("id"))
-      .localCheckpoint(true)
-    var subCached: Option[DataFrame] = None
+      .withColumn("n_eps", coalesce(col("__c"), lit(0L)) + 1L))
+    val core = s.pin(counts.filter(col("n_eps") >= minPts).select(col("id")))
     val ccInput = geom match {
       case None =>
         nbrs
@@ -221,18 +213,16 @@ object Density {
           .filter(col("a") < col("b"))
       case Some((xCol, yCol, epsMicro)) =>
         // largest sub-cell side with 2s² ≤ eps² (float guess, exact fix)
-        var s = (epsMicro / math.sqrt(2.0)).toLong
-        while (s > 1 && 2 * s * s > epsMicro * epsMicro) s -= 1
-        if (s < 1) s = 1
+        var side = (epsMicro / math.sqrt(2.0)).toLong
+        while (side > 1 && 2 * side * side > epsMicro * epsMicro) side -= 1
+        if (side < 1) side = 1
         // core points with their sub-cell — node-grain, read three times
-        val sub = points.select(col(idCol).as("id"),
-            expr(s"(CAST($xCol AS BIGINT) + ${Shift}L) DIV ${s}L")
+        val sub = s.pin(points.select(col(idCol).as("id"),
+            expr(s"(CAST($xCol AS BIGINT) + ${Shift}L) DIV ${side}L")
               .as("__sx"),
-            expr(s"(CAST($yCol AS BIGINT) + ${Shift}L) DIV ${s}L")
+            expr(s"(CAST($yCol AS BIGINT) + ${Shift}L) DIV ${side}L")
               .as("__sy"))
-          .join(core, Seq("id"), "left_semi")
-          .localCheckpoint(true)
-        subCached = Some(sub)
+          .join(core, Seq("id"), "left_semi"))
         // in-cell star: every core links to its sub-cell's min core id
         // (a genuine ε-pair by the 2s² ≤ eps² bound)
         val rep = sub.groupBy(col("__sx"), col("__sy"))
@@ -257,13 +247,11 @@ object Density {
     }
     val comps = graft.engine.Graph.connectedComponents(
       ccInput, "a", "b")
-    subCached.foreach(graft.engine.Relational.releaseCheckpoint)
-    val coreClusters = core
+    val coreClusters = s.pin(core
       .join(comps.select(col("node").as("id"), col("component")),
         Seq("id"), "left")
       .select(col("id"),
-        coalesce(col("component"), col("id")).as("cluster"))
-      .localCheckpoint(true)
+        coalesce(col("component"), col("id")).as("cluster")))
     val coreSide = coreClusters.select(col("id").as("__bid"),
       col("cluster").as("__bc"))
     val borderClusters = nbrs
@@ -274,7 +262,7 @@ object Density {
       .agg(min(struct(col("__bid"), col("__bc"))).as("__m"))
       .select(col("id"), col("__m.__bc").as("cluster"))
       .join(core, Seq("id"), "left_anti")
-    val out = counts
+    counts
       .join(coreClusters.select(col("id"), col("cluster").as("__cc")),
         Seq("id"), "left")
       .join(borderClusters.select(col("id"), col("cluster").as("__bcl")),
@@ -285,10 +273,5 @@ object Density {
           .otherwise(lit("noise")))
       .select(col("id"), col("role"),
         coalesce(col("__cc"), col("__bcl")).as("cluster"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(coreClusters)
-    graft.engine.Relational.releaseCheckpoint(core)
-    graft.engine.Relational.releaseCheckpoint(counts)
-    out
   }
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Pins
 
 /** Evaluation operators — the quality-measurement faces a training-data
   * pipeline runs AGAINST its own artifacts: clustering quality
@@ -919,7 +920,7 @@ object Eval {
     * wider than the rating frame itself is ever shuffled.
     */
   def fleissKappa(ratings: DataFrame, itemCol: String,
-      categoryCol: String, nRaters: Int): DataFrame = {
+      categoryCol: String, nRaters: Int): DataFrame = Pins.scoped { s =>
     require(nRaters >= 2, "fleiss kappa needs >= 2 raters")
     val n = nRaters.toLong
     val cell = ratings.groupBy(col(itemCol).as("__it"),
@@ -928,7 +929,7 @@ object Eval {
     val perItem = cell.groupBy(col("__it"))
       .agg(sum(col("__cnt")).as("__m"),
         sum(col("__cnt") * (col("__cnt") - 1)).as("__s"))
-    val kept = perItem.filter(col("__m") === n).persist()
+    val kept = s.pin(perItem.filter(col("__m") === n))
     val glob = kept.agg(count(lit(1)).as("n_items"),
       coalesce(sum(col("__s")), lit(0L)).as("s_sum"))
     val catTot = cell.join(kept.select(col("__it")), Seq("__it"))
@@ -938,7 +939,7 @@ object Eval {
     // NULL, not 0/0 NaN — the when(n > 0) discipline of the sibling
     // stats ops (kruskalWallis, mcc); kappa additionally guards its own
     // denominator (0 when P_e = 1, e.g. a single-category panel).
-    val out = glob.crossJoin(catTot)
+    glob.crossJoin(catTot)
       .withColumn("p_bar", when(col("n_items") > 0,
         round(col("s_sum").cast("double") /
           (col("n_items") * n * (n - 1)).cast("double"), 6)))
@@ -952,9 +953,6 @@ object Eval {
             .cast("double") /
           ((col("n_items") * col("n_items") * n * n
             - col("c_sq")) * (n - 1)).cast("double"), 6)))
-      .localCheckpoint(true)
-    kept.unpersist(false)
-    out
   }
 
   /** Krippendorff's alpha, nominal metric (Krippendorff 2004), over a
@@ -978,25 +976,24 @@ object Eval {
     * (item,category) grain, two 1-row reductions, 1-row cross join.
     */
   def krippendorffAlpha(ratings: DataFrame, itemCol: String,
-      categoryCol: String): DataFrame = {
+      categoryCol: String): DataFrame = Pins.scoped { s =>
     val cell = ratings.groupBy(col(itemCol).as("__it"),
         col(categoryCol).as("__cat"))
       .agg(count(lit(1)).as("__cnt"))
-    val perItem = cell.groupBy(col("__it"))
+    val perItem = s.pin(cell.groupBy(col("__it"))
       .agg(sum(col("__cnt")).as("__m"),
         sum(col("__cnt") * col("__cnt")).as("__sq"))
       .filter(col("__m") >= 2)
       .withColumn("__d", col("__m") * col("__m") - col("__sq"))
       .withColumn("__o2",
-        expr("(2 * __d) DIV (__m - 1)"))
-      .persist()
+        expr("(2 * __d) DIV (__m - 1)")))
     val glob = perItem.agg(count(lit(1)).as("n_items"),
       coalesce(sum(col("__m")), lit(0L)).as("n_ratings"),
       coalesce(sum(col("__o2")), lit(0L)).as("o2_sum"))
     val catTot = cell.join(perItem.select(col("__it")), Seq("__it"))
       .groupBy(col("__cat")).agg(sum(col("__cnt")).as("__nc"))
       .agg(coalesce(sum(col("__nc") * col("__nc")), lit(0L)).as("__ncsq"))
-    val out = glob.crossJoin(catTot)
+    glob.crossJoin(catTot)
       .withColumn("pair_sum",
         col("n_ratings") * col("n_ratings") - col("__ncsq"))
       .select(col("n_items"), col("n_ratings"), col("o2_sum"),
@@ -1005,9 +1002,6 @@ object Eval {
           (col("pair_sum") * 2 - (col("n_ratings") - 1) * col("o2_sum"))
             .cast("double") / (col("pair_sum") * 2).cast("double"), 6))
           .as("alpha"))
-      .localCheckpoint(true)
-    perItem.unpersist(false)
-    out
   }
 
   /** Quadratic-weighted Cohen's kappa (Cohen 1968) over an ORDINAL
@@ -1031,12 +1025,11 @@ object Eval {
   def weightedKappa(df: DataFrame, goldCol: String,
       predCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val cells = df.filter(col(goldCol).isNotNull &&
+    val cells = Pins.pin(df.filter(col(goldCol).isNotNull &&
         col(predCol).isNotNull)
       .groupBy(col(goldCol).cast("long").as("__g"),
         col(predCol).cast("long").as("__p"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("__c")))
     val tot = cells.agg(coalesce(sum(col("__c")), lit(0L)).as("n"))
     val wo = cells.agg(coalesce(sum(
         (col("__g") - col("__p")).cast(d38) * (col("__g") - col("__p"))
@@ -1075,9 +1068,10 @@ object Eval {
     * once and never re-shuffled wider than K².
     */
   def mccMulticlass(df: DataFrame, goldCol: String,
-      predCol: String): DataFrame = {
-    val conf = df.groupBy(col(goldCol).as("__g"), col(predCol).as("__p"))
-      .agg(count(lit(1)).as("__c")).persist()
+      predCol: String): DataFrame = Pins.scoped { s =>
+    val conf = s.pin(df
+      .groupBy(col(goldCol).as("__g"), col(predCol).as("__p"))
+      .agg(count(lit(1)).as("__c")))
     val tg = conf.groupBy(col("__g").as("__k"))
       .agg(sum(col("__c")).as("__t"))
     val tp = conf.groupBy(col("__p").as("__k"))
@@ -1091,7 +1085,7 @@ object Eval {
         sum(col("__pk") * col("__pk")).as("__psq"))
     val corr = conf.filter(col("__g") === col("__p"))
       .agg(coalesce(sum(col("__c")), lit(0L)).as("__corr"))
-    val out = byCat.crossJoin(corr)
+    byCat.crossJoin(corr)
       .select(col("__s").as("n"), col("__corr").as("n_correct"),
         expr("__corr * 1000000L DIV __s").as("accuracy_ppm"),
         when(col("__s") * col("__s") > col("__psq") &&
@@ -1100,9 +1094,6 @@ object Eval {
             / sqrt((col("__s") * col("__s") - col("__psq")).cast("double")
               * (col("__s") * col("__s") - col("__tsq")).cast("double")),
             6)).as("mcc"))
-      .localCheckpoint(true)
-    conf.unpersist(false)
-    out
   }
 
   /** Corpus self-BLEU (bigram modified precision, Zhu et al. 2018's
@@ -1126,13 +1117,13 @@ object Eval {
     * because the stats side is one row per gram.
     */
   def selfBleu(docs: DataFrame, idCol: String, textCol: String,
-      groupCol: String): DataFrame = {
-    val gc = docs
+      groupCol: String): DataFrame = Pins.scoped { s =>
+    val gc = s.pin(docs
       .select(col(idCol).as("__id"), explode(
         graft.functions.TokenNgrams.tokenNgrams(col(textCol), 2))
           .as("gram"))
       .groupBy(col("__id"), col("gram"))
-      .agg(count(lit(1)).as("__c")).persist()
+      .agg(count(lit(1)).as("__c")))
     val m1 = gc.groupBy(col("gram")).agg(max(col("__c")).as("__m1"))
     val stats = gc.join(m1, Seq("gram"))
       .groupBy(col("gram"), col("__m1"))
@@ -1148,15 +1139,12 @@ object Eval {
       .agg(sum(col("__c")).as("__tot"),
         sum(least(col("__c"), col("__clip"))).as("__kept"))
       .withColumn("__ppm", expr("__kept * 1000000L DIV __tot"))
-    val out = perDoc
+    perDoc
       .join(docs.select(col(idCol).as("__id"), col(groupCol).as("source")),
         Seq("__id"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         expr("sum(__ppm) DIV count(1)").as("self_bleu2_ppm"))
-      .localCheckpoint(true)
-    gc.unpersist(false)
-    out
   }
 
   /** Gwet's AC1 (Gwet, Br. J. Math. Stat. Psych. 2008) for two raters
@@ -1176,11 +1164,12 @@ object Eval {
     * Scale: same confusion-grain posture as [[mccMulticlass]].
     */
   def gwetAc1(df: DataFrame, goldCol: String, predCol: String,
-      nCategories: Int): DataFrame = {
+      nCategories: Int): DataFrame = Pins.scoped { s =>
     require(nCategories >= 2, "AC1 needs >= 2 categories")
     val k = nCategories.toLong
-    val conf = df.groupBy(col(goldCol).as("__g"), col(predCol).as("__p"))
-      .agg(count(lit(1)).as("__c")).persist()
+    val conf = s.pin(df
+      .groupBy(col(goldCol).as("__g"), col(predCol).as("__p"))
+      .agg(count(lit(1)).as("__c")))
     val tg = conf.groupBy(col("__g").as("__k"))
       .agg(sum(col("__c")).as("__t"))
     val tp = conf.groupBy(col("__p").as("__k"))
@@ -1196,7 +1185,7 @@ object Eval {
     // empty-input guard (the fleissKappa discipline): n = 0 reports
     // NULL ratios, never 0/0 NaN or a silent DIV-by-zero null mix; ac1
     // also guards its own denominator (0 at the degenerate e_sum).
-    val out = tot.crossJoin(corr).crossJoin(eSum)
+    tot.crossJoin(corr).crossJoin(eSum)
       .select(coalesce(col("__n"), lit(0L)).as("n"),
         col("__a").as("n_agree"),
         when(col("__n") > 0, expr("__a * 1000000L DIV __n"))
@@ -1208,8 +1197,5 @@ object Eval {
             .cast("double") /
             (col("__n") * col("__n") * 4 * (k - 1) - col("e_sum"))
               .cast("double"), 6)).as("ac1"))
-      .localCheckpoint(true)
-    conf.unpersist(false)
-    out
   }
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.engine.Pins
 
 /** Lexical (sparse) retrieval operators: per-document TF-IDF keyword
   * extraction and BM25 ranked search — the term-statistics complement to
@@ -148,15 +149,15 @@ object Lexical {
     *
     * Scale: ONE tokenize pass builds the compact per-doc stats frame
     * `(id, dl, c_t…)` — |query|+2 longs per doc, the guide-§8
-    * lightweight proxy — eagerly checkpointed so the model aggregate
-    * (cf_t / C, one broadcast row off the checkpoint) and the scoring
+    * lightweight proxy — pinned so the model aggregate
+    * (cf_t / C, one broadcast row off the pin) and the scoring
     * scan share a single materialization. Scoring is then entirely
     * row-local (per-term micro contributions summed in the projection)
     * into a global TakeOrdered: no explode, no corpus-grain shuffle, no
     * per-doc aggregation at all. (The former shape tokenized the corpus
     * in FOUR independent subtrees — lens×2, term-stream×2 — and paid a
     * (doc, term)-grain exchange for tf plus a doc-grain exchange for
-    * the score sum; measured 1.9 s → 0.6 s at sf0.1.) The checkpoint is
+    * the score sum; measured 1.9 s → 0.6 s at sf0.1.) The pin is
     * returned inside a lazy plan, so its blocks stay resident until the
     * session drops it — bounded at ~(|query|+2)·8 B per document.
     */
@@ -172,13 +173,12 @@ object Lexical {
     // whole-stage codegen
     val toks = docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("__id"), Text.tokens(col(textCol)).as("__w"))
-    val base = toks.select(
+    val base = Pins.pin(toks.select(
       col("__id") +: size(col("__w")).cast("long").as("dl") +:
         terms.zipWithIndex.map { case (t, i) =>
           size(filter(col("__w"), x => x === lit(t))).cast("long")
             .as(s"__c$i")
-        }: _*)
-      .localCheckpoint(true)
+        }: _*))
     // model row: corpus token count + per-term corpus frequencies —
     // 1 row, broadcast; reads the checkpoint blocks, not the corpus
     val stats = base.agg(
@@ -543,14 +543,13 @@ object Lexical {
       .agg(sum(col("__nt")).as("__bt"), sum(col("__nn")).as("__bn"))
     val wCum = Window.orderBy(col("__b"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pts = buckets
+    val pts = Pins.pin(buckets
       .withColumn("__ct", sum(col("__bt")).over(wCum))
       .withColumn("__cv", sum(col("__bn")).over(wCum))
       .filter(col("__ct") > 0 && col("__cv") > 0)
       .select(col("__b"), log(col("__ct").cast("double")).as("__lx"),
         log(col("__cv").cast("double")).as("__ly"))
-      .withColumn("__g", lit(1))
-      .localCheckpoint(true)
+      .withColumn("__g", lit(1)))
     graft.engine.Relational.theilSen(pts, Seq("__g"), "__lx", "__ly",
         Seq("__b"))
       .crossJoin(broadcast(pts.select(count(lit(1)).as("n_points"))))
@@ -577,7 +576,7 @@ object Lexical {
     * engines).
     *
     * Scale: the model is DERIVED, not joined at token grain — the
-    * (doc, bigram, cnt) frame is aggregated once and persisted for its
+    * (doc, bigram, cnt) frame is aggregated once and pinned for its
     * two readers (corpus bigram totals roll up from it; per-doc scores
     * join it), so the corpus token stream is never shuffled raw. The
     * unigram/bigram model tables are Heaps-sublinear in corpus size;
@@ -591,19 +590,18 @@ object Lexical {
     */
   def bigramLmScore(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    val uni = docs.select(explode(Text.tokens(col(textCol))).as("__w1"))
-      .groupBy(col("__w1")).agg(count(lit(1)).as("__c1"))
-      // eager: the broadcast V build and the model join race a lazy
-      // cache (the ecdfPaired race class)
-      .localCheckpoint(true)
+    // pinned: the broadcast V build and the model join read it
+    // concurrently (the ecdfPaired race class)
+    val uni = Pins.pin(docs
+      .select(explode(Text.tokens(col(textCol))).as("__w1"))
+      .groupBy(col("__w1")).agg(count(lit(1)).as("__c1")))
     val vRow = uni.agg(count(lit(1)).as("__V"))
-    val dg = docs.select(col(idCol).as("__id"),
+    // pinned: the model aggregate and the scoring probe read this in
+    // the same job
+    val dg = Pins.pin(docs.select(col(idCol).as("__id"),
         explode(graft.functions.TokenNgrams.tokenNgrams(col(textCol), 2))
           .as("gram"))
-      .groupBy(col("__id"), col("gram")).agg(count(lit(1)).as("__cnt"))
-      // eager: the model aggregate and the scoring probe read this in
-      // the same job
-      .localCheckpoint(true)
+      .groupBy(col("__id"), col("gram")).agg(count(lit(1)).as("__cnt")))
     val model = dg.groupBy(col("gram")).agg(sum(col("__cnt")).as("__c2"))
       .withColumn("__w1", substring_index(col("gram"), " ", 1))
       .join(uni, Seq("__w1"))
@@ -648,25 +646,24 @@ object Lexical {
     * stream is exploded once and never re-shuffled.
     */
   def kneserNeyBigrams(docs: DataFrame, idCol: String, textCol: String,
-      minCount: Long): DataFrame = {
+      minCount: Long): DataFrame = Pins.scoped { s =>
     require(minCount >= 1, "minCount must be positive")
     val d38 = "decimal(38,0)"
-    val grams = docs
+    // pinned: both marginal aggregates, the broadcast B build and the
+    // probe side read this concurrently inside the out build (the
+    // ecdfPaired race class)
+    val grams = s.pin(docs
       .select(explode(graft.functions.TokenNgrams.tokenNgrams(
         col(textCol), 2)).as("gram"))
       .groupBy(col("gram")).agg(count(lit(1)).as("c_uv"))
       .withColumn("__u", substring_index(col("gram"), " ", 1))
-      .withColumn("__v", substring_index(col("gram"), " ", -1))
-      // eager: both marginal aggregates, the broadcast B build and the
-      // probe side read this concurrently inside the out build (the
-      // ecdfPaired race class)
-      .localCheckpoint(true)
+      .withColumn("__v", substring_index(col("gram"), " ", -1)))
     val left = grams.groupBy(col("__u"))
       .agg(sum(col("c_uv")).as("c_u"), count(lit(1)).as("n1_fwd"))
     val right = grams.groupBy(col("__v"))
       .agg(count(lit(1)).as("n1_back"))
     val bRow = grams.agg(count(lit(1)).as("__B"))
-    val out = grams.filter(col("c_uv") >= minCount)
+    grams.filter(col("c_uv") >= minCount)
       .join(left, Seq("__u"))
       .join(right, Seq("__v"))
       .crossJoin(broadcast(bRow))
@@ -676,9 +673,6 @@ object Lexical {
             s"(CAST(c_u AS $d38) * __B)")).cast("long"))
       .select(col("gram"), col("c_uv"), col("c_u"), col("n1_fwd"),
         col("n1_back"), col("p_kn_micro"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(grams)
-    out
   }
 
   /** Top-k PMI collocations (Church & Hanks 1990) — bigrams whose
@@ -702,20 +696,19 @@ object Lexical {
     * the minCount-filtered model frame (Heaps-sublinear).
     */
   def pmiCollocations(docs: DataFrame, textCol: String, minCount: Long,
-      topK: Int): DataFrame = {
+      topK: Int): DataFrame = Pins.scoped { s =>
     require(minCount >= 1 && topK >= 1, "need positive minCount/topK")
-    val grams = docs
+    // pinned — the kneserNeyBigrams rationale
+    val grams = s.pin(docs
       .select(explode(graft.functions.TokenNgrams.tokenNgrams(
         col(textCol), 2)).as("gram"))
       .groupBy(col("gram")).agg(count(lit(1)).as("c_uv"))
       .withColumn("__u", substring_index(col("gram"), " ", 1))
-      .withColumn("__v", substring_index(col("gram"), " ", -1))
-      // eager — the kneserNeyBigrams rationale
-      .localCheckpoint(true)
+      .withColumn("__v", substring_index(col("gram"), " ", -1)))
     val left = grams.groupBy(col("__u")).agg(sum(col("c_uv")).as("c_u"))
     val right = grams.groupBy(col("__v")).agg(sum(col("c_uv")).as("c_v"))
     val nRow = grams.agg(sum(col("c_uv")).as("__N"))
-    val out = grams.filter(col("c_uv") >= minCount)
+    grams.filter(col("c_uv") >= minCount)
       .join(left, Seq("__u")).join(right, Seq("__v"))
       .crossJoin(broadcast(nRow))
       .withColumn("pmi_micro", expr(
@@ -728,9 +721,6 @@ object Lexical {
           .orderBy(desc("pmi_micro"), asc("gram"))))
       .select(col("gram"), col("c_uv"), col("c_u"), col("c_v"),
         col("pmi_micro"), col("rank").cast("int").as("rank"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(grams)
-    out
   }
 
   /** Skip-gram co-occurrence PMI — [[pmiCollocations]] widened from
@@ -752,7 +742,7 @@ object Lexical {
     * self-join/shuffle at all); everything downstream is model-grain.
     */
   def skipgramPmi(docs: DataFrame, idCol: String, textCol: String,
-      window: Int, minCount: Long, topK: Int): DataFrame = {
+      window: Int, minCount: Long, topK: Int): DataFrame = Pins.scoped { s =>
     require(window >= 1 && minCount >= 1 && topK >= 1,
       "need positive window/minCount/topK")
     // r14: the window pairs come straight off each document's token array
@@ -765,7 +755,9 @@ object Lexical {
     // pair aggregate itself, which partial-aggregates map-side (guide
     // §2.3 "aggregate before you shuffle", §2.4 "remove shuffles
     // outright").
-    val pairs = docs.filter(col(textCol).isNotNull)
+    // pinned: four concurrent readers (left/right marginals, the
+    // broadcast N build, the probe side — the ecdfPaired race class)
+    val pairs = s.pin(docs.filter(col(textCol).isNotNull)
       .select(Text.tokens(col(textCol)).as("__t"))
       .filter(size(col("__t")) >= 2)
       .select(explode(expr(
@@ -774,16 +766,11 @@ object Lexical {
           "j -> struct(element_at(__t, i) AS w1, " +
           "element_at(__t, j) AS w2))))")).as("__pr"))
       .select(col("__pr.w1").as("w1"), col("__pr.w2").as("w2"))
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_pair"))
-      // eager: four concurrent readers (left/right marginals, the
-      // broadcast N build, the probe side) raced the lazy cache and
-      // re-executed the tokenize+generate+aggregate chain per reader
-      // (the ecdfPaired race class)
-      .localCheckpoint(true)
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_pair")))
     val left = pairs.groupBy(col("w1")).agg(sum(col("n_pair")).as("c_w1"))
     val right = pairs.groupBy(col("w2")).agg(sum(col("n_pair")).as("c_w2"))
     val nRow = pairs.agg(sum(col("n_pair")).as("__N"))
-    val out = pairs.filter(col("n_pair") >= minCount)
+    pairs.filter(col("n_pair") >= minCount)
       .join(left, Seq("w1")).join(right, Seq("w2"))
       .crossJoin(broadcast(nRow))
       .withColumn("pmi_micro", expr(
@@ -796,9 +783,6 @@ object Lexical {
           .orderBy(desc("pmi_micro"), asc("w1"), asc("w2"))))
       .select(col("w1"), col("w2"), col("n_pair"), col("c_w1"),
         col("c_w2"), col("pmi_micro"), col("rank").cast("int").as("rank"))
-      .localCheckpoint(true)
-    pairs.unpersist(false)
-    out
   }
 
   /** Byte-pair-encoding merge TRAINING (Sennrich et al. 2016) — the
@@ -820,10 +804,10 @@ object Lexical {
     * early (fewer rows) if the corpus runs out of adjacent pairs.
     *
     * Scale: the loop state is the WORD-FREQUENCY table (Heaps-sublinear
-    * in corpus size), built from one corpus scan and localCheckpointed
-    * per round; each round is one vocab-grain explode + aggregate. The
-    * per-round winner is a one-row collect — driver work O(merges), the
-    * timeBounds-row class. Each round's EAGER checkpoint releases the
+    * in corpus size), built from one corpus scan and pinned per round;
+    * each round is one vocab-grain explode + aggregate. The per-round
+    * winner is a one-row collect — driver work O(merges), the
+    * timeBounds-row class. Each round's pin releases the
     * previous round's blocks as soon as it lands (and the last one on
     * exit), so block-manager residency stays ONE vocab frame regardless
     * of `merges` — round N+1 never re-reads round N−1.
@@ -833,60 +817,43 @@ object Lexical {
     require(merges >= 1, "merges must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    // unpersist the checkpoint RDD(s) behind an eagerly-checkpointed
-    // frame (LogicalRDD leaves) — safe once a successor checkpoint has
-    // materialized
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(false)
-        case _ => ()
-      }
-    var vocab = docs
+    def bestPair(vocab: DataFrame): Array[org.apache.spark.sql.Row] = vocab
+      .select(col("__f"), split(col("__syms"), " ").as("__a"))
+      .filter(size(col("__a")) >= 2)
+      .select(col("__f"), explode(expr(
+        "transform(sequence(1, size(__a) - 1), " +
+          "i -> concat(element_at(__a, i), ' ', element_at(__a, i + 1)))"))
+        .as("pair"))
+      .groupBy(col("pair")).agg(sum(col("__f")).as("weight"))
+      .orderBy(desc("weight"), asc("pair"))
+      .limit(1).collect()
+    var vocab = Pins.pin(docs
       .select(explode(Text.tokens(col(textCol))).as("__w"))
       .filter(length(col("__w")) >= 2)
       .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
       .select(expr("array_join(transform(sequence(1, char_length(__w)), " +
-        "i -> substring(__w, i, 1)), ' ')").as("__syms"), col("__f"))
-      .localCheckpoint(true)
+        "i -> substring(__w, i, 1)), ' ')").as("__syms"), col("__f")))
+    var best = bestPair(vocab)
     val steps = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     var step = 1
-    var exhausted = false
-    // previous round's frame, released only after the CURRENT round's
-    // best-pair collect has materialized the current (lazily
-    // checkpointed) vocab — unpersisting a localCheckpointed RDD before
-    // its successor materializes would lose the data irrecoverably
-    var prev: DataFrame = null
-    while (step <= merges && !exhausted) {
-      val best = vocab
-        .select(col("__f"), split(col("__syms"), " ").as("__a"))
-        .filter(size(col("__a")) >= 2)
-        .select(col("__f"), explode(expr(
-          "transform(sequence(1, size(__a) - 1), " +
-            "i -> concat(element_at(__a, i), ' ', element_at(__a, i + 1)))"))
-          .as("pair"))
-        .groupBy(col("pair")).agg(sum(col("__f")).as("weight"))
-        .orderBy(desc("weight"), asc("pair"))
-        .limit(1).collect()
-      // `best` is the materializing action of this round's vocab: the
-      // LAZY checkpoint + the pair aggregate run as ONE Spark job per
-      // round instead of two (r14, the duplicateClusters count-fusion)
-      if (prev != null) { release(prev); prev = null }
-      if (best.isEmpty) exhausted = true
-      else {
-        val pair = best(0).getString(0)
-        steps += ((step, pair, best(0).getLong(1)))
+    while (step <= merges && best.nonEmpty) {
+      val pair = best(0).getString(0)
+      steps += ((step, pair, best(0).getLong(1)))
+      step += 1
+      if (step <= merges) {
         val Array(a, b) = pair.split(" ", 2)
-        prev = vocab
-        vocab = vocab.withColumn("__syms", expr(
+        // the next round's best-pair collect is the job that pins the
+        // rewritten vocab (r14, the duplicateClusters count-fusion); the
+        // previous vocab is released only after it has run
+        val (next, nextBest) = Pins.pinWith(vocab.withColumn("__syms", expr(
           s"trim(replace(replace(concat(' ', replace(__syms, ' ', '  '), " +
-            s"' '), ' $a  $b ', ' $a$b '), '  ', ' '))"))
-          .localCheckpoint(false)
-        step += 1
+            s"' '), ' $a  $b ', ' $a$b '), '  ', ' '))")))(bestPair)
+        Pins.release(vocab)
+        vocab = next
+        best = nextBest
       }
     }
-    if (prev != null) release(prev)
-    release(vocab)
+    Pins.release(vocab)
     steps.toSeq.toDF("step", "pair", "weight")
   }
 
@@ -968,13 +935,11 @@ object Lexical {
       .select(col(idCol).as("__id"), col(splitCol).as("__split"),
         col(textCol).as("__text"))
     val train = base.filter(col("__split") === trainValue)
-    val uni = train.select(explode(Text.tokens(col("__text"))).as("__w1"))
-      .groupBy(col("__w1")).agg(count(lit(1)).as("__c1"))
-      // eager: the returned plan is LAZY, so the former
-      // unpersist-at-return dropped the cache before any reader ran —
-      // the broadcast V build and the scoring join each re-ran the
-      // tokenize+aggregate chain; the checkpoint makes it one build
-      .localCheckpoint(true)
+    // pinned: the broadcast V build and the scoring join of the
+    // returned LAZY plan both read it
+    val uni = Pins.pin(train
+      .select(explode(Text.tokens(col("__text"))).as("__w1"))
+      .groupBy(col("__w1")).agg(count(lit(1)).as("__c1")))
     val vRow = uni.agg(count(lit(1)).as("__V"))
     val big = train.select(
         explode(graft.functions.TokenNgrams.tokenNgrams(col("__text"), 2))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.PolyHash.polyhash
+import graft.engine.Pins
 
 /** Data-selection operators: the published techniques a training run uses
   * to CHOOSE documents, on top of the dedup/quality filters —
@@ -77,7 +78,7 @@ object Selection {
     * approach 2⁶³ (a 100 TB corpus is ~10¹³–10¹⁴ tokens), but so any
     * derived PRODUCT of two count frames stays out of the ANSI
     * long-overflow class without per-site analysis. The (doc,
-    * bucket) frame is EAGERLY materialized (`localCheckpoint`): it has
+    * bucket) frame is pinned: it has
     * three readers (raw model, target model, scoring), and storing the
     * ≤ 64-rows-per-doc counts once is strictly cheaper than
     * re-tokenizing the corpus per reader — the single-pass audit rule
@@ -87,8 +88,8 @@ object Selection {
       textCol: String, targetPred: Column,
       nBuckets: Int = 64): DataFrame = {
     require(nBuckets >= 2, "need at least two hash buckets")
-    val pd = docBucketCounts(docs, idCol, textCol, nBuckets,
-      Seq(targetPred -> "__tgt")).localCheckpoint(true)
+    val pd = Pins.pin(docBucketCounts(docs, idCol, textCol, nBuckets,
+      Seq(targetPred -> "__tgt")))
     val raw = pd.groupBy("__b").agg(sum(col("__n")).cast(d38).as("__r"))
     val tgt = pd.filter(col("__tgt")).groupBy("__b")
       .agg(sum(col("__n")).cast(d38).as("__t"))
@@ -140,9 +141,8 @@ object Selection {
       labelCol: String, trainPred: Column,
       nBuckets: Int = 64): DataFrame = {
     require(nBuckets >= 2, "need at least two hash buckets")
-    val pd = docBucketCounts(docs, idCol, textCol, nBuckets,
-      Seq(col(labelCol) -> "__l", trainPred -> "__tr"))
-      .localCheckpoint(true)
+    val pd = Pins.pin(docBucketCounts(docs, idCol, textCol, nBuckets,
+      Seq(col(labelCol) -> "__l", trainPred -> "__tr")))
     // class priors over TRAIN DOCS (token-bearing ones — the same rows
     // the likelihood model sees)
     val trainDocs = pd.filter(col("__tr"))
@@ -213,12 +213,11 @@ object Selection {
     // two readers (counts aggregate + final join) — materialize the
     // ~32-bytes/doc frame once rather than re-tokenizing the corpus
     // per reader (the single-pass audit rule)
-    val staged = docs.select(col(idCol),
+    val staged = Pins.pin(docs.select(col(idCol),
         Text.tokenCount(col(textCol)).cast("long").as("n_tokens"))
       .withColumn("bucket", expr(s"n_tokens DIV $bucketWidth"))
       .withColumn("__h", polyhash(concat(lit("cur:"),
-        col(idCol).cast("string"))))
-      .localCheckpoint(true)
+        col(idCol).cast("string")))))
     val counts = staged.groupBy(col("bucket"))
       .agg(count(lit(1)).as("__c"))
     val offs = counts.withColumn("__off", coalesce(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.PolyHash.polyhash
+import graft.engine.Pins
 
 /** Sequence shaping for training-data preparation: fixed-token-window
   * chunking, contiguous sequence packing into context-window bins, and
@@ -303,7 +304,7 @@ object Shaping {
     *
     * Scale: one corpus scan (map-side token counting — the counting
     * expression never materializes a token array) into a source-grain
-    * aggregate, eagerly checkpointed (it is read by its own total twice
+    * aggregate, pinned (it is read by its own total twice
     * — the single-pass audit rule), then arithmetic on the tiny frame.
     */
   /** Multi-epoch repetition schedule to a target source mix — the
@@ -320,24 +321,23 @@ object Shaping {
     * evaluated — under ANSI mode, default-on in Spark 4, `DIV 0` would
     * otherwise throw rather than yield null).
     *
-    * Scale: one source-grain count (checkpointed — three derivations
+    * Scale: one source-grain count (pinned — three derivations
     * read it), a dimension-sized repeat frame broadcast to the corpus,
     * and one `sequence` explode — the corpus is scanned once and never
     * shuffled.
     */
   def epochPlan(docs: DataFrame, srcCol: String, idCol: String,
       weights: DataFrame): DataFrame = {
-    val counts = docs.groupBy(col(srcCol)).agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+    val counts = Pins.pin(
+      docs.groupBy(col(srcCol)).agg(count(lit(1)).as("__n")))
     val tot = counts.select(sum(col("__n")).as("__tot"))
-    val reps = counts.crossJoin(broadcast(tot))
+    val reps = Pins.pin(counts.crossJoin(broadcast(tot))
       .withColumn("__share", expr("(__n * 1000000) DIV __tot"))
       .join(weights.select(col("source").as(srcCol),
         col("weight_ppm").as("__w")), srcCol)
       .withColumn("n_epochs", when(col("__share") === 0L, lit(1L))
         .otherwise(greatest(lit(1L), expr("__w DIV __share"))))
-      .select(col(srcCol), col("n_epochs"))
-      .localCheckpoint(true)
+      .select(col(srcCol), col("n_epochs")))
     docs.select(col(srcCol), col(idCol))
       .join(broadcast(reps), srcCol)
       .withColumn("epoch", explode(sequence(lit(1L), col("n_epochs"))))
@@ -345,10 +345,9 @@ object Shaping {
 
   def temperatureMixWeights(docs: DataFrame, srcCol: String,
       textCol: String): DataFrame = {
-    val per = docs.groupBy(col(srcCol).as("source"))
+    val per = Pins.pin(docs.groupBy(col(srcCol).as("source"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(Text.tokenCount(col(textCol)).cast("long")).as("n_tokens"))
-      .localCheckpoint(true)
+        sum(Text.tokenCount(col(textCol)).cast("long")).as("n_tokens")))
     val tot = per.select(sum(col("n_tokens")).as("__tot"))
     // Zero-denominator guards (ANSI mode, default-on in Spark 4, makes
     // DIV 0 a runtime error): __tot = 0 when every doc tokenizes empty
@@ -429,14 +428,13 @@ object Shaping {
   def resampleToMix(docs: DataFrame, srcCol: String, idCol: String,
       weights: DataFrame): DataFrame = {
     // λ over the joined (count, weight) frame: both sides source-grain.
-    // Eagerly checkpointed — three consumers (λ, quota, and λ's own
+    // Pinned — three consumers (λ, quota, and λ's own
     // crossJoin back) would otherwise re-execute the corpus count and
     // the whole weights subtree per branch (the single-pass audit rule;
     // q218's plan sweep showed 7 BNLJ before, 1 after).
-    val counts = docs.groupBy(col(srcCol)).agg(count(lit(1)).as("__n"))
+    val counts = Pins.pin(docs.groupBy(col(srcCol)).agg(count(lit(1)).as("__n"))
       .join(weights.select(col("source").as(srcCol),
-        col("weight_ppm").as("__w")).filter(col("__w") > 0L), srcCol)
-      .localCheckpoint(true)
+        col("weight_ppm").as("__w")).filter(col("__w") > 0L), srcCol))
     val lam = counts.select(min(expr("(__n * 1000000) DIV __w"))
       .as("__lam"))
     val quota = counts.crossJoin(broadcast(lam))

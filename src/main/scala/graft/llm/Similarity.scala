@@ -5,6 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Pins
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`ARRAY<FLOAT>`): brute-force cosine top-k as the exact baseline, and a
@@ -142,7 +143,7 @@ object Similarity {
     // plans to one task, serializing the whole Gram aggregate (the only
     // corpus scan) on one core; the exchange moves n rows (tiny next to
     // the n·d² generated terms) and no-ops on any well-partitioned input
-    val gram = graft.engine.Relational.fanOut(
+    val gram = Pins.pin(graft.engine.Relational.fanOut(
         df.filter(col(vecCol).isNotNull)
           .select(expr("transform(" + vecCol + ", x -> " +
             "CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT))").as("__q")))
@@ -150,8 +151,7 @@ object Similarity {
       .select(col("__i"), col("__xi"),
         posexplode(col("__q")).as(Seq("__j", "__xj")))
       .groupBy(col("__i"), col("__j"))
-      .agg(sum((col("__xi") * col("__xj")).cast(d38)).as("__a"))
-      .localCheckpoint(true)
+      .agg(sum((col("__xi") * col("__xj")).cast(d38)).as("__a")))
     val dims = gram.select(col("__i").as("dim")).distinct()
     var v = dims.withColumn("__v", lit(1000000L).cast(d38))
     var lastNorm: DataFrame = null
@@ -170,11 +170,10 @@ object Similarity {
       lastNorm = w.agg(max(abs(col("__w"))).as("__n"))
       // an exactly-orthogonal iterate (w ≡ 0) collapses to the zero
       // vector rather than dividing by zero
-      v = w.crossJoin(broadcast(lastNorm))
+      v = Pins.pin(w.crossJoin(broadcast(lastNorm))
         .select(col("dim"),
           expr("CAST(CASE WHEN __n > 0 THEN __w * 1000000 DIV __n " +
-            "ELSE 0 END AS DECIMAL(38,0))").as("__v"))
-        .localCheckpoint(true)
+            "ELSE 0 END AS DECIMAL(38,0))").as("__v")))
     }
     v.crossJoin(broadcast(lastNorm))
       .select(col("dim").cast("int").as("dim"),
@@ -212,18 +211,18 @@ object Similarity {
     * the [[powerIteration]] chained-posexplode trick and collapse
     * map-side to three d×d cell frames; nothing corpus-sized shuffles.
     */
-  def linearCka(pairs: DataFrame, xCol: String, yCol: String): DataFrame = {
+  def linearCka(pairs: DataFrame, xCol: String,
+      yCol: String): DataFrame = Pins.scoped { s =>
     val d38 = "decimal(38,0)"
     def milli(c: String) = expr(
       s"transform($c, v -> CAST(round(CAST(v AS DOUBLE) * 1000) AS BIGINT))")
     // fanOut for the same reason as [[powerIteration]]'s Gram: three d²
     // chained-posexplode aggregates read this frame, and a single-task
     // input would run them all on one core
-    val staged = graft.engine.Relational.fanOut(pairs
+    val staged = s.pin(graft.engine.Relational.fanOut(pairs
         .filter(col(xCol).isNotNull && col(yCol).isNotNull &&
           size(col(xCol)) === size(col(yCol)))
-        .select(milli(xCol).as("__x"), milli(yCol).as("__y")))
-      .persist()
+        .select(milli(xCol).as("__x"), milli(yCol).as("__y"))))
     // d×d raw cross/self-products, each via one chained posexplode
     def gram(a: String, b: String) = staged
       .select(col(a).as("__u"), col(b).as("__v"))
@@ -233,7 +232,7 @@ object Similarity {
       .groupBy(col("__i"), col("__j"))
       .agg(sum((col("__ui") * col("__vj")).cast(d38)).as("__g"))
     // d-vector column sums + n in one pass
-    val sums = staged
+    val sums = s.pin(staged
       .select(posexplode(col("__x")).as(Seq("__i", "__xi")),
         col("__y"))
       .select(col("__i"), col("__xi"),
@@ -241,8 +240,7 @@ object Similarity {
       .groupBy(col("__i"))
       .agg(sum(col("__xi")).cast(d38).as("__sx"),
         sum(col("__yi")).cast(d38).as("__sy"),
-        count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+        count(lit(1)).as("__n")))
     val n1 = sums.select(max(col("__n")).as("__n"),
       count(lit(1)).as("__d"))
     def frob(g: DataFrame, leftSum: String, rightSum: String) = g
@@ -253,7 +251,7 @@ object Similarity {
       .crossJoin(broadcast(n1))
       .select(expr(s"CAST(__n AS $d38) * __g - __si * __sj").as("__e"))
       .agg(sum(expr("__e * __e")).as("__f"))
-    val out = frob(gram("__x", "__y"), "__sx", "__sy")
+    frob(gram("__x", "__y"), "__sx", "__sy")
       .withColumnRenamed("__f", "num")
       .crossJoin(frob(gram("__x", "__x"), "__sx", "__sx")
         .withColumnRenamed("__f", "den_x"))
@@ -267,18 +265,15 @@ object Similarity {
             CAST(num AS DOUBLE) / (sqrt(CAST(den_x AS DOUBLE))
               * sqrt(CAST(den_y AS DOUBLE))) * 1000000 END)
             AS BIGINT)""").as("cka_micro"))
-      .localCheckpoint(true)
-    staged.unpersist(false)
-    out
   }
 
-  def isotropyReport(df: DataFrame, vecCol: String): DataFrame = {
+  def isotropyReport(df: DataFrame,
+      vecCol: String): DataFrame = Pins.scoped { s =>
     val d38 = "decimal(38,0)"
-    val base = df.filter(col(vecCol).isNotNull)
+    val base = s.pin(df.filter(col(vecCol).isNotNull)
       .select(posexplode(col(vecCol)).as(Seq("__i", "__x")))
       .withColumn("__q",
-        expr("CAST(round(CAST(__x AS DOUBLE) * 1000000) AS BIGINT)"))
-      .persist()
+        expr("CAST(round(CAST(__x AS DOUBLE) * 1000000) AS BIGINT)")))
     val perDim = base.groupBy(col("__i"))
       .agg(sum(col("__q").cast(d38)).as("__s"))
       .agg(count(lit(1)).as("dims"),
@@ -287,7 +282,7 @@ object Similarity {
       sum(col("__q").cast(d38) * col("__q")).as("__t"))
     val n = df.filter(col(vecCol).isNotNull)
       .agg(count(lit(1)).as("n"))
-    val out = n.crossJoin(broadcast(perDim)).crossJoin(broadcast(tot))
+    n.crossJoin(broadcast(perDim)).crossJoin(broadcast(tot))
       .select(col("n"), col("dims").cast("int").as("dims"),
         when(col("__t") > 0,
           expr("(__s2 * 1000000) DIV (n * __t)")).cast("long")
@@ -295,9 +290,6 @@ object Similarity {
         when(col("__t") > 0, round(col("__s2").cast("double") /
           (col("n").cast("double") * col("__t").cast("double")), 6))
           .as("conc"))
-      .localCheckpoint(true)
-    base.unpersist(false)
-    out
   }
 
   /** k-occurrence hubness histogram (Radovanović/Nanopoulos/
@@ -433,33 +425,29 @@ object Similarity {
     * corpus is scanned once and reduced by a per-id window — the
     * nearestCentroid shape — and the M-step is one (cluster, component)
     * aggregate. The corpus projection feeds every round's two branches
-    * (score + M-step join) and is persisted ONCE; per-round centroid
-    * frames are eagerly checkpointed (tiny) so round r's plan does not
+    * (score + M-step join) and is pinned ONCE; per-round centroid
+    * frames are pinned (tiny) so round r's plan does not
     * re-execute rounds 1..r−1 — the kCorePeel lineage discipline.
     */
   def kMeansRounds(vecs: DataFrame, idCol: String, vecCol: String,
-      k: Int, rounds: Int): DataFrame = {
+      k: Int, rounds: Int): DataFrame = Pins.scoped { s =>
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
-    val e = vecs.select(col(idCol), col(vecCol)).persist()
-    var cent = e.orderBy(col(idCol)).limit(k)
+    val e = s.pin(vecs.select(col(idCol), col(vecCol)))
+    var cent = s.pin(e.orderBy(col(idCol)).limit(k)
       .withColumn("cid",
         row_number().over(Window.orderBy(col(idCol))) - 1)
       .select(col("cid"),
         transform(col(vecCol), v => round(v.cast("double"), 6))
-          .as("centroid"))
-      .localCheckpoint(true)
+          .as("centroid")))
     var out: DataFrame = null
     for (r <- 1 to rounds) {
       out = nearestCentroid(e, idCol, vecCol, cent, "cid")
       if (r < rounds)
-        cent = groupCentroids(
+        cent = s.pin(groupCentroids(
           e.join(out.select(col(idCol), col("assigned").as("cid")),
-            Seq(idCol)), vecCol, "cid")
-          .localCheckpoint(true)
+            Seq(idCol)), vecCol, "cid"))
     }
-    val res = out.localCheckpoint(true)
-    e.unpersist(false)
-    res
+    out
   }
 
   /** Product-quantization codebooks (Jégou et al., "Product Quantization
@@ -1048,7 +1036,7 @@ object Similarity {
     * Scale: the corpus is touched ONLY by [[bruteForceTopK]] (queries
     * broadcast, corpus never shuffled); everything after — the n²
     * candidate-pair cosines and the m greedy rounds — runs on
-    * |queries|·n-grain frames, eagerly checkpointed once so the
+    * |queries|·n-grain frames, pinned once so the
     * m-round loop replans against a table, not an n²-join lineage.
     * The greedy loop is inherently sequential in m (each pick
     * conditions the next) but every round is one small join + one
@@ -1061,21 +1049,19 @@ object Similarity {
     require(lambdaPct >= 0 && lambdaPct <= 100, "lambdaPct is a percent")
     val lam = lit(lambdaPct.toDouble / 100.0)
     val oneMinusLam = lit((100 - lambdaPct).toDouble / 100.0)
-    val cand = bruteForceTopK(corpus, queries, idCol, vecCol,
-      queryIdCol, n).localCheckpoint(true)
+    val cand = Pins.pin(bruteForceTopK(corpus, queries, idCol, vecCol,
+      queryIdCol, n))
     val vecs = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("__v"))
-    val candV = cand.join(vecs, Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("__v"))
-      .localCheckpoint(true)
-    val pairSim = candV.select(col("query_id"),
+    val candV = Pins.pin(cand.join(vecs, Seq("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("cos"), col("__v")))
+    val pairSim = Pins.pin(candV.select(col("query_id"),
         col("neighbor_id").as("ca"), col("__v").as("__va"))
       .join(candV.select(col("query_id"), col("neighbor_id").as("cb"),
         col("__v").as("__vb")), Seq("query_id"))
       .filter(col("ca") =!= col("cb"))
       .select(col("query_id"), col("ca"), col("cb"),
-        cosine(col("__va"), col("__vb")).as("sim"))
-      .localCheckpoint(true)
+        cosine(col("__va"), col("__vb")).as("sim")))
     val rel = candV.select(col("query_id"), col("neighbor_id"),
       col("cos"))
     var picks = Vector.empty[DataFrame]
@@ -1099,15 +1085,14 @@ object Similarity {
         remaining.join(ms, Seq("query_id", "neighbor_id"), "left")
           .withColumn("__ms", coalesce(col("__ms"), lit(0.0)))
       }
-      val pick = withMaxSim
+      val pick = Pins.pin(withMaxSim
         .withColumn("score", lam * col("cos") - oneMinusLam * col("__ms"))
         .withColumn("__rk", row_number().over(Window
           .partitionBy(col("query_id"))
           .orderBy(col("score").desc, col("neighbor_id"))))
         .filter(col("__rk") === 1)
         .select(col("query_id"), lit(r).as("pick"), col("neighbor_id"),
-          col("score"))
-        .localCheckpoint(true)
+          col("score")))
       picks = picks :+ pick
     }
     picks.reduce(_ unionByName _)

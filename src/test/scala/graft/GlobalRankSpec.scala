@@ -68,24 +68,4 @@ class GlobalRankSpec extends SparkSpec {
         rows.map(_._3).sum)
     }
   }
-
-  test("loopParts: data-derived, clamped to [1, session shuffle " +
-      "partitions]; loopCache partitions on the key at that count") {
-    val sessionParts = spark.sessionState.conf.numShufflePartitions
-    // tiny frame (bytes << the 1 MB floor) → 1 partition
-    val tiny = (1L to 10L).map(i => (i, i)).toDF("k", "v")
-    assert(Relational.loopParts(tiny) == 1)
-    // big frame (range stats are exact: 8 B/row × 3M >> floor ×
-    // sessionParts) → clamped to the session constant, never above
-    val big = spark.range(0, 3000000).toDF("k")
-    assert(Relational.loopParts(big) == sessionParts)
-    // loopCache: rows preserved, key-partitioned at the requested count
-    val df = (1L to 1000L).map(i => (i % 7, i)).toDF("k", "v")
-    val c = Relational.loopCache(df, "k", 3)
-    assert(c.rdd.getNumPartitions == 3)
-    assert(c.count() == 1000)
-    assert(c.select(sum(col("v"))).as[Long].collect().head ==
-      (1L to 1000L).sum)
-    c.unpersist()
-  }
 }

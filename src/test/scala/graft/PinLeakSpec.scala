@@ -1,0 +1,56 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import graft.engine.Graph
+import graft.llm.{Dedup, Lexical}
+
+/** No operator leaves pinned blocks behind: for each call, the cached
+  * RDDs that exist after it and did not before must all sit behind the
+  * result's own `LogicalRDD` leaves (a pinned result, or the pin a lazy
+  * result still reads). Tracks RDD ids, not counts — sibling suites
+  * release asynchronously, so the global count can drop mid-call.
+  */
+class PinLeakSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def docs = Seq(
+    (1L, "the quick brown fox jumps over the lazy dog"),
+    (2L, "the quick brown fox jumps over the lazy cat"),
+    (3L, "a slow green turtle walks under the busy bridge"),
+    (4L, "a slow green turtle walks under the busy road"),
+    (5L, "lorem ipsum dolor sit amet consectetur")).toDF("doc_id", "text")
+
+  private def edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+    (5L, 3L), (5L, 6L), (6L, 7L), (7L, 5L), (2L, 4L)).toDF("a", "b")
+
+  private def seeds = Seq(1L).toDF("s")
+
+  private val operators: Seq[(String, () => DataFrame)] = Seq(
+    "skipgramPmi" -> (() =>
+      Lexical.skipgramPmi(docs, "doc_id", "text", 2, 1L, 5)),
+    "duplicateClusters" -> (() =>
+      Dedup.duplicateClusters(edges, "a", "b")),
+    "neighborJaccard" -> (() => Graph.neighborJaccard(edges, "a", "b", 1)),
+    "kCorePeel" -> (() => Graph.kCorePeel(edges, "a", "b", 2, 2)),
+    "pageRankPpm" -> (() => Graph.pageRankPpm(edges, "a", "b", 3)),
+    "bfsHops" -> (() => Graph.bfsHops(edges, "a", "b", seeds, "s", 3)),
+    "fuzzyDuplicates" -> (() =>
+      Dedup.fuzzyDuplicates(docs, "doc_id", "text", minJaccard = 0.3)),
+    "prefixFilterCandidates" -> (() =>
+      Dedup.prefixFilterCandidates(docs, "doc_id", "text", 3, 0.3)))
+
+  operators.foreach { case (name, op) =>
+    test(s"$name leaves no pinned blocks beyond its result's") {
+      val cached = () => spark.sparkContext.getPersistentRDDs.keySet
+      val before = cached()
+      val out = op()
+      out.collect()
+      val own = out.queryExecution.analyzed.collect {
+        case lr: LogicalRDD => lr.rdd.id
+      }.toSet
+      val leaked = cached() -- before -- own
+      assert(leaked.isEmpty, s"$name leaked cached RDD(s): $leaked")
+    }
+  }
+}

@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Test access to the `private[spark]` listener bus: block until every
+  * posted event has reached the listeners, so a listener's counts are
+  * complete when a test reads them.
+  */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry.queries entry, timed by a full
   * noop-write materialization, over SPARK_GRAFT_SF_DIR.
@@ -26,34 +25,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r13: the 100-entry default codegen cache thrashes under a
-      // 444-query registry (thousands of generated sources per pass) —
-      // every stage re-pays a ~300-500 ms Janino compile that 32
-      // concurrent tasks then all block on. Compiled-class caching is
-      // input-independent (never caches data or results) and strictly
-      // reduces class generation; measured q216 5.3->2.8 s, q349
-      // 10.2->6.6 s, q374 4.7->3.3 s at sf0.1.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QuietLogs.suppressAuditedWindowWarning() // r14: see QuietLogs
-    graft.functions.GraftExtensions.register(spark)
-    // Warm the session once (codegen compiler, parquet footers, FS cache)
-    // so the first measured query doesn't absorb JVM/session startup.
-    Seq("lineitem", "orders", "events", "documents", "embeddings").foreach {
-      t =>
-        try Queries.T(spark, sfDir, t).write.format("noop")
-          .mode("overwrite").save()
-        catch { case _: Throwable => () }
-    }
+    // Optional subset filter for scale spot-checks (comma-separated
+    // name prefixes); the driver sets nothing, so its runs stay full.
+    val names = Harness.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .fold(Seq.empty[String])(_.split(',').toSeq))
+    val spark = Harness.session()
+    val cpus = spark.sparkContext.defaultParallelism
+    Harness.warm(spark, sfDir)
     // Calibration probes (r13, VERDICT #7): three fixed micro-workloads
     // — pure CPU (synthetic range + hash arithmetic), pure shuffle
     // (synthetic keyed aggregate), pure scan (the largest input table)
@@ -73,11 +53,11 @@ object Bench {
     // shiftright keeps each term within 2³², so the 48M-row ANSI sum
     // cannot overflow int64
     import org.apache.spark.sql.functions.shiftright
-    val calCpu = cal(spark.range(0, 192L * 1000 * 1000, 1, cpus.toInt)
+    val calCpu = cal(spark.range(0, 192L * 1000 * 1000, 1, cpus)
       .select(fsum(shiftright(xxhash64(col("id")), 32) +
         shiftright(xxhash64(col("id"), lit(1)), 32)))
       .write.format("noop").mode("overwrite").save())
-    val calShuffle = cal(spark.range(0, 4L * 1000 * 1000, 1, cpus.toInt)
+    val calShuffle = cal(spark.range(0, 4L * 1000 * 1000, 1, cpus)
       .groupBy(pmod(xxhash64(col("id")), lit(100000)).as("k"))
       .agg(fcount(lit(1)).as("n"))
       .write.format("noop").mode("overwrite").save())
@@ -85,11 +65,6 @@ object Bench {
       try Queries.T(spark, sfDir, "lineitem").write.format("noop")
         .mode("overwrite").save()
       catch { case _: Throwable => () })
-    // Optional subset filter for scale spot-checks (comma-separated
-    // name prefixes); the driver sets nothing, so its runs stay full.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
-    val names = SparkEntry.queries.keys.toVector
-      .filter(n => only.forall(_.exists(n.startsWith)))
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
     val passTotals = scala.collection.mutable.ArrayBuffer.empty[Double]
     for (pass <- 1 to runs) {

@@ -205,7 +205,7 @@ object LlmQueries {
     * re-buckets the corpus. Values (and gate hashes) unchanged — the
     * nearDupEmb fixture discipline. */
   private def nearDupPairs(s: SparkSession, d: String): DataFrame =
-    fixtureMemo.getOrElseUpdate((s, d, "nearDupPairs"),
+    Pins.memo(s, d, "nearDupPairs")(
       Pins.pin(Dedup.minhashCandidates(nearDupCorpus(s, d), "doc_id", "text",
         shingleWidth = 3, k = 16, bands = 4, minEstJaccard = 0.25,
         maxBucket = 1000)))
@@ -214,7 +214,7 @@ object LlmQueries {
     * the iterative pointer-jumping pass is the expensive half of the
     * q69/q81/q139/q249 chain; ONE materialization serves all four. */
   private def nearDupClusters(s: SparkSession, d: String): DataFrame =
-    fixtureMemo.getOrElseUpdate((s, d, "nearDupClusters"),
+    Pins.memo(s, d, "nearDupClusters")(
       Pins.pin(
         Dedup.duplicateClusters(nearDupPairs(s, d), "doc_a", "doc_b")))
 
@@ -496,18 +496,8 @@ object LlmQueries {
     * empty set and proves nothing). Everything runs in double on both
     * sides: float→double widening and the +0.25 shift are exact.
     */
-  /** Session-scoped fixture memo (the q218 counts-frame discipline,
-    * `llm/Shaping.scala`): a Verify/Bench run drives every query through
-    * ONE SparkSession, and several queries stage the same derived frame
-    * — rebuilding it per query re-scans and re-shuffles identically.
-    * `Pins.pin` materializes the result once; values (and thus
-    * gate hashes) are unchanged, only lineage is truncated.
-    */
-  private val fixtureMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
   private def nearDupEmb(s: SparkSession, d: String): DataFrame =
-    fixtureMemo.getOrElseUpdate((s, d, "nearDupEmb"), {
+    Pins.memo(s, d, "nearDupEmb") {
       val emb = T(s, d, "embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
       val exact = emb.filter(col("vec_id") % 100 === 0)
@@ -518,13 +508,13 @@ object LlmQueries {
             slice(col("embedding"), lit(2), size(col("embedding")) - 1))
             .as("embedding"))
       Pins.pin(emb.unionByName(exact).unionByName(pert))
-    })
+    }
 
   /** The q129/q230 shared PQ codebook (m=2 subspaces over the label
     * groups) — m×k rows, trivially checkpointable.
     */
   private def pqLabelCodebooks(s: SparkSession, d: String): DataFrame =
-    fixtureMemo.getOrElseUpdate((s, d, "pqCodebooks"),
+    Pins.memo(s, d, "pqCodebooks")(
       Pins.pin(Similarity.pqCodebooks(T(s, d, "embeddings"), "embedding",
         "label", m = 2, dim = 64)))
   private val nearDupEmbSql =
@@ -6688,7 +6678,7 @@ object LlmQueries {
     * coPurchaseEdges/shipmentEdges discipline). */
   private def dbscanNbrs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    fixtureMemo.getOrElseUpdate((s, d, "dbscanNbrs"), {
+    Pins.memo(s, d, "dbscanNbrs") {
       val raw = Pins.pin(graft.llm.Density.epsNeighborPairs(
         embedLattice2d(s, d), "vec_id", "x", "y", epsMicro = 25000L))
       // size the shared pin from its TRUE materialized bytes
@@ -6704,7 +6694,7 @@ object LlmQueries {
         Pins.release(raw)
         sized
       } else raw
-    })
+    }
 
   /** Shared oracle prefix of the density pair: lattice points, eps-cells,
     * the 3×3 candidate join, exact neighbor counts, core set —
@@ -7869,12 +7859,9 @@ object LlmQueries {
     * q429 Cochran's Q share the 2/2/2 panel, so the triple corpus
     * tokenize+lang-ID is paid once (the edge-memo discipline).
     */
-  private val raterMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int, Int), DataFrame]
-
   private def raterFrame(s: SparkSession, d: String, minFull: Int,
       minHead: Int, minTail: Int): DataFrame =
-    raterMemo.getOrElseUpdate((s, d, minFull, minHead, minTail),
+    Pins.memo(s, d, s"rater$minFull/$minHead/$minTail")(
       Pins.pin(raterFrameBuild(s, d, minFull, minHead, minTail)))
 
   private def raterFrameBuild(s: SparkSession, d: String, minFull: Int,

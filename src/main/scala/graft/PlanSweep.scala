@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec,
   LocalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Whole-registry physical-plan audit: builds every `SparkEntry.queries`
@@ -118,21 +118,14 @@ object PlanSweep {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // plain trees for the walk; AQE re-plan doesn't change the audited
-      // logical shapes, it only wraps them
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftExtensions.register(spark)
+    val spark = Harness.session()
+    // plain trees for the walk; AQE re-plan doesn't change the audited
+    // logical shapes, it only wraps them
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     // interior plans (checkpoints, loop collects) arrive async on the
-    // listener bus; buffer them and drain per query by waiting for the
-    // count to go quiet
+    // listener bus; buffer them and take them per query once the bus
+    // has delivered every event posted so far
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
     spark.listenerManager.register(new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution,
@@ -141,16 +134,7 @@ object PlanSweep {
           exception: Exception): Unit = ()
     })
     def drain(): Seq[SparkPlan] = {
-      var last = -1
-      var quiet = 0
-      var iters = 0
-      while (quiet < 2 && iters < 100) {
-        val n = captured.size
-        if (n == last) quiet += 1 else quiet = 0
-        last = n
-        iters += 1
-        Thread.sleep(50)
-      }
+      Bridge.drainListenerBus(spark.sparkContext)
       val out = Vector.newBuilder[SparkPlan]
       while (!captured.isEmpty) out += captured.poll()
       out.result()

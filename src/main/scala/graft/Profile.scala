@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Per-stage profiler for single registry queries — the measurement
   * instrument behind the optimization rounds (guide §1: decide whether
@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * prints, per pass: total wall, per-job wall, and the top stages by task
   * time with their call sites (StageInfo.name carries the
   * `op at File.scala:line` anchor) plus shuffle read/write and spill
-  * bytes. The session mirrors Bench (UTC, shuffle partitions = cores,
-  * noop-sink materialization) so the numbers decompose the bench's.
+  * bytes. The session, warm-up and noop-sink materialization are
+  * Bench's ([[Harness]]), so the numbers decompose the bench's.
   */
 object Profile {
   private class Rec extends SparkListener {
@@ -60,46 +60,24 @@ object Profile {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Profile <sfDir> <names-csv> [passes]")
     val sfDir = args(0)
-    val prefixes = args(1).split(',').toSet
+    val names = Harness.select(args(1).split(',').toSeq)
     val passes = if (args.length >= 3) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // r13, see Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // experiment knob: SPARK_GRAFT_PROFILE_CONF="k=v;k2=v2" extra confs
-    val spark = sys.env.get("SPARK_GRAFT_PROFILE_CONF")
-      .map(_.split(';').filter(_.contains("=")))
-      .getOrElse(Array.empty)
-      .foldLeft(builder0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QuietLogs.suppressAuditedWindowWarning() // r14: see QuietLogs
-    graft.functions.GraftExtensions.register(spark)
+    val spark = Harness.session()
     val rec = new Rec
     spark.sparkContext.addSparkListener(rec)
-    val names = SparkEntry.queries.keys.toVector
-      .filter(n => prefixes.exists(n.startsWith))
     // bench-identical warmup so scan costs match the bench's steady state
-    Seq("lineitem", "orders", "events", "documents", "embeddings").foreach {
-      t => try Queries.T(spark, sfDir, t).write.format("noop")
-        .mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    Harness.warm(spark, sfDir)
     names.foreach { name =>
       for (pass <- 1 to passes) {
-        // listener events are delivered async; give the bus a moment to
-        // drain the previous pass before resetting
-        Thread.sleep(500)
+        // listener events are delivered async: drain the previous pass's
+        // before resetting, and this pass's before reading them
+        Bridge.drainListenerBus(spark.sparkContext)
         rec.reset()
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir).write.format("noop")
           .mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500)
+        Bridge.drainListenerBus(spark.sparkContext)
         println(f"%n=== $name pass $pass: $wall%.2f s, " +
           f"${rec.jobs.length} jobs, ${rec.stages.length} stages ===")
         val jobTot = rec.jobs.map(_._2).sum / 1e3

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,27 +7,15 @@ object Verify {
     // optional 3rd arg: comma-separated query-name prefixes (local
     // iteration aid; the driver passes exactly two args)
     val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+      case Array(s, o)    => (s, o, Seq.empty[String])
+      case Array(s, o, f) => (s, o, f.split(',').toSeq)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // r13, see Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QuietLogs.suppressAuditedWindowWarning() // r14: see QuietLogs
-    graft.functions.GraftExtensions.register(spark)
+    val names = Harness.select(only)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith))
-    }.foreach { case (name, fn) =>
+    names.foreach { name =>
       try {
-        val df = fn(spark, sfDir)
+        val df = SparkEntry.queries(name)(spark, sfDir)
         // Driver compare: DuckDB oracles emit naive TIMESTAMP; Spark's
         // derived timestamps are session-TZ LTZ and parquet-dump as
         // timestamp[us, tz=UTC], red-flagging schema_match even when every

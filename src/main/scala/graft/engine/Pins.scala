@@ -1,8 +1,9 @@
 package graft.engine
 
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
@@ -24,7 +25,9 @@ import org.apache.spark.sql.internal.SQLConf
   * [[scoped]], which pins the operator's result and then releases them.
   * A pin that a returned LAZY frame still reads cannot be released by
   * the operator; it is left to Spark's `ContextCleaner`, which drops the
-  * blocks once the frame is garbage. This object keeps no references.
+  * blocks once the frame is garbage. The exception is a [[memo]] entry:
+  * a frame several registry queries stage identically is built and
+  * pinned once, and this object holds it for the rest of the JVM.
   *
   * This file is the only place in `src/main` that calls Spark's cache
   * API; `PinGateSpec` fails the build on a raw call anywhere else
@@ -92,6 +95,19 @@ private[graft] object Pins {
     try pin(body(s))
     finally s.held.foreach(release)
   }
+
+  private val memos = TrieMap.empty[(SparkSession, String, String), DataFrame]
+
+  /** The frame `build` returns, built once per (session, input dir,
+    * `name`) and returned as is by every later call with that key: one
+    * materialization of a shared fixture serves every query of a
+    * Verify/Bench run. `build` pins its own result. It may call `memo`
+    * for another key; if it throws, no entry is left and the next call
+    * builds again.
+    */
+  def memo(s: SparkSession, dir: String, name: String)(
+      build: => DataFrame): DataFrame =
+    memos.getOrElseUpdate((s, dir, name), build)
 
   /** Data-derived partition count for the loop-invariant pinned frames
     * of the iterative algorithms (guide §2.2 "fewer, larger reduce

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
@@ -29,6 +30,13 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** Block until every event posted to the listener bus so far has
+    * reached its listeners (`listenerBus` is private[spark]), so what a
+    * `SparkListener` or `QueryExecutionListener` recorded is complete.
+    */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** `ckpt`, a local checkpoint of `origin`, as the planner should see
     * it. The checkpoint takes its partitioning and ordering from the

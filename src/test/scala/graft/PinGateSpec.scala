@@ -3,14 +3,20 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Caching gate: every cache call in `src/main/scala` goes through
-  * `graft.engine.Pins` (docs/SCALE.md "Caching policy"). A raw
-  * `persist`/`cache`/`checkpoint`/`unpersist` anywhere else brings back
-  * the lazy-cache race or an unreleased pin, so this fails the build
-  * and names the line.
+/** Ownership gate: each policy in `src/main/scala` has one owning file,
+  * and this fails the build on a use anywhere else, naming the line.
+  *  - Every cache call goes through `graft.engine.Pins` (docs/SCALE.md
+  *    "Caching policy"): a raw `persist`/`cache`/`checkpoint`/`unpersist`
+  *    brings back the lazy-cache race or an unreleased pin.
+  *  - Every session memo is `Pins.memo`: a `TrieMap` elsewhere is a
+  *    second memo.
+  *  - Every session is built by `graft.Harness` (the harness mains) or
+  *    `graft.Graft` (library users): another builder is a copy of the
+  *    recipe that drifts from it.
   */
 class PinGateSpec extends AnyFunSuite {
 
@@ -19,10 +25,23 @@ class PinGateSpec extends AnyFunSuite {
   private val rawCall =
     """\.(persist|localCheckpoint|checkpoint|unpersist)\(|\.cache\(\)""".r
 
-  /** (line number, code) of every line with a raw cache call, comments
+  /** (what, pattern, owning files, where to go instead). */
+  private val rows = Seq(
+    ("raw cache call", rawCall, Seq(pinsFile),
+      "route these through graft.engine.Pins (pin / pinWith / scoped / " +
+        "release)"),
+    ("SparkSession.builder(", """SparkSession\.builder\(""".r,
+      Seq(root.resolve("graft/Harness.scala"),
+        root.resolve("graft/Graft.scala")),
+      "build the session with graft.Harness.session() (harness mains) " +
+        "or graft.Graft.builder() (library users)"),
+    ("TrieMap", """\bTrieMap\b""".r, Seq(pinsFile),
+      "memoize shared frames with graft.engine.Pins.memo"))
+
+  /** (line number, code) of every line `pattern` matches, comments
     * (`//` tails, `/* … */` blocks, scaladoc) stripped first.
     */
-  private def rawCalls(file: Path): Seq[(Int, String)] = {
+  private def matches(file: Path, pattern: Regex): Seq[(Int, String)] = {
     var inBlock = false
     Files.readAllLines(file).asScala.toSeq.zipWithIndex.flatMap {
       case (line, i) =>
@@ -45,24 +64,27 @@ class PinGateSpec extends AnyFunSuite {
           }
         }
         val c = code.toString
-        if (rawCall.findFirstIn(c).isDefined) Some((i + 1, c.trim)) else None
+        if (pattern.findFirstIn(c).isDefined) Some((i + 1, c.trim)) else None
     }
   }
 
   private lazy val sources: Seq[Path] = Files.walk(root).iterator.asScala
     .filter(_.toString.endsWith(".scala")).toSeq.sorted
 
-  test("no raw cache call in src/main outside Pins.scala") {
-    val offenders = sources.filterNot(_ == pinsFile).flatMap { f =>
-      rawCalls(f).map { case (n, c) => s"$f:$n: $c" }
+  for ((what, pattern, owners, hint) <- rows) {
+    val names = owners.map(_.getFileName).mkString(" and ")
+    test(s"no $what in src/main outside $names") {
+      val offenders = sources.filterNot(owners.contains).flatMap { f =>
+        matches(f, pattern).map { case (n, c) => s"$f:$n: $c" }
+      }
+      assert(offenders.isEmpty, s"$hint:\n${offenders.mkString("\n")}")
+      owners.foreach(o => assert(matches(o, pattern).nonEmpty,
+        s"the gate sees no $what in its owner $o"))
     }
-    assert(offenders.isEmpty,
-      "route these through graft.engine.Pins (pin / pinWith / scoped / " +
-        s"release):\n${offenders.mkString("\n")}")
   }
 
   test("the gate sees the cache calls Pins itself makes") {
     assert(sources.contains(pinsFile))
-    assert(rawCalls(pinsFile).nonEmpty)
+    assert(matches(pinsFile, rawCall).nonEmpty)
   }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.engine.Pins
 
 /** The caching contract of [[graft.engine.Pins]]: what a pin holds, when
@@ -29,11 +30,11 @@ class PinsSpec extends SparkSpec {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    Bridge.drainListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try {
       val a = body
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      Bridge.drainListenerBus(spark.sparkContext)
       (a, jobs.get)
     } finally spark.sparkContext.removeSparkListener(l)
   }
@@ -138,5 +139,39 @@ class PinsSpec extends SparkSpec {
     assert(c.select(sum(col("v"))).as[Long].collect().head ==
       (1L to 1000L).sum)
     Pins.release(c)
+  }
+
+  test("memo: one build per key, later calls return the frame without a " +
+      "job; a builder may memoize another key; a failed build leaves no " +
+      "entry") {
+    val dir = "PinsSpec-memo"
+    var builds = 0
+    def a = Pins.memo(spark, dir, "a") {
+      builds += 1
+      Pins.pin(spark.range(0, 100).toDF("x"))
+    }
+    val (first, buildJobs) = jobsOf(a)
+    val (second, hitJobs) = jobsOf(a)
+    assert(builds == 1 && buildJobs > 0)
+    assert((second eq first) && hitJobs == 0,
+      s"second call ran $hitJobs jobs")
+    // builders that memoize keys not built yet, 20 deep (the registry
+    // nests two: nearDupClusters → nearDupPairs); a map that locks a
+    // bin per build rejects this
+    def chain(i: Int): DataFrame = Pins.memo(spark, dir, s"chain$i") {
+      if (i == 20) Pins.pin(a.filter(col("x") < 10))
+      else chain(i + 1).filter(col("x") >= 0)
+    }
+    assert(chain(0).count() == 10 && builds == 1)
+    var tries = 0
+    def failing = Pins.memo(spark, dir, "c") {
+      tries += 1
+      if (tries == 1) throw new IllegalStateException("build failed")
+      Pins.pin(spark.range(0, 5).toDF("x"))
+    }
+    intercept[IllegalStateException](failing)
+    assert(failing.count() == 5 && tries == 2)
+    Seq("a", "chain20", "c").foreach(k =>
+      Pins.release(Pins.memo(spark, dir, k)(fail(s"$k not memoized"))))
   }
 }

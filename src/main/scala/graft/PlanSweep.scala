@@ -8,6 +8,8 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.engine.PrefixScan
+
 /** Whole-registry physical-plan audit: builds every `SparkEntry.queries`
   * plan against an SF dir and reports, per query, the operators that are
   * red flags at scale:
@@ -76,12 +78,11 @@ object PlanSweep {
     case _: GlobalLimitExec => true
     case _: LocalLimitExec => true
     case _: CollectLimitExec => true
-    // grand (1-row) aggregate, or the engine's globalRank/globalCumSum
-    // partition-id offset frames: grouped solely on the engine-owned
-    // spark_partition_id() column -> at most numShufflePartitions rows
+    // grand (1-row) aggregate, or the prefix scan's offset frame:
+    // grouped solely on its partition-id column -> at most
+    // numShufflePartitions rows
     case a: BaseAggregateExec if a.groupingExpressions.isEmpty ||
-        a.groupingExpressions.forall(e =>
-          e.name == "__gr_pid" || e.name == "__gc_pid") => true
+        a.groupingExpressions.forall(_.name == PrefixScan.PidCol) => true
     case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
       boundedBelow(j.buildSide match {
         case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.right

@@ -4443,8 +4443,8 @@ object Queries {
         FROM tot CROSS JOIN num"""))
 
   /** OP-WIN-33 — offline CUSUM mean-shift change point of the cents
-    * stream in (ts, event_id) order (corpus-grain, via the
-    * globalCumSum construction + a TakeOrdered argmax). */
+    * stream in (ts, event_id) order (corpus-grain, via one two-column
+    * prefix scan + a TakeOrdered argmax). */
   private val win33 = Spec("q435_cusum_changepoint",
     (s, d) => Relational.cusumMeanShift(
       T(s, d, "events").filter(col("ts").isNotNull &&

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import PrefixScan.globalRank
 
 /** Iterative graph analytics over edge-list DataFrames. Companion to the
   * pointer-jumping connected components in [[graft.llm.Dedup]]: that one
@@ -864,8 +865,7 @@ object Graph {
     // id-ordered node index via the distributed two-level rank — the
     // former corpus-grain Window.orderBy(id) was the one
     // single-partition sort in the graph family (round 10).
-    val indexed = s.pin(Relational
-      .globalRank(nodes, Seq(col("id")), "__rk1")
+    val indexed = s.pin(globalRank(nodes, Seq(col("id")), "__rk1")
       .withColumn("__idx", col("__rk1") - 1).drop("__rk1"))
     val nV = indexed.agg(count(lit(1)).as("__n"))
     val draws = indexed.select(col("id").as("u"))

@@ -96,13 +96,6 @@ object Planner {
       }
     }
 
-  /** Total hour count covered by a plan — the coverage invariant used by the
-    * property tests: hourly-mode groups must cover exactly the hours of
-    * `[start, end]` with no overlap.
-    */
-  def coveredHours(groups: Seq[RequestGroup]): Long =
-    groups.map(g => g.months.size.toLong * g.days.size * g.hours.size).sum
-
   // ------------------------------------------------------------- OP-SRC-7
   // The CDS request BUILDER — the offline half of the acquisition stage
   // (`api_request.py:47-118, :161-177`): dataset id, payload dict, and the

@@ -83,14 +83,6 @@ object Predictors {
     "WTD" -> Seq("wtd")
   )
 
-  /** Expand requested predictors into the deduped ERA5 variable set to scan
-    * — the reference's source-side column pruning (`main.py:257-269`):
-    * non-ERA5 side-dataset vars (`xco2`, `wtd`) are excluded.
-    */
-  def era5VariablesFor(predictors: Seq[String]): Seq[String] =
-    predictors.flatMap(p => variablesForPredictor.getOrElse(p, Nil))
-      .distinct.filterNot(v => v == "xco2" || v == "wtd")
-
   /** CO₂ side-dataset validity window (`main.py:241-242`). */
   val co2YearBounds: (Int, Int) = (2002, 2023)
 }

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import PrefixScan.{globalCumSum, globalRank}
 
 /** The small relational glue operators of SURVEY §2.2/§2.5/§2.6 — each a
   * thin, typed wrapper over a single declarative Spark primitive so Catalyst
@@ -59,83 +60,6 @@ object Relational {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (gauge.rdd.getNumPartitions >= target) df
     else df.repartition(target, keys: _*)
-  }
-
-  /** Distributed global rank: adds `rankCol` = 1-based position of each
-    * row under `order`, with NO single-partition window. Two-level range
-    * trick generalized to arbitrary sortable keys: range-repartition on
-    * the order columns (Spark's RangePartitioner keeps equal keys in one
-    * partition, so ties never straddle a boundary), rank locally inside
-    * each range partition, then add broadcast per-partition row-count
-    * offsets. Exact — identical ranks to `row_number() OVER (ORDER BY
-    * order)` whenever `order` is a total order; on ties the permutation
-    * within the tie block is arbitrary either way. Cost: one range
-    * exchange + one partition-local sort + one tiny offset frame —
-    * the shape that replaces every corpus-grain `Window.orderBy` (the
-    * single-partition sort Spark itself warns about, and the first
-    * thing that dies at 1000 executors).
-    *
-    * The ranged frame is pinned before its two readers: the local-rank
-    * window and the offset aggregate must
-    * see the SAME partition boundaries, but each branch re-plans the
-    * exchange under AQE, and differently-coalesced upstreams make the
-    * range sampler draw different boundaries per branch — then
-    * `spark_partition_id()` names different ranges in the two branches
-    * and every offset is misattributed (caught at sf0.1 by the q287
-    * gate; invisible at smaller SFs where both branches coalesce
-    * identically).
-    */
-  private[graft] def globalRank(df: DataFrame, order: Seq[Column],
-      rankCol: String): DataFrame = {
-    // data-derived range-partition count (r14, loopParts): the pin
-    // + the two per-branch readers all run at this count,
-    // and the session constant bought 32 near-empty tasks × 3 stages on
-    // a small frame; ranks are partition-count-invariant (offsets), so
-    // only the task count changes
-    val nPart = Pins.loopParts(df)
-    val part = Pins.pin(df.repartitionByRange(nPart, order: _*)
-      .withColumn("__gr_pid", spark_partition_id()))
-    val local = part.withColumn("__gr_local", row_number().over(
-      Window.partitionBy(col("__gr_pid")).orderBy(order: _*)))
-    val off = part.groupBy(col("__gr_pid"))
-      .agg(count(lit(1)).as("__gr_n"))
-      .withColumn("__gr_off", coalesce(sum(col("__gr_n")).over(
-        Window.orderBy(col("__gr_pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__gr_pid"), col("__gr_off"))
-    local.join(broadcast(off), Seq("__gr_pid"))
-      .withColumn(rankCol, (col("__gr_off") + col("__gr_local")))
-      .drop("__gr_pid", "__gr_local", "__gr_off")
-  }
-
-  /** Weighted companion to [[globalRank]]: adds `cumCol` = INCLUSIVE
-    * running sum of `weight` in `order`, again with no single-partition
-    * window — local prefix sums inside range partitions plus broadcast
-    * per-partition totals. Exact for any total order on `order`; with
-    * ties the inclusive cum at the LAST row of a tie block (the only
-    * position rank-selection ever reads) is tie-permutation-invariant.
-    */
-  private[graft] def globalCumSum(df: DataFrame, order: Seq[Column],
-      weight: Column, cumCol: String): DataFrame = {
-    // data-derived count — see globalRank
-    val nPart = Pins.loopParts(df)
-    // Eager pin before the two readers — same branch-consistent
-    // partition-boundary requirement as globalRank (see there).
-    val part = Pins.pin(df.repartitionByRange(nPart, order: _*)
-      .withColumn("__gc_w", weight.cast("long"))
-      .withColumn("__gc_pid", spark_partition_id()))
-    val local = part.withColumn("__gc_local", sum(col("__gc_w")).over(
-      Window.partitionBy(col("__gc_pid")).orderBy(order: _*)
-        .rowsBetween(Window.unboundedPreceding, 0)))
-    val off = part.groupBy(col("__gc_pid"))
-      .agg(sum(col("__gc_w")).as("__gc_n"))
-      .withColumn("__gc_off", coalesce(sum(col("__gc_n")).over(
-        Window.orderBy(col("__gc_pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__gc_pid"), col("__gc_off"))
-    local.join(broadcast(off), Seq("__gc_pid"))
-      .withColumn(cumCol, col("__gc_off") + col("__gc_local"))
-      .drop("__gc_pid", "__gc_local", "__gc_off", "__gc_w")
   }
 
   /** OP-PRJ-1 — bulk column rename applied only to columns that exist
@@ -2061,7 +1985,7 @@ object Relational {
     * ecod_micro, rank)`.
     *
     * Scale: per feature ONE value-grain aggregate whose cumulative
-    * count runs through [[globalCumSum]] (range-partitioned prefix
+    * count runs through [[PrefixScan.globalCumSum]] (range-partitioned prefix
     * sums — never a single-partition value window), then one fan-out-1
     * join back on the value key; F features = F such passes, no
     * corpus² anywhere.
@@ -2077,7 +2001,7 @@ object Relational {
     features.zipWithIndex.foreach { case (f, i) =>
       val vg = base.groupBy(col(f).as("__v"))
         .agg(count(lit(1)).as("__c"))
-      val cum = globalCumSum(vg, Seq(col("__v")), col("__c"), "__cum")
+      val cum = globalCumSum(vg, Seq(col("__v")), col("__c") -> "__cum")
       cur = cur.join(cum.select(col("__v").as(f),
         col("__cum").as(s"__l$i"), col("__c").as(s"__k$i")), Seq(f))
     }
@@ -2278,9 +2202,10 @@ object Relational {
     * subjects, the momentsSketch-s4 magnitude class, documented not
     * guarded), then plain integer sums; both engines floor identically
     * on non-negative operands, so everything up to the final `z` ratio
-    * hashes engine-stable. At-risk counts are REVERSE cumulative sums
-    * of the step-grain count frame via [[globalCumSum]] on the negated
-    * step — never a corpus-grain window; a one-subject tail step
+    * hashes engine-stable. Both at-risk counts are REVERSE cumulative
+    * sums of the step-grain count frame from ONE two-column
+    * [[PrefixScan.globalCumSum]] on the negated step — never a
+    * corpus-grain window; a one-subject tail step
     * (`n = 1`) has a zero variance numerator, so the `n−1` guard never
     * divides by zero on a contributing row.
     *
@@ -2297,12 +2222,8 @@ object Relational {
         sum(col(eventCol).cast("long")).as("d"),
         sum(when(one, col(eventCol).cast("long")).otherwise(0L))
           .as("d1"))
-    val rAll = globalCumSum(ps, Seq(col("step") * -1), col("__c"),
-      "n_risk")
-    val r1 = globalCumSum(ps.select(col("step"), col("__c1")),
-        Seq(col("step") * -1), col("__c1"), "n1_risk")
-      .select(col("step"), col("n1_risk"))
-    rAll.join(r1, Seq("step"))
+    globalCumSum(ps, Seq(col("step") * -1),
+        col("__c") -> "n_risk", col("__c1") -> "n1_risk")
       .withColumn("__e1m", expr(
         "(CAST(d AS DECIMAL(38,0)) * n1_risk * 1000000) DIV n_risk"))
       .withColumn("__vm", expr(
@@ -2336,7 +2257,7 @@ object Relational {
     * Scale: the TEST table is m rows, one per hypothesis, not data
     * grain — but m itself is unbounded (a segment family at 100 TB can
     * run millions of tests), so since round 10 the rank is the
-    * distributed two-level [[globalRank]] and both scalars (`m`, the
+    * distributed two-level [[PrefixScan.globalRank]] and both scalars (`m`, the
     * step-up `k*`) are one-row aggregates broadcast back; no
     * single-partition window anywhere.
     */
@@ -2373,7 +2294,7 @@ object Relational {
     * Output: `(id, p, rank, crit, discovery)` — bhFdr's shape, so the
     * two corrections diff row-for-row.
     *
-    * Scale: identical plan to bhFdr — the distributed [[globalRank]]
+    * Scale: identical plan to bhFdr — the distributed [[PrefixScan.globalRank]]
     * (no single-partition window), one-row m / first-failure frames on
     * broadcast.
     */
@@ -2574,7 +2495,7 @@ object Relational {
     * are interchangeable under any tie permutation, the property the
     * contract above already leaned on). So: collapse to VALUE grain
     * with counts (one hash aggregate), take a distributed inclusive
-    * cum-count ([[globalCumSum]] — range partitions + broadcast
+    * cum-count ([[PrefixScan.globalCumSum]] — range partitions + broadcast
     * offsets, no single-partition window), and pick each boundary rank
     * with a B-row broadcast range join (the audited dimension-BNLJ
     * class). Value-identical to the ntile form at every N, B, tie
@@ -2590,7 +2511,7 @@ object Relational {
       .select(col(sourceCol).as("source"), col(idCol).as("id"),
         col(valueCol).cast("double").as("value"))
     val vc = v.groupBy(col("value")).agg(count(lit(1)).as("__c"))
-    val cumd = globalCumSum(vc, Seq(col("value")), col("__c"), "__cum")
+    val cumd = globalCumSum(vc, Seq(col("value")), col("__c") -> "__cum")
     val nRow = v.agg(count(lit(1)).as("__N"))
     val ranks = df.sparkSession.range(1, nBuckets + 1).toDF("__i")
       .crossJoin(broadcast(nRow))
@@ -2858,9 +2779,10 @@ object Relational {
     * Output: one row `(n_rows, total, gini_ppm)`; `gini_ppm` null on an
     * empty or zero-mass input.
     *
-    * Scale: the global rank is the distributed two-level [[globalRank]]
-    * (range exchange + broadcast offsets — no single-partition window);
-    * the rank-weighted sum accumulates in DECIMAL(38,0), exact to
+    * Scale: the global rank is the distributed
+    * [[PrefixScan.globalRank]] (range exchange + broadcast offsets —
+    * no single-partition window); the rank-weighted sum accumulates in
+    * DECIMAL(38,0), exact to
     * `Σ i·xᵢ < 10³²` (10¹² rows of 10¹⁴ total mass — past the 100 TB
     * point by orders).
     */
@@ -2895,7 +2817,7 @@ object Relational {
     * constant (zero rank variance).
     *
     * Scale: ranks come from value-grain count frames through
-    * [[globalCumSum]] (range exchange + broadcast offsets — no
+    * [[PrefixScan.globalCumSum]] (range exchange + broadcast offsets — no
     * single-partition window, no corpus-grain sort), joined back to
     * rows on the value key (fan-out 1; heavy-tie values are the AQE
     * skew-join class). Everything else is one aggregate.
@@ -2906,7 +2828,7 @@ object Relational {
       .select(col(xCol).as("__x"), col(yCol).as("__y")))
     def ranks(c: String): DataFrame = {
       val counts = v.groupBy(col(c)).agg(count(lit(1)).as("__c"))
-      globalCumSum(counts, Seq(col(c)), col("__c"), "__cum")
+      globalCumSum(counts, Seq(col(c)), col("__c") -> "__cum")
         .select(col(c), (col("__cum") * 2 - col("__c") + 1).as(s"__r$c"))
     }
     val rr = v.join(ranks("__x"), Seq("__x")).join(ranks("__y"), Seq("__y"))
@@ -3654,12 +3576,12 @@ object Relational {
     * same distribution" without normality. Average ranks for ties,
     * carried exactly as DOUBLED ranks at VALUE grain: the rank of
     * value v is `r2_v = 2·cum(v) − c_v + 1` over the value-grain count
-    * frame, so ranking costs one [[globalCumSum]] over DISTINCT values
-    * (bounded by the value domain, never the row count — no global
-    * row sort anywhere). Per-group rank sums `R2_g = Σ c_{v,g}·r2_v`
-    * are exact BIGINT; the `Σ R_g²/n_g` fold rides the [[anovaF]]
-    * sorted-fold discipline (terms summed in group order, both
-    * engines); tie mass `Σ(t³−t)` is exact DECIMAL(38,0).
+    * frame, so ranking costs one [[PrefixScan.globalCumSum]] over
+    * DISTINCT values (bounded by the value domain, never the row count
+    * — no global row sort anywhere). Per-group rank sums
+    * `R2_g = Σ c_{v,g}·r2_v` are exact BIGINT; the `Σ R_g²/n_g` fold
+    * rides the [[anovaF]] sorted-fold discipline (terms summed in
+    * group order, both engines); tie mass `Σ(t³−t)` is exact DECIMAL(38,0).
     * `H = 12·T/(n(n+1)) − 3(n+1)`, tie-corrected
     * `H' = H / (1 − Σ(t³−t)/(n³−n))`. Output: ONE row
     * `(k, n, h_stat, tie_c, h_adj)` at 6 dp.
@@ -3675,7 +3597,7 @@ object Relational {
       .select(col(groupCol).cast("string").as("__g"),
         col(valueCol).cast("long").as("__v"))
     val vGrain = rows.groupBy(col("__v")).agg(count(lit(1)).as("__c"))
-    val ranked = globalCumSum(vGrain, Seq(col("__v")), col("__c"), "__cum")
+    val ranked = globalCumSum(vGrain, Seq(col("__v")), col("__c") -> "__cum")
       .withColumn("__r2", col("__cum") * 2 - col("__c") + 1)
     val gvGrain = rows.groupBy(col("__g"), col("__v"))
       .agg(count(lit(1)).as("__cg"))
@@ -3786,7 +3708,7 @@ object Relational {
     * is the conventional "negligible" bar).
     *
     * Exact at value grain: with the reference's cumulative counts
-    * `cumA(v)` (one [[globalCumSum]] over the union value-grain
+    * `cumA(v)` (one [[PrefixScan.globalCumSum]] over the union value-grain
     * frame), the numerator is `Σ_v c_{s,v}·(lessA(v) − greaterA(v))`
     * — exact BIGINT, never a row×row comparison. Output per split:
     * `(split, n_ref, n_split, num, delta)` at 6 dp.
@@ -3800,7 +3722,7 @@ object Relational {
       .agg(sum(when(col("__s") === refValue, 1L).otherwise(0L))
         .as("__ca"))
     val nA = vGrain.agg(sum(col("__ca")).as("__na"))
-    val cum = globalCumSum(vGrain, Seq(col("__v")), col("__ca"), "__cumA")
+    val cum = globalCumSum(vGrain, Seq(col("__v")), col("__ca") -> "__cumA")
     val other = rows.filter(col("__s") =!= refValue)
       .groupBy(col("__s"), col("__v")).agg(count(lit(1)).as("__cb"))
     other.join(cum.select(col("__v"), col("__ca"), col("__cumA")), "__v")
@@ -3958,9 +3880,9 @@ object Relational {
     * threshold-free readout a quality-classifier audit wants before
     * anyone picks a filter cutoff. Never materializes pairs: at value
     * grain, `num2 = Σ_v c⁺_v·(2·less⁻(v) + c⁻_v)` (doubled so ties stay
-    * integral) with `less⁻` from one [[globalCumSum]] over the negative
-    * counts; `AUC = num2 / (2·n⁺·n⁻)` is the single final double at
-    * 6 dp. `num2 ≤ 2·n⁺·n⁻` assumes `n⁺·n⁻ < 2⁶²` (geometric mean
+    * integral) with `less⁻` from one [[PrefixScan.globalCumSum]] over
+    * the negative counts; `AUC = num2 / (2·n⁺·n⁻)` is the single final
+    * double at 6 dp. `num2 ≤ 2·n⁺·n⁻` assumes `n⁺·n⁻ < 2⁶²` (geometric mean
     * ≲ 2·10⁹ rows per class — any labeled eval set; the momentsSketch
     * magnitude-bound convention). Output: ONE row
     * `(n_pos, n_neg, num2, auc)`.
@@ -3976,7 +3898,7 @@ object Relational {
     val vGrain = rows.groupBy(col("__v"))
       .agg(sum(when(col("__y"), 0L).otherwise(1L)).as("__cn"),
         sum(when(col("__y"), 1L).otherwise(0L)).as("__cp"))
-    val cum = globalCumSum(vGrain, Seq(col("__v")), col("__cn"), "__cumN")
+    val cum = globalCumSum(vGrain, Seq(col("__v")), col("__cn") -> "__cumN")
     cum.agg(sum(col("__cp")).as("n_pos"), sum(col("__cn")).as("n_neg"),
         coalesce(sum(col("__cp") *
           ((col("__cumN") - col("__cn")) * 2 + col("__cn"))), lit(0L))
@@ -4323,14 +4245,15 @@ object Relational {
     * `r_i = #{j : y_j ≤ y_i}` and `l_i = #{j : y_j ≥ y_i}` — every
     * quantity an exact integer.
     *
-    * Distributed shape: `r`/`l` come from ONE [[globalCumSum]] over
+    * Distributed shape: `r`/`l` come from ONE [[PrefixScan.globalCumSum]] over
     * the y value grain joined back at value grain (never a rank per
     * row); the x-order ADJACENCY sum needs consecutive rows, which no
     * shuffle-safe window gives corpus-wide — so rows are range-
     * partitioned on the x-order once, the within-partition lag runs
     * partition-locally, and the numShufflePartitions cross-boundary
     * pairs are closed with a broadcast of each partition's FIRST row
-    * (the globalRank offset-frame construction applied to adjacency).
+    * (the prefix scan's range pin, [[PrefixScan.rangePin]], applied
+    * to adjacency).
     * Output: ONE row `(n, s_abs, xi)` — ξ at 6 dp; the ties
     * denominator `T = Σ l_i(n−l_i)` stays DECIMAL(38,0) internal
     * (n³-scale, past BIGINT at n ≳ 2·10⁶).
@@ -4345,7 +4268,7 @@ object Relational {
       .select((col(xCol).as("__xo") +: tiebreakCols.map(col)) :+
         col(yCol).cast("long").as("__yv"): _*)
     val yGrain = rows.groupBy(col("__yv")).agg(count(lit(1)).as("__c"))
-    val cum = globalCumSum(yGrain, Seq(col("__yv")), col("__c"), "__le")
+    val cum = globalCumSum(yGrain, Seq(col("__yv")), col("__c") -> "__le")
     val n = cum.agg(sum(col("__c")).as("__n"))
     // T = Σ_i l_i(n − l_i) at value grain: l = n − le + c per value
     val tRow = cum.crossJoin(broadcast(n))
@@ -4355,21 +4278,19 @@ object Relational {
         max(col("__n")).as("__n"))
     val withR = rows
       .join(cum.select(col("__yv"), col("__le")), Seq("__yv"))
-    // data-derived range-partition count (r14) — see globalRank; the
-    // boundary closure below already handles ANY partition count
+    // the boundary closure below handles ANY partition count
     // (including 1, where it contributes zero pairs)
-    val nPart = Pins.loopParts(rows)
     val order = col("__xo") +: tiebreakCols.map(col)
-    val part = Pins.pin(withR.repartitionByRange(nPart, order: _*)
-      .withColumn("__gc_pid", spark_partition_id()))
+    val part = PrefixScan.rangePin(withR, order, Pins.loopParts(rows))
+    val pid = col(PrefixScan.PidCol)
     // ONE window pass yields the within-partition adjacency sum AND
     // both boundary endpoints (min_by/max_by on the order key) — the
     // ≤ numShufflePartitions result is pinned so its three readers
     // don't re-run the sort
-    val w = Window.partitionBy(col("__gc_pid")).orderBy(order: _*)
+    val w = Window.partitionBy(pid).orderBy(order: _*)
     val perPart = Pins.pin(part
       .withColumn("__prev", lag(col("__le"), 1).over(w))
-      .groupBy(col("__gc_pid"))
+      .groupBy(pid)
       .agg(coalesce(sum(when(col("__prev").isNotNull,
           abs(col("__le") - col("__prev")))), lit(0L)).as("__sl"),
         min_by(col("__le"), struct(order: _*)).as("__leF"),
@@ -4379,9 +4300,9 @@ object Relational {
     // cross-boundary pairs: |first(le) of the next non-empty partition
     // − last(le) of this one|
     val firsts = perPart
-      .select(col("__gc_pid").as("__p2"), col("__leF"))
+      .select(pid.as("__p2"), col("__leF"))
     val lasts = perPart
-      .select(col("__gc_pid").as("__p1"), col("__leL"))
+      .select(pid.as("__p1"), col("__leL"))
     // adjacency by NEXT NON-EMPTY partition (range partitioning may
     // leave empty pids, so __p1 + 1 equi-join would drop pairs): the
     // two frames are ≤ numShufflePartitions rows, so the non-equi
@@ -4461,7 +4382,7 @@ object Relational {
   /** Decile lift/gains table of a binary response against a score:
     * the campaign-targeting readout — "if we act on the top k/10 by
     * score, what share of responders do we capture and at what lift
-    * over random". Deciles come from the distributed [[globalRank]]
+    * over random". Deciles come from the distributed [[PrefixScan.globalRank]]
     * (`decile = (10·(rank−1)) DIV n + 1` — never an ntile window);
     * per decile `rate_ppm`, `lift_ppm = 10⁶·resp_d·N/(n_d·R)` (exact
     * DECIMAL DIV), and the cumulative gain closes over the ≤10-row
@@ -4512,7 +4433,7 @@ object Relational {
     * pseudo-p-values actually uniform", the calibration check that
     * should PASS before anyone trusts the q286/q356/q416 multiple-
     * testing gates built on them. Ranks come from the distributed
-    * [[globalRank]]; each row's two gaps are exact-integer-derived
+    * [[PrefixScan.globalRank]]; each row's two gaps are exact-integer-derived
     * doubles and the statistic is a MAX (order-free, no float-sum
     * hazard). Output: ONE row `(n, d_stat, sqrt_n_d)` at 6 dp.
     *
@@ -4722,9 +4643,8 @@ object Relational {
     * over ordered group pairs, the k-sample ordered companion to
     * Mann–Whitney. Never materializes pairs: the value-grain frame
     * carries one count column PER GROUP (k is the bounded dose axis),
-    * one multi-column distributed cumsum (the [[globalCumSum]]
-    * partition-offset construction generalized to k weights in a
-    * single pass) yields every group's `less_i(v)`, and
+    * one k-column [[PrefixScan.globalCumSum]] (a single pass) yields
+    * every group's `less_i(v)`, and
     * `JT2 = Σ_v Σ_{i<j} c_j,v·(2·less_i(v) + c_i,v)` is an exact
     * BIGINT (doubled so ties stay integral). The normal approximation
     * `z = (JT2/2 − μ)/σ` with `μ = (n² − Σn_i²)/4` and
@@ -4749,35 +4669,15 @@ object Relational {
       sum(when(col("__g") === g, 1L).otherwise(0L)).as(s"__c$i")
     }
     val vGrain = rows.groupBy(col("__v")).agg(cAggs.head, cAggs.tail: _*)
-    // multi-column global cumsum: ONE range exchange serves all k
-    // groups (the globalCumSum construction; __gc_pid keeps the offset
-    // frame inside the PlanSweep boundedness proof); partition count
-    // data-derived (r14) — see globalRank
-    val nPart = Pins.loopParts(rows)
-    val part = Pins.pin(vGrain.repartitionByRange(nPart, col("__v"))
-      .withColumn("__gc_pid", spark_partition_id()))
-    val w = Window.partitionBy(col("__gc_pid")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = (0 until k).foldLeft(part) { (f, i) =>
-      f.withColumn(s"__l$i", sum(col(s"__c$i")).over(w))
-    }
-    val nAggs = (0 until k).map(i => sum(col(s"__c$i")).as(s"__n$i"))
-    val offBase = part.groupBy(col("__gc_pid"))
-      .agg(nAggs.head, nAggs.tail: _*)
-    val wOff = Window.orderBy(col("__gc_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val off = (0 until k).foldLeft(offBase) { (f, i) =>
-      f.withColumn(s"__o$i",
-        coalesce(sum(col(s"__n$i")).over(wOff), lit(0L)))
-    }.select(col("__gc_pid") +: (0 until k).map(i => col(s"__o$i")): _*)
-    val cum = local.join(broadcast(off), Seq("__gc_pid"))
+    // ONE multi-column prefix scan serves all k groups
+    val cum = globalCumSum(vGrain, Seq(col("__v")),
+      (0 until k).map(i => col(s"__c$i") -> s"__cum$i"): _*)
     // per-value JT contribution: Σ_{i<j} c_j·(2·less_i + c_i) with
     // less_i = inclusive-cum_i − c_i
     val termExprs = for {
       j <- 0 until k; i <- 0 until j
     } yield col(s"__c$j").cast(d38) *
-      ((col(s"__o$i") + col(s"__l$i") - col(s"__c$i")) * 2 +
-        col(s"__c$i"))
+      ((col(s"__cum$i") - col(s"__c$i")) * 2 + col(s"__c$i"))
     val perV = cum.withColumn("__jt",
       termExprs.reduce(_ + _))
     perV.agg(
@@ -5416,13 +5316,14 @@ object Relational {
     * ECDFs — the WHOLE-distribution two-sample test that weights every
     * quantile (KS reads only the max gap; CvM integrates the squared
     * gap, catching spread/tail differences KS misses). At value grain
-    * with per-value counts `(c_A, c_B)` and inclusive cums from TWO
-    * [[globalCumSum]] passes: `T = Σ_v (c_A+c_B)·(cumA_v·n_B −
-    * cumB_v·n_A)² / (N²·n_A·n_B)` — the integrand exact DECIMAL, one
-    * final double at 6 dp. Output: ONE row `(n_a, n_b, t_stat)`.
+    * with per-value counts `(c_A, c_B)` and inclusive cums from ONE
+    * two-column [[PrefixScan.globalCumSum]]:
+    * `T = Σ_v (c_A+c_B)·(cumA_v·n_B − cumB_v·n_A)² / (N²·n_A·n_B)` —
+    * the integrand exact DECIMAL, one final double at 6 dp. Output: ONE
+    * row `(n_a, n_b, t_stat)`.
     *
-    * Scale: one value-grain conditional aggregate + two range
-    * exchanges of the VALUE frame (the globalCumSum discipline — no
+    * Scale: one value-grain conditional aggregate + one range
+    * exchange of the VALUE frame (the prefix scan — no
     * single-partition window) + a 1-row reduce.
     */
   def cramerVonMises(df: DataFrame, groupCol: String, xCol: String,
@@ -5434,9 +5335,8 @@ object Relational {
       .groupBy(col(xCol).cast("long").as("__v"))
       .agg(sum(when(isA, 1L).otherwise(0L)).as("__ca"),
         sum(when(!isA, 1L).otherwise(0L)).as("__cb"))
-    val cum = globalCumSum(
-      globalCumSum(vals, Seq(col("__v")), col("__ca"), "__cumA"),
-      Seq(col("__v")), col("__cb"), "__cumB")
+    val cum = globalCumSum(vals, Seq(col("__v")),
+      col("__ca") -> "__cumA", col("__cb") -> "__cumB")
     val tot = vals.agg(coalesce(sum(col("__ca")), lit(0L)).as("n_a"),
       coalesce(sum(col("__cb")), lit(0L)).as("n_b"))
     val num = cum.crossJoin(broadcast(tot))
@@ -5457,10 +5357,9 @@ object Relational {
 
   /** Offline CUSUM mean-shift change point over a totally ordered
     * corpus-grain stream: with inclusive prefix sums `C_i` and counts
-    * `i` (BOTH from one range-partitioned pass — the globalCumSum
-    * construction computing the value cum and the row count cum in the
-    * same window, since two separate passes could not be joined
-    * row-wise), the drift-free CUSUM is `D_i = n·C_i − S·i` (exact
+    * `i` (BOTH from one two-column [[PrefixScan.globalCumSum]], since
+    * two separate passes could not be joined row-wise), the drift-free
+    * CUSUM is `D_i = n·C_i − S·i` (exact
     * DECIMAL — no float mean subtraction), and the change point is
     * `argmax |D_i|` with the deterministic (|D| desc, i asc) tie rule
     * picked by a TakeOrdered limit — never a global sort. The scan
@@ -5468,8 +5367,9 @@ object Relational {
     * `max_t |mean_{≤t} − mean|·(t/n)` scale. Output: ONE row
     * `(n, s_total, t_star, i_star, cum_star, d_stat)`.
     *
-    * Scale: one range exchange of the row frame + bounded offset
-    * broadcast (the globalRank posture) + a 1-row TakeOrdered pick.
+    * Scale: one prefix scan of the row frame (`n` and `S` are its
+    * last row, a grand aggregate of its output) + a 1-row TakeOrdered
+    * pick.
     */
   def cusumMeanShift(df: DataFrame, tCol: String, xCol: String,
       tiebreakCols: Seq[String]): DataFrame = {
@@ -5477,34 +5377,12 @@ object Relational {
     val base = df.filter(col(tCol).isNotNull && col(xCol).isNotNull)
       .select(col(tCol).as("__t") +: col(xCol).cast("long").as("__xv")
         +: tiebreakCols.map(col): _*)
-    // data-derived range-partition count (r14) — see globalRank
-    val nPart = Pins.loopParts(base)
-    val ord = col("__t") +: tiebreakCols.map(col)
-    // __gc_pid: the exact globalCumSum offset-frame construction (and
-    // the name PlanSweep's bounded-window walk recognizes as the
-    // ≤ numShufflePartitions-row offset aggregate)
-    val part = Pins.pin(base.repartitionByRange(nPart, ord: _*)
-      .withColumn("__gc_pid", spark_partition_id()))
-    val w = Window.partitionBy(col("__gc_pid")).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = part
-      .withColumn("__cl", sum(col("__xv")).over(w))
-      .withColumn("__il", count(lit(1)).over(w))
-    val off = part.groupBy(col("__gc_pid"))
-      .agg(sum(col("__xv")).as("__ps"), count(lit(1)).as("__pc"))
-      .withColumn("__so", coalesce(sum(col("__ps")).over(
-        Window.orderBy(col("__gc_pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__co", coalesce(sum(col("__pc")).over(
-        Window.orderBy(col("__gc_pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__gc_pid"), col("__so"), col("__co"))
-    val tot = part.agg(count(lit(1)).as("n"),
-      coalesce(sum(col("__xv")), lit(0L)).as("s_total"))
-    local.join(broadcast(off), Seq("__gc_pid"))
-      .withColumn("__cum", col("__so") + col("__cl"))
-      .withColumn("__i", col("__co") + col("__il"))
-      .crossJoin(broadcast(tot))
+    val scanned = globalCumSum(base, col("__t") +: tiebreakCols.map(col),
+      col("__xv") -> "__cum", lit(1) -> "__i")
+    // n and S are the last row's running count and sum
+    val tot = scanned.agg(max(col("__i")).as("n"),
+      max_by(col("__cum"), col("__i")).as("s_total"))
+    scanned.crossJoin(broadcast(tot))
       .withColumn("__d",
         col("n").cast(d38) * col("__cum") -
           col("s_total").cast(d38) * col("__i"))
@@ -5572,7 +5450,7 @@ object Relational {
     * `g(k) = R_T(k) − R_C(k)·N_T(k)/N_C(k)` (incremental responses
     * net of the control baseline, scaled to the treated volume) down
     * the score ranking. Deciles come from the distributed
-    * [[globalRank]] (never an ntile window); the cumulative closes
+    * [[PrefixScan.globalRank]] (never an ntile window); the cumulative closes
     * over the ≤10-row decile frame with a broadcast self-join (the
     * liftTable idiom); the Qini value is the exact DECIMAL
     * `10⁶·(R_T·N_C − R_C·N_T) DIV N_C` micro floor. Output per

@@ -1083,73 +1083,6 @@ object Windows {
         round((n * x - s1).cast("double") / sqrt(disc.cast("double")), 6)))
   }
 
-  /** RFM (recency / frequency / monetary) customer scoring, quintiles
-    * WITHIN a segment column: per customer, days since their last
-    * transaction (against the corpus-wide max date — a one-row
-    * broadcast), transaction count, and amount total, each scored 1–5
-    * by an ANSI `ntile(5)` over `(metric, customer)` inside the segment
-    * (ties are totally ordered by the customer key, so the quintile cut
-    * is engine-stable; score 5 = most recent / most frequent / highest
-    * spend). `rfm` packs the three digits.
-    *
-    * Scale: one customer-grain aggregate plus one single-column re-scan
-    * for the global max date (column-pruned — the
-    * `Pipeline` one-row-bounds precedent, cheaper than materializing
-    * the aggregate twice); the three ntile windows share one
-    * segment-partitioned sort each — quintiles are deliberately
-    * per-segment so no window ever spans the full customer table.
-    */
-  def rfmScores(tx: DataFrame, custCol: String, segCol: String,
-      dateCol: String, amountCol: String): DataFrame = {
-    val per = tx.groupBy(col(custCol), col(segCol))
-      .agg(max(col(dateCol)).as("__last"), count(lit(1)).as("frequency"),
-        sum(col(amountCol)).as("monetary"))
-    val mx = tx.select(max(col(dateCol)).as("__mx"))
-    def sc(m: Column) = ntile(5).over(Window.partitionBy(col(segCol))
-      .orderBy(m.asc, col(custCol).asc)).cast("int")
-    per.crossJoin(broadcast(mx))
-      .withColumn("recency_days",
-        ((uMicros(col("__mx")) - uMicros(col("__last")))
-          / lit(86400000000L)).cast("long"))
-      .withColumn("r_score", sc(col("__last")))
-      .withColumn("f_score", sc(col("frequency")))
-      .withColumn("m_score", sc(col("monetary")))
-      .withColumn("rfm",
-        col("r_score") * 100 + col("f_score") * 10 + col("m_score"))
-      .drop("__mx", "__last")
-  }
-
-  /** First/last-touch attribution: for every conversion event, the first
-    * and last NON-conversion touch of the same key within the trailing
-    * `lookbackUs` microseconds (exclusive of the conversion's own
-    * microsecond), plus the touch count. The window min/max runs over a
-    * sortable string key `zero-padded-µs # zero-padded-tiebreak # type`
-    * — lexicographic min/max of that encoding IS the (time, tiebreak)
-    * order, which makes "first" and "last" total and engine-stable even
-    * under equal timestamps, with no self-join and no struct-ordering
-    * dependence. One range-framed window per key ordered by µs; nulls
-    * (conversions inside the frame) fall out of min/max naturally.
-    */
-  def touchAttribution(df: DataFrame, keyCols: Seq[String],
-      timeCol: String, tiebreakCol: String, typeCol: String,
-      convType: String, lookbackUs: Long): DataFrame = {
-    require(lookbackUs > 1L, "lookback must exceed one microsecond")
-    val us = uMicros(col(timeCol))
-    val key = concat(lpad(us.cast("string"), 20, "0"), lit("#"),
-      lpad(col(tiebreakCol).cast("string"), 12, "0"), lit("#"),
-      col(typeCol))
-    val touch = when(col(typeCol) =!= convType, key)
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(us)
-      .rangeBetween(-lookbackUs, -1L)
-    df.withColumn("__first", min(touch).over(w))
-      .withColumn("__last", max(touch).over(w))
-      .withColumn("n_touches", count(touch).over(w))
-      .filter(col(typeCol) === convType)
-      .withColumn("first_touch", split(col("__first"), "#").getItem(2))
-      .withColumn("last_touch", split(col("__last"), "#").getItem(2))
-      .drop("__first", "__last")
-  }
-
   /** Retention cohort matrix: users bucketed by their FIRST-activity week,
     * counted in each later week they were active. Weeks are absolute
     * 7-day epoch buckets (integer `µs ÷ week` division — no calendar or

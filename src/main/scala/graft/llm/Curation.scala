@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.functions.PolyHash.polyhash
 import graft.functions.TokenNgrams.tokenNgrams
 import graft.engine.Pins
+import graft.engine.PrefixScan.globalCumSum
 
 /** Corpus-level curation operators a large-scale training-data run needs
   * beyond per-document filters: cross-document line deduplication (the
@@ -1009,15 +1010,15 @@ object Curation {
     * the smallest top-K (by frequency, ties lexicographic) whose
     * cumulative token mass reaches it — THE table a tokenizer design
     * reads to pick vocab size ("32k types cover 99.2 %"). Frequency
-    * ranks and cumulative mass come from the distributed
-    * [[graft.engine.Relational.globalRank]]/`globalCumSum` machinery
-    * (no corpus-grain single-partition window); the coverage test is
+    * ranks and cumulative mass come from ONE two-column
+    * [[graft.engine.PrefixScan.globalCumSum]] (no corpus-grain
+    * single-partition window); the coverage test is
     * the exact integer cross-product `cum·100 ≥ pct·N`. Output per
     * pct: `(pct, k_types, cum_tokens)`; a pct no prefix reaches
     * (impossible at pct ≤ 100) would simply emit no row.
     *
-    * Scale: type-grain collapse, one range-partitioned rank/cumsum
-    * pass, one broadcast pct-axis join, one min-aggregate.
+    * Scale: type-grain collapse, one prefix scan, one broadcast
+    * pct-axis join, one min-aggregate.
     */
   def vocabBudget(docs: DataFrame, textCol: String,
       pcts: Seq[Int]): DataFrame = {
@@ -1026,11 +1027,8 @@ object Curation {
     val counts = docs.filter(col(textCol).isNotNull)
       .select(explode(Text.tokens(col(textCol))).as("__w"))
       .groupBy(col("__w")).agg(count(lit(1)).as("__c"))
-    val order = Seq(col("__c").desc, col("__w").asc)
-    val ranked = graft.engine.Relational.globalRank(
-      graft.engine.Relational.globalCumSum(counts, order, col("__c"),
-        "__cum"),
-      order, "__k")
+    val ranked = globalCumSum(counts, Seq(col("__c").desc, col("__w").asc),
+      col("__c") -> "__cum", lit(1) -> "__k")
     val tot = counts.agg(sum(col("__c")).as("__n"))
     val pctAxis = docs.sparkSession.createDataFrame(
       pcts.map(Tuple1(_))).toDF("pct")

@@ -107,10 +107,6 @@ object Dedup {
       graft.functions.ShingleHashes.shingleHashes(col(textCol), shingleWidth)
         .as("hs"))
 
-  /** One-shot signature convenience (stages internally). */
-  def minhashSignature(text: Column, shingleWidth: Int, k: Int): Column =
-    signatureFromHashes(Text.shingleHashes(text, shingleWidth), k)
-
   /** The LSH hot-key guard shared by every banded candidate generator
     * (minhash bands, simhash slices, sign-LSH cosine buckets): drop
     * buckets larger than `maxBucket` BEFORE the self-join, so a

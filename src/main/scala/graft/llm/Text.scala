@@ -165,13 +165,11 @@ object Text {
   }
 
   /** Quality-score feature bundle (length / punctuation / stopword ratios,
-    * mean word length) + a bounded composite score in [0, 1]. The exact
-    * blend is a heuristic; what matters at scale is that it is one
-    * projection pass.
+    * mean word length) over `text` and its tokens `toks`, the inputs of
+    * the bounded composite score in [0, 1] ([[qualityScoreFromTokens]]).
+    * The exact blend is a heuristic; what matters at scale is that it is
+    * one projection pass.
     */
-  def qualityFeatures(text: Column): Seq[(String, Column)] =
-    qualityFeaturesFromTokens(text, tokens(text))
-
   def qualityFeaturesFromTokens(text: Column,
       toks: Column): Seq[(String, Column)] = {
     val nChars = length(text).cast("double")
@@ -189,9 +187,6 @@ object Text {
       "punct_ratio" -> when(nChars > 0, punct.cast("double") / nChars),
       "stopword_ratio" -> when(nToks > 0, stops / nToks))
   }
-
-  def qualityScore(text: Column): Column =
-    qualityScoreFromTokens(text, tokens(text))
 
   def qualityScoreFromTokens(text: Column, toks: Column): Column = {
     val f = qualityFeaturesFromTokens(text, toks).toMap

@@ -17,6 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Every session is built by `graft.Harness` (the harness mains) or
   *    `graft.Graft` (library users): another builder is a copy of the
   *    recipe that drifts from it.
+  *  - Every corpus-wide prefix scan is `graft.engine.PrefixScan`: a
+  *    hand-built range-partition/offset copy elsewhere has to relearn
+  *    its pin-before-both-readers rule (the q287 bug).
   */
 class PinGateSpec extends AnyFunSuite {
 
@@ -36,7 +39,11 @@ class PinGateSpec extends AnyFunSuite {
       "build the session with graft.Harness.session() (harness mains) " +
         "or graft.Graft.builder() (library users)"),
     ("TrieMap", """\bTrieMap\b""".r, Seq(pinsFile),
-      "memoize shared frames with graft.engine.Pins.memo"))
+      "memoize shared frames with graft.engine.Pins.memo"),
+    ("spark_partition_id(", """spark_partition_id\(""".r,
+      Seq(root.resolve("graft/engine/PrefixScan.scala")),
+      "scan with graft.engine.PrefixScan.globalCumSum / globalRank, or " +
+        "range-pin with PrefixScan.rangePin"))
 
   /** (line number, code) of every line `pattern` matches, comments
     * (`//` tails, `/* … */` blocks, scaladoc) stripped first.

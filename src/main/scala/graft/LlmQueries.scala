@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Queries.{QFn, Spec}
+import graft.Queries.Spec
 import graft.functions.PolyHash.polyhash
 import graft.engine.Pins
 import graft.llm.{Dedup, Multimodal, Similarity, Text}

@@ -4,8 +4,6 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine._
-import graft.functions.PolyHash.polyhash
-import graft.llm.{Dedup, Multimodal, Similarity, Text}
 
 /** The driver-contract query registry: one entry per implemented operator
   * from SURVEY §2 plus the LLM-pipeline extensions, each with a DuckDB
@@ -97,7 +95,6 @@ object Queries {
       import graft.sources.NetCDF
       import graft.sources.NetCDF.{Att, Dim, VarSpec}
       val (nT, nLat, nLon) = (5, 4, 3)
-      val idx = (t: Int, la: Int, lo: Int) => t * nLat * nLon + la * nLon + lo
       val path = tmp("cube_q72.nc")
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(tmp("")))
@@ -878,8 +875,7 @@ object Queries {
   /** Z-order (Morton) clustering key over a 1024×1024 grid projection of
     * (l_partkey, l_suppkey) — the layout key that makes parquet min/max
     * skipping work on BOTH dimensions of a bbox-style predicate
-    * ([[graft.engine.Layout]]; the write-side face is
-    * `Layout.layoutByZOrder`, plan-asserted in ScaleToolsSpec).
+    * ([[graft.engine.Layout]]).
     */
   private val lay1 = Spec("q122_zorder_key",
     (s, d) => T(s, d, "lineitem").select(col("l_orderkey"),
@@ -1338,8 +1334,6 @@ object Queries {
     * gaps. Oracle: the textbook lag-break + running-sum window pair — the
     * same two-window shape the operator plans, so the gate pins the break
     * strictness (gap must EXCEED the interval) and the 1-based numbering.
-    * The streaming face ([[graft.streaming.Streaming.sessionize]]) is
-    * asserted equivalent on a shared frame in ScaleToolsSpec.
     */
   private val win3 = Spec("q97_win3_sessionize",
     (s, d) => Windows.sessionize(

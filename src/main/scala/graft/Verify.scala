@@ -6,10 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name prefixes (local
     // iteration aid; the driver passes exactly two args)
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, Seq.empty[String])
-      case Array(s, o, f) => (s, o, f.split(',').toSeq)
-    }
+    require(args.length == 2 || args.length == 3,
+      "usage: Verify <sfDir> <outDir> [names-csv]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val only = args.lift(2).fold(Seq.empty[String])(_.split(',').toSeq)
     val names = Harness.select(only)
     val spark = Harness.session()
     new java.io.File(outDir).mkdirs()

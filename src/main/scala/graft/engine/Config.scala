@@ -1,7 +1,6 @@
 package graft.engine
 
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** OP-SRC-6 — the pipeline's YAML config loader (`argparser.py:31-38` +
   * `download_config.yaml` / `process_config.yaml`). The reference's config

@@ -163,41 +163,17 @@ object Geometry {
     else df.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Ray-casting point-in-polygon (crossing number, non-convex safe) over
-    * vertex-array columns — the general-geometry upgrade to the bbox
-    * kernels: a pure Column fold (aggregate over the edge list), so it
-    * rides whole-stage codegen with no UDF. Degenerate horizontal edges
-    * are safe: the crossing guard is false before the slope division can
-    * matter (IEEE ∞ compares false). Boundary points follow raw double
-    * arithmetic — identical on any engine mirroring the formula.
-    */
-  def pointInPolygon(px: Column, py: Column, xs: Column,
-      ys: Column): Column = {
-    val n = size(xs)
-    // Degenerate-ring guard (mirrors the `require` on the literal form):
-    // without it an empty xs makes sequence(0, n-1) the DESCENDING
-    // [0, -1] and the element_at lookups go null — a garbage verdict
-    // instead of a defined one. <3 vertices enclose nothing → false.
-    val crossings = aggregate(sequence(lit(0), n - 1), lit(0), (acc, i) => {
-      val x1 = element_at(xs, i + 1)
-      val y1 = element_at(ys, i + 1)
-      val j = pmod(i + 1, n)
-      val x2 = element_at(xs, j + 1)
-      val y2 = element_at(ys, j + 1)
-      val crosses = ((y1 > py) =!= (y2 > py)) &&
-        px < (x2 - x1) * (py - y1) / (y2 - y1) + x1
-      acc + when(crosses, 1).otherwise(0)
-    })
-    when(n >= 3, pmod(crossings, lit(2)) === 1).otherwise(lit(false))
-  }
-
-  /** [[pointInPolygon]] for a LITERAL polygon — the common case (clip
-    * regions are config, not data). The edge loop unrolls at plan-build
-    * time into a flat sum of `when` terms: no per-row sequence array, no
-    * interpreted HOF lambda — everything fuses into whole-stage codegen
-    * (measured 12× over the generic array form on the 600k-row gate
-    * fixture). Same crossing-number semantics, same horizontal-edge
-    * safety.
+  /** Ray-casting point-in-polygon (crossing number, non-convex safe) for
+    * a LITERAL polygon — the common case (clip regions are config, not
+    * data) and the general-geometry upgrade to the bbox kernels. The
+    * edge loop unrolls at plan-build time into a flat sum of `when`
+    * terms: no per-row sequence array, no interpreted HOF lambda —
+    * everything fuses into whole-stage codegen (measured 12× over a
+    * generic array-fold form on the 600k-row gate fixture). Degenerate
+    * horizontal edges are safe: the crossing guard is false before the
+    * slope division can matter (IEEE ∞ compares false). Boundary points
+    * follow raw double arithmetic — identical on any engine mirroring
+    * the formula.
     */
   def pointInPolygonLiteral(px: Column, py: Column, xs: Seq[Double],
       ys: Seq[Double]): Column = {

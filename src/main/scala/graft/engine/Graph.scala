@@ -305,7 +305,9 @@ object Graph {
         coalesce(col("__s"), lit(0L)).as("support"))
   }
 
-  /** k-truss peeling (Cohen 2008): iteratively delete edges whose
+  /** k-truss peeling (Cohen 2008) over a PRE-BUILT canonical support
+    * frame `(u, v, support)` (= [[edgeTriangleSupport]] of the
+    * undirected graph): iteratively delete edges whose
     * triangle support is below `k − 2` until fixpoint (or `maxRounds`),
     * leaving the subgraph where EVERY edge sits on ≥ k−2 triangles —
     * the standard dense-community core that, unlike k-core, requires
@@ -337,27 +339,15 @@ object Graph {
     * discipline); the per-round early-exit count is a 1-row driver
     * read (the timeBounds class). Rounds are bounded by `maxRounds` —
     * real peels converge in a few rounds because each round removes
-    * every currently-weak edge at once.
-    */
-  def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxRounds: Int): DataFrame = {
-    require(k >= 3 && maxRounds >= 1, "need k >= 3, maxRounds >= 1")
-    val start = Pins.pin(undirected(edges, srcCol, dstCol))
-    if (start.isEmpty)
-      return start.withColumn("support", lit(0L)).filter(lit(false))
-    kTrussFromSupport(edgeTriangleSupport(start, "u", "v"), k, maxRounds)
-  }
-
-  /** [[kTruss]] over a PRE-BUILT canonical support frame
-    * `(u, v, support)` (= [[edgeTriangleSupport]] of the undirected
-    * graph) — the session-memoization face: when the full-enumeration
-    * support of the same graph is already computed (the q371/q374
-    * pair), the peel starts from that pin and round 1 costs
-    * only the filter. Each round picks the cheaper maintenance
-    * strategy by measured frontier size: when this round DELETED more
-    * edges than survive, a fresh enumeration on the (now much
-    * smaller) survivor graph wins; when the deletion set is small,
-    * the incremental decrement confines work to the frontier.
+    * every currently-weak edge at once. Starting from a support frame
+    * is the session-memoization face: when the full-enumeration support
+    * of the same graph is already computed (the q371/q374 pair), the
+    * peel starts from that pin and round 1 costs only the filter. Each
+    * round picks the cheaper maintenance strategy by measured frontier
+    * size: when this round DELETED more edges than survive, a fresh
+    * enumeration on the (now much smaller) survivor graph wins; when
+    * the deletion set is small, the incremental decrement confines
+    * work to the frontier.
     */
   def kTrussFromSupport(support: DataFrame, k: Int,
       maxRounds: Int): DataFrame = {

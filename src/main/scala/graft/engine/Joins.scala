@@ -246,8 +246,7 @@ object Joins {
 
   /** The packed Bloom filter of `dim`'s key set as a RELATION of
     * (`__w` word index, `__bits` packed long) — at most `mBits/64` rows,
-    * absent words meaning zero. Shared by [[bloomPrunedJoin]] (broadcast
-    * form) and [[bloomMightContain]] (plan-literal form).
+    * absent words meaning zero; [[bloomPrunedJoin]] broadcasts it.
     */
   def bloomBits(dim: DataFrame, key: String, mBits: Int = 1 << 17,
       nHashes: Int = 3): DataFrame = {
@@ -270,32 +269,6 @@ object Joins {
     val h2 = polyhash(concat(s, lit("#")))
     (0 until nHashes).map(i =>
       pmod(h1 + lit(i.toLong) * h2 + lit(i.toLong * i), lit(mBits.toLong)))
-  }
-
-  /** The membership-test half of [[bloomPrunedJoin]] as a pure Column,
-    * exposed so callers can push the same pruning predicate into OTHER
-    * dataflows over the fact table (and so the false-positive rate is
-    * measurable directly). A Column cannot carry a join, so this variant
-    * necessarily materializes the words on the driver (one dim-side job
-    * at plan-build time, `mBits/64` longs — 16 KB at the default 2¹⁷
-    * bits, bounded by CONFIG not dim cardinality) and embeds them as a
-    * plan literal. At `mBits ≫ 2²⁰` prefer [[bloomPrunedJoin]]'s
-    * broadcast-relation form, which never drives the words through the
-    * driver or the plan. NULL keys test false, matching inner-join
-    * semantics.
-    */
-  def bloomMightContain(dim: DataFrame, key: String, mBits: Int = 1 << 17,
-      nHashes: Int = 3): Column = {
-    require(mBits >= 64 && mBits % 64 == 0, "mBits must be a multiple of 64")
-    require(nHashes >= 1 && nHashes <= 8, "1..8 hash functions")
-    val built = bloomBits(dim, key, mBits, nHashes)
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val words = lit(Array.tabulate(mBits / 64)(i => built.getOrElse(i, 0L)))
-    bloomPositions(col(key), mBits, nHashes).map(pos =>
-      element_at(words, shiftright(pos, 6).cast("int") + 1)
-        .bitwiseAND(element_at(lit(pow2),
-          pmod(pos, lit(64L)).cast("int") + 1)) =!= 0L)
-      .reduce(_ && _)
   }
 
   /** As-of join — for each left row, the LATEST right row with
@@ -353,8 +326,7 @@ object Joins {
   /** OP-JOIN-5 — batch interval join: pair each left row with the right
     * rows of the SAME key whose timestamp lands in
     * `[left.ts + lowerMs, left.ts + upperMs]` (attribution windows,
-    * sensor-correlation, event causality). The batch face of
-    * [[graft.streaming.Streaming]]'s interval join.
+    * sensor-correlation, event causality).
     *
     * Scale shape: the key equality makes this a plain equi-join — one
     * shuffle per side on the key, sort-merge within each key partition,

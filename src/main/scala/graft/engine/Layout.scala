@@ -88,16 +88,4 @@ object Layout {
     }
     cur.drop("__hx", "__hy")
   }
-
-  /** Cluster a frame for writing: range-partition on the Z-order key of
-    * (x, y) into `numFiles` output partitions, sorted within each — the
-    * "OPTIMIZE ZORDER BY" shape without a table format. Each output file
-    * then covers one compact curve segment, i.e. a tight (x, y) tile, so
-    * min/max skipping works on both dimensions.
-    */
-  def layoutByZOrder(df: DataFrame, x: Column, y: Column, numFiles: Int,
-      bitsPerDim: Int = 16, keyCol: String = "__zkey"): DataFrame =
-    df.withColumn(keyCol, zorderKey(x, y, bitsPerDim))
-      .repartitionByRange(numFiles, col(keyCol))
-      .sortWithinPartitions(col(keyCol))
 }

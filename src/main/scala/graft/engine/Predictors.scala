@@ -82,7 +82,4 @@ object Predictors {
       "forecast_albedo"),
     "WTD" -> Seq("wtd")
   )
-
-  /** CO₂ side-dataset validity window (`main.py:241-242`). */
-  val co2YearBounds: (Int, Int) = (2002, 2023)
 }

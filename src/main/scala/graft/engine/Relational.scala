@@ -168,25 +168,6 @@ object Relational {
   def distinctValues(df: DataFrame, cols: Seq[String]): DataFrame =
     df.select(cols.map(col): _*).distinct()
 
-  /** Sketch-based corpus statistics — the 100 TB forms of "how many
-    * distinct" and "what's the distribution": HyperLogLog++ distinct
-    * counts and approximate quantiles, one constant-memory pass each, no
-    * exact-distinct shuffle. Tolerances are the sketches' published rsd /
-    * relativeError contracts (spec-asserted against exact values).
-    */
-  def approxDistinct(df: DataFrame, cols: Seq[String],
-      rsd: Double = 0.05): DataFrame =
-    df.agg(
-      approx_count_distinct(col(cols.head), rsd).as(s"${cols.head}_distinct"),
-      cols.tail.map(c =>
-        approx_count_distinct(col(c), rsd).as(s"${c}_distinct")): _*)
-
-  def approxQuantiles(df: DataFrame, c: String, probs: Seq[Double],
-      relErr: Double = 0.01): DataFrame =
-    df.agg(percentile_approx(col(c),
-      array(probs.map(lit(_)): _*), lit((1 / relErr).toInt))
-      .as(s"${c}_quantiles"))
-
   /** OP-AGG-6 — pivot to wide: one output column per EXPLICIT pivot value
     * (`count` of matching rows). The value list is required, not
     * discovered: an implicit `.pivot(col)` runs a blocking distinct scan
@@ -219,8 +200,8 @@ object Relational {
     * the ANSI `percentile_cont` semantics). Exact percentiles need each
     * group's sorted values, so this is for REPORTING grains (per
     * event-type, per day — thousands of groups of bounded size), not
-    * per-user grains; at corpus-wide grain use [[approxQuantiles]], whose
-    * constant-memory sketch is the 100 TB form. One shuffle on the group
+    * per-user grains; at corpus-wide grain use Spark's
+    * `percentile_approx`, whose constant-memory sketch is the 100 TB form. One shuffle on the group
     * key; values rounded to 6 for cross-engine stability.
     */
   def percentileSummary(df: DataFrame, groupCols: Seq[String], c: String,
@@ -460,7 +441,7 @@ object Relational {
     * aggregate plans as ONE pass with an Expand (k× map-side rows, k =
     * |cols|) — acceptable at reporting cadence for a handful of columns;
     * at 100 TB width swap the exact distinct for
-    * [[approxDistinct]]'s HLL sketch, which collapses the Expand.
+    * Spark's `approx_count_distinct` HLL sketch, which collapses the Expand.
     */
   def profileNumeric(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap(c => Seq(
@@ -824,7 +805,7 @@ object Relational {
         max(col(valCol)).as("hi"))
   }
 
-  /** Sparse paired ECDF shared by [[ksReport]] and
+  /** Sparse paired ECDF shared by [[ksReportFromPaired]] and
     * [[mannWhitneyReport]]: for every non-reference split `s` and every
     * value observed in `s` OR in the reference split, the counts of both
     * samples at that value (`__t` for `s`, `__tr` for the reference; 0
@@ -905,31 +886,24 @@ object Relational {
       .select("__s", "__v", "__t", "__tr", "__cum", "__cumr")
   }
 
-  /** Two-sample Kolmogorov–Smirnov drift report: for every split against
-    * the `refValue` split, `D = sup |F_ref − F_cur|` over the union
-    * support. The sup is kept EXACT until the last step: with counts
+  /** Two-sample Kolmogorov–Smirnov drift report over an [[ecdfPaired]]
+    * frame: for every split against the `refValue` split,
+    * `D = sup |F_ref − F_cur|` over the union support. The sup is kept EXACT until the last step: with counts
     * `cum` and totals `N`, `|F_r − F_c| = |cum_r·N_c − cum_c·N_r| /
     * (N_r·N_c)`, and the numerator max is integer DECIMAL(38,0)
     * arithmetic (safe past 2⁶³, the ANSI-overflow class at 10⁹-row
     * splits), so the report hashes engine-stable; only the final ratio
     * is floating, rounded 6 dp. Complements [[psiReport]]: KS is
     * binning-free (reads the exact ECDFs) where PSI reads a fixed
-    * histogram. `lo`/`hi`/`nBuckets` only shape the internal prefix-sum
-    * partitioning, never the statistic. Output one row per non-reference
+    * histogram. The frame's `lo`/`hi`/`nBuckets` only shape the internal
+    * prefix-sum partitioning, never the statistic. Output one row per non-reference
     * split: `(split, n_ref, n_cur, d_num, ks)`; a missing reference
     * split yields an empty report (no rows to test against), never a
-    * silent zero.
+    * silent zero. KS and Wasserstein on the SAME (input, split, value)
+    * config share one paired-ECDF materialization (the coPurchaseEdges
+    * discipline; the paired frame is the expensive half of both
+    * reports).
     */
-  def ksReport(df: DataFrame, splitCol: String, refValue: String,
-      valCol: String, lo: Double, hi: Double, nBuckets: Int): DataFrame =
-    ksReportFromPaired(
-      ecdfPaired(df, splitCol, refValue, valCol, lo, hi, nBuckets))
-
-  /** [[ksReport]] over an already-built [[ecdfPaired]] frame — the
-    * session-memoization face: KS and Wasserstein on the SAME (input,
-    * split, value) config share one paired-ECDF materialization (the
-    * coPurchaseEdges discipline; the paired frame is the expensive
-    * half of both reports). */
   private[graft] def ksReportFromPaired(e: DataFrame): DataFrame = {
     val d38 = "decimal(38,0)"
     // per-split totals off the paired frame itself; __nr > 0 keeps the
@@ -1006,11 +980,11 @@ object Relational {
           .as("z"))
   }
 
-  /** Two-sample 1-D Wasserstein (earth-mover) drift report of every
-    * split against `refValue`: `W₁ = ∫ |F_ref − F_cur| dx`, the
-    * area between the two ECDFs — the drift statistic that, unlike
-    * [[ksReport]]'s sup-norm, weighs HOW FAR mass moved (a 1-cent
-    * shift of every price and a 10-dollar shift of 0.1% of prices have
+  /** Two-sample 1-D Wasserstein (earth-mover) drift report over an
+    * [[ecdfPaired]] frame, every split against `refValue`:
+    * `W₁ = ∫ |F_ref − F_cur| dx`, the area between the two ECDFs — the
+    * drift statistic that, unlike [[ksReportFromPaired]]'s sup-norm,
+    * weighs HOW FAR mass moved (a 1-cent shift of every price and a 10-dollar shift of 0.1% of prices have
     * the same KS but very different W₁; t-closeness-style audits read
     * exactly this). Shares [[ecdfPaired]] with KS/Mann-Whitney.
     *
@@ -1030,18 +1004,10 @@ object Relational {
     * DECIMAL(38,0) past 10⁹-row splits on 10¹²-wide integer axes.
     * Output per non-reference split: `(split, n_ref, n_cur, w1_micro,
     * w1)` in the `valCol` units; a missing reference split yields an
-    * empty report, never a silent zero.
+    * empty report, never a silent zero. `lo`/`hi`/`nBuckets` must be
+    * the paired frame's own build parameters — they re-derive the same
+    * internal bucket axis for the two-level lag.
     */
-  def wassersteinReport(df: DataFrame, splitCol: String, refValue: String,
-      valCol: String, lo: Double, hi: Double, nBuckets: Int): DataFrame =
-    wassersteinReportFromPaired(
-      ecdfPaired(df, splitCol, refValue, valCol, lo, hi, nBuckets),
-      lo, hi, nBuckets)
-
-  /** [[wassersteinReport]] over an already-built [[ecdfPaired]] frame
-    * (see [[ksReportFromPaired]]); `lo`/`hi`/`nBuckets` must be the
-    * frame's own build parameters — they re-derive the same internal
-    * bucket axis for the two-level lag. */
   private[graft] def wassersteinReportFromPaired(e: DataFrame,
       lo: Double, hi: Double, nBuckets: Int): DataFrame = {
     val d38 = "decimal(38,0)"
@@ -1475,8 +1441,8 @@ object Relational {
     * (a category one rater never uses contributes 0 chance mass).
     *
     * Everything downstream of the caller-supplied cell frame is
-    * cell-grain (≤ |A|·|B| rows) — the input is aggregated once by
-    * [[cohenKappa]]'s raw-pairs face and never re-scanned (cells are
+    * cell-grain (≤ |A|·|B| rows) — the caller aggregates the rating
+    * pairs once (abstentions dropped) and they are never re-scanned (cells are
     * pinned through the three marginal branches).
     */
   def cohenKappaFromCells(cellsIn: DataFrame, aCol: String, bCol: String,
@@ -1506,15 +1472,6 @@ object Relational {
           (col("__tot") * col("__tot") - col("__s")).cast("double"), 6))
           .as("kappa"))
   }
-
-  /** [[cohenKappaFromCells]] over raw rating pairs: rows where either
-    * rater abstained (null) are excluded, then one aggregate builds the
-    * cell frame. */
-  def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame =
-    cohenKappaFromCells(
-      df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
-        .groupBy(col(aCol), col(bCol)).agg(count(lit(1)).as("__cnt")),
-      aCol, bCol, "__cnt")
 
   /** Mergeable partial profile of INTEGER-valued columns, the combiner
     * half of distributed profiling: per `(group, column)`, the exact
@@ -4165,7 +4122,6 @@ object Relational {
       m: Int, exclusion: Int, maxSeries: Int = 20000): DataFrame = {
     require(m >= 2, "window length must be >= 2")
     require(maxSeries >= m, "maxSeries must be >= window length")
-    val d38 = "decimal(38,0)"
     // structural series bound (the mannKendall maxSeries discipline):
     // the all-pairs window scan is quadratic with an n-row broadcast —
     // a corpus-grain input must fail loudly before the BNLJ builds
@@ -4560,7 +4516,6 @@ object Relational {
     */
   def disparateImpact(df: DataFrame, groupCol: String,
       passCol: String): DataFrame = {
-    val d38 = "decimal(38,0)"
     val byG = df.filter(col(groupCol).isNotNull && col(passCol).isNotNull)
       .groupBy(col(groupCol).cast("string").as("group"))
       .agg(count(lit(1)).as("n"),
@@ -5461,7 +5416,6 @@ object Relational {
     */
   def qiniCurve(df: DataFrame, scoreCol: String, treatCol: String,
       respCol: String, tiebreakCols: Seq[String]): DataFrame = {
-    val d38 = "decimal(38,0)"
     val base = df.filter(col(scoreCol).isNotNull &&
         col(treatCol).isNotNull && col(respCol).isNotNull)
       .select(col(scoreCol).as("__sc") +:

@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DoubleType, FloatType, TimestampType}
+import org.apache.spark.sql.types.FloatType
 
 /** OP-SNK-1/2/3 — sinks. The reference's NetCDF writers map to Parquet
   * (columnar, compressed, splittable — the lake format the engine's scans
@@ -66,34 +66,4 @@ object Sinks {
 
   def readJsonl(spark: SparkSession, path: String, schema: String): DataFrame =
     spark.read.schema(schema).json(path)
-
-  /** Small-file compaction — the lake-maintenance pass every streaming or
-    * per-batch writer eventually needs (thousands of KB-sized files turn
-    * scan planning and footer reads into the bottleneck long before
-    * data volume does). Range-repartition on `sortCol` into `nFiles`
-    * sorted outputs: each compacted file is a tight, disjoint key range,
-    * so min/max skipping on the sort key survives compaction. Write to a
-    * NEW path then swap — never compact in place (a failed overwrite of
-    * the live path loses data; the swap is the caller's atomic rename).
-    */
-  def compact(spark: SparkSession, inPath: String, outPath: String,
-      sortCol: String, nFiles: Int): Unit =
-    spark.read.parquet(inPath)
-      .repartitionByRange(nFiles, col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite").parquet(outPath)
-
-  /** Bucketed table write — the lakehouse layout that makes repeated
-    * equi-joins/aggregations on `bucketCols` shuffle-free: both sides of a
-    * join bucketed into the same `n` on the same keys satisfy each other's
-    * hash-partitioning requirement, so SortMergeJoin runs with ZERO
-    * Exchange (verified by plan assertion in the spec). Bucketing requires
-    * the table catalog (`saveAsTable`), hence the name parameter.
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-      n: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(n, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(table)
 }

@@ -68,9 +68,7 @@ object Windows {
     * order. The break-flag lag and the running sum share the SAME
     * (key, time) window sort, so Catalyst plans one exchange + one sort;
     * session numbering is per-key, so at 100 TB the window state is a
-    * single counter per partition stream — nothing accumulates. The
-    * streaming face of the same semantics is
-    * [[graft.streaming.Streaming.sessionize]] (`flatMapGroupsWithState`).
+    * single counter per partition stream — nothing accumulates.
     */
   def sessionize(df: DataFrame, keyCol: String, timeCol: String,
       gap: Column, outCol: String = "session_idx"): DataFrame = {

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Pins
-import graft.functions.PolyHash.polyhash
 
 /** Deduplication operators: exact (hash group-by), MinHash+LSH (banded
   * bucket join — never all-pairs), SimHash, and exact n-gram Jaccard
@@ -182,25 +181,20 @@ object Dedup {
   val tokenHashes64: Column => Column =
     t => transform(graft.functions.Tokens.tokens(t), h => xxhash64(h))
 
-  /** SimHash over token hashes: bit i of the fingerprint is set iff more
+  /** SimHash over a pre-materialized token-hash array (e.g.
+    * `tokenHashesPoly(text)`): bit i of the fingerprint is set iff more
     * than half the token hashes have bit i set. Pure per-row array math —
-    * zero shuffle over the corpus.
+    * zero shuffle over the corpus — as ONE native codegen'd pass
+    * ([[graft.functions.SimHash]]); bit-identical (property-tested) to
+    * the `bits` separate `aggregate` HOF folds it replaces — those ran
+    * 64 interpreted array passes per row at production width and were
+    * the top regression of round 3's bench.
     *
-    * `bits` must not exceed the token-hash space: ≤ 30 with the default
+    * `bits` must not exceed the token-hash space: ≤ 30 with the
     * polyhash token hashes (2^30 range — keeps the fingerprint
-    * oracle-computable in ANSI SQL), up to 64 with
-    * `tokenHashesFn = tokenHashes64` (the production path — see
-    * [[simhashCandidates]] on why width matters at scale).
-    */
-  def simhash(text: Column, bits: Int = 30,
-      tokenHashesFn: Column => Column = tokenHashesPoly): Column =
-    simhashFromHashes(tokenHashesFn(text), bits)
-
-  /** SimHash over a pre-materialized token-hash array, as ONE native
-    * codegen'd pass ([[graft.functions.SimHash]]); bit-identical
-    * (property-tested) to the `bits` separate `aggregate` HOF folds it
-    * replaces — those ran 64 interpreted array passes per row at
-    * production width and were the top regression of round 3's bench.
+    * oracle-computable in ANSI SQL), up to 64 with [[tokenHashes64]]
+    * (the production path — see [[simhashCandidates]] on why width
+    * matters at scale).
     */
   def simhashFromHashes(hashes: Column, bits: Int = 30): Column =
     graft.functions.SimHash.simhash(hashes, bits)

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.Pins
 
@@ -89,30 +89,18 @@ object Density {
       .select(col("a"), col("b"))
   }
 
-  /** Per-point density report: `(id, n_eps, role)` where `n_eps` counts
-    * the point itself plus its eps-neighbors, and `role` is `core`
+  /** Per-point density report over a PRE-BUILT eps-neighbor frame
+    * `(a, b)` ([[epsNeighborPairs]]): `(id, n_eps, role)` where `n_eps`
+    * counts the point itself plus its eps-neighbors, and `role` is `core`
     * (`n_eps ≥ minPts`), `border` (non-core with a core eps-neighbor) or
-    * `noise`.
-    */
-  def dbscanCore(points: DataFrame, idCol: String, xCol: String,
-      yCol: String, epsMicro: Long, minPts: Int): DataFrame =
-    Pins.scoped { s =>
-      coreRoles(s, points, idCol,
-        s.pin(epsNeighborPairs(points, idCol, xCol, yCol, epsMicro)), minPts)
-    }
-
-  /** [[dbscanCore]] over a PRE-BUILT eps-neighbor frame `(a, b)` —
-    * the session-memoization face: when several queries share one
-    * `(points, epsMicro)` geometry (the q348/q349 pair), the caller
-    * materializes [[epsNeighborPairs]] once and both labelings read
-    * that checkpoint instead of re-running the 9-cell join.
+    * `noise`. Taking the pairs is the session-memoization face: when
+    * several queries share one `(points, epsMicro)` geometry (the
+    * q348/q349 pair), the caller materializes [[epsNeighborPairs]] once
+    * and both labelings read that checkpoint instead of re-running the
+    * 9-cell join.
     */
   def dbscanCoreFromPairs(points: DataFrame, idCol: String,
-      nbrs: DataFrame, minPts: Int): DataFrame =
-    Pins.scoped(coreRoles(_, points, idCol, nbrs, minPts))
-
-  private def coreRoles(s: Pins.Scope, points: DataFrame, idCol: String,
-      nbrs: DataFrame, minPts: Int): DataFrame = {
+      nbrs: DataFrame, minPts: Int): DataFrame = Pins.scoped { s =>
     require(minPts >= 1, "minPts must be positive")
     // node-grain, two readers (the core-id broadcast build and the final
     // left join's stream side) — pinned so the independent stages scan
@@ -136,35 +124,21 @@ object Density {
       .select(col("id"), col("n_eps"), col("role"))
   }
 
-  /** Full DBSCAN labeling: `(id, role, cluster)` — clusters are the
-    * connected components of the core-core eps-graph, labeled by their
-    * minimum core id ([[graft.engine.Graph.connectedComponents]]'s
-    * pointer-jumping engine); an isolated core is its own cluster;
-    * a border point joins the SMALLEST adjacent core's cluster (the
-    * deterministic stand-in for scan-order assignment, which a parallel
-    * engine cannot reproduce); noise reports a null cluster.
-    */
-  def dbscanClusters(points: DataFrame, idCol: String, xCol: String,
-      yCol: String, epsMicro: Long, minPts: Int): DataFrame =
-    Pins.scoped { s =>
-      dbscanClustersImpl(s, points, idCol,
-        s.pin(epsNeighborPairs(points, idCol, xCol, yCol, epsMicro)),
-        minPts, Some((xCol, yCol, epsMicro)))
-    }
-
-  /** [[dbscanClusters]] over a PRE-BUILT eps-neighbor frame — see
-    * [[dbscanCoreFromPairs]] for the memoization contract.
-    */
-  def dbscanClustersFromPairs(points: DataFrame, idCol: String,
-      nbrs: DataFrame, minPts: Int): DataFrame =
-    Pins.scoped(dbscanClustersImpl(_, points, idCol, nbrs, minPts, None))
-
-  /** [[dbscanClustersFromPairs]] WITH the point geometry — the
-    * boundary-pair reduction face (guide §2.3 "shuffle fewer bytes" /
-    * §2.4 at the algorithm level): instead of feeding EVERY core-core
-    * ε-pair to the pointer-jumping CC (whose every round shuffles the
-    * whole pair frame), reduce the pair frame to a connectivity-
-    * equivalent sparse skeleton first.
+  /** Full DBSCAN labeling over a PRE-BUILT eps-neighbor frame (see
+    * [[dbscanCoreFromPairs]] for the memoization contract): `(id, role,
+    * cluster)` — clusters are the connected components of the core-core
+    * eps-graph, labeled by their minimum core id
+    * ([[graft.engine.Graph.connectedComponents]]'s pointer-jumping
+    * engine); an isolated core is its own cluster; a border point joins
+    * the SMALLEST adjacent core's cluster (the deterministic stand-in for
+    * scan-order assignment, which a parallel engine cannot reproduce);
+    * noise reports a null cluster.
+    *
+    * The point geometry drives the boundary-pair reduction (guide §2.3
+    * "shuffle fewer bytes" / §2.4 at the algorithm level): instead of
+    * feeding EVERY core-core ε-pair to the pointer-jumping CC (whose
+    * every round shuffles the whole pair frame), reduce the pair frame
+    * to a connectivity-equivalent sparse skeleton first.
     *
     * The reduction (standard MR-DBSCAN merge refinement): bucket core
     * points into SUB-cells of side `s` = the largest integer with
@@ -185,13 +159,7 @@ object Density {
     */
   def dbscanClustersFromPairsGeo(points: DataFrame, idCol: String,
       xCol: String, yCol: String, epsMicro: Long,
-      nbrs: DataFrame, minPts: Int): DataFrame =
-    Pins.scoped(dbscanClustersImpl(_, points, idCol, nbrs, minPts,
-      Some((xCol, yCol, epsMicro))))
-
-  private def dbscanClustersImpl(s: Pins.Scope, points: DataFrame,
-      idCol: String, nbrs: DataFrame, minPts: Int,
-      geom: Option[(String, String, Long)]): DataFrame = {
+      nbrs: DataFrame, minPts: Int): DataFrame = Pins.scoped { s =>
     require(minPts >= 1, "minPts must be positive")
     // every multi-reader frame here is pinned (r14): the readers are
     // broadcast builds and semi-joins that run as independent stages of
@@ -205,48 +173,39 @@ object Density {
         .agg(count(lit(1)).as("__c")), Seq("id"), "left")
       .withColumn("n_eps", coalesce(col("__c"), lit(0L)) + 1L))
     val core = s.pin(counts.filter(col("n_eps") >= minPts).select(col("id")))
-    val ccInput = geom match {
-      case None =>
-        nbrs
-          .join(core.select(col("id").as("a")), Seq("a"), "left_semi")
-          .join(core.select(col("id").as("b")), Seq("b"), "left_semi")
-          .filter(col("a") < col("b"))
-      case Some((xCol, yCol, epsMicro)) =>
-        // largest sub-cell side with 2s² ≤ eps² (float guess, exact fix)
-        var side = (epsMicro / math.sqrt(2.0)).toLong
-        while (side > 1 && 2 * side * side > epsMicro * epsMicro) side -= 1
-        if (side < 1) side = 1
-        // core points with their sub-cell — node-grain, read three times
-        val sub = s.pin(points.select(col(idCol).as("id"),
-            expr(s"(CAST($xCol AS BIGINT) + ${Shift}L) DIV ${side}L")
-              .as("__sx"),
-            expr(s"(CAST($yCol AS BIGINT) + ${Shift}L) DIV ${side}L")
-              .as("__sy"))
-          .join(core, Seq("id"), "left_semi"))
-        // in-cell star: every core links to its sub-cell's min core id
-        // (a genuine ε-pair by the 2s² ≤ eps² bound)
-        val rep = sub.groupBy(col("__sx"), col("__sy"))
-          .agg(min(col("id")).as("__rep"))
-        val star = sub.join(rep, Seq("__sx", "__sy"))
-          .filter(col("id") =!= col("__rep"))
-          .select(col("__rep").as("a"), col("id").as("b"))
-        // cross-cell: ONE deterministic representative ε-pair per
-        // ordered sub-cell pair (the inner node-grain joins double as
-        // the core/core semi-filters)
-        val boundary = nbrs.filter(col("a") < col("b"))
-          .join(sub.select(col("id").as("a"), col("__sx").as("__ax"),
-            col("__sy").as("__ay")), Seq("a"))
-          .join(sub.select(col("id").as("b"), col("__sx").as("__bx"),
-            col("__sy").as("__by")), Seq("b"))
-          .filter(col("__ax") =!= col("__bx") ||
-            col("__ay") =!= col("__by"))
-          .groupBy(col("__ax"), col("__ay"), col("__bx"), col("__by"))
-          .agg(min(struct(col("a"), col("b"))).as("__e"))
-          .select(col("__e.a").as("a"), col("__e.b").as("b"))
-        star.unionByName(boundary)
-    }
+    // largest sub-cell side with 2s² ≤ eps² (float guess, exact fix)
+    var side = (epsMicro / math.sqrt(2.0)).toLong
+    while (side > 1 && 2 * side * side > epsMicro * epsMicro) side -= 1
+    if (side < 1) side = 1
+    // core points with their sub-cell — node-grain, read three times
+    val sub = s.pin(points.select(col(idCol).as("id"),
+        expr(s"(CAST($xCol AS BIGINT) + ${Shift}L) DIV ${side}L")
+          .as("__sx"),
+        expr(s"(CAST($yCol AS BIGINT) + ${Shift}L) DIV ${side}L")
+          .as("__sy"))
+      .join(core, Seq("id"), "left_semi"))
+    // in-cell star: every core links to its sub-cell's min core id
+    // (a genuine ε-pair by the 2s² ≤ eps² bound)
+    val rep = sub.groupBy(col("__sx"), col("__sy"))
+      .agg(min(col("id")).as("__rep"))
+    val star = sub.join(rep, Seq("__sx", "__sy"))
+      .filter(col("id") =!= col("__rep"))
+      .select(col("__rep").as("a"), col("id").as("b"))
+    // cross-cell: ONE deterministic representative ε-pair per
+    // ordered sub-cell pair (the inner node-grain joins double as
+    // the core/core semi-filters)
+    val boundary = nbrs.filter(col("a") < col("b"))
+      .join(sub.select(col("id").as("a"), col("__sx").as("__ax"),
+        col("__sy").as("__ay")), Seq("a"))
+      .join(sub.select(col("id").as("b"), col("__sx").as("__bx"),
+        col("__sy").as("__by")), Seq("b"))
+      .filter(col("__ax") =!= col("__bx") ||
+        col("__ay") =!= col("__by"))
+      .groupBy(col("__ax"), col("__ay"), col("__bx"), col("__by"))
+      .agg(min(struct(col("a"), col("b"))).as("__e"))
+      .select(col("__e.a").as("a"), col("__e.b").as("b"))
     val comps = graft.engine.Graph.connectedComponents(
-      ccInput, "a", "b")
+      star.unionByName(boundary), "a", "b")
     val coreClusters = s.pin(core
       .join(comps.select(col("node").as("id"), col("component")),
         Seq("id"), "left")

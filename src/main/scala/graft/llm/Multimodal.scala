@@ -1,13 +1,12 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal columns: image/audio/video payloads travel as opaque
   * `BinaryType` columns with a typed metadata struct; decode /
-  * feature-extract / resize / frame-sample are per-partition batch
-  * operations over the binary payloads.
+  * feature-extract / frame-sample / patch-grid operate on the binary
+  * payloads and their metadata.
   *
   * The decode step itself is STUBBED (no image/audio codecs in this
   * environment) behind [[decodeStub]] — a deterministic fake that hashes
@@ -18,13 +17,6 @@ import org.apache.spark.sql.types._
   * payload transforms stay map-side).
   */
 object Multimodal {
-
-  val metadataSchema: StructType = StructType(Seq(
-    StructField("modality", StringType),
-    StructField("byte_len", LongType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", IntegerType)))
 
   /** Wrap a payload expression as (payload BINARY, meta STRUCT). Width /
     * height / frame count normally come from container headers; the stub
@@ -44,32 +36,12 @@ object Multimodal {
 
   /** Deterministic fake "decode → feature vector": featureᵢ =
     * ((seed·(i+1)) mod 997) / 997. Closed-form (oracle-checkable) and
-    * shaped exactly like a real embedding head's output. Replace with a
-    * real codec via [[mapBinaryBatches]] in production.
+    * shaped exactly like a real embedding head's output; a real codec
+    * replaces it with a per-partition decode of the payload bytes.
     */
   def decodeStub(seed: Column, dim: Int): Column =
     transform(sequence(lit(0), lit(dim - 1)),
       i => pmod(seed * (i + 1), lit(997)).cast("double") / 997d)
-
-  /** Resize: a metadata transform — the stub rewrites target dimensions
-    * (aspect-preserving fit into a `maxDim` box) and carries the payload
-    * untouched; a real codec resizes in [[mapBinaryBatches]]. Kept
-    * metadata-only so a resize over 100 TB of video never shuffles or
-    * rewrites payload bytes until the decode stage actually consumes them.
-    */
-  def resizeMeta(mm: Column, maxDim: Int): Column = {
-    val w = mm.getField("meta").getField("width")
-    val h = mm.getField("meta").getField("height")
-    val scale = least(lit(maxDim) / greatest(w, h).cast("double"), lit(1d))
-    struct(
-      mm.getField("payload").as("payload"),
-      struct(
-        mm.getField("meta").getField("modality").as("modality"),
-        mm.getField("meta").getField("byte_len").as("byte_len"),
-        floor(w * scale).cast("int").as("width"),
-        floor(h * scale).cast("int").as("height"),
-        mm.getField("meta").getField("n_frames").as("n_frames")).as("meta"))
-  }
 
   /** Frame sampling: explode `n` evenly-spaced frame indices from the
     * metadata frame count — a metadata-only operation (the payload column
@@ -83,17 +55,6 @@ object Multimodal {
         i => (i * frames / n).cast("int"))))
   }
 
-  /** ViT-style patch grid: one row per `patch × patch` window at `stride`
-    * spacing over the image metadata — the tokenization step of an image
-    * encoder, as a METADATA-ONLY explode (the payload column is carried
-    * by reference; actual pixel extraction belongs in the
-    * [[mapBinaryBatchesTyped]] decode stage, which consumes these
-    * coordinates). Patches are emitted only where they fit entirely
-    * (`x0 + patch ≤ width`, ViT convention — no ragged edge padding);
-    * an image smaller than one patch yields no rows. Grid coordinates
-    * come from ONE `patch_idx` explode with div/mod recovery, not a
-    * nested double explode.
-    */
   /** Patches along one dimension under the full-fit convention — shared
     * by [[patchGrid]] (which explodes them) and [[patchCount]] (which
     * only needs the total). Integer floor-div via double: dims < 2^31,
@@ -117,6 +78,17 @@ object Multimodal {
       .cast("long")
   }
 
+  /** ViT-style patch grid: one row per `patch × patch` window at `stride`
+    * spacing over the image metadata — the tokenization step of an image
+    * encoder, as a METADATA-ONLY explode (the payload column is carried
+    * by reference; actual pixel extraction belongs in a codec's decode
+    * stage, which consumes these coordinates). Patches are emitted only
+    * where they fit entirely (`x0 + patch ≤ width`, ViT convention — no
+    * ragged edge padding);
+    * an image smaller than one patch yields no rows. Grid coordinates
+    * come from ONE `patch_idx` explode with div/mod recovery, not a
+    * nested double explode.
+    */
   def patchGrid(df: DataFrame, mmCol: String, patch: Int,
       stride: Int): DataFrame = {
     require(patch >= 1 && stride >= 1, "patch and stride must be positive")
@@ -136,56 +108,5 @@ object Multimodal {
       .withColumn("x0", col("grid_x") * stride)
       .withColumn("y0", col("grid_y") * stride)
       .drop("__nx")
-  }
-
-  /** The preferred real-codec extension point: per-partition batch decode
-    * that STAYS INSIDE the SQL engine. `Dataset.mapPartitions` with a row
-    * encoder compiles to DeserializeToObject → MapPartitions →
-    * SerializeFromObject inside the same query plan — upstream parquet
-    * scans keep their columnar batches and pushed filters, AQE keeps
-    * re-planning downstream stages, and rows re-enter Tungsten format
-    * immediately after the decode. (PySpark's `mapInArrow` is the same
-    * idea for Python workers; the Scala `Dataset.mapInArrow` overload only
-    * accepts a Python-UDF column, so `mapPartitions` + encoder IS the
-    * Scala-native columnar-preserving form.) One decoder context per
-    * partition, amortized over its batch.
-    */
-  def mapBinaryBatchesTyped(df: DataFrame, mmCol: String, dim: Int)(
-      decode: Array[Byte] => Array[Double]): DataFrame = {
-    val outSchema = df.schema.add(StructField("features",
-      ArrayType(DoubleType)))
-    val payloadIdx = df.schema.fieldIndex(mmCol)
-    df.mapPartitions { rows =>
-      // one decoder context per partition would initialize here
-      rows.map { r =>
-        val mm = r.getStruct(payloadIdx)
-        val payload = mm.getAs[Array[Byte]]("payload")
-        Row.fromSeq(r.toSeq :+ decode(payload).toSeq)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-  }
-
-  /** RDD-boundary fallback form of [[mapBinaryBatchesTyped]] — kept for
-    * codecs that need raw RDD control (custom partitioners, explicit
-    * preservesPartitioning). Crossing `df.rdd` abandons the query plan:
-    * no AQE below this point and a full deserialize to GenericRow, so
-    * prefer the typed form.
-    */
-  def mapBinaryBatches(df: DataFrame, mmCol: String, dim: Int)(
-      decode: Array[Byte] => Array[Double]): DataFrame = {
-    val spark = df.sparkSession
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField("features",
-      ArrayType(DoubleType)))
-    val payloadIdx = inSchema.fieldIndex(mmCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      // one decoder context per partition would initialize here
-      rows.map { r =>
-        val mm = r.getStruct(payloadIdx)
-        val payload = mm.getAs[Array[Byte]]("payload")
-        Row.fromSeq(r.toSeq :+ decode(payload).toSeq)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
   }
 }

@@ -592,8 +592,6 @@ object Similarity {
     transform(vec, x =>
       when(nrm > 0, x.cast("double") / nrm).otherwise(x.cast("double")))
 
-  def normalize(vec: Column): Column = normalizeFromNorm(vec, norm(vec))
-
   /** ±1 sign matrix for [[jlProject]], derived from the engine hash
     * (`parity of polyhash("jl:i#j")`) — deterministic, seedless, and
     * reproducible in plain SQL, which is what lets the projection be

@@ -24,15 +24,12 @@ object Text {
   def nfc(text: Column): Column =
     graft.functions.NfcNormalize.nfcNormalize(text)
 
-  /** Lowercase + strip non-alphanumerics to spaces. */
-  def normalize(text: Column): Column =
-    regexp_replace(lower(text), "[^a-z0-9 ]", " ")
-
-  /** Whitespace tokens of the normalized text (empty strings dropped).
-    * Native one-scan tokenizer ([[graft.functions.Tokens]]); identical
-    * (property-tested) to
-    * `filter(split(trim(normalize(text)), " +"), _ =!= "")`, whose filter
-    * HOF ran interpreted on every corpus pass.
+  /** Whitespace tokens of the normalized text (lowercased, every
+    * non-alphanumeric a space; empty strings dropped). Native one-scan
+    * tokenizer ([[graft.functions.Tokens]]); identical (property-tested)
+    * to `filter(split(trim(regexp_replace(lower(text), "[^a-z0-9 ]",
+    * " ")), " +"), _ =!= "")`, whose filter HOF ran interpreted on every
+    * corpus pass.
     */
   def tokens(text: Column): Column =
     graft.functions.Tokens.tokens(text)
@@ -196,15 +193,6 @@ object Text {
     coalesce((lenScore + punctScore + stopScore) / 3d, lit(0d))
   }
 
-  /** Document fingerprint: the winnowing-style selected subset of rolling
-    * w-gram hashes — shingle hashes with `h mod keepMod == 0`, sorted. Two
-    * documents sharing content blocks share fingerprint members; the sorted
-    * array makes the fingerprint order-canonical.
-    */
-  def fingerprint(text: Column, w: Int = 4, keepMod: Int = 8): Column =
-    graft.functions.ModFilterSorted.modFilterSorted(shingleHashes(text, w),
-      keepMod)
-
   // ------------------------------------------------------------- PII scrub
 
   /** PII patterns, applied in declaration order (email first so its digits
@@ -281,11 +269,9 @@ object Text {
   def keptLines(text: Column, minWords: Int = 3): Column =
     filter(split(text, "\n"), l => keepLine(l, minWords))
 
-  def cleanLines(text: Column, minWords: Int = 3): Column =
-    array_join(keptLines(text, minWords), "\n")
-
-  /** Line-retention stats alongside the cleaned text — the audit columns
-    * a curation run reports per document.
+  /** Line-retention stats alongside the cleaned text (the kept lines
+    * joined by newlines) — the audit columns a curation run reports per
+    * document.
     *
     * PERF: takes PRE-STAGED `lines`/`kept` array columns (the HOF filter
     * runs interpreted with no CSE — composing `keepLine` per output column
@@ -297,9 +283,6 @@ object Text {
       "n_lines" -> size(lines),
       "n_kept" -> size(kept),
       "clean" -> array_join(kept, "\n"))
-
-  def lineStats(text: Column, minWords: Int = 3): Seq[(String, Column)] =
-    lineStatsFromKept(split(text, "\n"), keptLines(text, minWords))
 
   // ------------------------------------------------ corpus n-gram mining
 
@@ -405,37 +388,21 @@ object Text {
       .otherwise(lit(0d))
 
   /** Fraction of n-grams taken by the single most frequent n-gram — the
-    * Gopher-style "top n-gram fraction" boilerplate detector. Per-doc array
-    * math only (distinct grams × grams per doc), so the corpus pass is a
-    * narrow shuffle-free projection; docs are KB-sized, the quadratic term
-    * is bounded.
-    *
-    * PERF: takes pre-materialized GRAMS (stage `ngrams(tokens(text), n)`
-    * behind a projection) — the counting subtree references it three times.
-    */
-  def topNgramFractionFromGrams(grams: Column): Column = {
-    val counts = transform(array_distinct(grams),
-      g => size(filter(grams, x => x === g)))
-    when(size(grams) > 0,
-      array_max(counts).cast("double") / size(grams).cast("double"))
-      .otherwise(lit(0d))
-  }
-
-  /** One-pass native form over a pre-staged token array — identical
-    * (property-tested) to `topNgramFractionFromGrams(ngrams(toks, n))`,
-    * which built every gram string and then counted each distinct gram
-    * with an interpreted O(distinct × grams) filter pass.
+    * Gopher-style "top n-gram fraction" boilerplate detector — over a
+    * pre-staged token array, in one native pass
+    * ([[graft.functions.TopNgramFraction]]). Per-doc array math only, so
+    * the corpus pass is a narrow shuffle-free projection. Identical
+    * (property-tested) to the composed form that built every gram string
+    * with [[ngrams]] and then counted each distinct gram with an
+    * interpreted O(distinct × grams) filter pass.
     */
   def topNgramFractionFromTokens(toks: Column, n: Int): Column =
     graft.functions.TopNgramFraction.topNgramFraction(toks, n)
 
-  def topNgramFraction(text: Column, n: Int): Column =
-    topNgramFractionFromTokens(tokens(text), n)
-
   /** HTML/markup strip for web-crawl text: tags removed, the five core
     * entities decoded, whitespace collapsed. Regex-only (RE2-safe
     * patterns, no backrefs) so it is a pure codegen'd projection and
-    * engine-portable; it is the cheap pre-pass before [[cleanLines]] —
+    * engine-portable; it is the cheap pre-pass before [[keptLines]] —
     * a full HTML parser belongs at ingest, not in the hot path.
     */
   def stripMarkup(text: Column): Column = {

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util
 import scala.jdk.CollectionConverters._
 

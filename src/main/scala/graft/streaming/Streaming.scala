@@ -1,15 +1,14 @@
 package graft.streaming
 
-import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming showcase (SURVEY §2.9): the reference is strictly
   * batch, so streaming is an extension — the batch window aggregation
   * reused under `readStream`. The transform is written against a plain
   * DataFrame so the SAME function serves batch (oracle-checked) and
-  * streaming (watermarked, tested via MemoryStream in the spec).
+  * streaming (watermarked). Each function here is one a registry query
+  * calls and oracle-checks.
   */
 object Streaming {
 
@@ -40,191 +39,14 @@ object Streaming {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("n"))
 
-  /** Streaming exact-dedup: drop repeats of `keys` within the watermark
-    * horizon — the continuous face of the corpus exact-dedup operator
-    * (e.g. content-hash dedup on a document ingest stream). State is one
-    * entry per distinct key inside the horizon and is evicted by the
-    * watermark, so memory is bounded by (arrival rate × horizon), not by
-    * stream history; on a batch frame the same call is a plain
-    * dropDuplicates and stays oracle-checkable.
-    *
-    * `dropDuplicatesWithinWatermark` (vs plain dropDuplicates on a
-    * stream) is the variant that tolerates late re-arrivals INSIDE the
-    * horizon without keeping state forever.
-    */
-  def dedupStream(events: DataFrame, tsCol: String, keys: Seq[String],
-      watermark: String): DataFrame =
-    if (events.isStreaming)
-      events.withWatermark(tsCol, watermark)
-        .dropDuplicatesWithinWatermark(keys)
-    else events.dropDuplicates(keys)
-
-  /** Stream-stream interval join: match left and right events on `keys`
-    * when the right timestamp falls within `[left.ts - lowerBound,
-    * left.ts + upperBound]`. BOTH sides carry watermarks and the join
-    * condition bounds the time skew, so each side's state store holds only
-    * the watermark+bound horizon — the canonical bounded-state shape for
-    * correlating two live feeds (click/impression, sensor/actuator). On
-    * batch frames the same call degrades to a plain range-condition join
-    * and stays oracle-checkable.
-    */
-  def intervalJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTs: String, rightTs: String, lowerBound: String,
-      upperBound: String, watermark: String,
-      joinType: String = "inner"): DataFrame = {
-    require(Set("inner", "left_outer", "leftouter", "left")
-      .contains(joinType.toLowerCase),
-      s"inner or left_outer only (right/full mirror left), got $joinType")
-    val l = if (left.isStreaming) left.withWatermark(leftTs, watermark)
-      else left
-    val r = if (right.isStreaming) right.withWatermark(rightTs, watermark)
-      else right
-    require(leftTs != rightTs,
-      "left and right time columns must have distinct names")
-    // side-anchored resolution (l(...)/r(...)): bare col(...) would be
-    // AMBIGUOUS_REFERENCE whenever one input also carries a column named
-    // like the other side's timestamp; keyless calls are a pure
-    // time-correlation join on the bound alone
-    val timeCond =
-      r(rightTs) >= l(leftTs) - expr(s"INTERVAL $lowerBound") &&
-        r(rightTs) <= l(leftTs) + expr(s"INTERVAL $upperBound")
-    val cond = keys.map(k => l(k) === r(k)).foldLeft(timeCond)(_ && _)
-    // left_outer on streams: an unmatched left row is held in state and
-    // emitted null-padded only once BOTH watermarks pass its join window
-    // (the engine can't rule out a future match before that) — expect
-    // outer results one watermark-delay late, by design
-    keys.foldLeft(l.join(r, cond, joinType))((d, k) => d.drop(r(k)))
-  }
-
-  /** Streaming OHLC bars: tumbling-window open/high/low/close per key.
-    * Open/close are `min_by`/`max_by` over a composite (time, tiebreak)
-    * struct — pure AGGREGATES, so the same transform runs under a
-    * watermark on a stream (window functions, which the batch
-    * [[graft.engine.Windows.ohlcBars]] uses for its rank determinism,
-    * are not streamable). The struct comparison is lexicographic, so the
-    * tiebreak resolves equal timestamps exactly like the batch face —
-    * the agreement is spec-pinned on a tied fixture. State per
-    * (key, window) is one running bar, evicted by the watermark.
-    */
-  def ohlcStream(events: DataFrame, tsCol: String, windowLen: String,
-      keyCol: String, valueCol: String, tiebreakCol: String,
-      watermark: Option[String] = None): DataFrame = {
-    val src = watermark match {
-      case Some(w) => events.withWatermark(tsCol, w)
-      case None    => events
-    }
-    val ord = struct(col(tsCol), col(tiebreakCol))
-    src.groupBy(col(keyCol), window(col(tsCol), windowLen))
-      .agg(min_by(col(valueCol), ord).as("open"),
-        max(col(valueCol)).as("high"), min(col(valueCol)).as("low"),
-        max_by(col(valueCol), ord).as("close"),
-        count(lit(1)).as("n_events"))
-      .select(col(keyCol), col("window.start").as("bar"), col("open"),
-        col("high"), col("low"), col("close"), col("n_events"))
-  }
-
-  /** Streaming reach: distinct keys per tumbling window — the streaming
-    * face of [[graft.engine.Windows.dailyReach]]'s `n_active` (the
-    * cumulative curve needs history and stays a batch/report concern).
-    * Two watermark-bounded stateful stages: dedup on (key, window-start)
-    * inside the horizon, then a windowed count — state is one entry per
-    * distinct (key, window) in flight, never stream history.
-    */
-  def reachStream(events: DataFrame, tsCol: String, keyCol: String,
-      windowLen: String, watermark: String): DataFrame = {
-    val tagged = events
-      .withColumn("__w", window(col(tsCol), windowLen).getField("start"))
-    val deduped = dedupStream(tagged, tsCol, Seq(keyCol, "__w"), watermark)
-    deduped.groupBy(window(col(tsCol), windowLen))
-      .agg(count(lit(1)).as("n_active"))
-      .select(col("window.start").as("w_start"), col("n_active"))
-  }
-
-  final case class Running(user_id: Long, ts: Timestamp, value: Double,
-      running_value: Double)
-
-  /** Streaming running totals — the continuous face of
-    * [[graft.engine.Windows.runningTotal]] (live ledger balances). State
-    * per key is ONE long (the running scaled-integer total — the same
-    * exactness contract as the batch face: integer accumulation survives
-    * retries bit-identically; a float accumulator would drift). Within a
-    * batch, rows apply in (ts, then arrival) order; emission is
-    * per-event in Append mode. State never expires by design — a ledger
-    * is permanent — so key cardinality bounds memory, not time; callers
-    * with bounded-horizon keys should layer a timeout.
-    */
-  def runningTotals(events: Dataset[Event],
-      scale: Long = 100L): Dataset[Running] = {
-    implicit val outEnc = Encoders.product[Running]
-    implicit val longEnc = Encoders.scalaLong
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, Running](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[Long]) =>
-          var acc = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(_.ts.getTime).map { e =>
-            acc += math.round(e.value * scale)
-            Running(userId, e.ts, e.value, acc.toDouble / scale)
-          }
-          state.update(acc)
-          out.iterator
-      }
-  }
-
-  final case class Upsert(key: Long, ts: Timestamp, op: String,
-      payload: String)
-  final case class Current(key: Long, ts: Timestamp, payload: String,
-      live: Boolean)
-
-  /** Streaming CDC apply — the continuous consumer of
-    * [[graft.engine.Relational.snapshotDiff]]'s I/U/D feed: latest-wins
-    * per key by (ts, arrival), deletes drop state, and every batch emits
-    * each touched key's CURRENT row (Update mode semantics via
-    * flatMapGroups emission). The materialized-view face of the batch
-    * [[graft.engine.Relational.mergeUpsert]]: state is one payload per
-    * LIVE key — deletes reclaim it, so memory tracks the table's live
-    * cardinality, not the feed's history.
-    *
-    * Deletes of a key the stream has previously emitted produce a
-    * TOMBSTONE row (`live = false`, null payload, the delete's ts) —
-    * without it an Append-mode sink materializing current rows would
-    * keep the stale row forever. A delete for a key never seen emits
-    * nothing (the consumer holds no row to retract).
-    */
-  def cdcApply(feed: Dataset[Upsert]): Dataset[Current] = {
-    implicit val outEnc = Encoders.product[Current]
-    implicit val keyEnc = Encoders.scalaLong
-    feed.groupByKey(_.key)
-      .flatMapGroupsWithState[Current, Current](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[Upsert], state: GroupState[Current]) =>
-          val ordered = rows.toSeq.sortBy(_.ts.getTime)
-          var cur = state.getOption
-          var delTs: Timestamp = null
-          ordered.foreach { u =>
-            u.op match {
-              case "D" => cur = None; delTs = u.ts
-              case _   => cur = Some(Current(key, u.ts, u.payload,
-                live = true))
-            }
-          }
-          cur match {
-            case Some(c) => state.update(c); Iterator(c)
-            case None =>
-              if (state.exists) {
-                state.remove()
-                Iterator(Current(key, delTs, null, live = false))
-              } else Iterator.empty
-          }
-      }
-  }
-
-  /** Batch face of [[cdcApply]] for a two-micro-batch replay, exposing
-    * the TOMBSTONE-VISIBLE output shape to the SQL oracle (hash oracles
+  /** Batch face of a streaming CDC apply (latest wins per key, a delete
+    * drops the key's state and retracts a live key with a tombstone) for
+    * a two-micro-batch replay, exposing the TOMBSTONE-VISIBLE output
+    * shape to the SQL oracle (hash oracles
     * cannot replay per-micro-batch state, but they CAN check one batch
     * boundary expressed relationally). The feed is split at `splitTs`
     * into batch 1 (`ts < splitTs`, establishes state) and batch 2
-    * (`ts >= splitTs`); the result is exactly what [[cdcApply]] emits
+    * (`ts >= splitTs`); the result is exactly what such a stream emits
     * for batch 2: for every key batch 2 touches, its current row
     * (latest non-delete, `live = true`) — or, when batch 2 ends in a
     * delete AND batch 1 left the key live, a tombstone (`live = false`,
@@ -287,63 +109,6 @@ object Streaming {
       lastPerKey(normalized.filter(col("ts") >= splitTs)))
   }
 
-  final case class Event(user_id: Long, ts: Timestamp, value: Double)
-  final case class SessionState(start: Long, last: Long, n: Long, sum: Double)
-  final case class Session(user_id: Long, start: Timestamp, end: Timestamp,
-      n_events: Long, sum_value: Double)
-
-  /** Custom-state sessionization via `flatMapGroupsWithState`: per-user
-    * sessions close after `gapMs` of inactivity (processing-time timeout —
-    * works identically on batch and restart because state is checkpointed
-    * by the engine). This is the pattern for state the built-in windows
-    * can't express; state size is O(active users), bounded by the timeout.
-    *
-    * CAUTION: with processing-time timeouts the engine runs state-cleanup
-    * micro-batches on EVERY trigger even with no data, so
-    * `processAllAvailable()` never quiesces under the default
-    * as-fast-as-possible trigger — always set an explicit
-    * `Trigger.ProcessingTime(...)` on the writer and observe the sink
-    * (verified: default trigger spins ~4 cleanup batches/second).
-    */
-  def sessionize(events: Dataset[Event], gapMs: Long): Dataset[Session] = {
-    implicit val sessEnc = Encoders.product[Session]
-    implicit val stateEnc = Encoders.product[SessionState]
-    implicit val longEnc = Encoders.scalaLong
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(Session(userId, new Timestamp(s.start),
-              new Timestamp(s.last), s.n, s.sum))
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var closed = List.empty[Session]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.last <= gapMs =>
-                  cur = Some(SessionState(s.start, t, s.n + 1, s.sum + e.value))
-                case Some(s) =>
-                  closed ::= Session(userId, new Timestamp(s.start),
-                    new Timestamp(s.last), s.n, s.sum)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutDuration(gapMs)
-            }
-            closed.reverseIterator
-          }
-      }
-  }
-
   /** Windowed PSI drift monitor — the streaming face of
     * [[graft.engine.Relational.psiReport]] against a FIXED reference
     * histogram (`refPpm(b)` = the reference's exact-ppm mass of bin `b`,
@@ -391,7 +156,7 @@ object Streaming {
 
   /** Windowed KS drift monitor — the streaming companion of
     * [[psiWindowed]] and the fixed-grid face of
-    * [[graft.engine.Relational.ksReport]]: per event-time window, the
+    * [[graft.engine.Relational.ksReportFromPaired]]: per event-time window, the
     * max absolute gap between the window's empirical CDF and a FIXED
     * reference CDF, both read at `nBins` fixed grid edges
     * (`refCumPpm(b)` = the reference's exact-ppm cumulative mass at
@@ -438,602 +203,4 @@ object Streaming {
         col("d_ppm"), col("ks"))
   }
 
-  final case class KeyedValue(group: String, v: String)
-  final case class SketchUpdate(group: String, occupied: Int,
-      est_distinct: Option[Long])
-
-  /** Streaming linear-counting distinct — the continuous face of
-    * [[graft.engine.Sketches.linearCountDistinct]]: per group the state
-    * is an m-bit occupied-bucket bitmap (`⌈m/8⌉` bytes, FIXED regardless
-    * of how many values stream through — that is the whole point), each
-    * batch ORs its values' buckets in and emits the group's refreshed
-    * `(occupied, est_distinct)`. Buckets come from the same shared
-    * polyhash as the batch face, so after any prefix of the stream the
-    * emitted estimate is bit-identical to the batch operator over the
-    * same rows (spec-pinned), and a saturated sketch emits None rather
-    * than a fabricated number. State never expires (a cardinality
-    * counter is cumulative); group-key cardinality bounds memory.
-    */
-  final case class HllUpdate(group: String, n_zero: Long, est: Double)
-
-  final case class KeyedNum(group: String, x: Long)
-  final case class MomentsState(n: Long, s1: Long, s2: Long, s3: Long,
-    s4: Long, vmin: Long, vmax: Long)
-  final case class MomentsUpdate(group: String, n: Long, s1: Long,
-    s2: Long, s3: Long, s4: Long, vmin: Long, vmax: Long)
-
-  /** Streaming moments sketch — the continuous face of
-    * [[graft.engine.Sketches.momentsSketch]]: per group the state is
-    * the seven power-sum integers (FIXED size however many values
-    * stream through); each batch folds its values in with exact long
-    * arithmetic and emits the refreshed cumulative sketch, so after any
-    * stream prefix the emission equals the batch sketch over the same
-    * rows (spec-pinned, including the union-merge algebra: merging two
-    * groups' states is elementwise sum + min/max). Quantiles come from
-    * [[graft.engine.Sketches.momentsQuantiles]] applied to the
-    * emission downstream — the sketch/estimator split is the whole
-    * point of the moments design. Long sums bound the streaming face to
-    * |x| ≤ ~55k over 2⁶³ mass (vs the batch face's DECIMAL 38) —
-    * ample for metric-grade streams; state never expires, group-key
-    * cardinality bounds memory.
-    */
-  def momentsStream(values: Dataset[KeyedNum]): Dataset[MomentsUpdate] = {
-    implicit val outEnc = Encoders.product[MomentsUpdate]
-    implicit val stEnc = Encoders.product[MomentsState]
-    implicit val keyEnc = Encoders.STRING
-    values.groupByKey(_.group)
-      .flatMapGroupsWithState[MomentsState, MomentsUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (group: String, rows: Iterator[KeyedNum],
-            state: GroupState[MomentsState]) =>
-          var st = state.getOption.getOrElse(
-            MomentsState(0L, 0L, 0L, 0L, 0L, Long.MaxValue, Long.MinValue))
-          rows.foreach { r =>
-            val x = r.x
-            st = MomentsState(st.n + 1, st.s1 + x, st.s2 + x * x,
-              st.s3 + x * x * x, st.s4 + x * x * x * x,
-              math.min(st.vmin, x), math.max(st.vmax, x))
-          }
-          state.update(st)
-          Iterator(MomentsUpdate(group, st.n, st.s1, st.s2, st.s3, st.s4,
-            st.vmin, st.vmax))
-      }
-  }
-
-  /** Streaming HyperLogLog — the continuous face of
-    * [[graft.engine.Sketches.hllRegisters]]/`hllEstimate`: per group
-    * the state is the `m = 2^p` byte registers (FIXED size however many
-    * values stream through), each batch folds its values in with max
-    * and emits the refreshed `(n_zero, est)`. Hash, mix, rank math, the
-    * exact dyadic indicator sum, and HALF_UP 6-dp rounding all mirror
-    * the batch face bit-for-bit, so after any stream prefix the
-    * emission equals `hllEstimate` over the same rows (spec-pinned).
-    * Cross-group (or cross-shard) rollup is elementwise max of the
-    * register state — the merge the batch spec pins. State never
-    * expires; group-key cardinality bounds memory.
-    */
-  def hllStream(values: Dataset[KeyedValue],
-      p: Int = 8): Dataset[HllUpdate] = {
-    require(p >= 4 && p <= 16, "need 4 <= p <= 16")
-    val m = 1 << p
-    val w = 30 - p
-    implicit val outEnc = Encoders.product[HllUpdate]
-    implicit val stEnc = Encoders.BINARY
-    implicit val keyEnc = Encoders.STRING
-    values.groupByKey(_.group)
-      .flatMapGroupsWithState[Array[Byte], HllUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (group: String, rows: Iterator[KeyedValue],
-            state: GroupState[Array[Byte]]) =>
-          val regs = state.getOption.getOrElse(new Array[Byte](m))
-          rows.foreach { r =>
-            if (r.v != null) {
-              val h = (graft.functions.PolyHash.hashString(r.v) *
-                2654435761L) % 1000000007L
-              val b = (h % m).toInt
-              val q = h / m
-              val rho = if (q == 0L) w + 1
-                else w + 1 - (64 - java.lang.Long.numberOfLeadingZeros(q))
-              if (rho > (regs(b) & 0xff)) regs(b) = rho.toByte
-            }
-          }
-          state.update(regs)
-          var s = 0.0; var nz = 0L
-          regs.foreach { r0 =>
-            val reg = r0 & 0xff
-            s += math.pow(2.0, -reg)
-            if (reg == 0) nz += 1
-          }
-          def r6(x: Double): Double = BigDecimal(x)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          val alpha = 0.7213 / (1.0 + 1.079 / m)
-          // the batch face branches on the ROUNDED raw estimate —
-          // mirror it exactly or a knife-edge value flips the branch
-          val raw6 = r6(alpha * m * m / s)
-          val est6 = if (raw6 <= 2.5 * m && nz > 0)
-            r6(m.toDouble * math.log(m.toDouble / nz))
-          else raw6
-          Iterator(HllUpdate(group, nz, est6))
-      }
-  }
-
-  def distinctSketchStream(values: Dataset[KeyedValue],
-      m: Int): Dataset[SketchUpdate] = {
-    require(m >= 2 && m % 8 == 0, "bucket count must be a positive multiple of 8")
-    implicit val outEnc = Encoders.product[SketchUpdate]
-    implicit val stEnc = Encoders.BINARY
-    implicit val keyEnc = Encoders.STRING
-    values.groupByKey(_.group)
-      .flatMapGroupsWithState[Array[Byte], SketchUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (group: String, rows: Iterator[KeyedValue],
-            state: GroupState[Array[Byte]]) =>
-          val bits = state.getOption.getOrElse(new Array[Byte](m / 8))
-          rows.foreach { r =>
-            if (r.v != null) {
-              val b = (graft.functions.PolyHash.hashString(r.v) % m).toInt
-              bits(b >> 3) = (bits(b >> 3) | (1 << (b & 7))).toByte
-            }
-          }
-          state.update(bits)
-          val occ = bits.foldLeft(0)((a, x) =>
-            a + java.lang.Integer.bitCount(x & 0xff))
-          val est = if (occ < m)
-            Some(math.round(m.toDouble * math.log(m.toDouble / (m - occ))))
-          else None
-          Iterator(SketchUpdate(group, occ, est))
-      }
-  }
-
-  final case class FunnelEvent(key: Long, ts: Timestamp, step: String)
-  final case class FunnelAdvance(key: Long, step_idx: Int, ts: Timestamp)
-
-  /** Streaming face of [[graft.engine.Windows.funnelSteps]]: per-entity
-    * funnel progression as a continuous monitor, emitting one
-    * `(key, step_idx, ts)` row the moment a step completes (1-based
-    * step index). State per key is one long per step (the completed
-    * step's micros, or unset) — fixed size, no event history. Events
-    * replay in (ts, step-order) within each batch, and a step `i`
-    * completes only when step `i−1` is done STRICTLY earlier — the
-    * batch operator's greedy-earliest strict-after semantics, so over
-    * any in-order prefix the advances equal the batch `t1..tk` non-null
-    * set however the rows split into micro-batches (spec-pinned, the
-    * cusumStream discipline). Late (out-of-ts-order) arrivals follow
-    * the same in-order contract as every stateful face here.
-    */
-  def funnelStream(events: Dataset[FunnelEvent],
-      steps: Seq[String]): Dataset[FunnelAdvance] = {
-    require(steps.nonEmpty, "need at least one funnel step")
-    implicit val outEnc = Encoders.product[FunnelAdvance]
-    implicit val stEnc = Encoders.kryo[Array[Long]]
-    implicit val keyEnc = Encoders.scalaLong
-    val stepIdx = steps.zipWithIndex.toMap
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[Array[Long], FunnelAdvance](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[FunnelEvent],
-            state: GroupState[Array[Long]]) =>
-          val done = state.getOption.getOrElse(
-            Array.fill(steps.size)(Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer[FunnelAdvance]()
-          // micros, not getTime millis: the strict-after comparison must
-          // see the same precision as the batch operator's timestamps
-          def micros(ts: Timestamp): Long =
-            ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-          rows.toSeq
-            .filter(e => e.ts != null && stepIdx.contains(e.step))
-            .sortBy(e => (micros(e.ts), stepIdx(e.step)))
-            .foreach { e =>
-              val i = stepIdx(e.step)
-              val t = micros(e.ts)
-              if (done(i) == Long.MinValue &&
-                  (i == 0 || (done(i - 1) != Long.MinValue &&
-                    done(i - 1) < t))) {
-                done(i) = t
-                out += FunnelAdvance(key, i + 1, e.ts)
-              }
-            }
-          state.update(done)
-          out.iterator
-      }
-  }
-
-  final case class KeyedDoc(shard: String, key: String, payload: String)
-
-  /** Bounded-state streaming dedup via a Bloom filter — the 100 TB
-    * answer to [[dedupStream]]'s honest limitation: exact streaming
-    * dedup state grows with DISTINCT KEYS FOREVER (a watermark only
-    * bounds it if duplicates arrive close together), while this keeps
-    * `⌈mBits/8⌉` bytes per shard no matter how many keys stream
-    * through. The trade: a false positive DROPS a genuinely new
-    * document (never the reverse — no duplicate ever passes), at a
-    * rate set by (d, mBits) vs key cardinality — acceptable for corpus
-    * curation, where losing ~0.1% of docs is cheaper than petabyte
-    * state, and measurable up front with the batch
-    * [[graft.engine.Sketches.bloomAudit]] on a sample. Buckets use the
-    * same `row#key` shared-polyhash salt, so the batch audit's fp rate
-    * IS this operator's drop rate at the same sizing.
-    */
-  def bloomDedupStream(docs: Dataset[KeyedDoc], d: Int,
-      mBits: Int): Dataset[KeyedDoc] = {
-    require(d >= 1 && mBits >= 8 && mBits % 8 == 0,
-      "need d >= 1 and mBits a positive multiple of 8")
-    implicit val outEnc = Encoders.product[KeyedDoc]
-    implicit val stEnc = Encoders.BINARY
-    implicit val keyEnc = Encoders.STRING
-    docs.groupByKey(_.shard)
-      .flatMapGroupsWithState[Array[Byte], KeyedDoc](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (shard: String, rows: Iterator[KeyedDoc],
-            state: GroupState[Array[Byte]]) =>
-          val bits = state.getOption.getOrElse(new Array[Byte](mBits / 8))
-          val out = scala.collection.mutable.ArrayBuffer[KeyedDoc]()
-          rows.foreach { r =>
-            if (r.key != null) {
-              val bs = Array.tabulate(d)(i =>
-                (graft.functions.PolyHash.hashString(s"$i#${r.key}")
-                  % mBits).toInt)
-              val seen = bs.forall(b => (bits(b >> 3) & (1 << (b & 7))) != 0)
-              if (!seen) {
-                bs.foreach(b =>
-                  bits(b >> 3) = (bits(b >> 3) | (1 << (b & 7))).toByte)
-                out += r
-              }
-            }
-          }
-          state.update(bits)
-          out.iterator
-      }
-  }
-
-  final case class CmsPoint(group: String, key: String)
-  final case class CmsEstimate(group: String, key: String, est: Long)
-
-  /** Streaming face of [[graft.engine.Sketches.cmsTopK]]: count-min
-    * heavy-hitter estimates as a continuous monitor. State per group is
-    * the d×w bucket-total array (FIXED size regardless of key
-    * cardinality — the sketch's point); each batch adds its keys under
-    * the same `row#key` shared-polyhash salt as the batch face and
-    * emits the refreshed estimate for every key SEEN IN THAT BATCH
-    * (emission is batch-local so output stays Append-legal; a consumer
-    * keeps its own top-k, which is candidate-tracking — the standard
-    * CMS deployment split). After any stream prefix the emitted
-    * estimate for a key is BIT-IDENTICAL to the batch operator's `est`
-    * over the same rows (the distinctSketchStream discipline,
-    * spec-pinned). State never expires: a frequency sketch is
-    * cumulative; group-key cardinality bounds memory.
-    */
-  final case class KmvUpdate(group: String, n_kept: Int, kth_min: Long,
-    est_distinct: Double)
-
-  /** Streaming KMV/theta sketch — the continuous face of
-    * [[graft.engine.Sketches.kmvSketch]]/`kmvDistinct`: per group the
-    * state is the ≤ k smallest distinct mixed hashes (≤ 8k bytes,
-    * FIXED however many values stream through); each batch folds its
-    * hashes in and emits the refreshed `(n_kept, kth_min,
-    * est_distinct)`. Hash, mix, the saturated `(k−1)·P/h_k` estimator,
-    * the unsaturated exact path, and HALF_UP 6-dp rounding mirror the
-    * batch face bit-for-bit (spec-pinned on every prefix). Cross-shard
-    * rollup = k smallest of the concatenated states — the merge the
-    * batch spec pins. State never expires; group-key cardinality
-    * bounds memory.
-    */
-  def kmvStream(values: Dataset[KeyedValue],
-      k: Int = 64): Dataset[KmvUpdate] = {
-    require(k >= 2, "need k >= 2")
-    implicit val outEnc = Encoders.product[KmvUpdate]
-    implicit val stEnc = Encoders.BINARY
-    implicit val keyEnc = Encoders.STRING
-    values.groupByKey(_.group)
-      .flatMapGroupsWithState[Array[Byte], KmvUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (group: String, rows: Iterator[KeyedValue],
-            state: GroupState[Array[Byte]]) =>
-          val prev = state.getOption.map { bytes =>
-            val arr = new Array[Long](bytes.length / 8)
-            java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(arr)
-            arr.toSeq
-          }.getOrElse(Seq.empty[Long])
-          val hs = scala.collection.mutable.SortedSet[Long](prev: _*)
-          rows.foreach { r =>
-            if (r.v != null) {
-              hs += graft.functions.PolyHash.hashString(r.v) *
-                2654435761L % 1000000007L
-              if (hs.size > k) hs -= hs.last
-            }
-          }
-          val kept = hs.toArray
-          val bytes = new Array[Byte](kept.length * 8)
-          java.nio.ByteBuffer.wrap(bytes).asLongBuffer().put(kept)
-          state.update(bytes)
-          def r6(x: Double): Double = BigDecimal(x)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          val est =
-            if (kept.length < k) kept.length.toDouble
-            else (k - 1).toDouble * 1000000007L / kept.last.toDouble
-          Iterator(KmvUpdate(group, kept.length,
-            if (kept.isEmpty) 0L else kept.last, r6(est)))
-      }
-  }
-
-  def cmsStream(points: Dataset[CmsPoint], d: Int,
-      w: Int): Dataset[CmsEstimate] = {
-    require(d >= 1 && w >= 2, "need d >= 1, w >= 2")
-    implicit val outEnc = Encoders.product[CmsEstimate]
-    implicit val stEnc = Encoders.BINARY
-    implicit val keyEnc = Encoders.STRING
-    def buckets(key: String): Array[Int] =
-      Array.tabulate(d)(i =>
-        (graft.functions.PolyHash.hashString(s"$i#$key") % w).toInt)
-    points.groupByKey(_.group)
-      .flatMapGroupsWithState[Array[Byte], CmsEstimate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (group: String, rows: Iterator[CmsPoint],
-            state: GroupState[Array[Byte]]) =>
-          // longs packed into bytes: BINARY state keeps the encoder
-          // schema-free like distinctSketchStream's bitmap
-          val bytes = state.getOption.getOrElse(new Array[Byte](d * w * 8))
-          val buf = java.nio.ByteBuffer.wrap(bytes)
-          val tot = new Array[Long](d * w)
-          buf.asLongBuffer().get(tot)
-          val seen = scala.collection.mutable.LinkedHashSet[String]()
-          rows.foreach { r =>
-            if (r.key != null) {
-              seen += r.key
-              val bs = buckets(r.key)
-              var i = 0
-              while (i < d) { tot(i * w + bs(i)) += 1; i += 1 }
-            }
-          }
-          buf.rewind(); buf.asLongBuffer().put(tot)
-          state.update(bytes)
-          seen.iterator.map { k =>
-            val bs = buckets(k)
-            var est = Long.MaxValue
-            var i = 0
-            while (i < d) {
-              est = math.min(est, tot(i * w + bs(i))); i += 1
-            }
-            CmsEstimate(group, k, est)
-          }
-      }
-  }
-
-  final case class CusumPoint(key: Long, ts: Timestamp, v: Long)
-  final case class CusumState(rn: Long, p: Long, minA: Long, maxB: Long)
-  final case class CusumUpdate(key: Long, ts: Timestamp, v: Long,
-      run_sum: Long, cusum_pos: Long, cusum_neg: Long,
-      alarm_pos: Boolean, alarm_neg: Boolean)
-
-  /** Streaming face of [[graft.engine.Windows.cusum]]: two-sided CUSUM
-    * drift alarms as a continuous per-key monitor. The batch operator's
-    * closed window form (prefix sum minus running extrema) collapses to
-    * FOUR longs of state per key — `(rn, Σ(v−target), min a, max b)` —
-    * updated in arrival order within each micro-batch (rows sorted by
-    * (ts, key) like every stateful face here), so the emitted
-    * `cusum_pos/neg` and alarms are BIT-IDENTICAL to the batch operator
-    * over any prefix of the stream however the rows are split into
-    * batches (the distinctSketchStream discipline, spec-pinned). This is
-    * the recursion `S⁺ₜ = max(0, S⁺ₜ₋₁ + (vₜ−target) − slack)` in its
-    * prefix-sum form: state never grows with history, and a restart
-    * resumes exactly from the checkpointed four longs.
-    */
-  def cusumStream(points: Dataset[CusumPoint], target: Long, slack: Long,
-      threshold: Long): Dataset[CusumUpdate] = {
-    require(slack >= 0 && threshold > 0, "slack >= 0 and threshold > 0")
-    implicit val outEnc = Encoders.product[CusumUpdate]
-    implicit val stEnc = Encoders.product[CusumState]
-    implicit val keyEnc = Encoders.scalaLong
-    points.groupByKey(_.key)
-      .flatMapGroupsWithState[CusumState, CusumUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[CusumPoint],
-            state: GroupState[CusumState]) =>
-          var st = state.getOption.getOrElse(
-            CusumState(0L, 0L, Long.MaxValue, Long.MinValue))
-          val out = rows.toSeq.sortBy(_.ts.getTime).map { r =>
-            val rn = st.rn + 1
-            val p = st.p + (r.v - target)
-            val a = p - slack * rn
-            val b = p + slack * rn
-            val minA = math.min(st.minA, a)
-            val maxB = math.max(st.maxB, b)
-            st = CusumState(rn, p, minA, maxB)
-            val pos = a - math.min(0L, minA)
-            val neg = math.max(0L, maxB) - b
-            CusumUpdate(key, r.ts, r.v, p, pos, neg,
-              pos > threshold, neg > threshold)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  final case class LogHistUpdate(group: String, e: Int, sub: Int,
-    pw: Long, cnt: Long)
-
-  /** Streaming log-bucket histogram — the continuous face of
-    * [[graft.engine.Sketches.logHistogramSketch]]: per group the state
-    * is the bucket→count map (≤ s·64 + 1 entries, FIXED however many
-    * values stream through); each batch folds its values in with the
-    * same exact-integer bucket mapping (`e` from bit length, `sub` from
-    * one multiply-divide, sentinel (−1, 0) for non-positives) and emits
-    * the group's refreshed full lattice, so after any stream prefix the
-    * emission equals the batch sketch over the same rows (spec-pinned).
-    * Cross-shard rollup = per-bucket count sum — the batch merge
-    * algebra. Quantile reads go through
-    * [[graft.engine.Sketches.logHistogramQuantiles]] downstream; state
-    * never expires (a histogram is cumulative), group-key cardinality
-    * bounds memory.
-    */
-  def logHistStream(values: Dataset[KeyedNum],
-      s: Int = 8): Dataset[LogHistUpdate] = {
-    require(s >= 1 && s <= 4096, "need 1 <= s <= 4096")
-    implicit val outEnc = Encoders.product[LogHistUpdate]
-    implicit val stEnc = Encoders.kryo[Map[Int, Long]]
-    implicit val keyEnc = Encoders.STRING
-    val sub = s
-    values.groupByKey(_.group)
-      .flatMapGroupsWithState[Map[Int, Long], LogHistUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (group: String, rows: Iterator[KeyedNum],
-            state: GroupState[Map[Int, Long]]) =>
-          var st = state.getOption.getOrElse(Map.empty[Int, Long])
-          rows.foreach { r =>
-            val key =
-              if (r.x < 1L) -1
-              else {
-                val e = 63 - java.lang.Long.numberOfLeadingZeros(r.x)
-                val pw = 1L << e
-                e * sub + (((r.x - pw) * sub) / pw).toInt
-              }
-            st = st.updated(key, st.getOrElse(key, 0L) + 1L)
-          }
-          state.update(st)
-          st.toSeq.sortBy(_._1).iterator.map { case (key, cnt) =>
-            if (key < 0) LogHistUpdate(group, -1, 0, 0L, cnt)
-            else LogHistUpdate(group, key / sub, key % sub,
-              1L << (key / sub), cnt)
-          }
-      }
-  }
-
-  final case class AbPoint(group: String, x: Double, flag: Boolean)
-  final case class WelchState(na: Long, nb: Long, sa: Long, sb: Long,
-    ssa: Long, ssb: Long)
-  final case class WelchUpdate(group: String, na: Long, nb: Long,
-    mean_a: Option[Double], mean_b: Option[Double],
-    t_stat: Option[Double], df_welch: Option[Double])
-
-  /** Streaming Welch A/B monitor — the continuous face of
-    * [[graft.engine.Relational.welchTTest]]: per group the state is the
-    * six sufficient-stat accumulators (FIXED size however many points
-    * stream through), kept as exact micro-unit (1e-6-scaled) longs —
-    * the same lattice the batch face's DECIMAL(18,6) cast quantizes
-    * to — so after any stream prefix the emitted `t`/`df` equal the
-    * batch operator over the same rows (spec-pinned; the float
-    * formulas are evaluated in the [[graft.engine.Relational.welchDerivedSql]]
-    * association order). Emits nulls until both arms have ≥ 2 points.
-    * The always-on A/B significance readout, in 6 longs per group;
-    * micro-unit squares bound |x| to ~3e3 over 2⁶³ mass — metric-grade
-    * streams.
-    */
-  def welchStream(points: Dataset[AbPoint]): Dataset[WelchUpdate] = {
-    implicit val outEnc = Encoders.product[WelchUpdate]
-    implicit val stEnc = Encoders.product[WelchState]
-    implicit val keyEnc = Encoders.STRING
-    points.groupByKey(_.group)
-      .flatMapGroupsWithState[WelchState, WelchUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (group: String, rows: Iterator[AbPoint],
-            state: GroupState[WelchState]) =>
-          var st = state.getOption.getOrElse(
-            WelchState(0L, 0L, 0L, 0L, 0L, 0L))
-          rows.foreach { r =>
-            // quantize exactly like the batch DECIMAL(18,6) cast
-            val xi = BigDecimal(r.x)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP)
-              .*(BigDecimal(1000000L)).toLongExact
-            if (r.flag)
-              st = st.copy(na = st.na + 1, sa = st.sa + xi,
-                ssa = st.ssa + xi * xi)
-            else
-              st = st.copy(nb = st.nb + 1, sb = st.sb + xi,
-                ssb = st.ssb + xi * xi)
-          }
-          state.update(st)
-          def r6(x: Double): Double = BigDecimal(x)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          val out =
-            if (st.na >= 2 && st.nb >= 2) {
-              // evaluate welchDerivedSql's association order exactly,
-              // including its floor-split decimal->double conversion
-              // (Relational.decToDoubleSql): integer floor + exact
-              // sub-2^53 fraction, each singly rounded
-              def conv(v: Long, scale: Long): Double =
-                Math.floorDiv(v, scale).toDouble +
-                  (Math.floorMod(v, scale) * (1000000000000L / scale))
-                    .toDouble / 1e12
-              val sa = conv(st.sa, 1000000L)
-              val sb = conv(st.sb, 1000000L)
-              val ssa = conv(st.ssa, 1000000000000L)
-              val ssb = conv(st.ssb, 1000000000000L)
-              val m1 = sa / st.na; val m2 = sb / st.nb
-              val v1 = (ssa - sa * sa / st.na) / (st.na - 1)
-              val v2 = (ssb - sb * sb / st.nb) / (st.nb - 1)
-              val se2 = v1 / st.na + v2 / st.nb
-              val t = if (se2 > 0) (m1 - m2) / math.sqrt(se2) else 0.0
-              val dfW = if (se2 > 0) se2 * se2 /
-                ((v1 / st.na) * (v1 / st.na) / (st.na - 1) +
-                  (v2 / st.nb) * (v2 / st.nb) / (st.nb - 1)) else 0.0
-              WelchUpdate(group, st.na, st.nb, Some(r6(m1)), Some(r6(m2)),
-                Some(r6(t)), Some(r6(dfW)))
-            } else WelchUpdate(group, st.na, st.nb, None, None, None,
-              None)
-          Iterator(out)
-      }
-  }
-
-  final case class AmsUpdate(group: String, f2_est: Long)
-
-  /** Streaming AMS F₂ monitor — the continuous face of
-    * [[graft.engine.Sketches.amsF2]]: per group the state is the `d·g`
-    * tug-of-war counters (FIXED however many keys stream through —
-    * this sketch exists BECAUSE exact F₂ needs unbounded per-key
-    * state); each occurrence adds its 4-wise sign (the same degree-3
-    * polynomial in the mixed key hash, all long arithmetic) to every
-    * estimator, and each batch emits the refreshed median-of-means
-    * estimate. After any stream prefix the emission equals the batch
-    * face's `f2_est` over the same rows (spec-pinned; the batch
-    * report's exact-F₂ column is deliberately absent here — that
-    * column is the unbounded half). Self-join pricing that updates
-    * per micro-batch, in `d·g` longs per group.
-    */
-  def amsStream(values: Dataset[KeyedValue], d: Int = 5,
-      g: Int = 16): Dataset[AmsUpdate] = {
-    require(d >= 1 && d % 2 == 1 && g >= 1, "need odd d >= 1, g >= 1")
-    implicit val outEnc = Encoders.product[AmsUpdate]
-    implicit val stEnc = Encoders.kryo[Array[Long]]
-    implicit val keyEnc = Encoders.STRING
-    val P = 1000000007L
-    val K = 2654435761L
-    val nEst = d * g
-    val coefs = Array.tabulate(nEst, 4) { (j, i) =>
-      graft.functions.PolyHash.hashString(s"a$i#$j") * K % P
-    }
-    values.groupByKey(_.group)
-      .flatMapGroupsWithState[Array[Long], AmsUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (group: String, rows: Iterator[KeyedValue],
-            state: GroupState[Array[Long]]) =>
-          val z = state.getOption.getOrElse(new Array[Long](nEst))
-          rows.foreach { r =>
-            if (r.v != null) {
-              val x = graft.functions.PolyHash.hashString(r.v) * K % P
-              val x2 = x * x % P
-              val x3 = x2 * x % P
-              var j = 0
-              while (j < nEst) {
-                val c = coefs(j)
-                val poly = (c(0) + c(1) * x % P + c(2) * x2 % P +
-                  c(3) * x3 % P) % P
-                z(j) += poly % 2L * 2L - 1L
-                j += 1
-              }
-            }
-          }
-          state.update(z)
-          val means = Array.tabulate(d) { grp =>
-            var acc = 0L
-            var j = grp * g
-            while (j < (grp + 1) * g) { acc += z(j) * z(j); j += 1 }
-            acc / g
-          }
-          // median of group means, ties toward the lower group index —
-          // the batch face's (gm, grp) ordering
-          val est = means.zipWithIndex.sortBy(p => (p._1, p._2))
-            .apply((d - 1) / 2)._1
-          Iterator(AmsUpdate(group, est))
-      }
-  }
 }

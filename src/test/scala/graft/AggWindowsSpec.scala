@@ -194,7 +194,7 @@ class AggWindowsSpec extends SparkSpec {
   test("resampleWithInterpolation: dense grid, hourly means, gap blend") {
     import spark.implicits._
     import java.sql.Timestamp
-    def t(h: Int, m: Int = 0) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
+    def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
     val df = Seq(
       ("u", t(1, 10), 10.0), ("u", t(1, 50), 20.0), // hour 1 mean 15
       ("u", t(4, 0), 45.0))                         // hours 2,3 are holes

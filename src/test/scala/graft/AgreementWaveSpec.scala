@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.llm.Eval
 
 /** Hand-value pins for the q377–q380 agreement wave: Fleiss' kappa,

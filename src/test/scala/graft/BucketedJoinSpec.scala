@@ -1,7 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.engine.Sinks
 
 /** Co-located joins on bucketed tables: the SCALE.md claim that bucketing
   * both sides on the join key removes the shuffle entirely — asserted
@@ -21,14 +21,25 @@ class BucketedJoinSpec extends SparkSpec {
       }
     }
 
+  /** Bucketed parquet table write: both sides bucketed into the same `n`
+    * on the same keys satisfy each other's hash-partitioning requirement.
+    * Bucketing requires the table catalog, hence `saveAsTable`.
+    */
+  private def writeBucketed(df: DataFrame, table: String,
+      bucketCols: Seq[String], n: Int): Unit =
+    df.write.mode("overwrite").format("parquet")
+      .bucketBy(n, bucketCols.head, bucketCols.tail: _*)
+      .sortBy(bucketCols.head, bucketCols.tail: _*)
+      .saveAsTable(table)
+
   test("join of two same-bucketed tables runs with zero Exchange") {
     val ev = Queries.T(spark, sf001, "events")
     // saveAsTable refuses a leftover location even in overwrite mode when
     // the catalog entry is gone (fresh session) — clean both.
     dropBucketTables("b_fact", "b_dim")
-    Sinks.writeBucketed(ev.select(col("user_id"), col("value")),
+    writeBucketed(ev.select(col("user_id"), col("value")),
       "b_fact", Seq("user_id"), 8)
-    Sinks.writeBucketed(
+    writeBucketed(
       ev.groupBy(col("user_id")).agg(count(lit(1)).as("n")),
       "b_dim", Seq("user_id"), 8)
     val joined = spark.table("b_fact")
@@ -51,10 +62,10 @@ class BucketedJoinSpec extends SparkSpec {
     dropBucketTables("b_station", "b_era5")
     val hours = ev.select(date_trunc("hour", col("ts")).as("valid_time"),
       col("value"))
-    Sinks.writeBucketed(
+    writeBucketed(
       hours.groupBy(col("valid_time")).agg(avg(col("value")).as("obs")),
       "b_station", Seq("valid_time"), 8)
-    Sinks.writeBucketed(
+    writeBucketed(
       hours.groupBy(col("valid_time")).agg(max(col("value")).as("t2m")),
       "b_era5", Seq("valid_time"), 8)
     val aligned = graft.engine.Joins.gapfillAlign(

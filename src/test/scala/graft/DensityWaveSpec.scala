@@ -1,13 +1,25 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import graft.llm.Density
 
 /** Hand-value pins for the q348-q349 density wave: grid-DBSCAN core/
-  * border/noise roles and component cluster labels on the micro lattice.
+  * border/noise roles and component cluster labels on the micro lattice,
+  * through the faces those queries call (labelings over a pre-built
+  * eps-neighbor frame).
   */
 class DensityWaveSpec extends SparkSpec {
   import spark.implicits._
+
+  private def nbrs(p: DataFrame, eps: Long) =
+    Density.epsNeighborPairs(p, "id", "x", "y", eps)
+
+  private def dbscanCore(p: DataFrame, eps: Long, minPts: Int) =
+    Density.dbscanCoreFromPairs(p, "id", nbrs(p, eps), minPts)
+
+  private def dbscanClusters(p: DataFrame, eps: Long, minPts: Int) =
+    Density.dbscanClustersFromPairsGeo(p, "id", "x", "y", eps, nbrs(p, eps),
+      minPts)
 
   // two dense blobs 100 apart internally, far from each other, plus one
   // straggler within eps of blob A's rim and one isolated point;
@@ -37,7 +49,7 @@ class DensityWaveSpec extends SparkSpec {
   }
 
   test("dbscanCore: roles core/border/noise with n_eps counting self") {
-    val r = Density.dbscanCore(pts, "id", "x", "y", 300L, 3)
+    val r = dbscanCore(pts, 300L, 3)
       .as[(Long, Long, String)].collect()
       .map(t => t._1 -> ((t._2, t._3))).toMap
     assert(r(1L) == ((3L, "core")) && r(3L) == ((3L, "core")))
@@ -50,7 +62,7 @@ class DensityWaveSpec extends SparkSpec {
 
   test("dbscanClusters: min-id component labels, border attaches to " +
       "smallest adjacent core, noise cluster is null") {
-    val r = Density.dbscanClusters(pts, "id", "x", "y", 300L, 3)
+    val r = dbscanClusters(pts, 300L, 3)
       .collect().map(x => x.getLong(0) ->
         ((x.getString(1), if (x.isNullAt(2)) -1L else x.getLong(2))))
       .toMap
@@ -71,7 +83,7 @@ class DensityWaveSpec extends SparkSpec {
       (10L, 1000L, 0L), (11L, 1000L, 0L), (12L, 1000L, 0L), // cluster 10
       (20L, 500L, 0L)                                   // bridge, d=500
     ).toDF("id", "x", "y")
-    val r = Density.dbscanClusters(g, "id", "x", "y", 500L, 3)
+    val r = dbscanClusters(g, 500L, 3)
       .collect().map(x => x.getLong(0) ->
         ((x.getString(1), if (x.isNullAt(2)) -1L else x.getLong(2))))
       .toMap
@@ -88,7 +100,7 @@ class DensityWaveSpec extends SparkSpec {
       (30L, 5000L, 5000L),                              // isolated core
       (31L, 5250L, 5000L), (32L, 4750L, 5000L)          // its borders
     ).toDF("id", "x", "y")
-    val r2 = Density.dbscanClusters(g2, "id", "x", "y", 300L, 3)
+    val r2 = dbscanClusters(g2, 300L, 3)
       .collect().map(x => x.getLong(0) ->
         ((x.getString(1), if (x.isNullAt(2)) -1L else x.getLong(2))))
       .toMap

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.engine.Relational
 
 /** Hand-value pins for the q417–q420 wave: Chatterjee's ξ (monotone

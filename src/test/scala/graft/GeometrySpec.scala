@@ -61,8 +61,8 @@ class GeometrySpec extends AnyFunSuite {
     import sp.implicits._
     import org.apache.spark.sql.functions._
     // L-shape: unit squares minus the top-right quadrant notch
-    val xs = array(Seq(0.0, 8.0, 8.0, 4.0, 4.0, 0.0).map(lit(_)): _*)
-    val ys = array(Seq(0.0, 0.0, 4.0, 4.0, 8.0, 8.0).map(lit(_)): _*)
+    val xs = Seq(0.0, 8.0, 8.0, 4.0, 4.0, 0.0)
+    val ys = Seq(0.0, 0.0, 4.0, 4.0, 8.0, 8.0)
     val pts = Seq((2.0, 2.0, true),   // lower arm
       (6.0, 2.0, true),               // right arm
       (2.0, 6.0, true),               // upper arm
@@ -70,27 +70,12 @@ class GeometrySpec extends AnyFunSuite {
       (9.0, 1.0, false), (-1.0, 4.0, false)) // outside bbox
       .toDF("px", "py", "want")
     val out = pts.select(col("want"),
-      Geometry.pointInPolygon(col("px"), col("py"), xs, ys).as("got"),
-      Geometry.pointInPolygonLiteral(col("px"), col("py"),
-        Seq(0.0, 8.0, 8.0, 4.0, 4.0, 0.0),
-        Seq(0.0, 0.0, 4.0, 4.0, 8.0, 8.0)).as("got_lit"))
+      Geometry.pointInPolygonLiteral(col("px"), col("py"), xs, ys).as("got"))
       .collect()
     out.foreach(r => assert(r.getBoolean(0) == r.getBoolean(1), r))
-    // the unrolled literal form is the same predicate
-    out.foreach(r => assert(r.getBoolean(1) == r.getBoolean(2), r))
-  }
-
-  test("pointInPolygon: degenerate rings (<3 vertices) are false, not null") {
-    val sp = SparkSpec.spark
-    import org.apache.spark.sql.functions._
-    val out = sp.range(1).select(
-      Geometry.pointInPolygon(lit(1.0), lit(1.0),
-        array(), array()).as("empty"),
-      Geometry.pointInPolygon(lit(1.0), lit(1.0),
-        array(lit(0.0), lit(2.0)), array(lit(0.0), lit(2.0))).as("segment"))
-      .head()
-    assert(!out.isNullAt(0) && !out.getBoolean(0))
-    assert(!out.isNullAt(1) && !out.getBoolean(1))
+    // a ring of fewer than 3 vertices encloses nothing: rejected up front
+    intercept[IllegalArgumentException](Geometry.pointInPolygonLiteral(
+      lit(1.0), lit(1.0), Seq(0.0, 2.0), Seq(0.0, 2.0)))
   }
 
   test("haversineKm: quarter-meridian and zero-distance goldens") {

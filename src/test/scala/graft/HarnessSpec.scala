@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Query selection of the harness mains ([[Harness.select]]). It needs no
-  * session, so none is built here.
+/** Query selection of the harness mains ([[Harness.select]]) and their
+  * argument checks. It needs no session, so none is built here.
   */
 class HarnessSpec extends AnyFunSuite {
 
@@ -31,5 +31,14 @@ class HarnessSpec extends AnyFunSuite {
   test("several prefixes select in registry order, not argument order") {
     val picked = Harness.select(Seq("q382", "q381"))
     assert(picked == registry.filter(Set("q381_closeness", "q382_harmonic")))
+  }
+
+  test("Verify with the wrong argument count fails with its usage line") {
+    for (args <- Seq(Array.empty[String], Array("sf"),
+        Array("sf", "out", "q1", "extra"))) {
+      val e = intercept[IllegalArgumentException](Verify.main(args))
+      assert(e.getMessage.endsWith(
+        "usage: Verify <sfDir> <outDir> [names-csv]"), args.mkString(" "))
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.engine.Layout
 
 /** Hand-value pins for the q364-q365 wave: Hilbert curve key, skip-gram

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.engine.Relational
 
 /** Hand-value pins for the q393–q396 k-sample nonparametrics wave:

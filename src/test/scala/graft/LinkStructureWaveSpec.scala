@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.engine.Graph
 
 /** Hand-value pins for the q346-q347 wave: resource-allocation link

@@ -20,6 +20,14 @@ class LlmSpec extends SparkSpec {
       array_min(transform(hs, h => (h * a + b) % Dedup.P))
     }: _*)
 
+  private def slowTopNgramFraction(grams: org.apache.spark.sql.Column) = {
+    val counts = transform(array_distinct(grams),
+      g => size(filter(grams, x => x === g)))
+    when(size(grams) > 0,
+      array_max(counts).cast("double") / size(grams).cast("double"))
+      .otherwise(lit(0d))
+  }
+
   private def slowSimhash(hs: org.apache.spark.sql.Column, bits: Int) =
     (0 until bits).map { i =>
       val setCount = aggregate(hs, lit(0L),
@@ -107,7 +115,7 @@ class LlmSpec extends SparkSpec {
           size(array_union(col("shs"), col("shs2"))).cast("double"))
         .otherwise(lit(0d)).as("s_jc"),
       Text.topNgramFractionFromTokens(col("toks"), 2).as("f_tn"),
-      Text.topNgramFractionFromGrams(Text.ngrams(col("toks"), 2)).as("s_tn"),
+      slowTopNgramFraction(Text.ngrams(col("toks"), 2)).as("s_tn"),
       ModFilterSorted.modFilterSorted(col("shs"), 8).as("f_mf"),
       array_sort(filter(col("shs"), h => h % 8 === 0)).as("s_mf"),
       TokenNgrams.tokenNgrams(col("text"), 2).as("f_ng"),
@@ -331,7 +339,7 @@ class LlmSpec extends SparkSpec {
     val toks = llm.Text.tokens(col("text"))
     val out = df.select(
       llm.Text.dupTokenFraction(toks).as("d"),
-      llm.Text.topNgramFraction(col("text"), 2).as("t")).collect()
+      llm.Text.topNgramFractionFromTokens(toks, 2).as("t")).collect()
     assert(out(0).getDouble(0) == 0.0 && out(0).getDouble(1) == 1.0 / 3)
     assert(out(1).getDouble(0) == 0.75 && out(1).getDouble(1) == 1.0)
     assert(out(2).getDouble(0) == 1 - 2.0 / 5 && out(2).getDouble(1) == 0.5)
@@ -368,8 +376,9 @@ class LlmSpec extends SparkSpec {
       "no punct at all",
       "\"Quoted line stays here.\"",
       "").toDF("text")
-    val out = df.select(llm.Text.lineStats(col("text")).map {
-      case (n, c) => c.as(n) }: _*).collect()
+    val out = df.select(llm.Text.lineStatsFromKept(split(col("text"), "\n"),
+      llm.Text.keptLines(col("text"))).map { case (n, c) => c.as(n) }: _*)
+      .collect()
     // doc 0: 5 lines; 'nav crumb' (no punct) and 'Ok.' (1 word) drop
     assert(out(0).getInt(0) == 5 && out(0).getInt(1) == 3)
     assert(out(0).getString(2) ==
@@ -475,7 +484,9 @@ class LlmSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, "spark scale data"), (2L, "spark scale data"),
       (3L, "entirely different words here")).toDF("id", "text")
-      .select(col("id"), Dedup.simhash(col("text"), 16).as("sh"))
+      .select(col("id"),
+        Dedup.simhashFromHashes(Dedup.tokenHashesPoly(col("text")), 16)
+          .as("sh"))
     val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m(1L) == m(2L))
     assert(java.lang.Long.bitCount(m(1L) ^ m(3L)) > 0)
@@ -525,7 +536,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("native DotProduct == HOF aggregate/zip_with fold, bit-exact") {
-    import spark.implicits._
     val hof = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
         lit(0d), (acc, v) => acc + v)
@@ -1034,7 +1044,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("prefixFilterCandidates: exact — equals brute-force pairs at t") {
-    import spark.implicits._
     import graft.llm.Dedup
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
       .select(col("doc_id"), col("text")).limit(120)
@@ -1056,7 +1065,6 @@ class LlmSpec extends SparkSpec {
 
   test("prefixFilterCandidatesCapped: per-doc strongest partners, " +
       "bounded at cap, subset of the exact face, WindowGroupLimit plan") {
-    import spark.implicits._
     import graft.llm.Dedup
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
       .select(col("doc_id"), col("text")).limit(120)
@@ -1082,7 +1090,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("annMultiProbeTopK: 0-flip equals annTopK; 1-flip widens candidates") {
-    import spark.implicits._
     import graft.llm.Similarity
     val emb = spark.read.parquet(s"$sf001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 8)

@@ -83,7 +83,6 @@ class PushdownSpec extends SparkSpec {
 
   test("NanosRangePushdown prunes row groups — measured at the scan") {
     val sp = SparkSpec.spark
-    import sp.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.execution.FileSourceScanExec
     // 200k ascending ns timestamps in many small row groups, so the

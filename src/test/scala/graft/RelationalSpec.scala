@@ -56,20 +56,6 @@ class RelationalSpec extends SparkSpec {
     assert(out.collect()(0).getFloat(1) == 1.23456789012345f)
   }
 
-  test("sketches: HLL distinct within rsd; quantiles within relErr") {
-    val ev = Queries.T(spark, sf001, "events")
-    val exactUsers = ev.select(col("user_id")).distinct().count().toDouble
-    val approxUsers = Relational.approxDistinct(ev, Seq("user_id"), rsd = 0.05)
-      .collect()(0).getLong(0).toDouble
-    assert(math.abs(approxUsers - exactUsers) / exactUsers < 0.15,
-      s"HLL $approxUsers vs exact $exactUsers")
-    val q = Relational.approxQuantiles(ev, "value", Seq(0.5), relErr = 0.01)
-      .collect()(0).getSeq[Double](0).head
-    val exactMedian = ev.stat.approxQuantile("value", Array(0.5), 0.0)(0)
-    assert(math.abs(q - exactMedian) / math.max(exactMedian, 1.0) < 0.05,
-      s"median $q vs $exactMedian")
-  }
-
   test("gap-fill range restriction + out-of-coverage rejection (OP-FLT-1)") {
     import spark.implicits._
     val station = Seq(
@@ -587,13 +573,14 @@ class RelationalSpec extends SparkSpec {
     // ref {1,2,2,3}, cur {2,3,3,4}: D attained at v=2 → 8/16 = 0.5
     val df = (Seq(1L, 2L, 2L, 3L).map(("r", _)) ++
       Seq(2L, 3L, 3L, 4L).map(("c", _))).toDF("s", "v")
-    def run(nb: Int) = Relational.ksReport(df, "s", "r", "v", 0d, 5d, nb)
+    def ks(ref: String, nb: Int) = Relational.ksReportFromPaired(
+      Relational.ecdfPaired(df, "s", ref, "v", 0d, 5d, nb))
+    def run(nb: Int) = ks("r", nb)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4))).toSeq
     assert(run(2) == Seq(("c", 4L, 4L, 8L, 0.5)))
     assert(run(1) == run(2) && run(7) == run(2)) // internal partitioning only
-    assert(Relational.ksReport(df, "s", "absent", "v", 0d, 5d, 2)
-      .count() == 0L)
+    assert(ks("absent", 2).count() == 0L)
   }
 
   test("mannWhitneyReport: doubled rank sums with ties match the " +
@@ -711,15 +698,15 @@ class RelationalSpec extends SparkSpec {
       .collect().head
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
       r.getDouble(4)) == ((50L, 35L, 700000L, 500000L, 0.4)))
+    // raw rating pairs → cells, as q208 aggregates them
+    def kappa(pairs: Seq[(String, String)]) = Relational.cohenKappaFromCells(
+      pairs.toDF("ra", "rb").groupBy(col("ra"), col("rb"))
+        .agg(count(lit(1)).as("n")), "ra", "rb", "n").collect().head
     // rater B answers in a category A never uses → chance mass 0, κ = 0
-    val disj = Relational.cohenKappa(
-      Seq(("a", "c"), ("a", "c")).toDF("ra", "rb"), "ra", "rb")
-      .collect().head
+    val disj = kappa(Seq(("a", "c"), ("a", "c")))
     assert(disj.getLong(1) == 0L && disj.getDouble(4) == 0.0)
     // both raters constant and agreeing: n² = Σ ma·mb → null κ
-    val const = Relational.cohenKappa(
-      Seq(("x", "x"), ("x", "x"), ("x", "x")).toDF("ra", "rb"),
-      "ra", "rb").collect().head
+    val const = kappa(Seq(("x", "x"), ("x", "x"), ("x", "x")))
     assert(const.getLong(1) == 3L && const.isNullAt(4))
   }
 

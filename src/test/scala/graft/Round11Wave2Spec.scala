@@ -12,13 +12,18 @@ import graft.llm.{Eval, Lexical}
 class Round11Wave2Spec extends SparkSpec {
   import spark.implicits._
 
+  /** The q374 peel: support of the undirected graph, then the truss. */
+  private def kTruss(edges: org.apache.spark.sql.DataFrame, k: Int,
+      maxRounds: Int) = Graph.kTrussFromSupport(
+    Graph.edgeTriangleSupport(edges, "a", "b"), k, maxRounds)
+
   test("kTruss: K4 survives 4-truss, pendant triangle peeled") {
     // K4 on {1,2,3,4} (each edge on 2 triangles) + triangle {4,5,6}
     // (each edge on 1) + chain edge 6-7 (on 0)
     val edges = Seq((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
       (4, 5), (4, 6), (5, 6), (6, 7))
       .toDF("a", "b").select(col("a").cast("long"), col("b").cast("long"))
-    val got = Graph.kTruss(edges, "a", "b", k = 4, maxRounds = 5)
+    val got = kTruss(edges, k = 4, maxRounds = 5)
       .orderBy("u", "v").collect()
     assert(got.length == 6, "exactly the K4 edges survive")
     got.foreach { r =>
@@ -34,9 +39,9 @@ class Round11Wave2Spec extends SparkSpec {
     // b-c, round 2 recomputes its support as 0 -> empty truss.
     val edges = Seq((1, 2), (1, 3), (2, 3), (2, 4), (3, 4))
       .toDF("a", "b").select(col("a").cast("long"), col("b").cast("long"))
-    assert(Graph.kTruss(edges, "a", "b", k = 4, maxRounds = 5).isEmpty)
+    assert(kTruss(edges, k = 4, maxRounds = 5).isEmpty)
     // but with maxRounds = 1 the cascade hasn't run: b-c still present
-    val one = Graph.kTruss(edges, "a", "b", k = 4, maxRounds = 1).collect()
+    val one = kTruss(edges, k = 4, maxRounds = 1).collect()
     assert(one.length == 1 && one(0).getLong(0) == 2 &&
       one(0).getLong(1) == 3)
   }

@@ -127,7 +127,7 @@ class SelectionSpec extends SparkSpec {
   }
 
   test("winnowing property: ANY shared run of w+k-1 words yields a shared fingerprint (randomized)") {
-    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Gen
     import org.scalacheck.Prop.forAll
     import graft.llm.Dedup
     val k = 3; val w = 4
@@ -306,7 +306,6 @@ class SelectionSpec extends SparkSpec {
   }
 
   test("contrastive: positive excludes self and respects thresholds; negatives bounded by k") {
-    val dim = 4
     def v(xs: Double*) = xs.map(_.toFloat).toArray
     val corpus = Seq(
       (1L, v(1, 0, 0, 0)), (2L, v(0.9, 0.1, 0, 0)), // near-dup of 1

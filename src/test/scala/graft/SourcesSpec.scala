@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.sources.NetCDF

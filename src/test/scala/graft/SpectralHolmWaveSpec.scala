@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.engine.Relational
 
 /** Hand-value pins for the q356-q357 wave: Holm–Bonferroni step-down,

@@ -10,6 +10,13 @@ import graft.llm.Eval
 class StatsPrivacyEvalWaveSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The q306 report: paired ECDF, then the W1 readout over it. */
+  private def wassersteinReport(df: org.apache.spark.sql.DataFrame,
+      ref: String, lo: Double, hi: Double, nBuckets: Int) =
+    Relational.wassersteinReportFromPaired(
+      Relational.ecdfPaired(df, "s", ref, "v", lo, hi, nBuckets),
+      lo, hi, nBuckets)
+
   test("wassersteinReport: hand ECDF areas, shift equals distance, " +
       "partition-invariant across bucket widths") {
     // ref s0 = {0,10}; s1 = {5,10} -> W1 = 0.5*5 = 2.5;
@@ -17,8 +24,8 @@ class StatsPrivacyEvalWaveSpec extends SparkSpec {
     val df = Seq(("s0", 0L), ("s0", 10L), ("s1", 5L), ("s1", 10L),
       ("s2", 1L), ("s2", 11L)).toDF("s", "v")
     for (nb <- Seq(1, 4, 64)) {
-      val r = Relational.wassersteinReport(df.repartition(3), "s", "s0",
-          "v", lo = 0d, hi = 12d, nBuckets = nb)
+      val r = wassersteinReport(df.repartition(3), "s0",
+          lo = 0d, hi = 12d, nBuckets = nb)
         .collect().map(x => x.getString(0) -> x).toMap
       assert(r("s1").getLong(3) == 2500000L, s"nb=$nb")
       assert(r("s1").getDouble(4) == 2.5)
@@ -28,11 +35,10 @@ class StatsPrivacyEvalWaveSpec extends SparkSpec {
     // identical distributions -> 0; missing reference -> empty report
     val same = Seq(("s0", 3L), ("s0", 7L), ("s1", 3L), ("s1", 7L))
       .toDF("s", "v")
-    val rs = Relational.wassersteinReport(same, "s", "s0", "v", 0d, 8d, 4)
+    val rs = wassersteinReport(same, "s0", 0d, 8d, 4)
       .collect()
     assert(rs.length == 1 && rs.head.getLong(3) == 0L)
-    assert(Relational.wassersteinReport(same, "s", "zzz", "v",
-      0d, 8d, 4).count() == 0)
+    assert(wassersteinReport(same, "zzz", 0d, 8d, 4).count() == 0)
   }
 
   test("logRank: hand per-step terms, censoring joins the risk set " +

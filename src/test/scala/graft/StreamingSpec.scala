@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.streaming.Streaming
 
 /** The streaming face of the window aggregation: same transform as the
-  * batch-oracle query q47, driven through MemoryStream with a watermark.
+  * batch-oracle query q47, driven through MemoryStream with a watermark;
+  * and the batch faces of the CDC apply and the drift monitors.
   */
 class StreamingSpec extends SparkSpec {
 
@@ -36,122 +37,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("dedupStream drops key repeats within the watermark horizon") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String)]
-    val df = mem.toDF().toDF("ts", "doc_id", "content_hash")
-    val out = Streaming.dedupStream(df, "ts", Seq("content_hash"), "1 hour")
-    val q = out.writeStream.format("memory").queryName("dedupstream")
-      .outputMode("append").start()
-    try {
-      mem.addData(
-        (Timestamp.valueOf("2024-01-01 10:00:00"), 1L, "h_a"),
-        (Timestamp.valueOf("2024-01-01 10:05:00"), 2L, "h_a"), // dup
-        (Timestamp.valueOf("2024-01-01 10:10:00"), 3L, "h_b"))
-      q.processAllAvailable()
-      mem.addData(
-        (Timestamp.valueOf("2024-01-01 10:20:00"), 4L, "h_a"), // still dup
-        (Timestamp.valueOf("2024-01-01 10:30:00"), 5L, "h_c"))
-      q.processAllAvailable()
-      val hashes = sp.sql("SELECT content_hash FROM dedupstream")
-        .collect().map(_.getString(0)).sorted.toSeq
-      assert(hashes == Seq("h_a", "h_b", "h_c"))
-    } finally q.stop()
-    // batch face: plain dropDuplicates, no watermark state
-    val batch = Seq(
-      (Timestamp.valueOf("2024-01-01 10:00:00"), 1L, "h_a"),
-      (Timestamp.valueOf("2024-01-01 10:05:00"), 2L, "h_a"))
-      .toDF("ts", "doc_id", "content_hash")
-    assert(Streaming.dedupStream(batch, "ts", Seq("content_hash"),
-      "1 hour").count() == 1)
-  }
-
-  test("intervalJoin correlates two streams within the time bound") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val views = MemoryStream[(Long, Timestamp)]
-    val out = Streaming.intervalJoin(
-      clicks.toDF().toDF("user_id", "c_ts"),
-      views.toDF().toDF("user_id", "v_ts"),
-      Seq("user_id"), "c_ts", "v_ts",
-      lowerBound = "10 minutes", upperBound = "0 minutes",
-      watermark = "1 hour")
-    val q = out.writeStream.format("memory").queryName("ivjoin")
-      .outputMode("append").start()
-    try {
-      views.addData(
-        (1L, Timestamp.valueOf("2024-01-01 10:00:00")),  // in bound
-        (1L, Timestamp.valueOf("2024-01-01 09:40:00")),  // too early
-        (2L, Timestamp.valueOf("2024-01-01 10:03:00")))  // other user
-      clicks.addData((1L, Timestamp.valueOf("2024-01-01 10:05:00")))
-      q.processAllAvailable()
-      val rows = sp.sql("SELECT user_id, v_ts FROM ivjoin").collect()
-      assert(rows.length == 1)
-      assert(rows(0).getLong(0) == 1L)
-      assert(rows(0).getAs[Timestamp]("v_ts") ==
-        Timestamp.valueOf("2024-01-01 10:00:00"))
-    } finally q.stop()
-    // batch face: plain range-condition join, same semantics
-    val bc = Seq((1L, Timestamp.valueOf("2024-01-01 10:05:00")))
-      .toDF("user_id", "c_ts")
-    val bv = Seq(
-      (1L, Timestamp.valueOf("2024-01-01 10:00:00")),
-      (1L, Timestamp.valueOf("2024-01-01 09:40:00")))
-      .toDF("user_id", "v_ts")
-    assert(Streaming.intervalJoin(bc, bv, Seq("user_id"), "c_ts", "v_ts",
-      "10 minutes", "0 minutes", "1 hour").count() == 1)
-  }
-
-  test("intervalJoin left_outer: unmatched left emits null-padded after " +
-      "both watermarks pass its window") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val views = MemoryStream[(Long, Timestamp)]
-    val out = Streaming.intervalJoin(
-      clicks.toDF().toDF("user_id", "c_ts"),
-      views.toDF().toDF("user_id", "v_ts"),
-      Seq("user_id"), "c_ts", "v_ts",
-      lowerBound = "10 minutes", upperBound = "0 minutes",
-      watermark = "5 minutes", joinType = "left_outer")
-    val q = out.writeStream.format("memory").queryName("ivloj")
-      .outputMode("append").start()
-    try {
-      views.addData((1L, Timestamp.valueOf("2024-01-01 10:00:00")))
-      clicks.addData(
-        (1L, Timestamp.valueOf("2024-01-01 10:05:00")), // matches the view
-        (2L, Timestamp.valueOf("2024-01-01 10:05:00"))) // never matches
-      q.processAllAvailable()
-      // advance BOTH watermarks far past user 2's join window so the
-      // engine can prove no future view can match it
-      views.addData((9L, Timestamp.valueOf("2024-01-01 12:00:00")))
-      clicks.addData((9L, Timestamp.valueOf("2024-01-01 12:00:00")))
-      q.processAllAvailable()
-      val rows = sp.sql(
-        "SELECT user_id, v_ts FROM ivloj WHERE user_id IN (1, 2)")
-        .collect().map(r => (r.getLong(0), r.getAs[Timestamp](1))).toSet
-      assert(rows == Set(
-        (1L, Timestamp.valueOf("2024-01-01 10:00:00")),
-        (2L, null))) // the outer row, padded once provably unmatched
-    } finally q.stop()
-    // batch face: a plain left join with the range condition
-    val bc = Seq((1L, Timestamp.valueOf("2024-01-01 10:05:00")),
-      (2L, Timestamp.valueOf("2024-01-01 10:05:00")))
-      .toDF("user_id", "c_ts")
-    val bv = Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00")))
-      .toDF("user_id", "v_ts")
-    val batch = Streaming.intervalJoin(bc, bv, Seq("user_id"), "c_ts",
-      "v_ts", "10 minutes", "0 minutes", "1 hour", "left_outer")
-      .collect().map(r => (r.getLong(0), r.getAs[Timestamp]("v_ts"))).toSet
-    assert(batch == Set(
-      (1L, Timestamp.valueOf("2024-01-01 10:00:00")), (2L, null)))
-  }
-
   test("batch and streaming faces of the transform agree") {
     val sp = spark
     import sp.implicits._
@@ -163,70 +48,10 @@ class StreamingSpec extends SparkSpec {
     assert(out.length == 1 && out(0).getAs[Long]("n") == 2)
   }
 
-  test("runningTotals: exact balances accumulate across batches") {
+  test("cdcApplyBatch/cdcStateTable over a two-batch replay, tombstones " +
+      "included") {
     val sp = spark
     import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val mem = MemoryStream[Streaming.Event]
-    val q = Streaming.runningTotals(mem.toDS())
-      .writeStream.format("memory").queryName("lbal")
-      .outputMode("append").start()
-    try {
-      mem.addData(
-        Streaming.Event(1L, Timestamp.valueOf("2024-01-01 10:00:00"), 0.1),
-        Streaming.Event(1L, Timestamp.valueOf("2024-01-01 10:01:00"), 0.2))
-      q.processAllAvailable()
-      mem.addData( // state survives the batch boundary; 0.1+0.2+0.05=0.35
-        Streaming.Event(1L, Timestamp.valueOf("2024-01-01 10:02:00"), 0.05))
-      q.processAllAvailable()
-      val out = sp.sql("SELECT running_value FROM lbal ORDER BY ts")
-        .collect().map(_.getDouble(0)).toSeq
-      assert(out == Seq(0.1, 0.3, 0.35)) // exact, no float drift
-      // agreement with the batch face on the same concatenated input
-      val batch = Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00"), 0L, 0.1),
-        (1L, Timestamp.valueOf("2024-01-01 10:01:00"), 1L, 0.2),
-        (1L, Timestamp.valueOf("2024-01-01 10:02:00"), 2L, 0.05))
-        .toDF("k", "ts", "eid", "v")
-      val b = graft.engine.Windows.runningTotal(batch, Seq("k"), "ts", "v",
-        Seq("eid")).orderBy("ts").collect().map(_.getDouble(4)).toSeq
-      assert(b == out)
-    } finally q.stop()
-  }
-
-  test("cdcApply: latest wins, deletes reclaim state, current rows emitted") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    val mem = MemoryStream[Streaming.Upsert]
-    val q = Streaming.cdcApply(mem.toDS())
-      .writeStream.format("memory").queryName("cdc")
-      .outputMode("append").start()
-    try {
-      mem.addData(Streaming.Upsert(1L, t(0), "I", "a"),
-        Streaming.Upsert(1L, t(1), "U", "b"), // same batch: latest wins
-        Streaming.Upsert(2L, t(0), "I", "x"))
-      q.processAllAvailable()
-      mem.addData(Streaming.Upsert(2L, t(2), "D", ""))
-      q.processAllAvailable()
-      mem.addData(Streaming.Upsert(2L, t(3), "I", "y")) // re-insert after D
-      q.processAllAvailable()
-      val rows = sp.sql("SELECT key, payload, live FROM cdc ORDER BY ts, key")
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getBoolean(2))).toSeq
-      // batch1: current rows (1,b) and (2,x); batch2: delete of a
-      // previously-emitted key emits a TOMBSTONE (live=false, null
-      // payload) so Append-mode sinks can retract; batch3: (2,y)
-      assert(rows == Seq((2L, "x", true), (1L, "b", true),
-        (2L, null, false), (2L, "y", true)))
-    } finally q.stop()
-  }
-
-  test("cdcApplyBatch/cdcStateTable agree with streaming cdcApply over " +
-      "a two-batch replay, tombstones included") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
     def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
     // batch 1 (< :10): key 1 live "b", key 2 live "x", key 3 deleted,
     // key 5 live "w". batch 2 (>= :10): key 1 updated, key 2 deleted
@@ -253,71 +78,6 @@ class StreamingSpec extends SparkSpec {
       "payload", split)
       .collect().map(r => (r.getLong(0), r.getString(2))).toSet
     assert(gotState == Set(1L -> "c", 5L -> "w"))
-    // the streaming face replayed over the same two micro-batches must
-    // emit exactly gotEmit in its second batch
-    val mem = MemoryStream[Streaming.Upsert]
-    val q = Streaming.cdcApply(mem.toDS())
-      .writeStream.format("memory").queryName("cdc2b")
-      .outputMode("append").start()
-    try {
-      mem.addData(feed.filter(_._2.before(t(10)))
-        .map(u => Streaming.Upsert(u._1, u._2, u._3, u._4)): _*)
-      q.processAllAvailable()
-      mem.addData(feed.filter(!_._2.before(t(10)))
-        .map(u => Streaming.Upsert(u._1, u._2, u._3, u._4)): _*)
-      q.processAllAvailable()
-      // batch-2 emissions are exactly the rows stamped >= the split
-      // (batch-1 current rows all carry pre-split timestamps)
-      val streamEmit = sp.sql(
-        "SELECT key, ts, payload, live FROM cdc2b WHERE ts >= TIMESTAMP " +
-          "'2024-01-01 10:10:00'")
-        .collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2),
-          r.getBoolean(3))).toSet
-      assert(streamEmit == gotEmit)
-    } finally q.stop()
-  }
-
-  test("ohlcStream agrees with batch ohlcBars, incl. timestamp ties") {
-    val sp = spark
-    import sp.implicits._
-    def t(m: Int) = new Timestamp(3600000L + m * 60000L)
-    val batch = Seq(
-      ("u", t(5), 2L, 20.0), ("u", t(5), 1L, 10.0), // tie: eid breaks it
-      ("u", t(30), 3L, 5.0), ("u", t(59), 4L, 15.0),
-      ("v", t(7), 5L, 7.0)).toDF("k", "ts", "eid", "v")
-    val stream = Streaming.ohlcStream(batch, "ts", "1 hour", "k", "v", "eid")
-      .collect().map(r => r.getString(0) -> ((r.getDouble(2), r.getDouble(3),
-        r.getDouble(4), r.getDouble(5), r.getLong(6)))).toMap
-    val win = graft.engine.Windows.ohlcBars(batch, Seq("k"), "ts", "v",
-      Seq("eid")).collect().map(r => r.getString(0) -> ((r.getDouble(2),
-        r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getLong(6))))
-      .toMap
-    assert(stream == win)
-    assert(stream("u") == ((10.0, 20.0, 5.0, 15.0, 4L))) // open picks eid 1
-  }
-
-  test("reachStream counts distinct keys per window on a stream") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val mem = MemoryStream[(Timestamp, Long)]
-    val df = mem.toDF().toDF("ts", "user_id")
-    val out = Streaming.reachStream(df, "ts", "user_id", "1 hour", "2 hours")
-    val q = out.writeStream.format("memory").queryName("reach")
-      .outputMode("complete").start()
-    try {
-      mem.addData(
-        (Timestamp.valueOf("2024-01-01 10:05:00"), 1L),
-        (Timestamp.valueOf("2024-01-01 10:15:00"), 1L), // same user, dedup
-        (Timestamp.valueOf("2024-01-01 10:25:00"), 2L),
-        (Timestamp.valueOf("2024-01-01 11:05:00"), 1L)) // next window
-      q.processAllAvailable()
-      val rows = sp.sql("SELECT * FROM reach ORDER BY w_start").collect()
-        .map(r => r.getTimestamp(0).toString -> r.getLong(1))
-      assert(rows.toSeq == Seq(
-        "2024-01-01 10:00:00.0" -> 2L, "2024-01-01 11:00:00.0" -> 1L))
-    } finally q.stop()
   }
 
   test("psiWindowed: streaming windows agree with the batch face; " +
@@ -391,392 +151,4 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("distinctSketchStream: per-batch refresh, cumulative state, " +
-      "bit-identical to the batch sketch on the same prefix") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val m = 64
-    val mem = MemoryStream[Streaming.KeyedValue]
-    val q = Streaming.distinctSketchStream(mem.toDS(), m)
-      .writeStream.format("memory").queryName("dsketch")
-      .outputMode("append").start()
-    try {
-      val b1 = Seq("u1", "u2", "u3").map(Streaming.KeyedValue("g", _))
-      val b2 = Seq("u3", "u4").map(Streaming.KeyedValue("g", _)) // u3 repeats
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      val got = sp.sql("SELECT occupied, est_distinct FROM dsketch")
-        .collect().map(r => (r.getInt(0),
-          if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSeq
-      // batch face over the same prefixes
-      def ref(vs: Seq[String]) = graft.engine.Sketches.linearCountDistinct(
-        vs.map(("g", _)).toDF("grp", "v"), Seq("grp"), "v", m).collect()
-        .map(r => (r.getLong(1).toInt,
-          if (r.isNullAt(2)) None else Some(r.getLong(2)))).head
-      assert(got == Seq(ref(b1.map(_.v)), ref((b1 ++ b2).map(_.v))))
-      // the repeat contributed nothing: occupied grew by exactly |{u4}|'s
-      // bucket (or 0 on collision) — monotone, never by the dup
-      assert(got(1)._1 - got(0)._1 <= 1)
-    } finally q.stop()
-  }
-
-  test("hllStream: per-batch emissions bit-identical to batch hllEstimate " +
-      "on every prefix; duplicates absorbed; state is m bytes per group") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val mem = MemoryStream[Streaming.KeyedValue]
-    val q = Streaming.hllStream(mem.toDS(), p = 8)
-      .writeStream.format("memory").queryName("hllstream")
-      .outputMode("append").start()
-    try {
-      val b1 = (1 to 300).map(i => Streaming.KeyedValue("g", s"user$i"))
-      val b2 = (250 to 600).map(i => Streaming.KeyedValue("g", s"user$i"))
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      val got = sp.sql("SELECT n_zero, est FROM hllstream").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      def ref(vs: Seq[String]) = {
-        val row = graft.engine.Sketches.hllEstimate(
-          vs.map(Tuple1(_)).toDF("v"), "v", p = 8).collect().head
-        (row.getAs[Long]("n_zero"), row.getAs[Double]("est"))
-      }
-      assert(got == Seq(ref(b1.map(_.v)), ref((b1 ++ b2).map(_.v))),
-        "stream emissions must equal the batch face on each prefix")
-    } finally q.stop()
-  }
-
-  test("momentsStream: per-batch emissions equal the batch momentsSketch " +
-      "on every prefix; state is seven longs per group") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val mem = MemoryStream[Streaming.KeyedNum]
-    val q = Streaming.momentsStream(mem.toDS())
-      .writeStream.format("memory").queryName("momstream")
-      .outputMode("append").start()
-    try {
-      val b1 = Seq(1L, 2L, 3L, 3L).map(Streaming.KeyedNum("g", _))
-      val b2 = Seq(10L, -4L).map(Streaming.KeyedNum("g", _))
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      val got = sp.sql(
-        "SELECT n, s1, s2, s3, s4, vmin, vmax FROM momstream").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
-      def ref(vs: Seq[Streaming.KeyedNum]) = {
-        val row = graft.engine.Sketches.momentsSketch(
-          vs.map(v => ("g", v.x)).toDF("grp", "x"), Seq("grp"), "x")
-          .collect().head
-        (row.getLong(1), row.getDecimal(2).longValue,
-          row.getDecimal(3).longValue, row.getDecimal(4).longValue,
-          row.getDecimal(5).longValue, row.getLong(6), row.getLong(7))
-      }
-      assert(got == Seq(ref(b1), ref(b1 ++ b2)),
-        "stream emissions must equal the batch sketch on each prefix")
-    } finally q.stop()
-  }
-
-  test("kmvStream: per-batch emissions equal the batch kmvDistinct on " +
-      "every prefix; duplicates absorbed; state is <= k hashes") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val mem = MemoryStream[Streaming.KeyedValue]
-    val q = Streaming.kmvStream(mem.toDS(), k = 16)
-      .writeStream.format("memory").queryName("kmvstream")
-      .outputMode("append").start()
-    try {
-      val b1 = (1 to 10).map(i => Streaming.KeyedValue("g", s"v$i"))
-      val b2 = (5 to 200).map(i => Streaming.KeyedValue("g", s"v$i"))
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      val got = sp.sql(
-        "SELECT n_kept, kth_min, est_distinct FROM kmvstream").collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-      def ref(vs: Seq[String]) = {
-        val row = graft.engine.Sketches.kmvDistinct(
-          vs.map(v => ("g", v)).toDF("grp", "v"), Seq("grp"), "v", k = 16)
-          .collect().head
-        (row.getInt(1), row.getLong(2), row.getDouble(3))
-      }
-      assert(got == Seq(ref(b1.map(_.v)), ref((b1 ++ b2).map(_.v))),
-        "stream emissions must equal the batch face on each prefix")
-    } finally q.stop()
-  }
-
-  test("cmsStream: per-batch estimates bit-identical to the batch " +
-      "cmsTopK est over the same prefix; state is d*w longs") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val (d, w) = (4, 64)
-    val mem = MemoryStream[Streaming.CmsPoint]
-    val q = Streaming.cmsStream(mem.toDS(), d, w)
-      .writeStream.format("memory").queryName("cmsstream")
-      .outputMode("append").start()
-    try {
-      val b1 = Seq("a", "a", "b", "c", "a")
-      val b2 = Seq("b", "a", "d")
-      mem.addData(b1.map(Streaming.CmsPoint("g", _)): _*)
-      q.processAllAvailable()
-      mem.addData(b2.map(Streaming.CmsPoint("g", _)): _*)
-      q.processAllAvailable()
-      val got = sp.sql("SELECT key, est FROM cmsstream").collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-      // batch face over each prefix (k large → all keys present)
-      def ref(vs: Seq[String]) = graft.engine.Sketches.cmsTopK(
-        vs.toDF("k"), "k", d, w, k = 100).collect()
-        .map(r => r.getString(0) -> r.getLong(2)).toMap
-      val (r1, r2) = (ref(b1), ref(b1 ++ b2))
-      // batch 1 emits a,b,c at prefix-1 estimates; batch 2 emits b,a,d
-      // at prefix-2 estimates (insertion order within each batch)
-      assert(got.take(3).toSeq == Seq("a" -> r1("a"), "b" -> r1("b"),
-        "c" -> r1("c")))
-      assert(got.drop(3).toSeq == Seq("b" -> r2("b"), "a" -> r2("a"),
-        "d" -> r2("d")))
-    } finally q.stop()
-  }
-
-  test("funnelStream: advances equal the batch funnelSteps non-null set " +
-      "regardless of micro-batch splits; strict-after enforced") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    def t(i: Int) = new java.sql.Timestamp(1700000000000L + i * 60000L)
-    val steps = Seq("view", "click", "buy")
-    // u1 completes all; u2's buy precedes its click → stalls at click;
-    // u3 has click-before-view in ONE batch (replay must order by ts)
-    val ev = Seq(
-      Streaming.FunnelEvent(1L, t(1), "view"),
-      Streaming.FunnelEvent(1L, t(2), "click"),
-      Streaming.FunnelEvent(1L, t(3), "buy"),
-      Streaming.FunnelEvent(2L, t(1), "view"),
-      Streaming.FunnelEvent(2L, t(4), "buy"),
-      Streaming.FunnelEvent(2L, t(5), "click"),
-      Streaming.FunnelEvent(3L, t(2), "click"),
-      Streaming.FunnelEvent(3L, t(1), "view"))
-    def run(splits: Seq[Seq[Streaming.FunnelEvent]], name: String) = {
-      val mem = MemoryStream[Streaming.FunnelEvent]
-      val q = Streaming.funnelStream(mem.toDS(), steps)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        splits.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-        sp.sql(s"SELECT key, step_idx, ts FROM $name").collect()
-          .map(r => (r.getLong(0), r.getInt(1), r.getTimestamp(2))).toSet
-      } finally q.stop()
-    }
-    val oneBatch = run(Seq(ev), "fs1")
-    val threeBatches = run(Seq(ev.take(3), ev.slice(3, 6), ev.drop(6)), "fs2")
-    assert(oneBatch == threeBatches)
-    // batch operator over the same rows: non-null t_i ↔ an advance
-    val batch = graft.engine.Windows.funnelSteps(
-      ev.map(e => (e.key, e.ts, e.step)).toDF("u", "ts", "typ"),
-      "u", "ts", "typ", steps).collect().flatMap { r =>
-      (1 to 3).flatMap(i => if (r.isNullAt(i)) None
-        else Some((r.getLong(0), i, r.getTimestamp(i))))
-    }.toSet
-    assert(oneBatch == batch)
-    // u2 stalled at click (buy@4 < click@5), u3 completed both in order
-    assert(!oneBatch.contains((2L, 3, t(4))) &&
-      oneBatch.contains((3L, 2, t(2))))
-  }
-
-  test("bloomDedupStream: duplicates never pass, cross-batch state " +
-      "holds, and a saturated filter drops new keys (the documented fp " +
-      "mode) exactly where the shared hash predicts") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    def doc(k: String) = Streaming.KeyedDoc("g", k, s"payload-$k")
-    val mem = MemoryStream[Streaming.KeyedDoc]
-    val q = Streaming.bloomDedupStream(mem.toDS(), d = 3, mBits = 4096)
-      .writeStream.format("memory").queryName("bloomdedup")
-      .outputMode("append").start()
-    try {
-      mem.addData(doc("a"), doc("b"), doc("a"))
-      q.processAllAvailable()
-      mem.addData(doc("b"), doc("c"))
-      q.processAllAvailable()
-      val got = sp.sql("SELECT key FROM bloomdedup").collect()
-        .map(_.getString(0)).toSeq
-      // in-batch dup 'a' and cross-batch dup 'b' both dropped
-      assert(got == Seq("a", "b", "c"))
-    } finally q.stop()
-    // saturation: with d=1, mBits=8 the drop point of each key is fully
-    // determined by the shared polyhash — replay it driver-side
-    val keys = (1 to 20).map(i => s"k$i")
-    val bits = scala.collection.mutable.Set[Long]()
-    val expect = keys.filter { k =>
-      val b = graft.functions.PolyHash.hashString(s"0#$k") % 8
-      if (bits.contains(b)) false else { bits += b; true }
-    }
-    val mem2 = MemoryStream[Streaming.KeyedDoc]
-    val q2 = Streaming.bloomDedupStream(mem2.toDS(), d = 1, mBits = 8)
-      .writeStream.format("memory").queryName("bloomsat")
-      .outputMode("append").start()
-    try {
-      mem2.addData(keys.map(doc): _*)
-      q2.processAllAvailable()
-      val got2 = sp.sql("SELECT key FROM bloomsat").collect()
-        .map(_.getString(0)).toSeq
-      assert(got2 == expect)
-      assert(got2.size < keys.size) // some distinct key WAS dropped
-    } finally q2.stop()
-  }
-
-  test("cusumStream: bit-identical to the batch cusum on the full series " +
-      "regardless of how rows split into micro-batches") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    def t(i: Int) = new java.sql.Timestamp(1700000000000L + i * 60000L)
-    // one drifting key, one steady key, interleaved
-    val series = Seq(
-      (1L, 0, 100L), (1L, 1, 130L), (1L, 2, 140L), (1L, 3, 150L),
-      (1L, 4, 160L), (2L, 0, 100L), (2L, 1, 101L), (2L, 2, 99L),
-      (1L, 5, 40L), (1L, 6, 30L), (2L, 3, 100L))
-      .map { case (k, i, v) => Streaming.CusumPoint(k, t(i), v) }
-    def run(splits: Seq[Seq[Streaming.CusumPoint]], name: String) = {
-      val mem = MemoryStream[Streaming.CusumPoint]
-      val q = Streaming.cusumStream(mem.toDS(), target = 100L,
-        slack = 5L, threshold = 50L)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        splits.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-        sp.sql(s"SELECT * FROM $name").collect()
-          .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
-            r.getLong(3), r.getLong(4), r.getLong(5), r.getBoolean(6),
-            r.getBoolean(7))).sortBy(x => (x._1, x._2.getTime)).toSeq
-      } finally q.stop()
-    }
-    // batch-face reference over the identical rows
-    val want = graft.engine.Windows.cusum(
-      series.map(p => (p.key, p.ts, p.v)).toDF("key", "ts", "v"),
-      Seq("key"), Seq("ts"), "v", target = 100L, slack = 5L,
-      threshold = 50L)
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5), r.getBoolean(6),
-        r.getBoolean(7))).sortBy(x => (x._1, x._2.getTime)).toSeq
-    val oneBatch = run(Seq(series), "cusum_a")
-    val manyBatches = run(series.grouped(3).toSeq, "cusum_b")
-    assert(oneBatch == want)
-    assert(manyBatches == want)
-    // the drifting key actually alarms, the steady key never does
-    assert(want.filter(_._1 == 1L).exists(_._7))
-    assert(!want.filter(_._1 == 2L).exists(x => x._7 || x._8))
-  }
-
-  test("logHistStream: each batch re-emits the full lattice equal to " +
-      "the batch logHistogramSketch on the prefix; sentinel included") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val mem = MemoryStream[Streaming.KeyedNum]
-    val q = Streaming.logHistStream(mem.toDS(), s = 8)
-      .writeStream.format("memory").queryName("lhstream")
-      .outputMode("append").start()
-    try {
-      val b1 = Seq(1L, 3L, 7L, 8L, 100L, -2L)
-      val b2 = Seq(3L, 1024L, 0L)
-      def ref(vs: Seq[Long]) = graft.engine.Sketches.logHistogramSketch(
-        vs.map(("g", _)).toDF("grp", "x"), Seq("grp"), "x", s = 8)
-        .collect()
-        .map(r => (r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4)))
-        .sortBy(t => (t._1, t._2)).toSeq
-      mem.addData(b1.map(Streaming.KeyedNum("g", _)): _*)
-      q.processAllAvailable()
-      val got1 = sp.sql("SELECT e, sub, pw, cnt FROM lhstream").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-        .sortBy(t => (t._1, t._2)).toSeq
-      assert(got1 == ref(b1))
-      mem.addData(b2.map(Streaming.KeyedNum("g", _)): _*)
-      q.processAllAvailable()
-      val gotAll = sp.sql("SELECT e, sub, pw, cnt FROM lhstream")
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-      // batch 2 re-emits the cumulative lattice; subtract batch 1's rows
-      val got2 = gotAll.groupBy(identity).map { case (k, vs) =>
-        k -> vs.size
-      }
-      val want2 = (ref(b1) ++ ref(b1 ++ b2)).groupBy(identity)
-        .map { case (k, vs) => k -> vs.size }
-      assert(got2 == want2,
-        "cumulative emissions across both batches match both prefixes")
-    } finally q.stop()
-  }
-
-  test("welchStream: per-batch t/df equal the batch welchTTest on " +
-      "every prefix; nulls until both arms have two points") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val mem = MemoryStream[Streaming.AbPoint]
-    val q = Streaming.welchStream(mem.toDS())
-      .writeStream.format("memory").queryName("welchstream")
-      .outputMode("append").start()
-    try {
-      val b1 = Seq((1.25, true), (2.5, true), (4.0, false))
-      val b2 = Seq((3.75, true), (6.0, false), (8.125, false),
-        (2.0, false))
-      def ref(vs: Seq[(Double, Boolean)]) = {
-        val row = graft.engine.Relational.welchTTest(
-          vs.map(v => ("g", v._1, v._2)).toDF("grp", "x", "f"),
-          Seq("grp"), "x", col("f")).collect().head
-        (row.getLong(1), row.getLong(2),
-          if (row.isNullAt(5)) None else Some(row.getDouble(5)),
-          if (row.isNullAt(6)) None else Some(row.getDouble(6)))
-      }
-      mem.addData(b1.map(p => Streaming.AbPoint("g", p._1, p._2)): _*)
-      q.processAllAvailable()
-      mem.addData(b2.map(p => Streaming.AbPoint("g", p._1, p._2)): _*)
-      q.processAllAvailable()
-      val got = sp.sql(
-        "SELECT na, nb, t_stat, df_welch FROM welchstream").collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          if (r.isNullAt(2)) None else Some(r.getDouble(2)),
-          if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toSeq
-      assert(got == Seq(ref(b1), ref(b1 ++ b2)),
-        "stream emissions must equal the batch test on each prefix")
-      assert(got.head._3.isEmpty, "one-point arm -> no t yet")
-      assert(got(1)._3.isDefined)
-    } finally q.stop()
-  }
-
-  test("amsStream: per-batch f2_est equals the batch amsF2 estimate " +
-      "over the same prefix; state is d*g longs") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val mem = MemoryStream[Streaming.KeyedValue]
-    val q = Streaming.amsStream(mem.toDS(), d = 5, g = 8)
-      .writeStream.format("memory").queryName("amsstream")
-      .outputMode("append").start()
-    try {
-      val b1 = (1 to 60).map(i => s"k${i % 20}") // 20 keys, 3x each
-      val b2 = (1 to 30).map(i => s"k${i % 30}") // widens the key set
-      def ref(vs: Seq[String]) = graft.engine.Sketches.amsF2(
-        vs.map(Tuple1(_)).toDF("key"), "key", d = 5, g = 8)
-        .collect().head.getLong(2)
-      mem.addData(b1.map(Streaming.KeyedValue("g", _)): _*)
-      q.processAllAvailable()
-      mem.addData(b2.map(Streaming.KeyedValue("g", _)): _*)
-      q.processAllAvailable()
-      val got = sp.sql("SELECT f2_est FROM amsstream").collect()
-        .map(_.getLong(0)).toSeq
-      assert(got == Seq(ref(b1), ref(b1 ++ b2)),
-        "stream emissions must equal the batch estimate on each prefix")
-    } finally q.stop()
-  }
 }

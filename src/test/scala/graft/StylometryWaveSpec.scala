@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** Hand-value pins for the q358-q360 wave: Burrows' Delta, PMI
   * collocations, term burstiness.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.engine.Windows
 
 /** Hand-value pins for the q385–q388 time-series diagnostics wave:

@@ -13,6 +13,11 @@ package graft
   * COMPACT summary (< 2 kB) because the driver only captures the last
   * 2000 characters of stdout — a 300-query map decapitates the line and
   * the round's BENCH artifact records parsed:null (r8, r9).
+  *
+  * Each query pass is one [[Run]]: bench_result.json also lists every
+  * pass's [[Run.Record]] (`records`: jobs, stages, top stages by task
+  * time, pins, memo hits …) and the passes that failed (`failed_passes`).
+  * The main exits 1, after printing its line, when any pass failed.
   */
 object Bench {
   private def median(xs: Seq[Double]): Double = {
@@ -61,49 +66,39 @@ object Bench {
       .groupBy(pmod(xxhash64(col("id")), lit(100000)).as("k"))
       .agg(fcount(lit(1)).as("n"))
       .write.format("noop").mode("overwrite").save())
-    val calScan = cal(
-      try Queries.T(spark, sfDir, "lineitem").write.format("noop")
-        .mode("overwrite").save()
-      catch { case _: Throwable => () })
-    val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
+    val calScan = cal(Harness.scan(spark, sfDir, "lineitem"))
+    val records = Vector.newBuilder[Run.Record]
     val passTotals = scala.collection.mutable.ArrayBuffer.empty[Double]
     for (pass <- 1 to runs) {
       val p0 = System.nanoTime()
       names.foreach { name =>
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
         // noop write materializes EVERY column (count() would let Spark
-        // prune value columns and flatter column-heavy queries); a crashed
-        // query records the -1 sentinel so failures can't masquerade as
-        // fast runs
-        val ok =
-          try { fn(spark, sfDir).write.format("noop")
-              .mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(
-              s"[bench] $name failed (pass $pass): ${e.getMessage}"); false
-          }
-        val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
+        // prune value columns and flatter column-heavy queries)
+        val r = Run(spark, sfDir, name, pass)(
+          _.write.format("noop").mode("overwrite").save())
+        r.error.foreach(m =>
+          System.err.println(s"[bench] $name failed (pass $pass): $m"))
+        records += r
       }
       passTotals += (System.nanoTime() - p0) / 1e9
       System.err.println(f"[bench] pass $pass/$runs: ${passTotals.last}%.1f s")
     }
-    // Median over SUCCESSFUL samples; -1 only when every pass failed, so a
-    // one-pass crash can't drag a real median negative.
-    val med: Map[String, Double] = names.map { n =>
-      val good = samples(n).filter(_ >= 0.0)
-      n -> (if (good.isEmpty) -1.0 else median(good))
-    }.toMap
+    val runRecords = records.result()
+    val byName = runRecords.groupBy(_.name)
+    // Median over SUCCESSFUL passes; -1 only when every pass failed, so
+    // a failure can't masquerade as a fast run and a one-pass crash
+    // can't drag a real median negative.
+    def good(n: String) = byName(n).filter(_.ok).map(_.wallS)
+    val med: Map[String, Double] = names.map(n => n -> median(good(n))).toMap
     val total = names.map(med).filter(_ >= 0.0).sum
     val failed = names.filter(med(_) < 0.0)
     def jnum(v: Double): String = f"$v%.6f"
-    val fullQs = names.map(n => "\"" + n + "\":" + jnum(med(n)))
-      .mkString("{", ",", "}")
+    def key(n: String): String = Run.jsonString(n) + ":"
+    val fullQs = names.map(n => key(n) + jnum(med(n))).mkString("{", ",", "}")
     val spread = names.map { n =>
-      val good = samples(n).filter(_ >= 0.0)
-      val (lo, hi) = if (good.isEmpty) (-1.0, -1.0) else (good.min, good.max)
-      "\"" + n + "\":[" + jnum(lo) + "," + jnum(hi) + "]"
+      val g = good(n)
+      val (lo, hi) = if (g.isEmpty) (-1.0, -1.0) else (g.min, g.max)
+      key(n) + "[" + jnum(lo) + "," + jnum(hi) + "]"
     }.mkString("{", ",", "}")
     // Pass 1 is the COLD pass: the session-memoized frames (the LSH
     // pair/edge/neighbor memos shared by the dedup-chain, graph and
@@ -111,23 +106,26 @@ object Bench {
     // median-of-3 under-reports those families' cold cost (q69-class
     // spreads up to 139x). cold/cold_total keep the cold truth in-band
     // so cross-round compares don't silently ride warmer memo coverage.
-    val coldQs = names.map(n => "\"" + n + "\":" +
-      jnum(samples(n).headOption.getOrElse(-1.0))).mkString("{", ",", "}")
-    val coldTotal = names.map(n => samples(n).headOption.getOrElse(-1.0))
-      .filter(_ >= 0.0).sum
+    def cold(n: String) = Some(byName(n).head).filter(_.ok).fold(-1.0)(_.wallS)
+    val coldQs = names.map(n => key(n) + jnum(cold(n))).mkString("{", ",", "}")
+    val coldTotal = names.map(cold).filter(_ >= 0.0).sum
     val memoNote = "pass 1 builds the session memos (LSH pair frames, " +
       "graph edge frames, DBSCAN neighbor frame); passes 2+ are " +
       "memo-warm for those families"
     val calibration = s"""{"cpu":${jnum(calCpu)},"shuffle":${jnum(
         calShuffle)},"scan":${jnum(calScan)}}"""
     val full =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","runs":$runs,"queries":$fullQs,"spread":$spread,"cold":$coldQs,"cold_total":${jnum(coldTotal)},"memo_note":"$memoNote","pass_totals":[${passTotals.map(jnum).mkString(",")}],"calibration":$calibration,"failed":[${failed.map("\"" + _ + "\"").mkString(",")}],"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","runs":$runs,"queries":$fullQs,"spread":$spread,"cold":$coldQs,"cold_total":${jnum(coldTotal)},"memo_note":"$memoNote","pass_totals":[${passTotals.map(jnum).mkString(",")}],"calibration":$calibration,"failed":[${failed.map(Run.jsonString).mkString(",")}],"sf":${Run.jsonString(sfDir)},""" +
+        s""""records":[${runRecords.map(_.json).mkString(",")}],""" +
+        s""""failed_passes":[${runRecords.filterNot(_.ok).map(r =>
+          s"""{"name":${Run.jsonString(r.name)},"pass":${r.pass}}""")
+          .mkString(",")}]}"""
     // Compact final line: top-12 slowest medians stand in for the full map
     // so the line survives the driver's 2000-char tail capture.
     val top = names.sortBy(-med(_)).take(12)
-      .map(n => "\"" + n + "\":" + jnum(med(n))).mkString("{", ",", "}")
+      .map(n => key(n) + jnum(med(n))).mkString("{", ",", "}")
     val compact =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","runs":$runs,"nq":${names.length},"failed":${failed.length},"cold_total":${jnum(coldTotal)},"calibration":$calibration,"queries":$top,"detail":"bench_result.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","runs":$runs,"nq":${names.length},"failed":${failed.length},"cold_total":${jnum(coldTotal)},"calibration":$calibration,"queries":$top,"detail":"bench_result.json","sf":${Run.jsonString(sfDir)}}"""
     // Stop Spark FIRST so no shutdown logging can land after (or interleave
     // with) the JSON; persist the full map to a file as the
     // log-truncation-proof channel.
@@ -140,5 +138,6 @@ object Bench {
         "bench_result.json")), full + "\n")
     catch { case _: Throwable => () }
     println(compact)
+    if (runRecords.exists(!_.ok)) sys.exit(1)
   }
 }

@@ -1,11 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** What every harness main (Bench, Verify, PlanDump, Profile, PlanSweep)
-  * shares: the session they run in, the table warm-up before timing, and
-  * the selection of registry queries by name prefix. Library users build
-  * their session with [[Graft.builder]] instead.
+/** What every harness main (Bench, Verify, PlanDump, PlanSweep) shares
+  * besides [[Run]]: the session they run in, the table warm-up before
+  * timing, and the selection of registry queries by name prefix. Library
+  * users build their session with [[Graft.builder]] instead.
   */
 object Harness {
 
@@ -39,15 +40,22 @@ object Harness {
 
   /** Read the five largest tables once through a noop sink (codegen
     * compiler, parquet footers, FS cache), so the first measured query
-    * does not absorb session start-up. A table `sfDir` lacks is skipped.
+    * does not absorb session start-up.
     */
   def warm(spark: SparkSession, sfDir: String): Unit =
-    Seq("lineitem", "orders", "events", "documents", "embeddings").foreach {
-      t =>
-        try Queries.T(spark, sfDir, t).write.format("noop")
-          .mode("overwrite").save()
-        catch { case _: Throwable => () }
-    }
+    Seq("lineitem", "orders", "events", "documents", "embeddings")
+      .foreach(scan(spark, sfDir, _))
+
+  /** Read table `t` through a noop sink. A table `sfDir` lacks is
+    * skipped; any other failure (a corrupt file, an OOM) is thrown.
+    */
+  def scan(spark: SparkSession, sfDir: String, t: String): Unit = {
+    val path = new Path(s"$sfDir/$t.parquet")
+    if (path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(path))
+      Queries.T(spark, sfDir, t).write.format("noop").mode("overwrite")
+        .save()
+  }
 
   /** Registry keys selected by `prefixes`, in registry order; all of them
     * when `prefixes` is empty. A key matches a prefix that equals it or

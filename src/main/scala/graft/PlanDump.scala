@@ -7,7 +7,8 @@ package graft
   * Usage: `runMain graft.PlanDump <sfDir> <outDir> <tag> <name>[,<name>…]`
   * writes `<outDir>/<name>_<tag>.txt` per query. Names are exact registry
   * keys or `qNNN` prefixes, matched by [[Harness.select]] (the rule of
-  * SPARK_GRAFT_BENCH_ONLY and `compare_oracle.py --only`).
+  * SPARK_GRAFT_BENCH_ONLY and `compare_oracle.py --only`). Exits 1 when
+  * any query failed.
   *
   * The session is Bench's ([[Harness.session]]), so the dumped plans are
   * the shapes the bench actually runs.
@@ -20,18 +21,18 @@ object PlanDump {
     val names = Harness.select(namesCsv.split(',').toSeq)
     val spark = Harness.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
+    val failed = names.count { name =>
+      val r = Run(spark, sfDir, name, 1) { df =>
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"), txt)
         println(s"[plandump] wrote $name ($tag)")
-      } catch { case e: Throwable =>
-        println(s"[plandump] FAILED $name: ${e.getMessage}")
       }
+      r.error.foreach(m => println(s"[plandump] FAILED $name: $m"))
+      !r.ok
     }
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

@@ -40,6 +40,9 @@ import graft.engine.PrefixScan
   * and audits every interior `QueryExecution` the build triggers (pins,
   * driver-loop collects), not just the returned frame's plan.
   *
+  * Each query is one [[Run]] whose sink is the audit, so its pins are
+  * released before the next query is built.
+  *
   * Usage: `runMain graft.PlanSweep <sfDir>`
   */
 object PlanSweep {
@@ -143,9 +146,9 @@ object PlanSweep {
 
     var cartesian = 0; var bnlj = 0; var failed = 0; var gatedWindows = 0
     var allowedWindows = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val finalPlan = fn(spark, sfDir).queryExecution.executedPlan
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+      val r = Run(spark, sfDir, name, 1) { df =>
+        val finalPlan = df.queryExecution.executedPlan
         val plans = drain() :+ finalPlan
         val findings = plans.flatMap(audit).distinct
         findings.foreach {
@@ -166,10 +169,11 @@ object PlanSweep {
             }
           case _ => ()
         }
-      } catch { case e: Throwable =>
+      }
+      r.error.foreach { m =>
         failed += 1
         drain()
-        println(s"[plansweep] FAILED $name: ${e.getMessage}")
+        println(s"[plansweep] FAILED $name: $m")
       }
     }
     println(s"[plansweep] queries=${SparkEntry.queries.size} " +

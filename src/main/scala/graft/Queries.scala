@@ -4827,9 +4827,9 @@ object Queries {
     agg60, win34, agg61, win35, win36, agg62,
     win31, win32, misc26) ++ LlmQueries.specs
 
-  def queries: ListMap[String, QFn] =
+  val queries: ListMap[String, QFn] =
     ListMap(specs.map(sp => sp.name -> sp.fn): _*)
 
-  def oracleSql: ListMap[String, String] =
+  val oracleSql: ListMap[String, String] =
     ListMap(specs.collect { case Spec(n, _, Some(o)) => n -> o }: _*)
 }

@@ -11,9 +11,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Queries.queries("q46_pipeline_gapfill")(spark, "/root/testdata/sf0.001")
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     Queries.queries
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Queries.oracleSql
+  val oracleSql: Map[String, String] = Queries.oracleSql
 }

@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare, and one
+  * [[Run.Record]] per query in runs.jsonl. Exits 1, after writing
+  * oracle_sql.json, when any query failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name prefixes (local
@@ -13,9 +15,8 @@ object Verify {
     val names = Harness.select(only)
     val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    names.foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
+    val records = names.map { name =>
+      val r = Run(spark, sfDir, name, 1) { df =>
         // Driver compare: DuckDB oracles emit naive TIMESTAMP; Spark's
         // derived timestamps are session-TZ LTZ and parquet-dump as
         // timestamp[us, tz=UTC], red-flagging schema_match even when every
@@ -32,25 +33,16 @@ object Verify {
           }: _*)
         }
         out.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      r.error.foreach(m => System.err.println(s"[verify] $name failed: $m"))
+      r
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/runs.jsonl"),
+      records.map(_.json + "\n").mkString)
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${Run.jsonString(k)}: ${Run.jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (records.exists(!_.ok)) sys.exit(1)
   }
 }

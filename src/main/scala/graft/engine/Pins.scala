@@ -24,10 +24,16 @@ import org.apache.spark.sql.internal.SQLConf
   * Lifetime: pins that only an operator's interior reads are taken with
   * [[scoped]], which pins the operator's result and then releases them.
   * A pin that a returned LAZY frame still reads cannot be released by
-  * the operator; it is left to Spark's `ContextCleaner`, which drops the
-  * blocks once the frame is garbage. The exception is a [[memo]] entry:
-  * a frame several registry queries stage identically is built and
-  * pinned once, and this object holds it for the rest of the JVM.
+  * the operator. When the query runs inside [[inQuery]] (every registry
+  * run of `graft.Run`), the query's end releases it: while that scope is
+  * open, [[pin]] and [[pinWith]] note the pinned RDD's id (an `Int`, so
+  * the scope keeps no frame alive), and the scope unpersists every
+  * noted RDD that is still cached when the query is done. Outside a
+  * query scope (perfbench, specs, library users) such a pin is left to
+  * Spark's `ContextCleaner`, which drops the blocks once the frame is
+  * garbage. A [[memo]] entry outlives both: a frame several registry
+  * queries stage identically is built once, outside the query's scope,
+  * and this object holds it for the rest of the JVM.
   *
   * This file is the only place in `src/main` that calls Spark's cache
   * API; `PinGateSpec` fails the build on a raw call anywhere else
@@ -37,7 +43,7 @@ private[graft] object Pins {
 
   /** Eagerly checkpoint `df` into executor blocks (one job, now). */
   def pin(df: DataFrame): DataFrame = {
-    val ckpt = df.localCheckpoint(true)
+    val ckpt = note(df.localCheckpoint(true))
     Bridge.checkpointed(ckpt, df,
       storedBytes(ckpt, ckpt.queryExecution.analyzed))
   }
@@ -50,7 +56,7 @@ private[graft] object Pins {
     * unmaterialized pin never leaves this call.
     */
   def pinWith[A](df: DataFrame)(first: DataFrame => A): (DataFrame, A) = {
-    val ckpt = df.localCheckpoint(false)
+    val ckpt = note(df.localCheckpoint(false))
     val a = first(Bridge.checkpointed(ckpt, df, None))
     (Bridge.checkpointed(ckpt, df,
       storedBytes(ckpt, ckpt.queryExecution.analyzed)), a)
@@ -103,11 +109,78 @@ private[graft] object Pins {
     * materialization of a shared fixture serves every query of a
     * Verify/Bench run. `build` pins its own result. It may call `memo`
     * for another key; if it throws, no entry is left and the next call
-    * builds again.
+    * builds again. Inside a query scope ([[inQuery]]) a hit counts in
+    * [[QueryPins.memoHits]], and `build` runs in a scope of its own: no
+    * query's end releases an entry, and the pins `build` took that the
+    * entry does not read (the last round of a loop) are released.
     */
   def memo(s: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame =
-    memos.getOrElseUpdate((s, dir, name), build)
+      build: => DataFrame): DataFrame = {
+    val key = (s, dir, name)
+    (memos.get(key), open.get) match {
+      case (Some(df), q) => if (q != null) q.memoHits += 1; df
+      case (None, null) => memos.getOrElseUpdate(key, build)
+      case (None, _) =>
+        within(s, new Query, rddIds)(memos.getOrElseUpdate(key, build))
+    }
+  }
+
+  /** What one [[inQuery]] body pinned: pins `pinned`, of them `released`
+    * at its end, memo hits, and `leaked`: RDDs cached after the release
+    * that were not before it and that no memo entry reads.
+    */
+  final case class QueryPins(pinned: Int, released: Int, memoHits: Int,
+      leaked: Int)
+
+  private final class Query {
+    val ids = ArrayBuffer.empty[Int]
+    var memoHits, released = 0
+  }
+
+  /** This thread's open scope, or null. Queries are built and run on
+    * one thread, so a thread-local scope sees every pin.
+    */
+  private val open = new ThreadLocal[Query]
+
+  private def note(ckpt: DataFrame): DataFrame = {
+    val q = open.get
+    if (q != null) q.ids ++= rddIds(ckpt)
+    ckpt
+  }
+
+  private def rddIds(df: DataFrame): Seq[Int] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }
+
+  /** Run `body` in scope `q`; then unpersist the pins it noted that are
+    * still cached, except those `keep` of its result lists.
+    */
+  private def within[A](s: SparkSession, q: Query, keep: A => Seq[Int])(
+      body: => A): A = {
+    val outer = open.get
+    open.set(q)
+    var kept = Seq.empty[Int]
+    try { val a = body; kept = keep(a); a }
+    finally {
+      open.set(outer)
+      val cached = s.sparkContext.getPersistentRDDs
+      val held = q.ids.distinct.filterNot(kept.contains).flatMap(cached.get)
+      held.foreach(_.unpersist(blocking = false))
+      q.released = held.size
+    }
+  }
+
+  /** Run `body` as one query: every pin it takes outside a [[memo]]
+    * build is unpersisted when it ends, also when it throws (what it
+    * built must not be read afterwards). Earlier pins are left alone.
+    */
+  def inQuery(s: SparkSession)(body: => Unit): QueryPins = {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val q = new Query
+    within(s, q, (_: Unit) => Nil)(body)
+    val leaked = s.sparkContext.getPersistentRDDs.keySet -- before --
+      memos.values.flatMap(rddIds)
+    QueryPins(q.ids.distinct.size, q.released, q.memoHits, leaked.size)
+  }
 
   /** Data-derived partition count for the loop-invariant pinned frames
     * of the iterative algorithms (guide §2.2 "fewer, larger reduce

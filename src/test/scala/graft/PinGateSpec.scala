@@ -20,6 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Every corpus-wide prefix scan is `graft.engine.PrefixScan`: a
   *    hand-built range-partition/offset copy elsewhere has to relearn
   *    its pin-before-both-readers rule (the q287 bug).
+  *  - Every registry query run is `graft.Run` (and the smoke-check
+  *    entry point `SparkEntry.entry`): a main that calls `queries(name)`
+  *    releases none of the query's pins and keeps no record of a failure.
   */
 class PinGateSpec extends AnyFunSuite {
 
@@ -43,7 +46,11 @@ class PinGateSpec extends AnyFunSuite {
     ("spark_partition_id(", """spark_partition_id\(""".r,
       Seq(root.resolve("graft/engine/PrefixScan.scala")),
       "scan with graft.engine.PrefixScan.globalCumSum / globalRank, or " +
-        "range-pin with PrefixScan.rangePin"))
+        "range-pin with PrefixScan.rangePin"),
+    ("registry call queries(", """\bqueries\(""".r,
+      Seq(root.resolve("graft/Run.scala"),
+        root.resolve("graft/SparkEntry.scala")),
+      "run a registry query with graft.Run(spark, sfDir, name, pass)(sink)"))
 
   /** (line number, code) of every line `pattern` matches, comments
     * (`//` tails, `/* … */` blocks, scaladoc) stripped first.

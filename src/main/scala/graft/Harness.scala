@@ -33,7 +33,7 @@ object Harness {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    QuietLogs.suppressAuditedWindowWarning() // r14: see QuietLogs
+    QuietLogs.suppressAuditedWarnings() // see QuietLogs
     graft.functions.GraftExtensions.register(spark)
     spark
   }

@@ -3,6 +3,8 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import graft.functions.Int128Sum
 import PrefixScan.{globalCumSum, globalRank}
 
 /** The small relational glue operators of SURVEY §2.2/§2.5/§2.6 — each a
@@ -61,6 +63,22 @@ object Relational {
     if (gauge.rdd.getNumPartitions >= target) df
     else df.repartition(target, keys: _*)
   }
+
+  /** Σa over an integral column, exact: the 128-bit
+    * [[graft.functions.Int128Sum]] aggregate. It returns what the sum of
+    * `a` cast to `decimal(38,0)` returns (type, NULL on no input, ANSI
+    * overflow error) without that sum's per-row BigDecimal buffer.
+    */
+  def exactSum(a: Column): Column = exactSumOf(a)
+
+  /** Σa·b over integral columns, exact: the `decimal(38,0)` sum of
+    * `a.cast("decimal(38,0)") * b`; see [[exactSum]].
+    */
+  def exactSumProd(a: Column, b: Column): Column = exactSumOf(a, b)
+
+  private def exactSumOf(factors: Column*): Column =
+    Bridge.column(Int128Sum(factors.map(Bridge.expression))
+      .toAggregateExpression())
 
   /** OP-PRJ-1 — bulk column rename applied only to columns that exist
     * (`dataset.py:237-244`: the reference filters the rename map to present
@@ -543,9 +561,9 @@ object Relational {
       // cents² exceeds 2⁶³ and a long sum would WRAP silently
       .agg(count(lit(1)).as("n"), sum(col("__x")).as("sx"),
         sum(col("__y")).as("sy"),
-        sum(col("__x").cast(d38) * col("__y").cast(d38)).as("sxy"),
-        sum(col("__x").cast(d38) * col("__x").cast(d38)).as("sxx"),
-        sum(col("__y").cast(d38) * col("__y").cast(d38)).as("syy"))
+        exactSumProd(col("__x"), col("__y")).as("sxy"),
+        exactSumProd(col("__x"), col("__x")).as("sxx"),
+        exactSumProd(col("__y"), col("__y")).as("syy"))
     val num = col("n").cast(d38) * col("sxy").cast(d38) -
       col("sx").cast(d38) * col("sy").cast(d38)
     val denX = col("n").cast(d38) * col("sxx").cast(d38) -
@@ -778,7 +796,7 @@ object Relational {
       .withColumn("__i", row_number().over(w))
       .groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("n"), sum(col(valCol)).as("sum_x"),
-        sum(col("__i").cast(d38) * col(valCol).cast(d38)).as("__ix"))
+        exactSumProd(col("__i"), col(valCol)).as("__ix"))
       .withColumn("gini", when(col("sum_x") > 0, round(
         (lit(2).cast(d38) * col("__ix") -
           (col("n") + 1).cast(d38) * col("sum_x").cast(d38)).cast("double") /
@@ -1276,21 +1294,15 @@ object Relational {
     } yield (cols(i), cols(j))
     val aggs = pairs.flatMap { case (a, b) =>
       val both = col(a).isNotNull && col(b).isNotNull
-      val x = when(both, col(a)).cast(d38)
-      val y = when(both, col(b)).cast(d38)
+      val x = when(both, col(a))
+      val y = when(both, col(b))
       Seq(count_if(both).as(s"__n_${a}_$b"),
-        sum(x).as(s"__sx_${a}_$b"), sum(y).as(s"__sy_${a}_$b"),
-        sum(x * y).as(s"__sxy_${a}_$b"),
-        sum(x * x).as(s"__sxx_${a}_$b"),
-        sum(y * y).as(s"__syy_${a}_$b"))
+        exactSum(x).as(s"__sx_${a}_$b"), exactSum(y).as(s"__sy_${a}_$b"),
+        exactSumProd(x, y).as(s"__sxy_${a}_$b"),
+        exactSumProd(x, x).as(s"__sxx_${a}_$b"),
+        exactSumProd(y, y).as(s"__syy_${a}_$b"))
     }
-    // r14: the wide-decimal sufficient-stats aggregate is CPU-bound (a
-    // 38-digit sum buffer exceeds the compact-long form, so every update
-    // rewrites BigDecimal bytes in the agg row), and a single-row-group
-    // fixture scan plans only 3 tasks — fan the scan out below the heavy
-    // aggregate (the q357 Gram treatment; no-op at any real scale)
-    val row = fanOut(df.select(cols.map(col): _*))
-      .agg(aggs.head, aggs.tail: _*)
+    val row = df.select(cols.map(col): _*).agg(aggs.head, aggs.tail: _*)
     val stacked = explode(array(pairs.map { case (a, b) =>
       val n = col(s"__n_${a}_$b").cast(d38)
       val sx = col(s"__sx_${a}_$b"); val sy = col(s"__sy_${a}_$b")
@@ -1449,14 +1461,14 @@ object Relational {
       nCol: String): DataFrame = Pins.scoped { s =>
     val d38 = "decimal(38,0)"
     val cells = s.pin(cellsIn.select(col(aCol).as("__a"),
-      col(bCol).as("__b"), col(nCol).cast(d38).as("__n")))
-    val tot = cells.agg(sum(col("__n")).as("__tot"),
-      sum(when(col("__a") === col("__b"), col("__n"))
-        .otherwise(lit(0).cast(d38))).as("__agree"))
+      col(bCol).as("__b"), col(nCol).as("__n")))
+    val tot = cells.agg(exactSum(col("__n")).as("__tot"),
+      exactSum(when(col("__a") === col("__b"), col("__n"))
+        .otherwise(lit(0L))).as("__agree"))
     val ma = cells.groupBy(col("__a").as("__cat"))
-      .agg(sum(col("__n")).as("__ma"))
+      .agg(exactSum(col("__n")).as("__ma"))
     val mb = cells.groupBy(col("__b").as("__cat"))
-      .agg(sum(col("__n")).as("__mb"))
+      .agg(exactSum(col("__n")).as("__mb"))
     val chance = ma.join(mb, Seq("__cat"), "full_outer")
       .agg(sum(coalesce(col("__ma"), lit(0).cast(d38)) *
         coalesce(col("__mb"), lit(0).cast(d38))).as("__s"))
@@ -1484,12 +1496,11 @@ object Relational {
   def partialProfile(df: DataFrame, groupCols: Seq[String],
       cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "need at least one column")
-    val d38 = "decimal(38,0)"
     val aggs = cols.flatMap(c => Seq(
       count(col(c)).as(s"__n_$c"),
       count_if(col(c).isNull).as(s"__nn_$c"),
-      sum(col(c).cast(d38)).as(s"__s_$c"),
-      sum(col(c).cast(d38) * col(c).cast(d38)).as(s"__s2_$c"),
+      exactSum(col(c)).as(s"__s_$c"),
+      exactSumProd(col(c), col(c)).as(s"__s2_$c"),
       min(col(c)).cast("long").as(s"__mn_$c"),
       max(col(c)).cast("long").as(s"__mx_$c")))
     df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
@@ -2023,13 +2034,12 @@ object Relational {
     val p = when(col(postCol) =!= 0, 1).otherwise(0)
     def cell(ti: Int, pi: Int, what: String) = {
       val in = t === ti && p === pi
+      val v = when(in, col(valCol)).otherwise(lit(0L))
       what match {
         case "n" => sum(when(in, 1L).otherwise(0L)).cast(d38)
           .as(s"n$ti$pi")
-        case "s" => sum(when(in, col(valCol).cast(d38))
-          .otherwise(lit(0).cast(d38))).as(s"s$ti$pi")
-        case _ => sum(when(in, col(valCol).cast(d38) * col(valCol))
-          .otherwise(lit(0).cast(d38))).as(s"ss$ti$pi")
+        case "s" => exactSum(v).as(s"s$ti$pi")
+        case _ => exactSumProd(v, v).as(s"ss$ti$pi")
       }
     }
     val cells = for (ti <- Seq(1, 0); pi <- Seq(1, 0);
@@ -2126,10 +2136,8 @@ object Relational {
           .cast(d38).as("sdt"),
         sum(when(z === 0L && col(takeupCol) =!= 0, 1L).otherwise(0L))
           .cast(d38).as("sdc"),
-        sum(when(z === 1L, col(yCol).cast(d38)).otherwise(lit(0)
-          .cast(d38))).as("syt"),
-        sum(when(z === 0L, col(yCol).cast(d38)).otherwise(lit(0)
-          .cast(d38))).as("syc"))
+        exactSum(when(z === 1L, col(yCol)).otherwise(lit(0L))).as("syt"),
+        exactSum(when(z === 0L, col(yCol)).otherwise(lit(0L))).as("syc"))
       .withColumn("__ok", col("nt") > 0 && col("nc") > 0)
       .withColumn("__fsok",
         col("sdt") * col("nc") =!= col("sdc") * col("nt"))
@@ -2750,7 +2758,7 @@ object Relational {
     globalRank(v, Seq(col("__x"), col("__gid")), "__rk")
       .agg(count(lit(1)).as("n_rows"),
         coalesce(sum(col("__x")), lit(0L)).cast("long").as("total"),
-        sum(col("__rk").cast("decimal(38,0)") * col("__x")).as("__s"))
+        exactSumProd(col("__rk"), col("__x")).as("__s"))
       .withColumn("gini_ppm", when(col("n_rows") > 0 && col("total") > 0,
         expr("""__s * 2000000 DIV (CAST(n_rows AS DECIMAL(38,0)) * total)
           - (CAST(n_rows AS DECIMAL(38,0)) + 1) * 1000000 DIV n_rows"""))
@@ -2780,7 +2788,6 @@ object Relational {
     * skew-join class). Everything else is one aggregate.
     */
   def spearmanCorr(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val d38 = "decimal(38,0)"
     val v = Pins.pin(df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).as("__x"), col(yCol).as("__y")))
     def ranks(c: String): DataFrame = {
@@ -2790,12 +2797,12 @@ object Relational {
     }
     val rr = v.join(ranks("__x"), Seq("__x")).join(ranks("__y"), Seq("__y"))
     val stats = rr.agg(count(lit(1)).as("n"),
-      sum(col("__r__x").cast(d38)).as("sx"),
-      sum(col("__r__y").cast(d38)).as("sy"),
-      // cast BEFORE multiply: 2·rank products pass 2⁶³ past ~2.3e9 rows
-      sum(col("__r__x").cast(d38) * col("__r__y").cast(d38)).as("sxy"),
-      sum(col("__r__x").cast(d38) * col("__r__x").cast(d38)).as("sxx"),
-      sum(col("__r__y").cast(d38) * col("__r__y").cast(d38)).as("syy"))
+      exactSum(col("__r__x")).as("sx"),
+      exactSum(col("__r__y")).as("sy"),
+      // 128-bit products: 2·rank products pass 2⁶³ past ~2.3e9 rows
+      exactSumProd(col("__r__x"), col("__r__y")).as("sxy"),
+      exactSumProd(col("__r__x"), col("__r__x")).as("sxx"),
+      exactSumProd(col("__r__y"), col("__r__y")).as("syy"))
     stats.select(col("n"), expr(spearmanRhoSql).as("rho"))
   }
 
@@ -3000,12 +3007,11 @@ object Relational {
     */
   def effectiveSampleSize(df: DataFrame, groupCols: Seq[String],
       weightCol: String): DataFrame = {
-    val d38 = "decimal(38,0)"
     df.filter(col(weightCol).isNotNull && col(weightCol) >= 0)
       .groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).cast("long").as("n"),
-        sum(col(weightCol).cast(d38)).as("__sw"),
-        sum(col(weightCol).cast(d38) * col(weightCol)).as("__sw2"))
+        exactSum(col(weightCol)).as("__sw"),
+        exactSumProd(col(weightCol), col(weightCol)).as("__sw2"))
       .withColumn("sum_w", col("__sw").cast("long"))
       .withColumn("ess", when(col("__sw2") > 0,
         round((col("__sw") * col("__sw")).cast("double") /
@@ -3088,8 +3094,8 @@ object Relational {
     val d38 = "decimal(38,0)"
     val g = df.filter(col(yCol).isNotNull && col(xCol).isNotNull)
       .groupBy(col(groupCol).cast("string").as("__g"))
-      .agg(sum(col(yCol).cast(d38)).as("__yg"),
-        sum(col(xCol).cast(d38)).as("__xg"))
+      .agg(exactSum(col(yCol)).as("__yg"),
+        exactSum(col(xCol)).as("__xg"))
     val tot = g.agg(sum(col("__yg")).as("__y"), sum(col("__xg")).as("__x"),
       count(lit(1)).as("__gn"))
     g.crossJoin(broadcast(tot))
@@ -3098,8 +3104,8 @@ object Relational {
       .agg(max(col("__gn")).cast(d38).as("gn"),
         max(col("__y")).as("__y2"), max(col("__x")).as("__x2"),
         count(col("__r")).as("__gok"),
-        sum(col("__r").cast(d38)).as("sr"),
-        sum(col("__r").cast(d38) * col("__r")).as("sr2"))
+        exactSum(col("__r")).as("sr"),
+        exactSumProd(col("__r"), col("__r")).as("sr2"))
       .select(col("gn").cast("int").as("n_groups"),
         col("__y2").cast("long").as("y_sum"),
         col("__x2").cast("long").as("x_sum"),
@@ -3135,14 +3141,13 @@ object Relational {
   def medianOfMeans(df: DataFrame, idCol: String, valCol: String,
       g: Int = 15): DataFrame = {
     require(g >= 1 && g % 2 == 1, "need odd g >= 1")
-    val d38 = "decimal(38,0)"
     val b = df.filter(col(idCol).isNotNull && col(valCol).isNotNull)
       .select(pmod(graft.functions.PolyHash.polyhash(
           col(idCol).cast("string")) * lit(2654435761L),
         lit(1000000007L)).mod(g).as("__b"),
-        col(valCol).cast(d38).as("__v"))
+        col(valCol).as("__v"))
       .groupBy(col("__b"))
-      .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__n"))
+      .agg(exactSum(col("__v")).as("__s"), count(lit(1)).as("__n"))
       .withColumn("__bm", expr("(__s * 1000000) DIV __n"))
     val tot = b.agg(sum(col("__s")).as("__ts"), sum(col("__n")).as("__tn"),
       count(lit(1)).as("__gn"))
@@ -3318,17 +3323,13 @@ object Relational {
       valCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
     val t = when(col(treatCol) =!= 0, 1L).otherwise(0L)
+    val vt = when(t === 1L, col(valCol)).otherwise(lit(0L))
+    val vc = when(t === 0L, col(valCol)).otherwise(lit(0L))
     df.filter(col(valCol).isNotNull && col(treatCol).isNotNull)
       .groupBy(col(covCol).as("cov"))
       .agg(sum(t).cast(d38).as("nt"), sum(lit(1L) - t).cast(d38).as("nc"),
-        sum(when(t === 1L, col(valCol).cast(d38))
-          .otherwise(lit(0).cast(d38))).as("st"),
-        sum(when(t === 0L, col(valCol).cast(d38))
-          .otherwise(lit(0).cast(d38))).as("sc"),
-        sum(when(t === 1L, col(valCol).cast(d38) * col(valCol))
-          .otherwise(lit(0).cast(d38))).as("sst"),
-        sum(when(t === 0L, col(valCol).cast(d38) * col(valCol))
-          .otherwise(lit(0).cast(d38))).as("ssc"))
+        exactSum(vt).as("st"), exactSum(vc).as("sc"),
+        exactSumProd(vt, vt).as("sst"), exactSumProd(vc, vc).as("ssc"))
       .select(col("cov"), col("nt").cast("long").as("n_t"),
         col("nc").cast("long").as("n_c"),
         when(col("nt") >= 2 && col("nc") >= 2 &&
@@ -3363,20 +3364,17 @@ object Relational {
       zCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
     def s2(a: String, b: String) =
-      sum(col(a).cast(d38) * col(b)).as(s"s_${a}_$b")
-    // fanOut below this aggregate was tried and REVERTED (r14, measured):
-    // unlike the §9 correlationMatrix shape, spreading the GLOBAL decimal
-    // sums un-fuses the partial aggregate from the scan (raw rows cross a
-    // round-robin exchange, the 32-task partial stage read 183 s of task
-    // time for ~1.5 s of fused work) — warm medians went 1.5 → 1.7–7.9 s
-    // erratic. The 21 s cold pass is one-time JIT, which the session's
-    // codegen cache already amortizes across the bench.
+      exactSumProd(col(a), col(b)).as(s"s_${a}_$b")
+    // no fanOut below this aggregate (r14, measured): spreading a GLOBAL
+    // aggregate un-fuses its partial aggregate from the scan (raw rows
+    // cross a round-robin exchange; warm medians went 1.5 → 1.7–7.9 s
+    // erratic); correlationMatrix dropped its fanOut for the same reason
     val agg = df.filter(col(xCol).isNotNull && col(yCol).isNotNull &&
         col(zCol).isNotNull)
       .select(col(xCol).as("x"), col(yCol).as("y"), col(zCol).as("z"))
       .agg(count(lit(1)).cast(d38).as("n"),
-        sum(col("x").cast(d38)).as("sx"), sum(col("y").cast(d38)).as("sy"),
-        sum(col("z").cast(d38)).as("sz"),
+        exactSum(col("x")).as("sx"), exactSum(col("y")).as("sy"),
+        exactSum(col("z")).as("sz"),
         s2("x", "y"), s2("x", "z"), s2("y", "z"),
         s2("x", "x"), s2("y", "y"), s2("z", "z"))
     val rxy = pearsonSql("n", "sx", "sy", "s_x_y", "s_x_x", "s_y_y")
@@ -3464,20 +3462,15 @@ object Relational {
     */
   def cupedEffect(units: DataFrame, treatCol: String, xCol: String,
       yCol: String): DataFrame = {
-    val d38 = "decimal(38,0)"
     val t = when(col(treatCol) =!= 0, 1L).otherwise(0L)
     units.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .agg(sum(t).as("nt"), sum(lit(1L) - t).as("nc"),
-        sum(when(t === 1L, col(xCol).cast(d38)).otherwise(lit(0)
-          .cast(d38))).as("sxt"),
-        sum(when(t === 0L, col(xCol).cast(d38)).otherwise(lit(0)
-          .cast(d38))).as("sxc"),
-        sum(when(t === 1L, col(yCol).cast(d38)).otherwise(lit(0)
-          .cast(d38))).as("syt"),
-        sum(when(t === 0L, col(yCol).cast(d38)).otherwise(lit(0)
-          .cast(d38))).as("syc"),
-        sum(col(xCol).cast(d38) * col(yCol)).as("sxy"),
-        sum(col(xCol).cast(d38) * col(xCol)).as("sxx"))
+        exactSum(when(t === 1L, col(xCol)).otherwise(lit(0L))).as("sxt"),
+        exactSum(when(t === 0L, col(xCol)).otherwise(lit(0L))).as("sxc"),
+        exactSum(when(t === 1L, col(yCol)).otherwise(lit(0L))).as("syt"),
+        exactSum(when(t === 0L, col(yCol)).otherwise(lit(0L))).as("syc"),
+        exactSumProd(col(xCol), col(yCol)).as("sxy"),
+        exactSumProd(col(xCol), col(xCol)).as("sxx"))
       .withColumn("__ok", col("nt") > 0 && col("nc") > 0 &&
         (col("nt") + col("nc")) * col("sxx") -
           (col("sxt") + col("sxc")) * (col("sxt") + col("sxc")) > 0)
@@ -3646,7 +3639,7 @@ object Relational {
       .agg(sum(col("__r2")).as("__R2"), count(lit(1)).as("__bt"))
     byT.agg(count(lit(1)).cast("int").as("k"),
         max(col("__bt")).as("b"),
-        coalesce(sum(col("__R2").cast(d38) * col("__R2")), lit(0L).cast(d38))
+        coalesce(exactSumProd(col("__R2"), col("__R2")), lit(0L).cast(d38))
           .as("r2_sq_sum"))
       .withColumn("chi2_f", when(col("k") > 1 && col("b") > 0, round(
         col("r2_sq_sum").cast("double") * 3 /
@@ -3883,7 +3876,6 @@ object Relational {
     */
   def calibrationReport(df: DataFrame, probPpmCol: String,
       outcomeCol: String, bins: Int = 10): DataFrame = {
-    val d38 = "decimal(38,0)"
     val rows = df.filter(col(probPpmCol).isNotNull &&
         col(outcomeCol).isNotNull)
       .select(col(probPpmCol).cast("long").as("__p"),
@@ -3894,14 +3886,14 @@ object Relational {
       .groupBy(col("__bin"))
       .agg(count(lit(1)).as("n"), sum(col("__p")).as("__sp"),
         sum(col("__yy")).as("__sy"),
-        sum((col("__p") - col("__yy") * 1000000L).cast(d38) *
-          (col("__p") - col("__yy") * 1000000L)).as("__sq"))
+        exactSumProd(col("__p") - col("__yy") * 1000000L,
+          col("__p") - col("__yy") * 1000000L).as("__sq"))
       .withColumn("conf_ppm", expr("__sp DIV n"))
       .withColumn("acc_ppm", expr("__sy * 1000000L DIV n"))
       .withColumn("gap_ppm", abs(col("conf_ppm") - col("acc_ppm")))
     val glob = byBin.agg(sum(col("n")).as("__N"),
         sum(col("__sq")).as("__SQ"),
-        sum(col("n").cast(d38) * col("gap_ppm")).as("__G"))
+        exactSumProd(col("n"), col("gap_ppm")).as("__G"))
       .select(expr("CAST(__G DIV __N AS BIGINT)").as("ece_ppm"),
         expr("CAST(__SQ DIV (CAST(__N AS DECIMAL(38,0)) * 1000000) " +
           "AS BIGINT)").as("brier_micro"))
@@ -4026,7 +4018,7 @@ object Relational {
     maxima.agg(count(lit(1)).as("n_blocks"), max(col("__m"))
         .as("max_of_max"),
         sum(col("__m")).as("__S"),
-        sum(col("__m").cast(d38) * col("__m")).as("__Q"))
+        exactSumProd(col("__m"), col("__m")).as("__Q"))
       .withColumn("__D", col("n_blocks").cast(d38) * col("__Q")
         - col("__S").cast(d38) * col("__S"))
       .withColumn("beta", when(col("__D") > 0, round(
@@ -4076,7 +4068,7 @@ object Relational {
         "feed a calendar-grain series or raise maxSeries deliberately")
     val t0g = series.agg(min(col("__t")).as("__t0"),
       count(lit(1)).as("__n"), sum(col("__xv")).as("__S"),
-      sum(col("__xv").cast(d38) * col("__xv")).as("__Q"))
+      exactSumProd(col("__xv"), col("__xv")).as("__Q"))
     val segs = series.crossJoin(broadcast(t0g))
       .withColumn("__seg", expr("(__t - __t0) DIV " + segLen))
       .groupBy(col("__seg"))
@@ -4674,11 +4666,11 @@ object Relational {
     val d38 = "decimal(38,0)"
     val g = cells.agg(count(lit(1)).as("__N"),
       sum(col("__x")).as("__S"),
-      sum(col("__x").cast(d38) * col("__x")).as("__Q"))
+      exactSumProd(col("__x"), col("__x")).as("__Q"))
     val p = pairs.agg(count(lit(1)).as("__W"),
-      coalesce(sum(col("__xi").cast(d38) * col("__xj")), lit(0).cast(d38))
+      coalesce(exactSumProd(col("__xi"), col("__xj")), lit(0).cast(d38))
         .as("__P"),
-      coalesce(sum((col("__xi") + col("__xj")).cast(d38)),
+      coalesce(exactSum(col("__xi") + col("__xj")),
         lit(0).cast(d38)).as("__T"))
     g.crossJoin(p)
       .withColumn("__num", col("__N").cast(d38) * col("__N") * col("__P")
@@ -4711,7 +4703,7 @@ object Relational {
   def getisOrdGi(cells: DataFrame, pairs: DataFrame): DataFrame = {
     val d38 = "decimal(38,0)"
     val g = cells.agg(count(lit(1)).as("__N"), sum(col("__x")).as("__S"),
-      sum(col("__x").cast(d38) * col("__x")).as("__Q"))
+      exactSumProd(col("__x"), col("__x")).as("__Q"))
     val nbr = pairs.groupBy(col("__gx"), col("__gy"))
       .agg(count(lit(1)).as("__nn"), sum(col("__xj")).as("__sn"))
     cells.join(nbr, Seq("__gx", "__gy"), "left")
@@ -4806,7 +4798,7 @@ object Relational {
       .withColumn("__blk", expr("(__t - __t0) DIV __bs"))
     val byBlk = sized.groupBy(col("__bs"), col("__blk"))
       .agg(count(lit(1)).as("__c"), sum(col("__xv")).as("__Sb"),
-        sum(col("__xv").cast(d38) * col("__xv")).as("__Qb"))
+        exactSumProd(col("__xv"), col("__xv")).as("__Qb"))
       .filter(col("__c") === col("__bs"))
     val w = Window.partitionBy(col("__bs"), col("__blk"))
       .orderBy(col("__t"))
@@ -4894,7 +4886,7 @@ object Relational {
       marg.crossJoin(broadcast(tot))
         .withColumn("__t", expr(
           s"CAST(round((ln(n) - ln($cCol)) * 1000000) AS BIGINT)"))
-        .agg(coalesce(sum(col(cCol).cast(d38) * col("__t")),
+        .agg(coalesce(exactSumProd(col(cCol), col("__t")),
           lit(0).cast(d38)).as(outCol))
     val hx = entropyMicro(margX, "__cx", "__hsx")
     val hy = entropyMicro(margY, "__cy", "__hsy")
@@ -4904,7 +4896,7 @@ object Relational {
       .withColumn("__t", expr(
         "CAST(round((ln(n) + ln(__c) - ln(__cx) - ln(__cy)) * 1000000) " +
           "AS BIGINT)"))
-      .agg(coalesce(sum(col("__c").cast(d38) * col("__t")),
+      .agg(coalesce(exactSumProd(col("__c"), col("__t")),
         lit(0).cast(d38)).as("__ms"))
     tot.crossJoin(hx).crossJoin(hy).crossJoin(mi)
       .select(col("n"),
@@ -4943,15 +4935,14 @@ object Relational {
       .filter(col(groupCol).isin(groupA, groupB))
       .select(col(groupCol).as("__g"), col(xCol).cast("long").as("__v"))
     val isA = col("__g") === groupA
+    val va = when(isA, col("__v")).otherwise(0L)
+    val vb = when(!isA, col("__v")).otherwise(0L)
     base.agg(
         sum(when(isA, 1L).otherwise(0L)).as("n_a"),
         sum(when(!isA, 1L).otherwise(0L)).as("n_b"),
         sum(when(isA, col("__v")).otherwise(0L)).as("__sa"),
         sum(when(!isA, col("__v")).otherwise(0L)).as("__sb"),
-        sum(when(isA, col("__v").cast(d38) * col("__v"))
-          .otherwise(lit(0).cast(d38))).as("__qa"),
-        sum(when(!isA, col("__v").cast(d38) * col("__v"))
-          .otherwise(lit(0).cast(d38))).as("__qb"))
+        exactSumProd(va, va).as("__qa"), exactSumProd(vb, vb).as("__qb"))
       .withColumn("__vna",
         col("n_a").cast(d38) * col("__qa") -
           col("__sa").cast(d38) * col("__sa"))
@@ -5044,7 +5035,7 @@ object Relational {
       .agg(sum(col(wCol).cast("long")).as("__w")))
     val tot = byKey.agg(count(lit(1)).as("n_keys"),
       coalesce(sum(col("__w")), lit(0L)).as("w_total"),
-      coalesce(sum(col("__w").cast(d38) * col("__w")),
+      coalesce(exactSumProd(col("__w"), col("__w")),
         lit(0).cast(d38)).as("__sq"))
     val top = byKey.orderBy(col("__w").desc, col("__k").asc)
       .limit(topK)
@@ -5092,11 +5083,11 @@ object Relational {
       .select(col("__it"), col("__r")))
     val rows = kept.agg(count(lit(1)).as("n_items"),
       coalesce(sum(col("__r")), lit(0L)).as("n_success"),
-      coalesce(sum(col("__r").cast(d38) * col("__r")),
+      coalesce(exactSumProd(col("__r"), col("__r")),
         lit(0).cast(d38)).as("__sr2"))
     val cols = cell.join(kept.select(col("__it")), Seq("__it"))
       .groupBy(col("__tr")).agg(sum(col("__s")).as("__cj"))
-      .agg(coalesce(sum(col("__cj").cast(d38) * col("__cj")),
+      .agg(coalesce(exactSumProd(col("__cj"), col("__cj")),
         lit(0).cast(d38)).as("__sc2"))
     rows.crossJoin(cols).crossJoin(kf)
       .withColumn("__den",
@@ -5199,12 +5190,12 @@ object Relational {
       .select(col("__id"), col("__t")))
     val nRow = kept.agg(count(lit(1)).as("n_subjects"),
       coalesce(sum(col("__t")), lit(0L)).as("__st"),
-      coalesce(sum(col("__t").cast(d38) * col("__t")),
+      coalesce(exactSumProd(col("__t"), col("__t")),
         lit(0).cast(d38)).as("__qt"))
     val items = cell.join(kept.select(col("__id")), Seq("__id"))
       .groupBy(col("__itm"))
       .agg(sum(col("__v")).as("__si"),
-        sum(col("__v").cast(d38) * col("__v")).as("__qi"))
+        exactSumProd(col("__v"), col("__v")).as("__qi"))
     val itemVar = items.crossJoin(broadcast(
         nRow.select(col("n_subjects").as("__n2"))))
       .agg(coalesce(sum(col("__n2").cast(d38) * col("__qi") -
@@ -5240,11 +5231,11 @@ object Relational {
       .groupBy(col(groupCol).as("__g"))
       .agg(count(lit(1)).as("__m"),
         sum(col(xCol).cast("long")).as("__s"),
-        sum(col(xCol).cast(d38) * col(xCol).cast("long")).as("__q"))
+        exactSumProd(col(xCol), col(xCol)).as("__q"))
       .filter(col("__m") === k.toLong)
     per.agg(count(lit(1)).as("n_groups"),
         coalesce(sum(col("__s")), lit(0L)).as("__t"),
-        coalesce(sum(col("__s").cast(d38) * col("__s")),
+        coalesce(exactSumProd(col("__s"), col("__s")),
           lit(0).cast(d38)).as("__a"),
         coalesce(sum(col("__q")), lit(0).cast(d38)).as("__qq"))
       .withColumn("__nn", col("n_groups") * k.toLong)

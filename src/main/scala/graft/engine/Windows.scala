@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Relational.{exactSum, exactSumProd}
 
 /** OP-WIN-1 sliding feature windows and OP-AGG-3 spatial coarsening. */
 object Windows {
@@ -880,14 +881,15 @@ object Windows {
     val paired = df
       .withColumn("__y", lag(col(valCol), lagK).over(w))
       .filter(col(valCol).isNotNull && col("__y").isNotNull)
-      .select(keyCols.map(col) :+ col(valCol).cast(d38).as("__x") :+
-        col("__y").cast(d38).as("__y"): _*)
+      .select(keyCols.map(col) :+ col(valCol).as("__x") :+
+        col("__y"): _*)
     paired.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("n_pairs"),
-        sum(col("__x")).as("__sx"), sum(col("__y")).as("__sy"),
-        sum(col("__x") * col("__y")).as("__sxy"),
-        sum(col("__x") * col("__x")).as("__sxx"),
-        sum(col("__y") * col("__y")).as("__syy"))
+        exactSum(col("__x")).as("__sx"),
+        exactSum(col("__y")).as("__sy"),
+        exactSumProd(col("__x"), col("__y")).as("__sxy"),
+        exactSumProd(col("__x"), col("__x")).as("__sxx"),
+        exactSumProd(col("__y"), col("__y")).as("__syy"))
       .withColumn("__n", col("n_pairs").cast(d38))
       .withColumn("__dx", col("__n") * col("__sxx") - col("__sx") * col("__sx"))
       .withColumn("__dy", col("__n") * col("__syy") - col("__sy") * col("__sy"))
@@ -924,7 +926,7 @@ object Windows {
         (uMicros(col(timeCol)) - col("__prev")).as("__g"))
     gaps.groupBy(col("group"))
       .agg(count(lit(1)).as("n_gaps"), sum(col("__g")).as("__S"),
-        sum(col("__g").cast(d38) * col("__g")).as("__Q"))
+        exactSumProd(col("__g"), col("__g")).as("__Q"))
       .withColumn("__D", col("n_gaps").cast(d38) * col("__Q")
         - col("__S").cast(d38) * col("__S"))
       .withColumn("mean_gap_us", expr("__S DIV n_gaps"))
@@ -962,23 +964,21 @@ object Windows {
       .orderBy(orderCols.map(col): _*)
     val lagged = df.filter(col(valCol).isNotNull)
       .select(keyCols.map(col) ++ orderCols.map(col) :+
-        col(valCol).cast(d38).as("__x"): _*)
+        col(valCol).as("__x"): _*)
       .withColumn("__y1", lag(col("__x"), 1).over(w))
       .withColumn("__y2", lag(col("__x"), 2).over(w))
       .withColumn("__y3", lag(col("__x"), 3).over(w))
     def statsFor(k: Int): Seq[Column] = {
-      val y = col(s"__y$k")
-      val m = y.isNotNull
+      val m = col(s"__y$k").isNotNull
+      val x = when(m, col("__x")).otherwise(lit(0L))
+      val y = when(m, col(s"__y$k")).otherwise(lit(0L))
       Seq(
         sum(when(m, 1L).otherwise(0L)).as(s"__n$k"),
-        sum(when(m, col("__x")).otherwise(lit(0).cast(d38)))
-          .as(s"__sx$k"),
-        sum(when(m, y).otherwise(lit(0).cast(d38))).as(s"__sy$k"),
-        sum(when(m, col("__x") * y).otherwise(lit(0).cast(d38)))
-          .as(s"__sxy$k"),
-        sum(when(m, col("__x") * col("__x"))
-          .otherwise(lit(0).cast(d38))).as(s"__sxx$k"),
-        sum(when(m, y * y).otherwise(lit(0).cast(d38))).as(s"__syy$k"))
+        exactSum(x).as(s"__sx$k"),
+        exactSum(y).as(s"__sy$k"),
+        exactSumProd(x, y).as(s"__sxy$k"),
+        exactSumProd(x, x).as(s"__sxx$k"),
+        exactSumProd(y, y).as(s"__syy$k"))
     }
     val allStats = (1 to 3).flatMap(statsFor)
     val agg = lagged.groupBy(keyCols.map(col): _*)
@@ -1556,17 +1556,18 @@ object Windows {
       .orderBy(orderCols.map(col): _*)
     val lagged = (1 to maxLag).foldLeft(
       df.filter(col(valCol).isNotNull)
-        .withColumn("__x", col(valCol).cast(d38))) { (acc, k) =>
+        .withColumn("__x", col(valCol))) { (acc, k) =>
       acc.withColumn(s"__l$k", lag(col("__x"), k).over(w))
     }
     val aggs = Seq(count(lit(1)).cast(d38).as("__n"),
-      sum(col("__x")).as("__s"),
-      sum(col("__x") * col("__x")).as("__ss")) ++
+      exactSum(col("__x")).as("__s"),
+      exactSumProd(col("__x"), col("__x")).as("__ss")) ++
       (1 to maxLag).flatMap { k =>
-        Seq(sum(col("__x") * col(s"__l$k")).as(s"__sxy$k"),
-          sum(when(col(s"__l$k").isNotNull, col("__x"))).as(s"__t$k"),
-          sum(when(col(s"__l$k").isNotNull, col(s"__l$k")))
-            .as(s"__h$k"))
+        Seq(exactSumProd(col("__x"), col(s"__l$k"))
+            .as(s"__sxy$k"),
+          exactSum(when(col(s"__l$k").isNotNull, col("__x")))
+            .as(s"__t$k"),
+          exactSum(col(s"__l$k")).as(s"__h$k"))
       }
     val g = lagged.groupBy(keyCols.map(col): _*).agg(aggs.head,
       aggs.tail: _*)
@@ -1677,8 +1678,8 @@ object Windows {
       .withColumn("__dy", col("__y") - lag(col("__y"), 1).over(w))
     val g = rows.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).cast(d38).as("__n"),
-        sum(col("__y")).as("__sy"),
-        sum(col("__y") * col("__y")).as("__syy"),
+        exactSum(col(valCol)).as("__sy"),
+        exactSumProd(col(valCol), col(valCol)).as("__syy"),
         sum(col("__T") * col("__y")).as("__B"),
         sum(col("__T") * col("__T")).as("__D"),
         sum(col("__dy")).as("__sdy"),

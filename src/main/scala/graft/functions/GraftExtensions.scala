@@ -58,6 +58,14 @@ object GraftExtensions {
         require(args.size == 1, "subword_count(str)")
         SubwordCount(args.head)
       }),
+    ("exact_sum",
+      info("exact_sum",
+        "exact_sum(a[, b]) - exact 128-bit Σa or Σa·b over integral " +
+          "arguments as decimal(38,0)"),
+      (args: Seq[Expression]) => {
+        require(args.size == 1 || args.size == 2, "exact_sum(a[, b])")
+        Int128Sum(args)
+      }),
     ("dot",
       info("dot",
         "dot(arr, arr) - sequential double dot product of numeric arrays"),

@@ -7,6 +7,7 @@ import graft.functions.PolyHash.polyhash
 import graft.functions.TokenNgrams.tokenNgrams
 import graft.engine.Pins
 import graft.engine.PrefixScan.globalCumSum
+import graft.engine.Relational.exactSumProd
 
 /** Corpus-level curation operators a large-scale training-data run needs
   * beyond per-document filters: cross-document line deduplication (the
@@ -873,7 +874,7 @@ object Curation {
     val stats = grid.groupBy(col("__w"))
       .agg(count(lit(1)).as("__d"),
         sum(col("__f")).cast(d38).as("__sf"),
-        sum(col("__f").cast(d38) * col("__f")).as("__sff"))
+        exactSumProd(col("__f"), col("__f")).as("__sff"))
       .withColumn("__varnum",
         expr(s"CAST(__d AS $d38) * __sff - __sf * __sf"))
       .select(col("__w"), col("__d"), col("__varnum"))
@@ -931,7 +932,7 @@ object Curation {
       .groupBy(col("__w"))
       .agg(count(lit(1)).as("df"),
         sum(col("__c")).as("total"),
-        sum(col("__c").cast(d38) * col("__c")).as("__cc2"))
+        exactSumProd(col("__c"), col("__c")).as("__cc2"))
       .crossJoin(broadcast(dRow))
       .withColumn("vmr_micro", expr(
         s"CAST((CAST(__D AS $d38) * __cc2 " +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.Pins
+import graft.engine.Relational.exactSum
 
 /** Lexical (sparse) retrieval operators: per-document TF-IDF keyword
   * extraction and BM25 ranked search — the term-statistics complement to
@@ -612,8 +613,8 @@ object Lexical {
     dg.join(model, Seq("gram"))
       .groupBy(col("__id"))
       .agg(sum(col("__cnt")).cast("long").as("n_bigrams"),
-        sum((col("__cnt") * col("__nll")).cast("decimal(38,0)"))
-          .cast("long").as("nll_micro_sum"))
+        exactSum(col("__cnt") * col("__nll")).cast("long")
+          .as("nll_micro_sum"))
       .withColumn("nll_micro_avg", expr("nll_micro_sum DIV n_bigrams"))
       .select(col("__id").as(idCol), col("n_bigrams"),
         col("nll_micro_sum"), col("nll_micro_avg"))
@@ -964,8 +965,8 @@ object Lexical {
         sum(col("__cnt")).cast("long").as("n_bigrams"),
         sum(when(col("__c2") === 0L, col("__cnt")).otherwise(0L))
           .cast("long").as("n_unseen"),
-        sum((col("__cnt") * col("__nll")).cast("decimal(38,0)"))
-          .cast("long").as("nll_micro_sum"))
+        exactSum(col("__cnt") * col("__nll")).cast("long")
+          .as("nll_micro_sum"))
       .withColumn("nll_micro_avg", expr("nll_micro_sum DIV n_bigrams"))
       .select(col("__split").as(splitCol), col("n_docs"),
         col("n_bigrams"), col("n_unseen"), col("nll_micro_sum"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Pins
+import graft.engine.Relational.{exactSum, exactSumProd}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`ARRAY<FLOAT>`): brute-force cosine top-k as the exact baseline, and a
@@ -151,7 +152,7 @@ object Similarity {
       .select(col("__i"), col("__xi"),
         posexplode(col("__q")).as(Seq("__j", "__xj")))
       .groupBy(col("__i"), col("__j"))
-      .agg(sum((col("__xi") * col("__xj")).cast(d38)).as("__a")))
+      .agg(exactSum(col("__xi") * col("__xj")).as("__a")))
     val dims = gram.select(col("__i").as("dim")).distinct()
     var v = dims.withColumn("__v", lit(1000000L).cast(d38))
     var lastNorm: DataFrame = null
@@ -230,7 +231,7 @@ object Similarity {
       .select(col("__i"), col("__ui"),
         posexplode(col("__v")).as(Seq("__j", "__vj")))
       .groupBy(col("__i"), col("__j"))
-      .agg(sum((col("__ui") * col("__vj")).cast(d38)).as("__g"))
+      .agg(exactSum(col("__ui") * col("__vj")).as("__g"))
     // d-vector column sums + n in one pass
     val sums = s.pin(staged
       .select(posexplode(col("__x")).as(Seq("__i", "__xi")),
@@ -269,17 +270,16 @@ object Similarity {
 
   def isotropyReport(df: DataFrame,
       vecCol: String): DataFrame = Pins.scoped { s =>
-    val d38 = "decimal(38,0)"
     val base = s.pin(df.filter(col(vecCol).isNotNull)
       .select(posexplode(col(vecCol)).as(Seq("__i", "__x")))
       .withColumn("__q",
         expr("CAST(round(CAST(__x AS DOUBLE) * 1000000) AS BIGINT)")))
     val perDim = base.groupBy(col("__i"))
-      .agg(sum(col("__q").cast(d38)).as("__s"))
+      .agg(exactSum(col("__q")).as("__s"))
       .agg(count(lit(1)).as("dims"),
         sum(col("__s") * col("__s")).as("__s2"))
     val tot = base.agg(
-      sum(col("__q").cast(d38) * col("__q")).as("__t"))
+      exactSumProd(col("__q"), col("__q")).as("__t"))
     val n = df.filter(col(vecCol).isNotNull)
       .agg(count(lit(1)).as("n"))
     n.crossJoin(broadcast(perDim)).crossJoin(broadcast(tot))
@@ -948,12 +948,15 @@ object Similarity {
     */
   def recallAtK(truth: DataFrame, approx: DataFrame, queryIdCol: String,
       neighborIdCol: String, k: Int): DataFrame = {
+    // broadcast both queries×k sides: left to AQE, the join strategy
+    // (and so the job count) depended on which concurrently submitted
+    // stage finished first
     val hits = truth.select(col(queryIdCol), col(neighborIdCol))
-      .join(approx.select(col(queryIdCol), col(neighborIdCol)),
+      .join(broadcast(approx.select(col(queryIdCol), col(neighborIdCol))),
         Seq(queryIdCol, neighborIdCol), "left_semi")
       .groupBy(col(queryIdCol)).agg(count(lit(1)).as("n_hits"))
     truth.select(col(queryIdCol)).distinct()
-      .join(hits, Seq(queryIdCol), "left")
+      .join(broadcast(hits), Seq(queryIdCol), "left")
       .select(col(queryIdCol),
         coalesce(col("n_hits"), lit(0L)).cast("int").as("n_hits"),
         round(coalesce(col("n_hits"), lit(0L)).cast("double") / k, 6)

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import PrefixScan.globalRank
 
@@ -16,8 +16,112 @@ import PrefixScan.globalRank
   * exactly the q124/q154 rounding-trap class. Integer sums are exact and
   * commutative, so every engine that mirrors the formula lands on
   * identical ranks bit-for-bit.
+  *
+  * Every operator starts from one of two edge normal forms, [[directed]]
+  * or [[undirected]]; both drop an edge with a null endpoint, so no
+  * operator reports a null node. The loop shapes are one private kernel
+  * each: [[push]] (PageRank, personalized PageRank, Katz), [[bfsRounds]]
+  * (bfsHops, pseudoDiameter, multiSourceBfs), [[triangles]]
+  * (triangleCounts, edgeTriangleSupport) and [[wedgePairs]]
+  * (neighborJaccard, resourceAllocation, adamicAdar).
   */
 object Graph {
+
+  /** Canonical directed edge list `(src, dst)`: edges with a null
+    * endpoint dropped, duplicates collapsed. The normal form every
+    * directed algorithm below starts from.
+    */
+  private def directed(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .distinct()
+
+  /** Canonical undirected edge list: endpoints ordered `u < v`, self-loops
+    * (and edges with a null endpoint — Spark's `least`/`greatest` skip
+    * nulls, collapsing such an edge to a self-loop) dropped, duplicates
+    * collapsed. The normal form every undirected algorithm below starts
+    * from.
+    */
+  private def undirected(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(least(col(srcCol), col(dstCol)).as("u"),
+        greatest(col(srcCol), col(dstCol)).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+
+  /** The neighbor list `(n, m)` of an undirected `(u, v)` frame: every
+    * edge in both directions, in one explode pass.
+    */
+  private def neighbors(e: DataFrame): DataFrame =
+    e.select(explode(array(
+        struct(col("u").as("n"), col("v").as("m")),
+        struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
+      .select(col("__nm.n").as("n"), col("__nm.m").as("m"))
+
+  /** Undirected degrees `(n, d)` of a `(u, v)` frame. Both endpoints
+    * explode in ONE pass — a two-branch union re-executes the edge
+    * canonicalization distinct once per branch (A/B measured on the
+    * sf0.1 co-purchase graph, same session: 6.1 → 3.9 s cold, 3.2 →
+    * 2.6 s steady-state).
+    */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(explode(array(col("u"), col("v"))).as("n"))
+      .groupBy("n").agg(count(lit(1)).as("d"))
+
+  /** The distinct node ids `(id)` of an edge frame's two endpoint
+    * columns. */
+  private def nodeIds(e: DataFrame, a: String, b: String): DataFrame =
+    e.select(explode(array(col(a), col(b))).as("id")).distinct()
+
+  /** The push-iteration loop: `iters` synchronous rounds of a value
+    * column `v` over the node frame `nodes` (`id`, plus whatever
+    * `update` reads), starting at `init`. Each round joins the current
+    * `(id, v)` frame to the src-keyed loop edge frame `e`, sends `send`
+    * along every edge, sums it per destination into `__s` and left-joins
+    * the sums onto `nodes` (`__s` is null where nothing arrived), where
+    * `update` gives the next value — one src-keyed join plus one
+    * dst-keyed aggregate, the minimal two-exchange round a synchronous
+    * push model admits. `nodes` and `e` are the caller's loop-invariant
+    * pins, partitioned and sorted on their join keys (r13: pins keep
+    * output ordering, so every round's sort-merge join skips re-sorting
+    * the big side; guide §2.4 "establish the partitioning once"), at the
+    * data-derived partition count (r14, [[Pins.loopParts]]: AQE cannot
+    * coalesce an exchange that must co-partition with a pinned frame,
+    * and rounds × sessionParts near-empty tasks was the measured bulk of
+    * this family at sf0.1). Callers return the last round under a scoped
+    * pin, which truncates the iters-deep lineage.
+    */
+  private def push(nodes: DataFrame, e: DataFrame, v: String, init: Column,
+      iters: Int)(send: Column, update: Column): DataFrame = {
+    var x = nodes.select(col("id"), init.as(v))
+    for (_ <- 1 to iters) {
+      val in = e
+        .join(x.withColumnRenamed("id", "src"), "src")
+        .select(col("dst").as("id"), send.as("__c"))
+        .groupBy("id").agg(sum(col("__c")).as("__s"))
+      x = nodes.join(in, Seq("id"), "left").select(col("id"), update.as(v))
+    }
+    x
+  }
+
+  /** PageRank's [[push]] rounds over the pinned directed edge frame `e`:
+    * every node with teleport weight `seed` (the literal 1, or a 0/1
+    * column of `nodes`) starts with `seed · 10⁶`, sends `rank DIV
+    * outdeg` along every out-edge and collects `seed · (100 − dampPct)
+    * · 10⁴ + (dampPct · Σ incoming) DIV 100`. The edge list is joined to its out-degree
+    * frame ONCE up-front and pinned pre-partitioned on `src`.
+    */
+  private def rankRounds(s: Pins.Scope, e: DataFrame, nodes: DataFrame,
+      np: Int, seed: Column, iters: Int, dampPct: Int): DataFrame = {
+    val withDeg = s.loopCache(e.join(
+      e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"), "src", np)
+    val base = (100L - dampPct) * 10000L
+    push(nodes, withDeg, "rank", seed * 1000000L, iters)(
+      expr("rank DIV outdeg"),
+      seed * base +
+        expr(s"($dampPct * coalesce(__s, CAST(0 AS BIGINT))) DIV 100"))
+  }
 
   /** PageRank, `iters` synchronous rounds, ranks in ppm of one unit
     * (rank₀ = 1,000,000 per node). Per round, each node sends
@@ -29,17 +133,12 @@ object Graph {
     * probability (redistribution would add an all-nodes broadcast per
     * round for no ordering change).
     *
-    * Scale shape: the edge list is joined to the degree frame ONCE
-    * up-front (one shuffle on src) and PINNED together with the node
-    * list — every round's plan embeds the previous rounds' lineage, so
-    * without the cache the edge derivation (often a join + distinct over
-    * the fact tables) re-executes once per round per ancestor
-    * (measured: 6.7 s → 2.x s for 3 rounds over a 485k-edge graph at
-    * sf0.1). Each round is then one src-keyed join (rank is node-grain)
-    * + one dst-keyed aggregate — the minimal two-exchange round a
-    * synchronous push model admits. The final rank is materialized with
-    * a scoped pin (docs/SCALE.md "Caching policy"), which also
-    * truncates the iters-deep lineage for whatever runs downstream.
+    * Scale shape: the [[push]] loop. The edge list, the edge+degree
+    * frame and the node list are PINNED before the first round — every
+    * round's plan embeds the previous rounds' lineage, so without the
+    * pins the edge derivation (often a join + distinct over the fact
+    * tables) re-executes once per round per ancestor (measured: 6.7 s →
+    * 2.x s for 3 rounds over a 485k-edge graph at sf0.1).
     */
   def pageRankPpm(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, dampPct: Int = 85): DataFrame = Pins.scoped { s =>
@@ -47,36 +146,11 @@ object Graph {
     require(dampPct >= 0 && dampPct <= 100, "dampPct is a percentage")
     // e is read four times just to BUILD the two loop frames (src/dst
     // union for nodes, edge+degree for withDeg)
-    val e = s.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct())
-    // both loop-invariant frames are pinned ALREADY PARTITIONED AND
-    // SORTED on their join keys (r13: pins keep output ordering, so
-    // every round's sort-merge join skips re-sorting the
-    // big side — previously each round re-sorted the edge frame; guide
-    // §2.4 "establish the partitioning once"), at the DATA-derived
-    // partition count (r14, Pins.loopParts: the pin's count is
-    // the per-round task count — AQE cannot coalesce an exchange that
-    // must co-partition with a pinned frame, and rounds × sessionParts
-    // near-empty tasks was the measured bulk of this family at sf0.1).
+    val e = s.pin(directed(edges, srcCol, dstCol))
     val np = Pins.loopParts(e)
-    val nodes = s.loopCache(
-      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
-      "id", np, skipIfSession = true)
-    val withDeg = s.loopCache(e.join(
-      e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"), "src", np)
-    val base = (100L - dampPct) * 10000L
-    var rank = nodes.withColumn("rank", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val in = withDeg
-        .join(rank.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr("rank DIV outdeg").as("__c"))
-        .groupBy("id").agg(sum(col("__c")).as("__s"))
-      rank = nodes.join(in, Seq("id"), "left")
-        .select(col("id"), (lit(base) +
-          expr(s"($dampPct * coalesce(__s, CAST(0 AS BIGINT))) DIV 100"))
-          .as("rank"))
-    }
-    rank
+    val nodes = s.loopCache(nodeIds(e, "src", "dst"), "id", np,
+      skipIfSession = true)
+    rankRounds(s, e, nodes, np, lit(1L), iters, dampPct)
   }
 
   /** Katz centrality in exact integer ppm (Katz 1953): attenuated walk
@@ -98,17 +172,15 @@ object Graph {
     * logs a warning naming the offending max in-degree when it ties or
     * beats `attenDiv`. Output: `(id, katz)` for every node.
     *
-    * Scale: the [[pageRankPpm]] loop shape minus the degree join —
-    * loop-invariant edge frame pinned pre-partitioned on src, one
-    * inflow aggregate per round; the convergence check is one 1-row
-    * driver read of the pinned edge frame (the timeBounds class).
+    * Scale: the [[push]] loop over the edge frame itself (no degree
+    * join); the convergence check is one 1-row driver read of the
+    * pinned edge frame (the timeBounds class).
     */
   def katzCentralityPpm(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, attenDiv: Int = 8): DataFrame = Pins.scoped { s =>
     require(iters >= 1, "need at least one round")
     require(attenDiv >= 2, "attenuation divisor must be >= 2")
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
+    val e0 = directed(edges, srcCol, dstCol)
     val np = Pins.loopParts(e0)
     val e = s.loopCache(e0, "src", np)
     val maxInDeg = e.groupBy(col("dst")).agg(count(lit(1)).as("__d"))
@@ -120,21 +192,11 @@ object Graph {
         s"$maxInDeg >= attenDiv $attenDiv - the attenuated-walk series " +
         s"DIVERGES; the output is the iters=$iters truncated partial " +
         "sum (exact), not a converged centrality")
-    val nodes = s.loopCache(
-      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
-      "id", np, skipIfSession = true)
-    var x = nodes.withColumn("katz", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val in = e
-        .join(x.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"),
-          expr(s"katz DIV $attenDiv").as("__c"))
-        .groupBy("id").agg(sum(col("__c")).as("__s"))
-      x = nodes.join(in, Seq("id"), "left")
-        .select(col("id"), (lit(1000000L) +
-          coalesce(col("__s"), lit(0L))).as("katz"))
-    }
-    x
+    val nodes = s.loopCache(nodeIds(e, "src", "dst"), "id", np,
+      skipIfSession = true)
+    push(nodes, e, "katz", lit(1000000L), iters)(
+      expr(s"katz DIV $attenDiv"),
+      lit(1000000L) + coalesce(col("__s"), lit(0L)))
   }
 
   /** Personalized PageRank in exact integer ppm — [[pageRankPpm]] with
@@ -152,9 +214,7 @@ object Graph {
     * Output: `(id, rank)` for every node — unreachable non-seeds
     * report 0, not absence.
     *
-    * Scale: identical loop frames and cost to [[pageRankPpm]] (both
-    * loop invariants pinned pre-partitioned on their join keys; one
-    * inflow aggregate per round); the seed flag rides the node frame
+    * Scale: [[pageRankPpm]]'s loop; the seed flag rides the node frame
     * as a column, adding nothing to the per-round shuffle.
     */
   def personalizedPageRankPpm(edges: DataFrame, srcCol: String,
@@ -162,50 +222,21 @@ object Graph {
       dampPct: Int = 85): DataFrame = Pins.scoped { s =>
     require(iters >= 1, "need at least one round")
     require(dampPct >= 0 && dampPct <= 100, "dampPct is a percentage")
-    val e = s.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct())
+    val e = s.pin(directed(edges, srcCol, dstCol))
     val sd = seeds.select(col(seedCol).as("id")).distinct()
       .withColumn("__seed", lit(1L))
     val np = Pins.loopParts(e)
     val nodes = s.loopCache(
-      e.select(explode(array(col("src"), col("dst"))).as("id"))
-        .distinct()
+      nodeIds(e, "src", "dst")
         .join(sd, Seq("id"), "left")
         .withColumn("__seed", coalesce(col("__seed"), lit(0L))),
       "id", np)
-    val withDeg = s.loopCache(e.join(
-      e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"), "src", np)
-    val base = (100L - dampPct) * 10000L
-    var rank = nodes.select(col("id"),
-      (col("__seed") * 1000000L).as("rank"))
-    for (_ <- 1 to iters) {
-      val in = withDeg
-        .join(rank.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr("rank DIV outdeg").as("__c"))
-        .groupBy("id").agg(sum(col("__c")).as("__s"))
-      rank = nodes.join(in, Seq("id"), "left")
-        .select(col("id"), (col("__seed") * base +
-          expr(s"($dampPct * coalesce(__s, CAST(0 AS BIGINT))) DIV 100"))
-          .as("rank"))
-    }
-    rank
+    rankRounds(s, e, nodes, np, col("__seed"), iters, dampPct)
   }
 
-  /** Canonical undirected edge list: endpoints ordered `u < v`, self-loops
-    * (and edges with a null endpoint — Spark's `least`/`greatest` skip
-    * nulls, collapsing such an edge to a self-loop) dropped, duplicates
-    * collapsed. The normal form every undirected algorithm below starts
-    * from.
-    */
-  private def undirected(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame =
-    edges.select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-
-  /** Per-node triangle membership counts over the UNDIRECTED graph —
-    * `(node, triangles)` for every node on ≥1 triangle.
+  /** Every triangle of the canonical undirected frame `e` exactly once,
+    * as `(a, wb, wc)` — the enumeration [[triangleCounts]] and
+    * [[edgeTriangleSupport]] share.
     *
     * Algorithm: degree orientation. Every undirected edge is oriented
     * from its lower to its higher endpoint under the total order
@@ -215,21 +246,16 @@ object Graph {
     * orientation bounds by O(√m) — on a skewed graph the hub's O(deg²)
     * wedge explosion (the thing that kills the naive id-ordered plan at
     * 100 TB) collapses to O(m^1.5) total work, the Chiba–Nishizeki bound.
-    * Three shuffles after the orientation build: wedge self-join on the
-    * pivot `a`, closing semi-join on `(b, c)`, and the final per-node
-    * aggregate. The oriented frame is pinned once and read three
-    * times.
+    * Two shuffles after the orientation build: the wedge self-join on
+    * the pivot `a` and the closing semi-join on `(b, c)`.
     */
-  def triangleCounts(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = Pins.scoped { s =>
-    val e0 = s.pin(undirected(edges, srcCol, dstCol))
-    val deg = e0.select(explode(array(col("u"), col("v"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("d"))
+  private def triangles(s: Pins.Scope, e: DataFrame): DataFrame = {
+    val deg = degrees(e)
     val ou = struct(col("du").as("d"), col("u").as("n"))
     val ov = struct(col("dv").as("d"), col("v").as("n"))
     // pinned: the wedge self-join's map stage and the closing semi-join's
     // build stage are INDEPENDENT stages of one job, each reading o
-    val o = s.pin(e0
+    val o = s.pin(e
       .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
       .select(
@@ -240,13 +266,26 @@ object Graph {
       .join(o.select(col("a"), col("b").as("wc"), col("ob").as("owc")), "a")
       .filter(col("owb") < col("owc"))
       .select(col("a"), col("wb"), col("wc"))
-    val tris = wedges.join(
+    wedges.join(
       o.select(col("a").as("wb"), col("b").as("wc")), Seq("wb", "wc"),
       "left_semi")
-    tris
+  }
+
+  /** Per-node triangle membership counts over the UNDIRECTED graph —
+    * `(node, triangles)` for every node on ≥1 triangle: each of the
+    * [[triangles]] explodes its three nodes into one per-node aggregate
+    * (the third shuffle).
+    */
+  def triangleCounts(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = Pins.scoped { s =>
+    nodeTriangles(s, s.pin(undirected(edges, srcCol, dstCol)))
+  }
+
+  /** [[triangleCounts]] of the pinned canonical undirected frame `e`. */
+  private def nodeTriangles(s: Pins.Scope, e: DataFrame): DataFrame =
+    triangles(s, e)
       .select(explode(array(col("a"), col("wb"), col("wc"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("triangles"))
-  }
 
   /** Per-EDGE triangle support over the undirected graph — for every
     * edge `(u < v)`, the number of triangles it sits on (its "support",
@@ -256,41 +295,18 @@ object Graph {
     * community-internal edge). Output: `(u, v, support)` for EVERY
     * undirected edge, including support 0.
     *
-    * Algorithm: [[triangleCounts]]' degree orientation verbatim —
-    * each triangle materializes exactly once as an oriented wedge
-    * closed by an oriented edge (O(m^1.5) total wedge work, the
-    * Chiba–Nishizeki bound) — but instead of exploding the three
-    * NODES, each found triangle {a, b, c} explodes its three
-    * UNDIRECTED EDGES (canonical lo/hi form), which aggregate to edge
-    * grain and left-join back onto the full edge list (absent = 0).
-    * Same shuffle count as triangleCounts plus the final edge-keyed
-    * join; the support frame is output-grain (= edge count), never
-    * wedge-grain.
+    * Algorithm: the [[triangles]] enumeration (O(m^1.5) total wedge
+    * work), but instead of exploding the three NODES, each found
+    * triangle {a, b, c} explodes its three UNDIRECTED EDGES (canonical
+    * lo/hi form), which aggregate to edge grain and left-join back onto
+    * the full edge list (absent = 0). Same shuffle count as
+    * triangleCounts plus the final edge-keyed join; the support frame is
+    * output-grain (= edge count), never wedge-grain.
     */
   def edgeTriangleSupport(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = Pins.scoped { s =>
     val e0 = s.pin(undirected(edges, srcCol, dstCol))
-    val deg = e0.select(explode(array(col("u"), col("v"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    val ou = struct(col("du").as("d"), col("u").as("n"))
-    val ov = struct(col("dv").as("d"), col("v").as("n"))
-    // pinned: the wedge self-join's map stage and the closing semi-join's
-    // build stage are INDEPENDENT stages of one job, each reading o
-    val o = s.pin(e0
-      .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
-      .select(
-        when(ou < ov, col("u")).otherwise(col("v")).as("a"),
-        when(ou < ov, ov).otherwise(ou).as("ob"))
-      .select(col("a"), col("ob").getField("n").as("b"), col("ob")))
-    val wedges = o.select(col("a"), col("b").as("wb"), col("ob").as("owb"))
-      .join(o.select(col("a"), col("b").as("wc"), col("ob").as("owc")), "a")
-      .filter(col("owb") < col("owc"))
-      .select(col("a"), col("wb"), col("wc"))
-    val tris = wedges.join(
-      o.select(col("a").as("wb"), col("b").as("wc")), Seq("wb", "wc"),
-      "left_semi")
-    val sup = tris
+    val sup = triangles(s, e0)
       .select(explode(array(
         struct(least(col("a"), col("wb")).as("u"),
           greatest(col("a"), col("wb")).as("v")),
@@ -355,9 +371,12 @@ object Graph {
     val thresh = (k - 2).toLong
     // support measured on the CURRENT graph; loop invariant
     var sup = support
-    var last: DataFrame = sup
+    var last: DataFrame = null
     var round = 0
     var done = false
+    // a superseded round's frames are released once its successor is
+    // pinned; the caller's `support` is never released here
+    def drop(df: DataFrame): Unit = if (df ne support) Pins.release(df)
     while (round < maxRounds && !done) {
       // ONE aggregate job yields both branch counters (r13 — was: eager
       // del checkpoint + del.count + last.count, three jobs of which
@@ -371,21 +390,28 @@ object Graph {
         .getOrElse(0L)
       val nDel = Option(cnts.get(1)).map(_.asInstanceOf[Long])
         .getOrElse(0L)
+      if (last != null) Pins.release(last)
       last = Pins.pin(sup.filter(col("support") >= thresh))
       round += 1
-      if (nDel == 0 || round >= maxRounds) done = true
-      else if (nDel > nKeep) {
-        // mass extinction: the survivor graph is smaller than the
-        // frontier - a fresh O(m'^1.5) enumeration on it beats
-        // frontier-proportional decrement work
-        sup = edgeTriangleSupport(last.select(col("u"), col("v")),
-          "u", "v")
+      if (nDel == 0 || round >= maxRounds) {
+        done = true
+        drop(sup)
       } else {
-        // the deleted edges, read twice (expand + anti-join) by the job
-        // that pins the next support frame — that job materializes them
-        val (del, next) = Pins.pinWith(sup.filter(col("support") < thresh)
-          .select(col("u"), col("v")))(decrement(sup, last, _))
-        Pins.release(del)
+        val next = if (nDel > nKeep) {
+          // mass extinction: the survivor graph is smaller than the
+          // frontier - a fresh O(m'^1.5) enumeration on it beats
+          // frontier-proportional decrement work
+          edgeTriangleSupport(last.select(col("u"), col("v")), "u", "v")
+        } else {
+          // the deleted edges, read twice (expand + anti-join) by the
+          // job that pins the next support frame — that job
+          // materializes them
+          val (del, n) = Pins.pinWith(sup.filter(col("support") < thresh)
+            .select(col("u"), col("v")))(decrement(sup, last, _))
+          Pins.release(del)
+          n
+        }
+        drop(sup)
         sup = next
       }
     }
@@ -448,16 +474,9 @@ object Graph {
     * skew-handling decisions above).
     */
   def degreeHistogram(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val e0 = undirected(edges, srcCol, dstCol)
-    // explode both endpoints in ONE pass — a two-branch union re-executes
-    // the edge-canonicalization distinct once per branch (A/B measured on
-    // the sf0.1 co-purchase graph, same session: 6.1 → 3.9 s cold,
-    // 3.2 → 2.6 s steady-state)
-    e0.select(explode(array(col("u"), col("v"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("degree"))
-      .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
-  }
+      dstCol: String): DataFrame =
+    degrees(undirected(edges, srcCol, dstCol))
+      .groupBy(col("d").as("degree")).agg(count(lit(1)).as("n_nodes"))
 
   /** k-core peeling over the UNDIRECTED graph: `rounds` synchronous
     * rounds of "delete every node with degree < k, then recompute
@@ -486,9 +505,7 @@ object Graph {
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
     var e = s.pin(undirected(edges, srcCol, dstCol))
     for (_ <- 1 to rounds) {
-      val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val survivors = deg.filter(col("d") >= k).select("n")
+      val survivors = degrees(e).filter(col("d") >= k).select("n")
       val next = s.pin(e.join(survivors.withColumnRenamed("n", "u"),
           Seq("u"), "left_semi")
         .join(survivors.withColumnRenamed("n", "v"), Seq("v"),
@@ -497,8 +514,31 @@ object Graph {
       s.release(e)
       e = next
     }
-    e.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("degree"))
+    degrees(e).select(col("n").as("node"), col("d").as("degree"))
+  }
+
+  /** The wedge pipeline of the pair scores ([[neighborJaccard]],
+    * [[resourceAllocation]], [[adamicAdar]]): every node pair `a < b`
+    * joined through a common neighbor `m` — the self-join of the pinned
+    * neighbor list `nbrs` (`n`, `m`) on its pivot — with `wedge` applied
+    * to each `(a, b, m)` wedge, aggregated to `(a, b, common, scores…)`
+    * and cut at `common ≥ minCommon`.
+    *
+    * Scale: pairs are generated ONLY through shared neighbors, never
+    * all-pairs, but the wedge fan-out is Σ deg(m)² — the cost class of
+    * triangle counting; `minCommon` prunes AFTER the pair aggregate, so
+    * hub-heavy graphs should be degree-capped upstream (drop nodes above
+    * a degree ceiling, the LSH `maxBucket` convention — a celebrity
+    * node's wedges say nothing about its spokes' similarity anyway).
+    */
+  private def wedgePairs(nbrs: DataFrame, minCommon: Int)(
+      wedge: DataFrame => DataFrame, scores: Column*): DataFrame = {
+    wedge(nbrs.select(col("n").as("a"), col("m"))
+        .join(nbrs.select(col("n").as("b"), col("m")), "m")
+        .filter(col("a") < col("b")))
+      .groupBy(col("a"), col("b"))
+      .agg(count(lit(1)).as("common"), scores: _*)
+      .filter(col("common") >= minCommon)
   }
 
   /** Neighbor-set Jaccard similarity for node pairs sharing at least
@@ -508,35 +548,40 @@ object Graph {
     * `J = common / (deg(a) + deg(b) − common)`, counts exact integers,
     * only the final ratio floating (6 dp).
     *
-    * Scale: the wedge self-join (pairs through a shared neighbor) is
-    * Σ deg² — the same cost class as triangle counting; `minCommon`
-    * prunes AFTER the pair aggregate, so hub-heavy graphs should be
-    * degree-capped upstream (drop nodes above a degree ceiling — the
-    * standard similarity-graph hygiene; a celebrity node's wedges say
-    * nothing about its spokes' similarity anyway). Degrees are a
-    * node-grain frame joined twice.
+    * Scale: the [[wedgePairs]] budget; degrees are a node-grain frame
+    * joined twice after the pair aggregate.
     */
   def neighborJaccard(edges: DataFrame, srcCol: String, dstCol: String,
       minCommon: Int): DataFrame = Pins.scoped { s =>
     require(minCommon >= 1, "minCommon must be positive")
-    val e = undirected(edges, srcCol, dstCol)
-    val nbrs = s.pin(e.select(explode(array(
-        struct(col("u").as("n"), col("v").as("m")),
-        struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
-      .select(col("__nm.n").as("n"), col("__nm.m").as("m")))
+    val nbrs = s.pin(neighbors(undirected(edges, srcCol, dstCol)))
     // node-grain, read by BOTH endpoint joins — pinned (audit rule)
     val deg = s.pin(nbrs.groupBy(col("n")).agg(count(lit(1)).as("deg")))
-    val pairs = nbrs.select(col("n").as("a"), col("m"))
-      .join(nbrs.select(col("n").as("b"), col("m")), "m")
-      .filter(col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
-      .filter(col("common") >= minCommon)
-    pairs
+    wedgePairs(nbrs, minCommon)(identity)
       .join(deg.select(col("n").as("a"), col("deg").as("__da")), "a")
       .join(deg.select(col("n").as("b"), col("deg").as("__db")), "b")
       .withColumn("jaccard", round(col("common").cast("double") /
         (col("__da") + col("__db") - col("common")).cast("double"), 6))
       .select(col("a"), col("b"), col("common"), col("jaccard"))
+  }
+
+  /** The link-prediction indices [[resourceAllocation]] and
+    * [[adamicAdar]]: over the UNDIRECTED graph, every NON-adjacent pair
+    * `(a, b)`, `a < b`, with ≥ `minCommon` common neighbors, scored by
+    * `score`, a sum over the pair's wedges of a term in the pivot's
+    * degree `__dz`. Each wedge is weighted BEFORE the pair aggregate, so
+    * the integer sum is order-free. Three shuffles: the [[wedgePairs]]
+    * self-join, the per-pair aggregate, the adjacency anti-join.
+    */
+  private def pivotScore(edges: DataFrame, srcCol: String, dstCol: String,
+      minCommon: Int, score: Column): DataFrame = Pins.scoped { s =>
+    require(minCommon >= 1, "minCommon must be positive")
+    val e = s.pin(undirected(edges, srcCol, dstCol))
+    val nbrs = s.pin(neighbors(e))
+    val dz = nbrs.groupBy(col("n").as("m")).agg(count(lit(1)).as("__dz"))
+    wedgePairs(nbrs, minCommon)(_.join(dz, "m"), score)
+      .join(e.select(col("u").as("a"), col("v").as("b")), Seq("a", "b"),
+        "left_anti")
   }
 
   /** Resource-Allocation link-prediction index (Zhou–Lü–Zhang 2009)
@@ -555,39 +600,12 @@ object Graph {
     * resolution 1 micro per term).
     *
     * Output: `(a, b, common, ra_micro)`, `a < b`, existing edges
-    * anti-joined away.
-    *
-    * Scale: candidate pairs are generated ONLY through shared
-    * neighbors (the wedge join on `z`), never all-pairs; the wedge
-    * fan-out is Σ deg(z)², the same budget [[triangleCounts]] manages —
-    * on a skewed graph, cap hub degrees upstream (the LSH `maxBucket`
-    * convention) before calling. Three shuffles: the wedge self-join,
-    * the per-pair aggregate, the adjacency anti-join.
+    * anti-joined away. Scale: [[pivotScore]].
     */
   def resourceAllocation(edges: DataFrame, srcCol: String,
-      dstCol: String, minCommon: Int): DataFrame = Pins.scoped { s =>
-    require(minCommon >= 1, "minCommon must be positive")
-    val e = s.pin(undirected(edges, srcCol, dstCol))
-    val nbrs = s.pin(e.select(explode(array(
-        struct(col("u").as("n"), col("v").as("m")),
-        struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
-      .select(col("__nm.n").as("n"), col("__nm.m").as("m")))
-    // node-grain, read by the wedge join (the neighborJaccard audit rule)
-    val deg = s.pin(nbrs.groupBy(col("n")).agg(count(lit(1)).as("deg")))
-    val pairs = nbrs.select(col("n").as("a"), col("m"))
-      .join(nbrs.select(col("n").as("b"), col("m")), "m")
-      .filter(col("a") < col("b"))
-      // weight each wedge by its pivot's degree BEFORE the pair agg —
-      // the per-term floor makes the sum order-free
-      .join(deg.select(col("n").as("m"), col("deg").as("__dz")), "m")
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("common"),
-        sum(expr("1000000L DIV __dz")).as("ra_micro"))
-      .filter(col("common") >= minCommon)
-    pairs
-      .join(e.select(col("u").as("a"), col("v").as("b")), Seq("a", "b"),
-        "left_anti")
-  }
+      dstCol: String, minCommon: Int): DataFrame =
+    pivotScore(edges, srcCol, dstCol, minCommon,
+      sum(expr("1000000L DIV __dz")).as("ra_micro"))
 
   /** Local clustering coefficient per node over the UNDIRECTED graph:
     * `cc = 2·T / (d·(d−1))` for every node with degree ≥ 2, where `T`
@@ -604,17 +622,17 @@ object Graph {
     * nodes; triangle-free nodes report 0, not absence.
     *
     * Scale: rides [[triangleCounts]]'s degree-oriented O(m^1.5) wedge
-    * budget; the only additions are the node-grain degree aggregate
-    * and one left join of the (≤ node-count) triangle frame onto it.
+    * budget on the same pinned edge frame; the only additions are the
+    * node-grain degree aggregate and one left join of the (≤ node-count)
+    * triangle frame onto it.
     */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = Pins.scoped { s =>
     val e = s.pin(undirected(edges, srcCol, dstCol))
     val d38 = "decimal(38,0)"
-    val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("degree"))
-    val tri = triangleCounts(e, "u", "v")
-    deg.filter(col("degree") >= 2)
+    val tri = nodeTriangles(s, e)
+    degrees(e).select(col("n").as("node"), col("d").as("degree"))
+      .filter(col("degree") >= 2)
       .join(tri, Seq("node"), "left")
       .withColumn("triangles", coalesce(col("triangles"), lit(0L)))
       .withColumn("cc_micro",
@@ -643,14 +661,10 @@ object Graph {
       seeds: DataFrame, nodeCol: String, labelCol: String,
       rounds: Int): DataFrame = Pins.scoped { s =>
     require(rounds >= 1, "rounds must be positive")
-    val e = undirected(edges, srcCol, dstCol)
     // per-round joins key on m — pin the neighbor list partitioned
     // and sorted on it (r13), or every round re-exchanges the edge-grain
     // frame
-    val nbrs0 = e.select(explode(array(
-        struct(col("u").as("n"), col("v").as("m")),
-        struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
-      .select(col("__nm.n").as("n"), col("__nm.m").as("m"))
+    val nbrs0 = neighbors(undirected(edges, srcCol, dstCol))
     val nbrs = s.loopCache(nbrs0, "m", Pins.loopParts(nbrs0))
     val seed = s.pin(
       seeds.select(col(nodeCol).as("n"), col(labelCol).as("label")))
@@ -693,41 +707,56 @@ object Graph {
       .select(col("doc").as("node"), col("cluster").as("component"))
   }
 
+  /** The frontier-BFS loop: min-hop labels `(keys…, id, hop)` from the
+    * hop-0 frame `start` (`keys…`, `id`) over the src-keyed loop edge
+    * frame `e` ([[Pins.loopCache]]d at `np` partitions), `maxHops`
+    * rounds. Round `i` expands only the nodes first reached at `i−1`
+    * (not the whole reached set), so per-round work tracks the frontier
+    * size, and the reached set is re-minimized per `(keys…, id)` with
+    * one aggregate per round. `keys` carry through the frontier join:
+    * none for one source set, `seed` for one BFS per seed.
+    *
+    * Each round reads the previous reached set TWICE (frontier filter +
+    * union), so the per-round frame is pinned: left as lineage, the
+    * double reference re-executes every earlier round's join per level —
+    * 2^maxHops recompute (measured 6.3 s → 2.6 s at 3 hops on the sf0.1
+    * shipment graph just from pinning these). [[Pins.loopShrink]] keeps
+    * the pinned round at the loop's partition count, co-partitioned with
+    * `e`.
+    */
+  private def bfsRounds(s: Pins.Scope, e: DataFrame, np: Int,
+      start: DataFrame, keys: Seq[String], maxHops: Int): DataFrame = {
+    val k = keys.map(col)
+    var dist = s.pin(start.withColumn("hop", lit(0)))
+    for (i <- 1 to maxHops) {
+      val next = dist.filter(col("hop") === i - 1)
+        .select(k :+ col("id").as("src"): _*)
+        .join(e, "src")
+        .select(k ++ Seq(col("dst").as("id"), lit(i).as("hop")): _*)
+      dist = s.pin(Pins.loopShrink(dist.unionByName(next)
+        .groupBy(k :+ col("id"): _*).agg(min(col("hop")).as("hop")),
+        "id", np))
+    }
+    dist
+  }
+
   /** Breadth-first min-hop labels from a seed set over the DIRECTED edge
     * list: `(id, hop)` for every node within `maxHops` hops, hop = exact
-    * BFS distance (seeds at 0). Frontier-style rounds: round `i` expands
-    * only the nodes first reached at `i−1` (not the whole reached set), so
-    * per-round work tracks the frontier size, and the reached set is
-    * re-minimized with one aggregate per round. The edge list is pinned
-    * pre-partitioned on `src` once; `maxHops` is a fixed unroll (same
-    * posture as [[pageRankPpm]]), and the result is a scoped pin, which
-    * truncates the `maxHops`-deep lineage.
+    * BFS distance (seeds at 0) — the [[bfsRounds]] loop. The edge list
+    * is pinned pre-partitioned on `src` once; `maxHops` is a fixed
+    * unroll (same posture as [[pageRankPpm]]), and the result is a
+    * scoped pin, which truncates the `maxHops`-deep lineage.
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String,
       maxHops: Int): DataFrame = Pins.scoped { s =>
     require(maxHops >= 1, "need at least one hop")
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
+    val e0 = directed(edges, srcCol, dstCol)
     val np = Pins.loopParts(e0)
     val e = s.loopCache(e0, "src", np)
-    // Each round reads the previous reached set TWICE (frontier filter +
-    // union), so the per-round frame must be pinned: left as lineage,
-    // the double reference re-executes every earlier round's join per
-    // level — 2^maxHops recompute (measured 6.3 s → 2.6 s at 3 hops on
-    // the sf0.1 shipment graph just from caching these).
-    var dist = s.pin(seeds.select(col(seedCol).as("id"))
-      .filter(col("id").isNotNull).distinct().withColumn("hop", lit(0)))
-    for (i <- 1 to maxHops) {
-      val next = dist.filter(col("hop") === i - 1)
-        .withColumnRenamed("id", "src")
-        .join(e, "src")
-        .select(col("dst").as("id"), lit(i).as("hop"))
-      dist = s.pin(Pins.loopShrink(dist.unionByName(next)
-        .groupBy("id").agg(min(col("hop")).as("hop")), "id", np))
-    }
-    dist.withColumn("hop", col("hop").cast("int"))
+    bfsRounds(s, e, np, seeds.select(col(seedCol).as("id"))
+        .filter(col("id").isNotNull).distinct(), Nil, maxHops)
+      .withColumn("hop", col("hop").cast("int"))
   }
 
   /** Per-community modularity contributions (Newman & Girvan, PRE
@@ -758,8 +787,7 @@ object Graph {
     val m = e.agg(count(lit(1)).as("__m"))
     val asg = assign.select(col(nodeCol).as("__node"),
       col(communityCol).as("community"))
-    val deg = e.select(explode(array(col("u"), col("v"))).as("__node"))
-      .groupBy(col("__node")).agg(count(lit(1)).as("__deg"))
+    val deg = degrees(e).select(col("n").as("__node"), col("d").as("__deg"))
     val byComm = deg.join(asg, Seq("__node"))
       .groupBy(col("community"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("__deg")).as("deg_sum"))
@@ -799,8 +827,7 @@ object Graph {
   def degreeAssortativity(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = Pins.scoped { s =>
     val e = s.pin(undirected(edges, srcCol, dstCol))
-    val deg = e.select(explode(array(col("u"), col("v"))).as("__node"))
-      .groupBy(col("__node")).agg(count(lit(1)).as("__deg"))
+    val deg = degrees(e).select(col("n").as("__node"), col("d").as("__deg"))
     val pairs = e
       .join(deg.select(col("__node").as("u"), col("__deg").as("__du")),
         Seq("u"))
@@ -849,14 +876,17 @@ object Graph {
       oversample: Int): DataFrame = Pins.scoped { s =>
     require(oversample >= k && k >= 1, "need oversample >= k >= 1")
     // pinned (the modularity rationale): the final job reads e via
-    // undirectedKeys while the draws side re-reads indexed
+    // its neighbor list while the draws side re-reads indexed
     val e = s.pin(undirected(edges, srcCol, dstCol))
-    val nodes = e.select(explode(array(col("u"), col("v"))).as("id")).distinct()
+    val nodes = nodeIds(e, "u", "v")
     // id-ordered node index via the distributed two-level rank — the
     // former corpus-grain Window.orderBy(id) was the one
     // single-partition sort in the graph family (round 10).
-    val indexed = s.pin(globalRank(nodes, Seq(col("id")), "__rk1")
-      .withColumn("__idx", col("__rk1") - 1).drop("__rk1"))
+    val ranked = globalRank(nodes, Seq(col("id")), "__rk1")
+    val indexed = s.pin(
+      ranked.withColumn("__idx", col("__rk1") - 1).drop("__rk1"))
+    // the rank's range pin has no reader left once indexed is pinned
+    Pins.release(ranked)
     val nV = indexed.agg(count(lit(1)).as("__n"))
     val draws = indexed.select(col("id").as("u"))
       .crossJoin(broadcast(nV))
@@ -868,13 +898,9 @@ object Graph {
         lit(1000000007L)) % col("__n"))
       .join(indexed.select(col("__idx"), col("id").as("neg_id")),
         Seq("__idx"))
-    val undirectedKeys = e.select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("__uv"))
-      .select(col("__uv.u").as("u"), col("__uv.v").as("v"))
     draws
       .filter(col("neg_id") =!= col("u"))
-      .join(undirectedKeys.withColumnRenamed("v", "neg_id"),
+      .join(neighbors(e).select(col("n").as("u"), col("m").as("neg_id")),
         Seq("u", "neg_id"), "left_anti")
       // hash collisions can re-draw the same negative: keep its first j
       .groupBy(col("u"), col("neg_id")).agg(min(col("j")).as("j"))
@@ -885,25 +911,6 @@ object Graph {
       .select(col("u"), col("j"), col("neg_id"))
   }
 
-  /** HITS hubs & authorities (Kleinberg, JACM 1999), `iters` synchronous
-    * rounds, scores as MAX-normalized ppm integers: per round
-    * `auth_raw(v) = Σ_{u→v} hub(u)` then `auth = (auth_raw · 10⁶) DIV
-    * max(auth_raw)` (best authority = 1,000,000), and symmetrically
-    * `hub_raw(u) = Σ_{u→v} auth(v)`. Kleinberg's convergence is
-    * invariant to the per-round scaling choice, and max-normalization
-    * keeps every value an exact integer — no L2 norm, no float drift,
-    * so the rank table is oracle-checkable. Scores start at 10⁶;
-    * nodes with no in-edges (resp. out-edges) hold authority (resp.
-    * hub) 0.
-    *
-    * Scale shape: identical to [[pageRankPpm]] — the distinct edge list
-    * and node frame are pinned pre-partitioned on their join keys
-    * once, each round is one src-keyed join + one dst-keyed aggregate
-    * per direction, the max is a one-row broadcast, and the result is a
-    * scoped pin.
-    *
-    * Output: `(id, hub, auth)` for every node.
-    */
   /** Pseudo-diameter by the double-BFS sweep (the standard
     * lower-bound heuristic, e.g. Magnien/Latapy/Habib 2009): BFS from
     * a deterministic anchor (the lexicographically smallest node),
@@ -918,30 +925,15 @@ object Graph {
     * convention). Output ONE row: `(anchor0, ecc1, n_reached1,
     * anchor1, ecc2, n_reached2)`.
     *
-    * Scale: 2·maxHops frontier joins on the pinned edge frame —
-    * the [[bfsHops]] cost model twice, with the edge
-    * distinct/repartition/pin paid ONCE.
+    * Scale: two [[bfsRounds]] loops (2·maxHops frontier joins) on one
+    * pinned edge frame — the edge distinct/repartition/pin paid ONCE.
     */
   def pseudoDiameter(edges: DataFrame, srcCol: String, dstCol: String,
       maxHops: Int): DataFrame = Pins.scoped { s =>
     require(maxHops >= 1, "need at least one hop")
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
+    val e0 = directed(edges, srcCol, dstCol)
     val np = Pins.loopParts(e0)
     val e = s.loopCache(e0, "src", np)
-    def sweep(seed: DataFrame): DataFrame = {
-      var dist = s.pin(seed.withColumn("hop", lit(0)))
-      for (i <- 1 to maxHops) {
-        val next = dist.filter(col("hop") === i - 1)
-          .withColumnRenamed("id", "src")
-          .join(e, "src")
-          .select(col("dst").as("id"), lit(i).as("hop"))
-        dist = s.pin(Pins.loopShrink(dist.unionByName(next)
-          .groupBy("id").agg(min(col("hop")).as("hop")), "id", np))
-      }
-      dist
-    }
     // farthest node, ties to the smallest id: one agg of (hop, id)
     // pairs via max_by on the (hop, negated-lexico) struct is not
     // string-safe — use max(hop) then min(id) at that hop instead
@@ -952,10 +944,10 @@ object Graph {
     }
     val a0 = e.select(explode(array(col("src"), col("dst"))).as("id"))
       .agg(min(col("id")).as("id"))
-    val d1 = sweep(a0.select("id"))
+    val d1 = bfsRounds(s, e, np, a0.select("id"), Nil, maxHops)
     val f1 = s.pin(far(d1))
     val n1 = d1.agg(count(lit(1)).as("n_reached1"))
-    val d2 = sweep(f1.select("id"))
+    val d2 = bfsRounds(s, e, np, f1.select("id"), Nil, maxHops)
     val f2 = far(d2)
     val n2 = d2.agg(count(lit(1)).as("n_reached2"))
     a0.select(col("id").as("anchor0"))
@@ -970,6 +962,25 @@ object Graph {
         col("n_reached2").cast("long").as("n_reached2"))
   }
 
+  /** HITS hubs & authorities (Kleinberg, JACM 1999), `iters` synchronous
+    * rounds, scores as MAX-normalized ppm integers: per round
+    * `auth_raw(v) = Σ_{u→v} hub(u)` then `auth = (auth_raw · 10⁶) DIV
+    * max(auth_raw)` (best authority = 1,000,000), and symmetrically
+    * `hub_raw(u) = Σ_{u→v} auth(v)`. Kleinberg's convergence is
+    * invariant to the per-round scaling choice, and max-normalization
+    * keeps every value an exact integer — no L2 norm, no float drift,
+    * so the rank table is oracle-checkable. Scores start at 10⁶;
+    * nodes with no in-edges (resp. out-edges) hold authority (resp.
+    * hub) 0.
+    *
+    * Scale shape: the [[push]] posture in both directions — the
+    * distinct edge list and node frame are pinned pre-partitioned on
+    * their join keys once, each round is one src-keyed join + one
+    * dst-keyed aggregate per direction, the max is a one-row broadcast,
+    * and the result is a scoped pin.
+    *
+    * Output: `(id, hub, auth)` for every node.
+    */
   def hitsPpm(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int): DataFrame = Pins.scoped { s =>
     require(iters >= 1, "need at least one round")
@@ -983,15 +994,12 @@ object Graph {
     // The rank frames come back from normRaw's pin still
     // hash-partitioned on id (a pin preserves partitioning), so
     // the per-round joins are fully co-partitioned. Cost: 2× edge pin.
-    val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
+    val eRaw = directed(edges, srcCol, dstCol)
     val np = Pins.loopParts(eRaw)
     val eSrc = s.loopCache(eRaw, "src", np)
     val eDst = s.loopCache(eSrc, "dst", np)
-    val e = eSrc
-    val nodes = s.loopCache(
-      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
-      "id", np, skipIfSession = true)
+    val nodes = s.loopCache(nodeIds(eSrc, "src", "dst"), "id", np,
+      skipIfSession = true)
     // each round's raw frame has TWO readers (the max scalar and the
     // next-round join) and sits on an iters-deep lineage — pin it or
     // every normalization recomputes the whole history
@@ -1042,9 +1050,8 @@ object Graph {
     * (ANF/HyperBall lineage), and every downstream statistic is a pure
     * aggregate of this frame.
     *
-    * Same round discipline as [[bfsHops]] (pin per round — the
-    * frame is read twice per level), except the frontier carries the
-    * seed key, so each round is one src-keyed join + one (seed,id)
+    * The [[bfsRounds]] loop with the seed key carried through the
+    * frontier, so each round is one src-keyed join + one (seed,id)
     * min-aggregate — cost is O(hops · Σ_seeds reached-edges), linear in
     * the seed count, never all-pairs.
     */
@@ -1052,25 +1059,14 @@ object Graph {
       seeds: DataFrame, seedCol: String,
       maxHops: Int): DataFrame = Pins.scoped { s =>
     require(maxHops >= 1, "need at least one hop")
-    val und = undirected(edges, srcCol, dstCol)
-    val e0 = und.select(explode(array(
-        struct(col("u").as("src"), col("v").as("dst")),
-        struct(col("v").as("src"), col("u").as("dst")))).as("__sd"))
-      .select(col("__sd.src").as("src"), col("__sd.dst").as("dst"))
+    val e0 = neighbors(undirected(edges, srcCol, dstCol))
+      .select(col("n").as("src"), col("m").as("dst"))
     val np = Pins.loopParts(e0)
     val e = s.loopCache(e0, "src", np)
-    var dist = s.pin(seeds.select(col(seedCol).as("seed"))
-      .filter(col("seed").isNotNull).distinct()
-      .withColumn("id", col("seed")).withColumn("hop", lit(0)))
-    for (i <- 1 to maxHops) {
-      val next = dist.filter(col("hop") === i - 1)
-        .select(col("seed"), col("id").as("src"))
-        .join(e, "src")
-        .select(col("seed"), col("dst").as("id"), lit(i).as("hop"))
-      dist = s.pin(Pins.loopShrink(dist.unionByName(next)
-        .groupBy("seed", "id").agg(min(col("hop")).as("hop")), "id", np))
-    }
-    dist.withColumn("hop", col("hop").cast("int"))
+    bfsRounds(s, e, np, seeds.select(col(seedCol).as("seed"))
+        .filter(col("seed").isNotNull).distinct()
+        .withColumn("id", col("seed")), Seq("seed"), maxHops)
+      .withColumn("hop", col("hop").cast("int"))
   }
 
   /** Bounded-horizon closeness centrality per seed from a
@@ -1131,30 +1127,12 @@ object Graph {
     * (a shared pivot has deg ≥ 2, so ln > 0; per-term rounding makes
     * the sum commutative and engine-exact — the q346 discipline).
     *
-    * Scale: identical wedge shape to [[resourceAllocation]] — the
-    * neighbor self-join fans out per-pivot-degree, weighted BEFORE the
-    * pair aggregate; no all-pairs anywhere.
+    * Scale: [[pivotScore]], the [[resourceAllocation]] plan with the
+    * inverse-log term.
     */
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
-      minCommon: Int): DataFrame = Pins.scoped { s =>
-    require(minCommon >= 1, "minCommon must be positive")
-    val e = s.pin(undirected(edges, srcCol, dstCol))
-    val nbrs = s.pin(e.select(explode(array(
-        struct(col("u").as("n"), col("v").as("m")),
-        struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
-      .select(col("__nm.n").as("n"), col("__nm.m").as("m")))
-    val deg = nbrs.groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    val pairs = nbrs.select(col("n").as("a"), col("m"))
-      .join(nbrs.select(col("n").as("b"), col("m")), "m")
-      .filter(col("a") < col("b"))
-      .join(deg.select(col("n").as("m"), col("deg").as("__dz")), "m")
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("common"),
-        sum(expr("CAST(round(1000000 / ln(CAST(__dz AS DOUBLE))) " +
-          "AS BIGINT)")).as("aa_micro"))
-      .filter(col("common") >= minCommon)
-    pairs
-      .join(e.select(col("u").as("a"), col("v").as("b")), Seq("a", "b"),
-        "left_anti")
-  }
+      minCommon: Int): DataFrame =
+    pivotScore(edges, srcCol, dstCol, minCommon,
+      sum(expr("CAST(round(1000000 / ln(CAST(__dz AS DOUBLE))) " +
+        "AS BIGINT)")).as("aa_micro"))
 }

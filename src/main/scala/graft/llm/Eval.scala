@@ -65,6 +65,31 @@ object Eval {
         round(avg(col("s")), 6).as("mean_sil"))
   }
 
+  /** The probe frame `(query_id, qv, ql)` of `queries` and each probe's
+    * cosine top-k over the corpus, self excluded, with both labels:
+    * `(query_id, ql, neighbor_id, nl, cos, rank)` for rank ≤ k
+    * ([[Similarity.cosineTopK]]) — the ranked list every rank metric
+    * below grades.
+    * The broadcast hint sits at the PROBE join only (r13, VERDICT
+    * "what's wrong" #1): a frame-level broadcast of the probes rode into
+    * the metrics' final left join with the probes as the OUTER side,
+    * where Spark cannot build the left — the hint was logged dropped
+    * (HintErrorLogger) and the intended broadcast silently became a
+    * shuffle join.
+    */
+  private def labeledTopK(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, labelCol: String, queryIdCol: String,
+      k: Int): (DataFrame, DataFrame) = {
+    val q = queries.select(col(queryIdCol).as("query_id"),
+      col(vecCol).as("qv"), col(labelCol).as("ql"))
+    (q, Similarity.cosineTopK(corpus.select(col(idCol).as("neighbor_id"),
+        col(vecCol).as("cv"), col(labelCol).as("nl"))
+      .join(broadcast(q))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("ql"), col("neighbor_id"), col("nl"),
+        Similarity.cosine(col("qv"), col("cv")).as("cos")), k))
+  }
+
   /** nDCG@k retrieval quality (Järvelin & Kekäläinen, TOIS 2002) with
     * binary same-label relevance: each query retrieves its cosine top-k
     * (self excluded), DCG discounts hits by 1/log₂(rank+1), and the
@@ -82,23 +107,8 @@ object Eval {
   def ndcgAtK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, labelCol: String, queryIdCol: String,
       k: Int): DataFrame = {
-    // hint at the PROBE join only (r13, VERDICT "what's wrong" #1): a
-    // frame-level broadcast(q) rode into the final left join below with
-    // q as the OUTER side, where Spark cannot build the left — the hint
-    // was logged dropped (HintErrorLogger) and the intended broadcast
-    // silently became a shuffle join
-    val q = queries.select(col(queryIdCol).as("query_id"),
-      col(vecCol).as("qv"), col(labelCol).as("ql"))
-    val top = corpus.select(col(idCol).as("nid"), col(vecCol).as("cv"),
-        col(labelCol).as("nl"))
-      .join(broadcast(q))
-      .filter(col("nid") =!= col("query_id"))
-      .select(col("query_id"), col("ql"), col("nid"), col("nl"),
-        Similarity.cosine(col("qv"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
+    val (q, top) = labeledTopK(corpus, queries, idCol, vecCol, labelCol,
+      queryIdCol, k)
     val dcg = top.groupBy(col("query_id"))
       .agg(sum(expr(dcgTermSql)).as("dcg"))
     val labelCounts = corpus.groupBy(col(labelCol).as("ql"))
@@ -394,23 +404,9 @@ object Eval {
   def mrrAtK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, labelCol: String, queryIdCol: String,
       k: Int): DataFrame = {
-    // hint at the PROBE join only (r13, VERDICT "what's wrong" #1): a
-    // frame-level broadcast(q) rode into the final left join below with
-    // q as the OUTER side, where Spark cannot build the left — the hint
-    // was logged dropped (HintErrorLogger) and the intended broadcast
-    // silently became a shuffle join
-    val q = queries.select(col(queryIdCol).as("query_id"),
-      col(vecCol).as("qv"), col(labelCol).as("ql"))
-    val firstRel = corpus.select(col(idCol).as("nid"),
-        col(vecCol).as("cv"), col(labelCol).as("nl"))
-      .join(broadcast(q))
-      .filter(col("nid") =!= col("query_id"))
-      .select(col("query_id"), col("ql"), col("nid"), col("nl"),
-        Similarity.cosine(col("qv"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k && col("nl") === col("ql"))
+    val (q, top) = labeledTopK(corpus, queries, idCol, vecCol, labelCol,
+      queryIdCol, k)
+    val firstRel = top.filter(col("nl") === col("ql"))
       .groupBy(col("query_id"))
       .agg(min(col("rank")).as("first_rank"))
     q.select(col("query_id"))
@@ -439,23 +435,9 @@ object Eval {
   def errAtK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, labelCol: String, queryIdCol: String,
       k: Int): DataFrame = {
-    // hint at the PROBE join only (r13, VERDICT "what's wrong" #1): a
-    // frame-level broadcast(q) rode into the final left join below with
-    // q as the OUTER side, where Spark cannot build the left — the hint
-    // was logged dropped (HintErrorLogger) and the intended broadcast
-    // silently became a shuffle join
-    val q = queries.select(col(queryIdCol).as("query_id"),
-      col(vecCol).as("qv"), col(labelCol).as("ql"))
-    val top = corpus.select(col(idCol).as("nid"), col(vecCol).as("cv"),
-        col(labelCol).as("nl"))
-      .join(broadcast(q))
-      .filter(col("nid") =!= col("query_id"))
-      .select(col("query_id"), col("ql"), col("nid"), col("nl"),
-        Similarity.cosine(col("qv"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
+    val (q, ranked) = labeledTopK(corpus, queries, idCol, vecCol,
+      labelCol, queryIdCol, k)
+    val top = ranked
       .withColumn("__rel", (col("nl") === col("ql")).cast("long"))
       .withColumn("__relBefore", coalesce(sum(col("__rel")).over(Window
         .partitionBy(col("query_id")).orderBy(col("rank"))
@@ -497,23 +479,9 @@ object Eval {
       pNum: Int = 4, pDen: Int = 5): DataFrame = {
     require(k >= 1 && k <= 20, "need 1 <= k <= 20 (exact int64 weights)")
     require(pNum >= 1 && pDen > pNum, "persistence must be in (0, 1)")
-    // hint at the PROBE join only (r13, VERDICT "what's wrong" #1): a
-    // frame-level broadcast(q) rode into the final left join below with
-    // q as the OUTER side, where Spark cannot build the left — the hint
-    // was logged dropped (HintErrorLogger) and the intended broadcast
-    // silently became a shuffle join
-    val q = queries.select(col(queryIdCol).as("query_id"),
-      col(vecCol).as("qv"), col(labelCol).as("ql"))
-    val top = corpus.select(col(idCol).as("nid"), col(vecCol).as("cv"),
-        col(labelCol).as("nl"))
-      .join(broadcast(q))
-      .filter(col("nid") =!= col("query_id"))
-      .select(col("query_id"), col("ql"), col("nid"), col("nl"),
-        Similarity.cosine(col("qv"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
+    val (q, ranked) = labeledTopK(corpus, queries, idCol, vecCol,
+      labelCol, queryIdCol, k)
+    val top = ranked
       .withColumn("__rel", (col("nl") === col("ql")).cast("long"))
       // integer powers via double pow: pNum^(i-1), pDen^i <= 5^20 < 2^53,
       // double-exact, rounded to kill fp dust before the BIGINT floor
@@ -724,7 +692,7 @@ object Eval {
       .filter(col(labelCol).isNotNull && col(vecCol).isNotNull)
       .select(col(queryIdCol).as("query_id"), col(vecCol).as("qvec"),
         col(labelCol).as("q_label")))
-    val scored = corpus
+    Similarity.cosineTopK(corpus
       .filter(col(labelCol).isNotNull && col(vecCol).isNotNull)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"),
         col(labelCol).as("n_label"))
@@ -732,11 +700,7 @@ object Eval {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("q_label"), col("neighbor_id"),
         col("n_label"),
-        Similarity.cosine(col("qvec"), col("cvec")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        Similarity.cosine(col("qvec"), col("cvec")).as("cos")), k)
       .groupBy(col("q_label").as("label"))
       .agg(countDistinct(col("query_id")).as("n_queries"),
         count(lit(1)).as("n_edges"),

@@ -318,19 +318,27 @@ object Similarity {
       .select(col("n_hits").cast("long").as("n_hits"),
         col("n_points").cast("long").as("n_points"))
 
+  /** Per query, the `k` best rows of a `(query_id, neighbor_id, cos)`
+    * frame by cosine, ties to the smaller neighbor id, numbered 1..k in
+    * `rank` — the deterministic tail every top-k search shares. The
+    * `rank ≤ k` filter sits directly over the per-query window, so the
+    * group-limit rule prunes to k per partition before the exchange.
+    */
+  private[llm] def cosineTopK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window
+        .partitionBy(col("query_id"))
+        .orderBy(col("cos").desc, col("neighbor_id"))))
+      .filter(col("rank") <= k)
+
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, queryIdCol: String, k: Int): DataFrame = {
     val q = broadcast(queries.select(col(queryIdCol).as("query_id"),
       col(vecCol).as("qvec")))
-    val scored = corpus.select(col(idCol).as("neighbor_id"),
+    cosineTopK(corpus.select(col(idCol).as("neighbor_id"),
         col(vecCol).as("cvec"))
       .join(q)
       .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qvec"), col("cvec")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cosine(col("qvec"), col("cvec")).as("cos")), k)
   }
 
   /** k-NN label classification: each query takes the majority label of its
@@ -688,13 +696,9 @@ object Similarity {
         approx)
       .withColumn("__crank", row_number().over(cw))
       .filter(col("__crank") <= candK)
-    val rw = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cands
-      .select(col("query_id"), col("neighbor_id"),
-        dot(col("qn"), col("cn")).as("cos")) // unit vectors: dot = cosine
-      .withColumn("rank", row_number().over(rw))
-      .filter(col("rank") <= k)
+    // unit vectors: dot = cosine
+    cosineTopK(cands.select(col("query_id"), col("neighbor_id"),
+      dot(col("qn"), col("cn")).as("cos")), k)
   }
 
   /** Anchor-plane count for sign-LSH sized to the corpus: with m planes
@@ -818,13 +822,9 @@ object Similarity {
       .select(col(queryIdCol).as("query_id"), col(vecCol).as("qvec"),
         explode(slice(array_sort(centerStructs), 1, nprobe)).as("probe"))
       .select(col("query_id"), col("qvec"), col("probe.cell").as("cell"))
-    val scored = assigned.join(broadcast(probed), Seq("cell"))
+    cosineTopK(assigned.join(broadcast(probed), Seq("cell"))
       .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qvec"), col("cvec")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cosine(col("qvec"), col("cvec")).as("cos")), k)
   }
 
   /** Embedding-cosine near-duplicate pairs: self-join within LSH buckets,
@@ -976,13 +976,9 @@ object Similarity {
     val qb = broadcast(lshBuckets(queries, vecCol, anchors)
       .select(col("bucket"), col(queryIdCol).as("query_id"),
         col(vecCol).as("qvec")))
-    val scored = cb.join(qb, Seq("bucket"))
+    cosineTopK(cb.join(qb, Seq("bucket"))
       .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qvec"), col("cvec")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cosine(col("qvec"), col("cvec")).as("cos")), k)
   }
 
   /** Multi-probe sign-LSH ANN: each query competes against its own
@@ -1010,13 +1006,9 @@ object Similarity {
     val qb = broadcast(lshBuckets(queries, vecCol, anchors)
       .select(col(queryIdCol).as("query_id"), col(vecCol).as("qvec"),
         explode(probes).as("bucket")))
-    val scored = cb.join(qb, Seq("bucket"))
+    cosineTopK(cb.join(qb, Seq("bucket"))
       .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qvec"), col("cvec")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cosine(col("qvec"), col("cvec")).as("cos")), k)
   }
 
   /** Maximal-marginal-relevance rerank (Carbonell & Goldstein, SIGIR

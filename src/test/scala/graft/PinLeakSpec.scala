@@ -26,6 +26,11 @@ class PinLeakSpec extends SparkSpec {
 
   private def seeds = Seq(1L).toDF("s")
 
+  private def labels = Seq((1L, 10L), (6L, 20L)).toDF("n", "label")
+
+  private def communities = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 2L),
+    (5L, 2L), (6L, 2L), (7L, 2L)).toDF("n", "c")
+
   private val operators: Seq[(String, () => DataFrame)] = Seq(
     "skipgramPmi" -> (() =>
       Lexical.skipgramPmi(docs, "doc_id", "text", 2, 1L, 5)),
@@ -35,6 +40,39 @@ class PinLeakSpec extends SparkSpec {
     "kCorePeel" -> (() => Graph.kCorePeel(edges, "a", "b", 2, 2)),
     "pageRankPpm" -> (() => Graph.pageRankPpm(edges, "a", "b", 3)),
     "bfsHops" -> (() => Graph.bfsHops(edges, "a", "b", seeds, "s", 3)),
+    "katzCentralityPpm" -> (() =>
+      Graph.katzCentralityPpm(edges, "a", "b", 3)),
+    "personalizedPageRankPpm" -> (() =>
+      Graph.personalizedPageRankPpm(edges, "a", "b", seeds, "s", 3)),
+    "hitsPpm" -> (() => Graph.hitsPpm(edges, "a", "b", 3)),
+    "triangleCounts" -> (() => Graph.triangleCounts(edges, "a", "b")),
+    "edgeTriangleSupport" -> (() =>
+      Graph.edgeTriangleSupport(edges, "a", "b")),
+    "kTrussFromSupport" -> (() => {
+      // the input support is the caller's pin: released by the caller
+      val support = Graph.edgeTriangleSupport(edges, "a", "b")
+      try Graph.kTrussFromSupport(support, 4, 3)
+      finally graft.engine.Pins.release(support)
+    }),
+    "multiSourceBfs" -> (() =>
+      Graph.multiSourceBfs(edges, "a", "b", seeds, "s", 3)),
+    "pseudoDiameter" -> (() => Graph.pseudoDiameter(edges, "a", "b", 3)),
+    "labelPropagation" -> (() =>
+      Graph.labelPropagation(edges, "a", "b", labels, "n", "label", 2)),
+    "resourceAllocation" -> (() =>
+      Graph.resourceAllocation(edges, "a", "b", 1)),
+    "adamicAdar" -> (() => Graph.adamicAdar(edges, "a", "b", 1)),
+    "clusteringCoefficient" -> (() =>
+      Graph.clusteringCoefficient(edges, "a", "b")),
+    "modularity" -> (() =>
+      Graph.modularity(edges, "a", "b", communities, "n", "c")),
+    "degreeAssortativity" -> (() =>
+      Graph.degreeAssortativity(edges, "a", "b")),
+    "negativeEdgeSamples" -> (() =>
+      Graph.negativeEdgeSamples(edges, "a", "b", 2, 4)),
+    "degreeHistogram" -> (() => Graph.degreeHistogram(edges, "a", "b")),
+    "connectedComponents" -> (() =>
+      Graph.connectedComponents(edges, "a", "b")),
     "fuzzyDuplicates" -> (() =>
       Dedup.fuzzyDuplicates(docs, "doc_id", "text", minJaccard = 0.3)),
     "prefixFilterCandidates" -> (() =>

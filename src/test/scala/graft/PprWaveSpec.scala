@@ -38,4 +38,24 @@ class PprWaveSpec extends SparkSpec {
       .as[(String, Long)].collect().toMap
     assert(ppr == pr)
   }
+
+  test("a null endpoint adds no node: pageRank, PPR, Katz and HITS drop " +
+      "the edge") {
+    val clean = Seq(("a", "b"), ("b", "a"), ("b", "e")).toDF("s", "t")
+    val e = clean.union(Seq[(String, String)](("c", null), (null, "d"))
+      .toDF("s", "t"))
+    val seeds = Seq("a").toDF("n")
+    val ops: Seq[org.apache.spark.sql.DataFrame => Set[Seq[Any]]] = Seq(
+      g => Graph.pageRankPpm(g, "s", "t", 2).collect().map(_.toSeq).toSet,
+      g => Graph.personalizedPageRankPpm(g, "s", "t", seeds, "n", 2)
+        .collect().map(_.toSeq).toSet,
+      g => Graph.katzCentralityPpm(g, "s", "t", 2)
+        .collect().map(_.toSeq).toSet,
+      g => Graph.hitsPpm(g, "s", "t", 2).collect().map(_.toSeq).toSet)
+    ops.foreach { op =>
+      val got = op(e)
+      assert(got.forall(_.head != null), s"null node in $got")
+      assert(got == op(clean))
+    }
+  }
 }

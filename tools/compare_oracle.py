@@ -48,6 +48,10 @@ ORACLE_SCALE_CEILING = {
 }
 
 
+# DuckDB's spill directory, created under out_dir only when it spills
+SPILL_DIR = ".duckdb_spill"
+
+
 def sf_of(sf_dir: str):
     m = re.search(r"sf([0-9.]+)$", os.path.basename(os.path.normpath(sf_dir)))
     return float(m.group(1)) if m else None
@@ -90,7 +94,12 @@ def main():
     skip = args.skip.split(",") if args.skip else []
     sf = sf_of(sf_dir)
 
-    con = duckdb.connect()
+    # spill under the out dir, not the working directory; insertion order
+    # is not needed (canon() sorts every frame before the compare) and
+    # keeping it costs operator memory
+    con = duckdb.connect(config={
+        "temp_directory": os.path.join(out_dir, SPILL_DIR),
+        "preserve_insertion_order": False})
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
@@ -99,7 +108,7 @@ def main():
     results = {}
     skipped = {}
     dumped = {n for n in os.listdir(out_dir)
-              if os.path.isdir(os.path.join(out_dir, n))}
+              if n != SPILL_DIR and os.path.isdir(os.path.join(out_dir, n))}
     # a query that crashed in Verify has an oracle but no dump — surface it
     for name in sorted(set(oracles) - dumped):
         if only is not None and not name_selected(name, only):

@@ -4588,19 +4588,34 @@ object LlmQueries {
           round(max(CASE WHEN rk = target THEN s END), 6) AS q_hat
         FROM t GROUP BY 1"""))
 
+  /** The p-value worklist of the correction queries (q286 BH, q356
+    * Holm, q416 BY): the fractional part of each error event's value.
+    */
+  private def errorPValues(s: SparkSession, d: String): DataFrame =
+    T(s, d, "events").filter(col("event_type") === "error")
+      .withColumn("p", col("value") - floor(col("value")))
+
+  /** Its oracle CTE `t(id, p)`, which opens the WITH list. */
+  private val errorPSql = """WITH t AS (SELECT event_id AS id,
+          CAST(value AS DOUBLE) - floor(CAST(value AS DOUBLE)) AS p
+          FROM events WHERE event_type = 'error' AND value IS NOT NULL)"""
+
+  /** The oracle's ranked CTE `r(id, p, rank…)` over `t`, the mirror of
+    * `Relational.rankedP`: row_number by `(p, id)`, plus `extra`
+    * select-list items (comma-led).
+    */
+  private def rankedPSql(extra: String): String =
+    s"""r AS (SELECT id, p, CAST(row_number() OVER (ORDER BY p, id)
+          AS INT) AS rank$extra FROM t)"""
+
   /** Benjamini–Hochberg step-up at FDR 20% over the error-event
     * pseudo-p column — the multiple-testing closure of the test
     * family. */
   private val l151 = Spec("q286_bh_fdr",
     (s, d) => graft.engine.Relational.bhFdr(
-      T(s, d, "events").filter(col("event_type") === "error")
-        .withColumn("p", col("value") - floor(col("value"))),
-      "event_id", "p", alphaPct = 20),
-    Some("""WITH t AS (SELECT event_id AS id,
-          CAST(value AS DOUBLE) - floor(CAST(value AS DOUBLE)) AS p
-          FROM events WHERE event_type = 'error' AND value IS NOT NULL),
-        r AS (SELECT id, p, CAST(row_number() OVER (ORDER BY p, id)
-          AS INT) AS rank, count(*) OVER () AS m FROM t),
+      errorPValues(s, d), "event_id", "p", alphaPct = 20),
+    Some(s"""$errorPSql,
+        ${rankedPSql(", count(*) OVER () AS m")},
         c AS (SELECT *, CAST(rank AS DOUBLE) * CAST(20 AS DOUBLE)
           / (CAST(100 AS DOUBLE) * CAST(m AS DOUBLE)) AS crit FROM r),
         k AS (SELECT *, max(CASE WHEN p <= crit THEN rank ELSE 0 END)
@@ -5187,40 +5202,14 @@ object LlmQueries {
     * moved). */
   private val l171 = Spec("q306_wasserstein",
     (s, d) => graft.engine.Relational.wassersteinReportFromPaired(
-      Queries.pricePairedEcdf(s, d),
-      lo = 0d, hi = 11000000d, nBuckets = 64),
-    Some("""WITH e AS (SELECT
-          's' || CAST(l_orderkey % 3 AS VARCHAR) AS s,
-          CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-          FROM lineitem WHERE l_extendedprice IS NOT NULL),
-        c AS (SELECT s, v, CAST(count(*) AS HUGEINT) AS t FROM e
-          GROUP BY 1, 2),
-        f0 AS (SELECT sp.s, g.v, coalesce(c.t, 0) AS t
-          FROM (SELECT DISTINCT v FROM c) g
-          CROSS JOIN (SELECT DISTINCT s FROM c) sp
-          LEFT JOIN c ON c.s = sp.s AND c.v = g.v),
-        f AS (SELECT s, v, t,
-          sum(t) OVER (PARTITION BY s ORDER BY v) AS cum FROM f0),
-        tot AS (SELECT s, sum(t) AS n FROM c GROUP BY 1),
-        j AS (SELECT cur.s, cur.v,
+      Queries.pricePairedEcdf(s, d)),
+    Some(Queries.priceDriftSql("""cur.s, cur.v,
           cur.cum - cur.t AS excc, r.cum - r.t AS excr,
-          lag(cur.v) OVER (PARTITION BY cur.s ORDER BY cur.v) AS vp,
-          tc.n AS nc, tr.n AS nr
-          FROM f cur JOIN f r ON r.s = 's0' AND r.v = cur.v
-          JOIN tot tc ON tc.s = cur.s
-          JOIN tot tr ON tr.s = 's0'
-          WHERE cur.s <> 's0'),
-        a AS (SELECT s, max(nr) AS nr, max(nc) AS nc,
-          sum(CASE WHEN vp IS NULL THEN 0
-            ELSE abs(excr * nc - excc * nr) * (v - vp) END) AS wnum
-          FROM j GROUP BY 1)
-        SELECT s AS split, CAST(nr AS BIGINT) AS n_ref,
-          CAST(nc AS BIGINT) AS n_cur,
-          CAST((wnum * 1000000) // (nr * nc) AS BIGINT) AS w1_micro,
-          CASE WHEN nr > 0 AND nc > 0 THEN
-            round(CAST(wnum AS DOUBLE)
-              / (CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE)), 6)
-          END AS w1 FROM a"""))
+          lag(cur.v) OVER (PARTITION BY cur.s ORDER BY cur.v) AS vp""",
+      """sum(CASE WHEN vp IS NULL THEN 0
+            ELSE abs(excr * nc - excc * nr) * (v - vp) END) AS wnum""",
+      "CAST((wnum * 1000000) // (nr * nc) AS BIGINT) AS w1_micro", "w1",
+      "CAST(wnum AS DOUBLE) / (CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE))")))
 
   /** Two-group log-rank test on the q276 Kaplan-Meier cohort:
     * BUILDING-segment customers against the rest — micro-unit integer
@@ -5463,37 +5452,14 @@ object LlmQueries {
   private val l179 = Spec("q314_cvm_drift",
     (s, d) => graft.engine.Relational.cvmReportFromPaired(
       Queries.pricePairedEcdf(s, d)),
-    Some("""WITH e AS (SELECT
-          's' || CAST(l_orderkey % 3 AS VARCHAR) AS s,
-          CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-          FROM lineitem WHERE l_extendedprice IS NOT NULL),
-        c AS (SELECT s, v, CAST(count(*) AS HUGEINT) AS t FROM e
-          GROUP BY 1, 2),
-        f0 AS (SELECT sp.s, g.v, coalesce(c.t, 0) AS t
-          FROM (SELECT DISTINCT v FROM c) g
-          CROSS JOIN (SELECT DISTINCT s FROM c) sp
-          LEFT JOIN c ON c.s = sp.s AND c.v = g.v),
-        f AS (SELECT s, v, t,
-          sum(t) OVER (PARTITION BY s ORDER BY v) AS cum FROM f0),
-        tot AS (SELECT s, sum(t) AS n FROM c GROUP BY 1),
-        j AS (SELECT cur.s, cur.t + r.t AS ta,
-          r.cum * tc.n - cur.cum * tr.n AS d,
-          tc.n AS nc, tr.n AS nr
-          FROM f cur JOIN f r ON r.s = 's0' AND r.v = cur.v
-          JOIN tot tc ON tc.s = cur.s
-          JOIN tot tr ON tr.s = 's0'
-          WHERE cur.s <> 's0'),
-        a AS (SELECT s, max(nr) AS nr, max(nc) AS nc,
-          sum(ta * d * d) AS num FROM j GROUP BY 1)
-        SELECT s AS split, CAST(nr AS BIGINT) AS n_ref,
-          CAST(nc AS BIGINT) AS n_cur,
-          CAST((num * 1000000)
-            // ((nr + nc) * (nr + nc) * nr * nc) AS BIGINT) AS cvm_micro,
-          CASE WHEN nr > 0 AND nc > 0 THEN
-            round(CAST(num AS DOUBLE)
+    Some(Queries.priceDriftSql("""cur.s, cur.t + r.t AS ta,
+          r.cum * tc.n - cur.cum * tr.n AS d""",
+      "sum(ta * d * d) AS num",
+      """CAST((num * 1000000)
+            // ((nr + nc) * (nr + nc) * nr * nc) AS BIGINT) AS cvm_micro""",
+      "cvm", """CAST(num AS DOUBLE)
               / (CAST(nr + nc AS DOUBLE) * CAST(nr + nc AS DOUBLE)
-                * CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE)), 6)
-          END AS cvm FROM a"""))
+                * CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE))""")))
 
   /** Two-sample Anderson–Darling drift on the same paired frame — the
     * tail-weighted member of the drift family (the 1/(H·(1−H)) weight
@@ -5503,38 +5469,15 @@ object LlmQueries {
   private val l180 = Spec("q315_anderson_darling",
     (s, d) => graft.engine.Relational.andersonDarlingFromPaired(
       Queries.pricePairedEcdf(s, d)),
-    Some("""WITH e AS (SELECT
-          's' || CAST(l_orderkey % 3 AS VARCHAR) AS s,
-          CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-          FROM lineitem WHERE l_extendedprice IS NOT NULL),
-        c AS (SELECT s, v, CAST(count(*) AS HUGEINT) AS t FROM e
-          GROUP BY 1, 2),
-        f0 AS (SELECT sp.s, g.v, coalesce(c.t, 0) AS t
-          FROM (SELECT DISTINCT v FROM c) g
-          CROSS JOIN (SELECT DISTINCT s FROM c) sp
-          LEFT JOIN c ON c.s = sp.s AND c.v = g.v),
-        f AS (SELECT s, v, t,
-          sum(t) OVER (PARTITION BY s ORDER BY v) AS cum FROM f0),
-        tot AS (SELECT s, sum(t) AS n FROM c GROUP BY 1),
-        j AS (SELECT cur.s, cur.t + r.t AS ta,
+    Some(Queries.priceDriftSql("""cur.s, cur.t + r.t AS ta,
           cur.cum + r.cum AS bp, tc.n + tr.n AS nn,
-          r.cum * tc.n - cur.cum * tr.n AS d,
-          tc.n AS nc, tr.n AS nr
-          FROM f cur JOIN f r ON r.s = 's0' AND r.v = cur.v
-          JOIN tot tc ON tc.s = cur.s
-          JOIN tot tr ON tr.s = 's0'
-          WHERE cur.s <> 's0'),
-        a AS (SELECT s, max(nr) AS nr, max(nc) AS nc,
-          sum(CASE WHEN bp < nn THEN
+          r.cum * tc.n - cur.cum * tr.n AS d""",
+      """sum(CASE WHEN bp < nn THEN
             (ta * d * d * 1000000) // (bp * (nn - bp))
-            ELSE 0 END) AS num FROM j GROUP BY 1)
-        SELECT s AS split, CAST(nr AS BIGINT) AS n_ref,
-          CAST(nc AS BIGINT) AS n_cur,
-          CAST(num // (nr * nc) AS BIGINT) AS ad_micro,
-          CASE WHEN nr > 0 AND nc > 0 THEN
-            round(CAST(num AS DOUBLE) / 1000000.0
-              / (CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE)), 6)
-          END AS ad FROM a"""))
+            ELSE 0 END) AS num""",
+      "CAST(num // (nr * nc) AS BIGINT) AS ad_micro", "ad",
+      """CAST(num AS DOUBLE) / 1000000.0
+              / (CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE))""")))
 
   /** 1-D energy-distance drift (Székely–Rizzo; closed ECDF-integral
     * form 2·∫(F_r−F_c)²dx) on the same paired frame — W₁'s area with
@@ -5542,41 +5485,17 @@ object LlmQueries {
     * tests over embedding columns. */
   private val l181 = Spec("q316_energy_distance",
     (s, d) => graft.engine.Relational.energyDistanceFromPaired(
-      Queries.pricePairedEcdf(s, d),
-      lo = 0d, hi = 11000000d, nBuckets = 64),
-    Some("""WITH e AS (SELECT
-          's' || CAST(l_orderkey % 3 AS VARCHAR) AS s,
-          CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-          FROM lineitem WHERE l_extendedprice IS NOT NULL),
-        c AS (SELECT s, v, CAST(count(*) AS HUGEINT) AS t FROM e
-          GROUP BY 1, 2),
-        f0 AS (SELECT sp.s, g.v, coalesce(c.t, 0) AS t
-          FROM (SELECT DISTINCT v FROM c) g
-          CROSS JOIN (SELECT DISTINCT s FROM c) sp
-          LEFT JOIN c ON c.s = sp.s AND c.v = g.v),
-        f AS (SELECT s, v, t,
-          sum(t) OVER (PARTITION BY s ORDER BY v) AS cum FROM f0),
-        tot AS (SELECT s, sum(t) AS n FROM c GROUP BY 1),
-        j AS (SELECT cur.s, cur.v,
+      Queries.pricePairedEcdf(s, d)),
+    Some(Queries.priceDriftSql("""cur.s, cur.v,
           (r.cum - r.t) * tc.n - (cur.cum - cur.t) * tr.n AS dx,
-          lag(cur.v) OVER (PARTITION BY cur.s ORDER BY cur.v) AS vp,
-          tc.n AS nc, tr.n AS nr
-          FROM f cur JOIN f r ON r.s = 's0' AND r.v = cur.v
-          JOIN tot tc ON tc.s = cur.s
-          JOIN tot tr ON tr.s = 's0'
-          WHERE cur.s <> 's0'),
-        a AS (SELECT s, max(nr) AS nr, max(nc) AS nc,
-          sum(CASE WHEN vp IS NULL THEN 0
-            ELSE dx * dx * (v - vp) END) AS num FROM j GROUP BY 1)
-        SELECT s AS split, CAST(nr AS BIGINT) AS n_ref,
-          CAST(nc AS BIGINT) AS n_cur,
-          CAST((num * 2000000) // (nr * nr * nc * nc) AS BIGINT)
-            AS energy_micro,
-          CASE WHEN nr > 0 AND nc > 0 THEN
-            round(CAST(num AS DOUBLE) * 2
+          lag(cur.v) OVER (PARTITION BY cur.s ORDER BY cur.v) AS vp""",
+      """sum(CASE WHEN vp IS NULL THEN 0
+            ELSE dx * dx * (v - vp) END) AS num""",
+      """CAST((num * 2000000) // (nr * nr * nc * nc) AS BIGINT)
+            AS energy_micro""", "energy",
+      """CAST(num AS DOUBLE) * 2
               / (CAST(nr AS DOUBLE) * CAST(nr AS DOUBLE)
-                * CAST(nc AS DOUBLE) * CAST(nc AS DOUBLE)), 6)
-          END AS energy FROM a"""))
+                * CAST(nc AS DOUBLE) * CAST(nc AS DOUBLE))""")))
 
   /** Kuiper drift statistic on the same paired frame —
     * V = sup(F_r−F_c) + sup(F_c−F_r), KS's rotation-invariant signed
@@ -5585,35 +5504,12 @@ object LlmQueries {
   private val l182 = Spec("q317_kuiper",
     (s, d) => graft.engine.Relational.kuiperReportFromPaired(
       Queries.pricePairedEcdf(s, d)),
-    Some("""WITH e AS (SELECT
-          's' || CAST(l_orderkey % 3 AS VARCHAR) AS s,
-          CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-          FROM lineitem WHERE l_extendedprice IS NOT NULL),
-        c AS (SELECT s, v, CAST(count(*) AS HUGEINT) AS t FROM e
-          GROUP BY 1, 2),
-        f0 AS (SELECT sp.s, g.v, coalesce(c.t, 0) AS t
-          FROM (SELECT DISTINCT v FROM c) g
-          CROSS JOIN (SELECT DISTINCT s FROM c) sp
-          LEFT JOIN c ON c.s = sp.s AND c.v = g.v),
-        f AS (SELECT s, v, t,
-          sum(t) OVER (PARTITION BY s ORDER BY v) AS cum FROM f0),
-        tot AS (SELECT s, sum(t) AS n FROM c GROUP BY 1),
-        j AS (SELECT cur.s,
-          r.cum * tc.n - cur.cum * tr.n AS d,
-          tc.n AS nc, tr.n AS nr
-          FROM f cur JOIN f r ON r.s = 's0' AND r.v = cur.v
-          JOIN tot tc ON tc.s = cur.s
-          JOIN tot tr ON tr.s = 's0'
-          WHERE cur.s <> 's0'),
-        a AS (SELECT s, max(nr) AS nr, max(nc) AS nc,
-          max(d) AS dp, max(-d) AS dm FROM j GROUP BY 1)
-        SELECT s AS split, CAST(nr AS BIGINT) AS n_ref,
-          CAST(nc AS BIGINT) AS n_cur,
-          CAST(dp + dm AS BIGINT) AS v_num,
-          CASE WHEN nr > 0 AND nc > 0 THEN
-            round(CAST(dp + dm AS DOUBLE)
-              / (CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE)), 6)
-          END AS kuiper FROM a"""))
+    Some(Queries.priceDriftSql("""cur.s,
+          r.cum * tc.n - cur.cum * tr.n AS d""",
+      "max(d) AS dp, max(-d) AS dm",
+      "CAST(dp + dm AS BIGINT) AS v_num", "kuiper",
+      """CAST(dp + dm AS DOUBLE)
+              / (CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE))""")))
 
   /** Average precision (exact PR step-curve area) of event value as a
     * ranking score for the user_id%5 label, per event type — the
@@ -7024,14 +6920,9 @@ object LlmQueries {
     * row-for-row. */
   private val l221 = Spec("q356_holm_bonferroni",
     (s, d) => graft.engine.Relational.holmBonferroni(
-      T(s, d, "events").filter(col("event_type") === "error")
-        .withColumn("p", col("value") - floor(col("value"))),
-      "event_id", "p", alphaPct = 20),
-    Some("""WITH t AS (SELECT event_id AS id,
-          CAST(value AS DOUBLE) - floor(CAST(value AS DOUBLE)) AS p
-          FROM events WHERE event_type = 'error' AND value IS NOT NULL),
-        r AS (SELECT id, p, CAST(row_number() OVER (ORDER BY p, id)
-          AS INT) AS rank, count(*) OVER () AS m FROM t),
+      errorPValues(s, d), "event_id", "p", alphaPct = 20),
+    Some(s"""$errorPSql,
+        ${rankedPSql(", count(*) OVER () AS m")},
         c AS (SELECT *, CAST(20 AS DOUBLE) / (CAST(100 AS DOUBLE)
           * CAST(m - rank + 1 AS DOUBLE)) AS crit FROM r),
         k AS (SELECT *, coalesce(min(CASE WHEN p > crit THEN rank END)
@@ -7739,23 +7630,27 @@ object LlmQueries {
       Queries.coPurchaseSupport(s, d), k = 4, maxRounds = rounds)
   }, Some {
     val rounds = 3
+    // MATERIALIZED: each round reads the previous edge set four times and
+    // its triangles three times; inlined once per reference, the chain
+    // ran DuckDB out of memory (12.5 GiB) at sf0.1
     val blocks = (1 to rounds).map { r =>
-      s"""tri$r AS (SELECT e1.u AS x, e1.v AS y, e2.v AS z
+      s"""tri$r AS MATERIALIZED (SELECT e1.u AS x, e1.v AS y, e2.v AS z
           FROM e${r - 1} e1 JOIN e${r - 1} e2 ON e2.u = e1.v
           JOIN e${r - 1} e3 ON e3.u = e1.u AND e3.v = e2.v),
-        te$r AS (SELECT x AS u, y AS v FROM tri$r
+        te$r AS MATERIALIZED (SELECT x AS u, y AS v FROM tri$r
           UNION ALL SELECT y, z FROM tri$r
           UNION ALL SELECT x, z FROM tri$r),
-        ts$r AS (SELECT u, v, CAST(count(*) AS BIGINT) AS s FROM te$r
-          GROUP BY 1, 2),
-        s$r AS (SELECT e.u, e.v, CAST(coalesce(ts$r.s, 0) AS BIGINT)
-            AS support
+        ts$r AS MATERIALIZED (SELECT u, v, CAST(count(*) AS BIGINT) AS s
+          FROM te$r GROUP BY 1, 2),
+        s$r AS MATERIALIZED (SELECT e.u, e.v,
+            CAST(coalesce(ts$r.s, 0) AS BIGINT) AS support
           FROM e${r - 1} e LEFT JOIN ts$r
             ON ts$r.u = e.u AND ts$r.v = e.v
           WHERE coalesce(ts$r.s, 0) >= 2),
-        e$r AS (SELECT u, v FROM s$r)"""
+        e$r AS MATERIALIZED (SELECT u, v FROM s$r)"""
     }.mkString(",\n        ")
-    s"""WITH e0 AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+    s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT a.l_partkey AS u,
+            b.l_partkey AS v
           FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
             AND a.l_partkey < b.l_partkey
           WHERE a.l_partkey % 3 = 0 AND b.l_partkey % 3 = 0),
@@ -8336,18 +8231,13 @@ object LlmQueries {
     * arbitrary-dependence FDR gate, row-diffable against BH/Holm. */
   private val l255 = Spec("q416_by_fdr",
     (s, d) => graft.engine.Relational.byFdr(
-      T(s, d, "events").filter(col("event_type") === "error")
-        .withColumn("p", col("value") - floor(col("value"))),
-      "event_id", "p", alphaPct = 20),
-    Some("""WITH t AS (SELECT event_id AS id,
-          CAST(value AS DOUBLE) - floor(CAST(value AS DOUBLE)) AS p
-          FROM events WHERE event_type = 'error' AND value IS NOT NULL),
+      errorPValues(s, d), "event_id", "p", alphaPct = 20),
+    Some(s"""$errorPSql,
         m AS (SELECT count(*) AS m FROM t),
         h AS (SELECT m, CAST(sum(1000000 // i.i) AS BIGINT) AS hm
           FROM m CROSS JOIN (SELECT unnest(range(1,
             (SELECT m FROM m) + 1)) AS i) i GROUP BY m),
-        r AS (SELECT id, p, CAST(row_number() OVER (ORDER BY p, id)
-          AS INT) AS rank FROM t),
+        ${rankedPSql("")},
         c AS (SELECT r.*, CAST(rank AS DOUBLE) * CAST(20 AS DOUBLE)
           * 10000 / (CAST(h.m AS DOUBLE) * CAST(h.hm AS DOUBLE))
           AS crit FROM r CROSS JOIN h),

@@ -2117,6 +2117,49 @@ object Queries {
           round(col("l_extendedprice") * 100).cast("long").as("cents")),
         "split", "s0", "cents", lo = 0d, hi = 11000000d, nBuckets = 64))
 
+  /** DuckDB mirror of [[graft.engine.Relational.ecdfPaired]] over an
+    * `e(s, v)` CTE with body `eSql`: the (split, value) counts `c`, the
+    * union support × split grid `f0` and the inclusive cums `f` — a WITH
+    * list the caller continues after the trailing comma.
+    */
+  private[graft] def ecdfPairedSql(eSql: String): String =
+    s"""WITH e AS ($eSql),
+        c AS (SELECT s, v, CAST(count(*) AS HUGEINT) AS t FROM e
+          GROUP BY 1, 2),
+        f0 AS (SELECT sp.s, g.v, coalesce(c.t, 0) AS t
+          FROM (SELECT DISTINCT v FROM c) g
+          CROSS JOIN (SELECT DISTINCT s FROM c) sp
+          LEFT JOIN c ON c.s = sp.s AND c.v = g.v),
+        f AS (SELECT s, v, t,
+          sum(t) OVER (PARTITION BY s ORDER BY v) AS cum FROM f0),"""
+
+  /** Oracle of a drift report over [[pricePairedEcdf]] (q193, q306,
+    * q314–q317), the mirror of `Relational.pairedReport`: per-split
+    * totals `tot`, the pair rows `j` (`jCols` plus both totals), the
+    * per-split aggregate `a` (`aggs` beside `nr`/`nc`) and the output
+    * `(split, n_ref, n_cur, num, stat)`, with `stat = round(ratio, 6)`
+    * when both samples are non-empty.
+    */
+  private[graft] def priceDriftSql(jCols: String, aggs: String,
+      num: String, stat: String, ratio: String): String =
+    ecdfPairedSql("""SELECT
+          's' || CAST(l_orderkey % 3 AS VARCHAR) AS s,
+          CAST(round(l_extendedprice * 100) AS BIGINT) AS v
+          FROM lineitem WHERE l_extendedprice IS NOT NULL""") + s"""
+        tot AS (SELECT s, sum(t) AS n FROM c GROUP BY 1),
+        j AS (SELECT $jCols,
+          tc.n AS nc, tr.n AS nr
+          FROM f cur JOIN f r ON r.s = 's0' AND r.v = cur.v
+          JOIN tot tc ON tc.s = cur.s
+          JOIN tot tr ON tr.s = 's0'
+          WHERE cur.s <> 's0'),
+        a AS (SELECT s, max(nr) AS nr, max(nc) AS nc,
+          $aggs FROM j GROUP BY 1)
+        SELECT s AS split, CAST(nr AS BIGINT) AS n_ref,
+          CAST(nc AS BIGINT) AS n_cur, $num,
+          CASE WHEN nr > 0 AND nc > 0 THEN round($ratio, 6)
+          END AS $stat FROM a"""
+
   private[graft] def coPurchaseEdges(s: SparkSession, d: String,
       modFilter: Boolean): DataFrame =
     Pins.memo(s, d, s"coPurchase$modFilter") {
@@ -2555,33 +2598,10 @@ object Queries {
     */
   private val agg24 = Spec("q193_ks_drift",
     (s, d) => Relational.ksReportFromPaired(pricePairedEcdf(s, d)),
-    Some("""WITH e AS (SELECT
-          's' || CAST(l_orderkey % 3 AS VARCHAR) AS s,
-          CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-          FROM lineitem WHERE l_extendedprice IS NOT NULL),
-        c AS (SELECT s, v, CAST(count(*) AS HUGEINT) AS t FROM e
-          GROUP BY 1, 2),
-        f0 AS (SELECT sp.s, g.v, coalesce(c.t, 0) AS t
-          FROM (SELECT DISTINCT v FROM c) g
-          CROSS JOIN (SELECT DISTINCT s FROM c) sp
-          LEFT JOIN c ON c.s = sp.s AND c.v = g.v),
-        f AS (SELECT s, v, t,
-          sum(t) OVER (PARTITION BY s ORDER BY v) AS cum FROM f0),
-        tot AS (SELECT s, sum(t) AS n FROM c GROUP BY 1),
-        j AS (SELECT cur.s, cur.cum AS cumc, r.cum AS cumr,
-          tc.n AS nc, tr.n AS nr
-          FROM f cur JOIN f r ON r.s = 's0' AND r.v = cur.v
-          JOIN tot tc ON tc.s = cur.s
-          JOIN tot tr ON tr.s = 's0'
-          WHERE cur.s <> 's0'),
-        a AS (SELECT s, max(nr) AS nr, max(nc) AS nc,
-          max(abs(cumr * nc - cumc * nr)) AS dnum FROM j GROUP BY 1)
-        SELECT s AS split, CAST(nr AS BIGINT) AS n_ref,
-          CAST(nc AS BIGINT) AS n_cur, CAST(dnum AS BIGINT) AS d_num,
-          CASE WHEN nr > 0 AND nc > 0 THEN
-            round(CAST(dnum AS DOUBLE)
-              / (CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE)), 6)
-          END AS ks FROM a"""))
+    Some(priceDriftSql("cur.s, cur.cum AS cumc, r.cum AS cumr",
+      "max(abs(cumr * nc - cumc * nr)) AS dnum",
+      "CAST(dnum AS BIGINT) AS d_num", "ks",
+      "CAST(dnum AS DOUBLE) / (CAST(nr AS DOUBLE) * CAST(nc AS DOUBLE))")))
 
   /** OP-AGG-25 — Mann–Whitney U: event-value distribution of odd-id
     * users against even-id users, tie-corrected, doubled-U exact.
@@ -2592,17 +2612,9 @@ object Queries {
         concat(lit("g"), (col("user_id") % 2).cast("string")).as("grp"),
         floor(col("value")).cast("long").as("v")),
       "grp", "g0", "v", lo = 0d, hi = 350d, nBuckets = 16),
-    Some("""WITH e AS (SELECT 'g' || CAST(user_id % 2 AS VARCHAR) AS s,
+    Some(ecdfPairedSql("""SELECT 'g' || CAST(user_id % 2 AS VARCHAR) AS s,
           CAST(floor(value) AS BIGINT) AS v FROM events
-          WHERE value IS NOT NULL AND user_id IS NOT NULL),
-        c AS (SELECT s, v, CAST(count(*) AS HUGEINT) AS t FROM e
-          GROUP BY 1, 2),
-        f0 AS (SELECT sp.s, g.v, coalesce(c.t, 0) AS t
-          FROM (SELECT DISTINCT v FROM c) g
-          CROSS JOIN (SELECT DISTINCT s FROM c) sp
-          LEFT JOIN c ON c.s = sp.s AND c.v = g.v),
-        f AS (SELECT s, v, t,
-          sum(t) OVER (PARTITION BY s ORDER BY v) AS cum FROM f0),
+          WHERE value IS NOT NULL AND user_id IS NOT NULL""") + """
         j AS (SELECT cur.s, cur.t AS tc, r.t AS tr,
           (cur.cum - cur.t) + (r.cum - r.t) AS cb, cur.t + r.t AS ta
           FROM f cur JOIN f r ON r.s = 'g0' AND r.v = cur.v
@@ -3299,15 +3311,20 @@ object Queries {
           END AS h_adj
         FROM tt CROSS JOIN ti"""))
 
-  /** OP-AGG-32 — Friedman test: user blocks × event-type treatments
-    * on exact micro-mean cells, complete blocks only. */
-  private val agg32 = Spec("q394_friedman",
-    (s, d) => Relational.friedmanTest(
-      T(s, d, "events").filter(col("value").isNotNull)
-        .select(col("user_id"), col("event_type"),
-          floor(col("value")).cast("long").as("v")),
-      "user_id", "event_type", "v"),
-    Some("""WITH r AS (SELECT user_id AS b, event_type AS t,
+  /** The block design of the Friedman (q394) and Page (q400) tests:
+    * user blocks × event-type treatments over floored event values. */
+  private def blockDesign(s: SparkSession, d: String): DataFrame =
+    T(s, d, "events").filter(col("value").isNotNull)
+      .select(col("user_id"), col("event_type"),
+        floor(col("value")).cast("long").as("v"))
+
+  /** Oracle prefix of q394/q400, the mirror of
+    * `Relational.blockRankSums`: micro-mean cells `ce`, complete blocks
+    * `ke`, doubled within-block ranks `r2` and per-treatment rank sums
+    * `bt(t, rr, nb)` — a WITH list the caller continues.
+    */
+  private val blockRankSql =
+    """WITH r AS (SELECT user_id AS b, event_type AS t,
           CAST(floor(value) AS BIGINT) AS v FROM events
           WHERE value IS NOT NULL AND user_id IS NOT NULL
             AND event_type IS NOT NULL),
@@ -3325,7 +3342,14 @@ object Queries {
         r2 AS (SELECT b, m, cum * 2 - cm + 1 AS r2 FROM rk),
         bt AS (SELECT t, CAST(sum(r2) AS BIGINT) AS rr,
           CAST(count(*) AS BIGINT) AS nb FROM ke JOIN r2 USING (b, m)
-          GROUP BY 1),
+          GROUP BY 1),"""
+
+  /** OP-AGG-32 — Friedman test: user blocks × event-type treatments
+    * on exact micro-mean cells, complete blocks only. */
+  private val agg32 = Spec("q394_friedman",
+    (s, d) => Relational.friedmanTest(blockDesign(s, d),
+      "user_id", "event_type", "v"),
+    Some(blockRankSql + """
         ag AS (SELECT CAST(count(*) AS INT) AS k,
           CAST(max(nb) AS BIGINT) AS b,
           CAST(coalesce(sum(CAST(rr AS HUGEINT) * rr), 0) AS HUGEINT)
@@ -3456,30 +3480,9 @@ object Queries {
   /** OP-AGG-37 — Page's L trend test: do event-type micro-mean ranks
     * increase in lexicographic dose order across user blocks. */
   private val agg37 = Spec("q400_page_trend",
-    (s, d) => Relational.pageTrendTest(
-      T(s, d, "events").filter(col("value").isNotNull)
-        .select(col("user_id"), col("event_type"),
-          floor(col("value")).cast("long").as("v")),
+    (s, d) => Relational.pageTrendTest(blockDesign(s, d),
       "user_id", "event_type", "v"),
-    Some("""WITH r AS (SELECT user_id AS b, event_type AS t,
-          CAST(floor(value) AS BIGINT) AS v FROM events
-          WHERE value IS NOT NULL AND user_id IS NOT NULL
-            AND event_type IS NOT NULL),
-        cl AS (SELECT b, t, CAST(sum(v) AS BIGINT) AS s,
-          CAST(count(*) AS BIGINT) AS c FROM r GROUP BY 1, 2),
-        ce AS (SELECT b, t, s * 1000000 // c AS m FROM cl),
-        kk AS (SELECT CAST(count(DISTINCT t) AS BIGINT) AS k FROM ce),
-        co AS (SELECT b FROM ce GROUP BY b
-          HAVING count(*) = (SELECT k FROM kk)),
-        ke AS (SELECT ce.* FROM ce JOIN co USING (b)),
-        mg AS (SELECT b, m, CAST(count(*) AS BIGINT) AS cm FROM ke
-          GROUP BY 1, 2),
-        rk AS (SELECT b, m, cm, sum(cm) OVER (PARTITION BY b
-          ORDER BY m) AS cum FROM mg),
-        r2 AS (SELECT b, m, cum * 2 - cm + 1 AS r2 FROM rk),
-        bt AS (SELECT t, CAST(sum(r2) AS BIGINT) AS rr,
-          CAST(count(*) AS BIGINT) AS nb FROM ke JOIN r2 USING (b, m)
-          GROUP BY 1),
+    Some(blockRankSql + """
         oj AS (SELECT t, rr, nb,
           CAST(row_number() OVER (ORDER BY t) AS BIGINT) AS j FROM bt),
         ag AS (SELECT CAST(count(*) AS INT) AS k,

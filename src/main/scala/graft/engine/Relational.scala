@@ -80,6 +80,24 @@ object Relational {
     Bridge.column(Int128Sum(factors.map(Bridge.expression))
       .toAggregateExpression())
 
+  /** The engine's IEEE double sum whose order does not depend on
+    * partitioning: per `groupCols` group (none = one global row), collect
+    * the `(order…, value)` structs, sort them, and fold `value` left to
+    * right from 0.0 into `outCol`. `order` must be unique within a group,
+    * so the fold order is fixed; `extraAggs` ride the same aggregate. The
+    * arrays hold one entry per row of the group, so callers sum
+    * bucket-, group- or list-bounded terms only.
+    */
+  private[graft] def orderedSum(df: DataFrame, groupCols: Seq[Column],
+      order: Seq[Column], value: Column, outCol: String,
+      extraAggs: Column*): DataFrame =
+    df.groupBy(groupCols: _*)
+      .agg(sort_array(collect_list(struct(order :+ value.as("__osv"): _*)))
+        .as("__os"), extraAggs: _*)
+      .withColumn(outCol, aggregate(col("__os"), lit(0.0d),
+        (acc, x) => acc + x.getField("__osv")))
+      .drop("__os")
+
   /** OP-PRJ-1 — bulk column rename applied only to columns that exist
     * (`dataset.py:237-244`: the reference filters the rename map to present
     * columns before applying).
@@ -823,8 +841,8 @@ object Relational {
         max(col(valCol)).as("hi"))
   }
 
-  /** Sparse paired ECDF shared by [[ksReportFromPaired]] and
-    * [[mannWhitneyReport]]: for every non-reference split `s` and every
+  /** Sparse paired ECDF shared by the drift reports ([[pairedReport]])
+    * and [[mannWhitneyReport]]: for every non-reference split `s` and every
     * value observed in `s` OR in the reference split, the counts of both
     * samples at that value (`__t` for `s`, `__tr` for the reference; 0
     * where absent) and both running totals up to and including it
@@ -852,7 +870,9 @@ object Relational {
     * DECIMAL(38,0) at the multiply — keeping the hot window pass out of
     * decimal arithmetic. A missing reference split yields an all-zero
     * `__tr` column; callers guard on `Σ __tr > 0` to keep the "missing
-    * reference → empty report, never a silent zero" contract.
+    * reference → empty report, never a silent zero" contract. The
+    * value-bucket column `__b` stays in the output: it is the bucket axis
+    * of [[withPrevValue]]'s two-level lag.
     */
   private[graft] def ecdfPaired(df: DataFrame, splitCol: String,
       refValue: String, valCol: String, lo: Double, hi: Double,
@@ -901,7 +921,7 @@ object Relational {
     full.join(broadcast(off), Seq("__s", "__b"))
       .withColumn("__cum", col("__off") + col("__local"))
       .withColumn("__cumr", col("__offr") + col("__localr"))
-      .select("__s", "__v", "__t", "__tr", "__cum", "__cumr")
+      .select("__s", "__v", "__b", "__t", "__tr", "__cum", "__cumr")
   }
 
   /** Two-sample Kolmogorov–Smirnov drift report over an [[ecdfPaired]]
@@ -922,27 +942,72 @@ object Relational {
     * discipline; the paired frame is the expensive half of both
     * reports).
     */
-  private[graft] def ksReportFromPaired(e: DataFrame): DataFrame = {
+  private[graft] def ksReportFromPaired(e: DataFrame): DataFrame =
+    pairedReport(withPairedTotals(e, e),
+      Seq(max(abs(pairedGap(exclusive = false))).as("__dnum")),
+      col("__dnum").cast("long").as("d_num"), "ks",
+      col("__dnum").cast("double") /
+        (col("__nr2").cast("double") * col("__nc2").cast("double")))
+
+  /** `rows` (the paired frame `e`, or a frame derived from it row for
+    * row) joined to `e`'s broadcast per-split totals `__n` (current) and
+    * `__nr` (reference), DECIMAL(38,0). Splits whose reference total is 0
+    * are dropped: an absent reference split leaves `__tr` all-zero, and
+    * the report is then empty, never a silent `F_ref = 0` statistic.
+    */
+  private def withPairedTotals(e: DataFrame, rows: DataFrame): DataFrame = {
     val d38 = "decimal(38,0)"
-    // per-split totals off the paired frame itself; __nr > 0 keeps the
-    // missing-reference → empty-report contract (an absent reference
-    // split leaves __tr all-zero, never a silent D = sup|F| report)
     val tot = e.groupBy("__s")
       .agg(sum(col("__t")).cast(d38).as("__n"),
         sum(col("__tr")).cast(d38).as("__nr"))
       .filter(col("__nr") > 0)
-    e.join(broadcast(tot), Seq("__s"))
-      .groupBy(col("__s").as("split"))
-      .agg(max(col("__nr")).as("__nr2"), max(col("__n")).as("__nc2"),
-        max(abs(col("__cumr") * col("__n") - col("__cum") * col("__nr")))
-          .as("__dnum"))
+    rows.join(broadcast(tot), Seq("__s"))
+  }
+
+  /** The integer ECDF gap `cum_r·n_c − cum_c·n_r` over a
+    * [[withPairedTotals]] frame, in DECIMAL(38,0): `|F_r − F_c|·n_r·n_c`
+    * without a division. `exclusive` reads the cums before each row's
+    * own counts (`cum − t`, the previous support point's inclusive
+    * cums) — the height of the ECDF segment that ends at the row.
+    */
+  private def pairedGap(exclusive: Boolean): Column = {
+    def cum(c: String, t: String) =
+      (if (exclusive) col(c) - col(t) else col(c)).cast("decimal(38,0)")
+    cum("__cumr", "__tr") * col("__n") - cum("__cum", "__t") * col("__nr")
+  }
+
+  /** The output tail shared by the paired-ECDF drift reports: per split,
+    * `aggs` beside the totals `__nr2`/`__nc2`, then `(split, n_ref,
+    * n_cur, num, stat)` with `stat = round(ratio, 6)` when both samples
+    * are non-empty.
+    */
+  private def pairedReport(rows: DataFrame, aggs: Seq[Column], num: Column,
+      stat: String, ratio: Column): DataFrame =
+    rows.groupBy(col("__s").as("split"))
+      .agg(max(col("__nr")).as("__nr2"),
+        max(col("__n")).as("__nc2") +: aggs: _*)
       .select(col("split"), col("__nr2").cast("long").as("n_ref"),
-        col("__nc2").cast("long").as("n_cur"),
-        col("__dnum").cast("long").as("d_num"),
-        when(col("__nr2") > 0 && col("__nc2") > 0,
-          round(col("__dnum").cast("double") /
-            (col("__nr2").cast("double") * col("__nc2").cast("double")), 6))
-          .as("ks"))
+        col("__nc2").cast("long").as("n_cur"), num,
+        when(col("__nr2") > 0 && col("__nc2") > 0, round(ratio, 6))
+          .as(stat))
+
+  /** `e` plus `__vp`, the previous support value of each row's split
+    * (null at the split's minimum): a lag inside each `__b` value bucket,
+    * else the broadcast maximum of the nearest non-empty bucket before it
+    * (≤ nBuckets rows per split) — the prefix sums' two-level trick, no
+    * unpartitioned window.
+    */
+  private def withPrevValue(e: DataFrame): DataFrame = {
+    val wPrev = Window.partitionBy("__s").orderBy("__b")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val pb = e.groupBy(col("__s"), col("__b"))
+      .agg(max(col("__v")).as("__bm"))
+      .withColumn("__pb", max(col("__bm")).over(wPrev))
+      .select(col("__s"), col("__b"), col("__pb"))
+    e.withColumn("__pl", lag(col("__v"), 1)
+        .over(Window.partitionBy("__s", "__b").orderBy("__v")))
+      .join(broadcast(pb), Seq("__s", "__b"))
+      .withColumn("__vp", coalesce(col("__pl"), col("__pb")))
   }
 
   /** Mann–Whitney U rank-sum test of every split against `refValue`,
@@ -1011,9 +1076,8 @@ object Relational {
     * merged sparse value axis — and the EXCLUSIVE cums `cum − t` ARE
     * the previous row's inclusive cums, so every segment height is the
     * integer `|excr·N_c − excc·N_r|` in DECIMAL(38,0). Only `v_prev`
-    * needs order context: a lag inside each fixed-width value bucket
-    * plus broadcast previous-non-empty-bucket maxima — the same
-    * two-level trick as the prefix sums, no unpartitioned window. The
+    * needs order context: [[withPrevValue]] reads it off the paired
+    * frame's own value buckets, no unpartitioned window. The
     * global minimum value has no predecessor AND zero exclusive cums,
     * so its segment is exactly 0 either way. `w1_micro = (Σ·10⁶) DIV
     * (N_r·N_c)` is integral floor division of non-negative operands
@@ -1022,49 +1086,16 @@ object Relational {
     * DECIMAL(38,0) past 10⁹-row splits on 10¹²-wide integer axes.
     * Output per non-reference split: `(split, n_ref, n_cur, w1_micro,
     * w1)` in the `valCol` units; a missing reference split yields an
-    * empty report, never a silent zero. `lo`/`hi`/`nBuckets` must be
-    * the paired frame's own build parameters — they re-derive the same
-    * internal bucket axis for the two-level lag.
+    * empty report, never a silent zero.
     */
-  private[graft] def wassersteinReportFromPaired(e: DataFrame,
-      lo: Double, hi: Double, nBuckets: Int): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val width = (hi - lo) / nBuckets
-    val bucket = least(greatest(
-        floor((col("__v").cast("double") - lo) / width), lit(0)),
-      lit(nBuckets - 1)).cast("int")
-    val wLag = Window.partitionBy("__s", "__b").orderBy("__v")
-    val b = e.withColumn("__b", bucket)
-      .withColumn("__pl", lag(col("__v"), 1).over(wLag))
-    // previous non-empty bucket's max value: ≤ nBuckets rows per split
-    val wPrev = Window.partitionBy("__s").orderBy("__b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val pb = b.groupBy(col("__s"), col("__b"))
-      .agg(max(col("__v")).as("__bm"))
-      .withColumn("__pb", max(col("__bm")).over(wPrev))
-      .select(col("__s"), col("__b"), col("__pb"))
-    val tot = e.groupBy("__s")
-      .agg(sum(col("__t")).cast(d38).as("__n"),
-        sum(col("__tr")).cast(d38).as("__nr"))
-      .filter(col("__nr") > 0)
-    b.join(broadcast(pb), Seq("__s", "__b"))
-      .withColumn("__vp", coalesce(col("__pl"), col("__pb")))
-      .join(broadcast(tot), Seq("__s"))
-      .withColumn("__seg", when(col("__vp").isNotNull,
-        abs((col("__cumr") - col("__tr")).cast(d38) * col("__n")
-          - (col("__cum") - col("__t")).cast(d38) * col("__nr"))
-          * (col("__v") - col("__vp"))).otherwise(lit(0).cast(d38)))
-      .groupBy(col("__s").as("split"))
-      .agg(max(col("__nr")).as("__nr2"), max(col("__n")).as("__nc2"),
-        sum(col("__seg")).as("__wnum"))
-      .select(col("split"), col("__nr2").cast("long").as("n_ref"),
-        col("__nc2").cast("long").as("n_cur"),
-        expr("(__wnum * 1000000) DIV (__nr2 * __nc2)").as("w1_micro"),
-        when(col("__nr2") > 0 && col("__nc2") > 0,
-          round(col("__wnum").cast("double") /
-            (col("__nr2").cast("double") * col("__nc2").cast("double")),
-            6)).as("w1"))
-  }
+  private[graft] def wassersteinReportFromPaired(e: DataFrame): DataFrame =
+    pairedReport(withPairedTotals(e, withPrevValue(e)),
+      Seq(sum(when(col("__vp").isNotNull,
+        abs(pairedGap(exclusive = true)) * (col("__v") - col("__vp")))
+        .otherwise(lit(0).cast("decimal(38,0)"))).as("__wnum")),
+      expr("(__wnum * 1000000) DIV (__nr2 * __nc2)").as("w1_micro"), "w1",
+      col("__wnum").cast("double") /
+        (col("__nr2").cast("double") * col("__nc2").cast("double")))
 
   /** Two-sample Cramér–von Mises drift report over an already-built
     * [[ecdfPaired]] frame — the L²-norm member of the drift family:
@@ -1085,27 +1116,15 @@ object Relational {
     * no window, no join beyond the broadcast totals.
     */
   private[graft] def cvmReportFromPaired(e: DataFrame): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val tot = e.groupBy("__s")
-      .agg(sum(col("__t")).cast(d38).as("__n"),
-        sum(col("__tr")).cast(d38).as("__nr"))
-      .filter(col("__nr") > 0)
-    val d = col("__cumr").cast(d38) * col("__n") -
-      col("__cum").cast(d38) * col("__nr")
-    e.join(broadcast(tot), Seq("__s"))
-      .groupBy(col("__s").as("split"))
-      .agg(max(col("__nr")).as("__nr2"), max(col("__n")).as("__nc2"),
-        sum((col("__t") + col("__tr")).cast(d38) * d * d).as("__num"))
-      .withColumn("__nn", col("__nr2") + col("__nc2"))
-      .select(col("split"), col("__nr2").cast("long").as("n_ref"),
-        col("__nc2").cast("long").as("n_cur"),
-        expr("(__num * 1000000) DIV (__nn * __nn * __nr2 * __nc2)")
-          .cast("long").as("cvm_micro"),
-        when(col("__nr2") > 0 && col("__nc2") > 0,
-          round(col("__num").cast("double") /
-            (col("__nn").cast("double") * col("__nn").cast("double") *
-              col("__nr2").cast("double") * col("__nc2").cast("double")),
-            6)).as("cvm"))
+    val d = pairedGap(exclusive = false)
+    val nn = (col("__nr2") + col("__nc2")).cast("double")
+    pairedReport(withPairedTotals(e, e),
+      Seq(sum((col("__t") + col("__tr")).cast("decimal(38,0)") * d * d)
+        .as("__num")),
+      expr("(__num * 1000000) DIV ((__nr2 + __nc2) * (__nr2 + __nc2) " +
+        "* __nr2 * __nc2)").cast("long").as("cvm_micro"), "cvm",
+      col("__num").cast("double") / (nn * nn *
+        col("__nr2").cast("double") * col("__nc2").cast("double")))
   }
 
   /** Two-sample Anderson–Darling drift report over an already-built
@@ -1128,31 +1147,19 @@ object Relational {
     * per non-reference split: `(split, n_ref, n_cur, ad_micro, ad)`.
     * Scale: one hash aggregate over the paired frame.
     */
-  private[graft] def andersonDarlingFromPaired(e: DataFrame): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val tot = e.groupBy("__s")
-      .agg(sum(col("__t")).cast(d38).as("__n"),
-        sum(col("__tr")).cast(d38).as("__nr"))
-      .filter(col("__nr") > 0)
-    e.join(broadcast(tot), Seq("__s"))
-      .withColumn("__nn", col("__n") + col("__nr"))
-      .withColumn("__bp", col("__cum").cast(d38) + col("__cumr"))
-      .withColumn("__d", col("__cumr").cast(d38) * col("__n")
-        - col("__cum").cast(d38) * col("__nr"))
-      .withColumn("__term", when(col("__bp") < col("__nn"),
+  private[graft] def andersonDarlingFromPaired(e: DataFrame): DataFrame =
+    pairedReport(withPairedTotals(e, e)
+        .withColumn("__nn", col("__n") + col("__nr"))
+        .withColumn("__bp",
+          col("__cum").cast("decimal(38,0)") + col("__cumr"))
+        .withColumn("__d", pairedGap(exclusive = false)),
+      Seq(sum(when(col("__bp") < col("__nn"),
         expr("((__t + __tr) * __d * __d * 1000000) " +
-          "DIV (__bp * (__nn - __bp))")).otherwise(lit(0).cast(d38)))
-      .groupBy(col("__s").as("split"))
-      .agg(max(col("__nr")).as("__nr2"), max(col("__n")).as("__nc2"),
-        sum(col("__term")).as("__num"))
-      .select(col("split"), col("__nr2").cast("long").as("n_ref"),
-        col("__nc2").cast("long").as("n_cur"),
-        expr("(__num) DIV (__nr2 * __nc2)").cast("long").as("ad_micro"),
-        when(col("__nr2") > 0 && col("__nc2") > 0,
-          round(col("__num").cast("double") / 1e6 /
-            (col("__nr2").cast("double") * col("__nc2").cast("double")),
-            6)).as("ad"))
-  }
+          "DIV (__bp * (__nn - __bp))"))
+        .otherwise(lit(0).cast("decimal(38,0)"))).as("__num")),
+      expr("(__num) DIV (__nr2 * __nc2)").cast("long").as("ad_micro"), "ad",
+      col("__num").cast("double") / 1e6 /
+        (col("__nr2").cast("double") * col("__nc2").cast("double")))
 
   /** Two-sample 1-D energy-distance drift report over an already-built
     * [[ecdfPaired]] frame (Székely & Rizzo 2004; in one dimension the
@@ -1162,57 +1169,26 @@ object Relational {
     * between distributions and the 1-D exact baseline for the kernel
     * two-sample tests used on embedding columns. Exactness: identical
     * segment machinery to [[wassersteinReportFromPaired]] (exclusive
-    * cums are the previous row's inclusive cums; the two-level
-    * lag-in-bucket + broadcast previous-bucket-maxima trick — no
-    * unpartitioned window), with segment mass
+    * cums are the previous row's inclusive cums; [[withPrevValue]]'s
+    * previous support value), with segment mass
     * `(v − v_prev)·d_exc²` where `d_exc = exc_r·n_c − exc_c·n_r` in
     * DECIMAL(38,0). `energy_micro = (2·Σ·10⁶) DIV (n_r²·n_c²)`;
     * magnitude bound `Σ ≤ (hi−lo)·(n_r·n_c)²` — inside 38 digits for
     * 10⁹-row splits on 10⁶-wide axes (documented, not guarded).
-    * `lo`/`hi`/`nBuckets` must be the frame's own build parameters.
     * Output per non-reference split: `(split, n_ref, n_cur,
     * energy_micro, energy)` in `valCol` units.
     */
-  private[graft] def energyDistanceFromPaired(e: DataFrame,
-      lo: Double, hi: Double, nBuckets: Int): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val width = (hi - lo) / nBuckets
-    val bucket = least(greatest(
-        floor((col("__v").cast("double") - lo) / width), lit(0)),
-      lit(nBuckets - 1)).cast("int")
-    val wLag = Window.partitionBy("__s", "__b").orderBy("__v")
-    val b = e.withColumn("__b", bucket)
-      .withColumn("__pl", lag(col("__v"), 1).over(wLag))
-    val wPrev = Window.partitionBy("__s").orderBy("__b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val pb = b.groupBy(col("__s"), col("__b"))
-      .agg(max(col("__v")).as("__bm"))
-      .withColumn("__pb", max(col("__bm")).over(wPrev))
-      .select(col("__s"), col("__b"), col("__pb"))
-    val tot = e.groupBy("__s")
-      .agg(sum(col("__t")).cast(d38).as("__n"),
-        sum(col("__tr")).cast(d38).as("__nr"))
-      .filter(col("__nr") > 0)
-    val dExc = (col("__cumr") - col("__tr")).cast(d38) * col("__n") -
-      (col("__cum") - col("__t")).cast(d38) * col("__nr")
-    b.join(broadcast(pb), Seq("__s", "__b"))
-      .withColumn("__vp", coalesce(col("__pl"), col("__pb")))
-      .join(broadcast(tot), Seq("__s"))
-      .withColumn("__seg", when(col("__vp").isNotNull,
+  private[graft] def energyDistanceFromPaired(e: DataFrame): DataFrame = {
+    val dExc = pairedGap(exclusive = true)
+    pairedReport(withPairedTotals(e, withPrevValue(e)),
+      Seq(sum(when(col("__vp").isNotNull,
         dExc * dExc * (col("__v") - col("__vp")))
-        .otherwise(lit(0).cast(d38)))
-      .groupBy(col("__s").as("split"))
-      .agg(max(col("__nr")).as("__nr2"), max(col("__n")).as("__nc2"),
-        sum(col("__seg")).as("__num"))
-      .select(col("split"), col("__nr2").cast("long").as("n_ref"),
-        col("__nc2").cast("long").as("n_cur"),
-        expr("(__num * 2000000) DIV (__nr2 * __nr2 * __nc2 * __nc2)")
-          .cast("long").as("energy_micro"),
-        when(col("__nr2") > 0 && col("__nc2") > 0,
-          round(col("__num").cast("double") * 2 /
-            (col("__nr2").cast("double") * col("__nr2").cast("double") *
-              col("__nc2").cast("double") * col("__nc2").cast("double")),
-            6)).as("energy"))
+        .otherwise(lit(0).cast("decimal(38,0)"))).as("__num")),
+      expr("(__num * 2000000) DIV (__nr2 * __nr2 * __nc2 * __nc2)")
+        .cast("long").as("energy_micro"), "energy",
+      col("__num").cast("double") * 2 /
+        (col("__nr2").cast("double") * col("__nr2").cast("double") *
+          col("__nc2").cast("double") * col("__nc2").cast("double")))
   }
 
   /** Two-sample Kuiper drift report over an already-built
@@ -1228,27 +1204,13 @@ object Relational {
     * with `v_num = max(d) + max(−d)` integral and `kuiper =
     * v_num/(n_r·n_c)` the one rounded float. One hash aggregate.
     */
-  private[graft] def kuiperReportFromPaired(e: DataFrame): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val tot = e.groupBy("__s")
-      .agg(sum(col("__t")).cast(d38).as("__n"),
-        sum(col("__tr")).cast(d38).as("__nr"))
-      .filter(col("__nr") > 0)
-    val d = col("__cumr").cast(d38) * col("__n") -
-      col("__cum").cast(d38) * col("__nr")
-    e.join(broadcast(tot), Seq("__s"))
-      .withColumn("__d", d)
-      .groupBy(col("__s").as("split"))
-      .agg(max(col("__nr")).as("__nr2"), max(col("__n")).as("__nc2"),
-        max(col("__d")).as("__dp"), max(-col("__d")).as("__dm"))
-      .select(col("split"), col("__nr2").cast("long").as("n_ref"),
-        col("__nc2").cast("long").as("n_cur"),
-        (col("__dp") + col("__dm")).cast("long").as("v_num"),
-        when(col("__nr2") > 0 && col("__nc2") > 0,
-          round((col("__dp") + col("__dm")).cast("double") /
-            (col("__nr2").cast("double") * col("__nc2").cast("double")),
-            6)).as("kuiper"))
-  }
+  private[graft] def kuiperReportFromPaired(e: DataFrame): DataFrame =
+    pairedReport(withPairedTotals(e, e)
+        .withColumn("__d", pairedGap(exclusive = false)),
+      Seq(max(col("__d")).as("__dp"), max(-col("__d")).as("__dm")),
+      (col("__dp") + col("__dm")).cast("long").as("v_num"), "kuiper",
+      (col("__dp") + col("__dm")).cast("double") /
+        (col("__nr2").cast("double") * col("__nc2").cast("double")))
 
   def keySkewReport(df: DataFrame, keys: Seq[String],
       topK: Int): DataFrame = {
@@ -2227,25 +2189,46 @@ object Relational {
     * single-partition window anywhere.
     */
   def bhFdr(df: DataFrame, idCol: String, pCol: String,
-      alphaPct: Int): DataFrame = {
+      alphaPct: Int): DataFrame =
+    stepUp(rankedP(df, idCol, pCol, alphaPct,
+      s"CAST(rank AS DOUBLE) * CAST($alphaPct AS DOUBLE) " +
+        "/ (CAST(100 AS DOUBLE) * CAST(__m AS DOUBLE))"))
+
+  /** The ranked-p frame of the p-value corrections ([[bhFdr]],
+    * [[holmBonferroni]], [[byFdr]]): the non-null `(id, p)` rows, each
+    * with its 1-based `rank` by `(p, id)` from the distributed
+    * [[PrefixScan.globalRank]], the broadcast one-row `__m` count frame
+    * (widened by `scalars`, e.g. BY's harmonic sum) and the correction's
+    * critical value `crit`, a SQL expression over those columns.
+    */
+  private def rankedP(df: DataFrame, idCol: String, pCol: String,
+      alphaPct: Int, crit: String,
+      scalars: DataFrame => DataFrame = identity): DataFrame = {
     require(alphaPct >= 1 && alphaPct < 100, "need 1 <= alphaPct < 100")
     val base = df.filter(col(pCol).isNotNull)
       .select(col(idCol).as("id"), col(pCol).cast("double").as("p"))
-    val mRow = base.agg(count(lit(1)).as("__m"))
-    val ranked = globalRank(base, Seq(col("p"), col("id")), "__gr")
+    globalRank(base, Seq(col("p"), col("id")), "__gr")
       .withColumn("rank", col("__gr").cast("int")).drop("__gr")
-      .crossJoin(broadcast(mRow))
-      .withColumn("crit", expr(s"CAST(rank AS DOUBLE) " +
-        s"* CAST($alphaPct AS DOUBLE) / (CAST(100 AS DOUBLE) " +
-        s"* CAST(__m AS DOUBLE))"))
-    val kstar = ranked.agg(coalesce(max(when(col("p") <= col("crit"),
-      col("rank"))), lit(0)).as("__kstar"))
-    ranked
-      .crossJoin(broadcast(kstar))
-      .withColumn("discovery", col("rank") <= col("__kstar"))
+      .crossJoin(broadcast(scalars(base.agg(count(lit(1)).as("__m")))))
+      .withColumn("crit", expr(crit))
+  }
+
+  /** The corrections' output `(id, p, rank, crit, discovery)` over a
+    * [[rankedP]] frame: `bound` is a one-row aggregate over it (`__k`,
+    * broadcast back) and `discovery` compares each rank to `__k`.
+    */
+  private def discoveries(ranked: DataFrame, bound: Column,
+      discovery: Column): DataFrame =
+    ranked.crossJoin(broadcast(ranked.agg(bound.as("__k"))))
+      .withColumn("discovery", discovery)
       .select(col("id"), col("p"), col("rank"), round(col("crit"), 6)
         .as("crit"), col("discovery"))
-  }
+
+  /** The step-up rule of [[bhFdr]] and [[byFdr]]: every rank up to the
+    * largest rank `k*` whose `p ≤ crit` is a discovery. */
+  private def stepUp(ranked: DataFrame): DataFrame =
+    discoveries(ranked, coalesce(max(when(col("p") <= col("crit"),
+      col("rank"))), lit(0)), col("rank") <= col("__k"))
 
   /** Holm–Bonferroni step-down multiple-testing correction (Holm 1979)
     * — the FAMILY-WISE error-rate companion of [[bhFdr]] (BH bounds the
@@ -2265,23 +2248,13 @@ object Relational {
     */
   def holmBonferroni(df: DataFrame, idCol: String, pCol: String,
       alphaPct: Int): DataFrame = {
-    require(alphaPct >= 1 && alphaPct < 100, "need 1 <= alphaPct < 100")
-    val base = df.filter(col(pCol).isNotNull)
-      .select(col(idCol).as("id"), col(pCol).cast("double").as("p"))
-    val mRow = base.agg(count(lit(1)).as("__m"))
-    val ranked = globalRank(base, Seq(col("p"), col("id")), "__gr")
-      .withColumn("rank", col("__gr").cast("int")).drop("__gr")
-      .crossJoin(broadcast(mRow))
-      .withColumn("crit", expr(s"CAST($alphaPct AS DOUBLE) " +
-        s"/ (CAST(100 AS DOUBLE) * CAST(__m - rank + 1 AS DOUBLE))"))
-    val firstFail = ranked.agg(coalesce(min(when(col("p") > col("crit"),
-        col("rank"))), max(col("rank") + 1), lit(1))
-      .as("__kfail"))
-    ranked
-      .crossJoin(broadcast(firstFail))
-      .withColumn("discovery", col("rank") < col("__kfail"))
-      .select(col("id"), col("p"), col("rank"), round(col("crit"), 6)
-        .as("crit"), col("discovery"))
+    val ranked = rankedP(df, idCol, pCol, alphaPct,
+      s"CAST($alphaPct AS DOUBLE) " +
+        "/ (CAST(100 AS DOUBLE) * CAST(__m - rank + 1 AS DOUBLE))")
+    // the first failing rank stops the walk
+    discoveries(ranked, coalesce(min(when(col("p") > col("crit"),
+        col("rank"))), max(col("rank") + 1), lit(1)),
+      col("rank") < col("__k"))
   }
 
   /** Column-profile diff between two table snapshots: for each named
@@ -2611,15 +2584,11 @@ object Relational {
         sum(col("__x") * col("__x")).cast(dec).as("__ss"))
       .withColumn("__term", expr(s"${decToDoubleSql("__s", 12)} " +
         s"* ${decToDoubleSql("__s", 12)} / CAST(__n AS DOUBLE)"))
-    g.agg(count(lit(1)).cast("int").as("k"),
+    orderedSum(g, Nil, Seq(col("__g")), col("__term"), "__t",
+        count(lit(1)).cast("int").as("k"),
         sum(col("__n")).as("n"),
         sum(col("__s")).cast(dec).as("__stot"),
-        sum(col("__ss")).cast(dec).as("__sstot"),
-        sort_array(collect_list(struct(col("__g"), col("__term"))))
-          .as("__terms"))
-      .withColumn("__t", expr(
-        "aggregate(transform(__terms, s -> s.__term), " +
-          "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"))
+        sum(col("__ss")).cast(dec).as("__sstot"))
       .withColumn("ssb", round(expr(s"__t - ${decToDoubleSql("__stot", 12)} " +
         s"* ${decToDoubleSql("__stot", 12)} / CAST(n AS DOUBLE)"), 6))
       .withColumn("ssw", round(expr(
@@ -3564,13 +3533,8 @@ object Relational {
     val ties = vGrain.agg(coalesce(sum(
       col("__c").cast(d38) * col("__c") * col("__c") - col("__c")),
       lit(0L).cast(d38)).as("__ties"))
-    byG.agg(count(lit(1)).cast("int").as("k"),
-        sum(col("__ng")).as("n"),
-        sort_array(collect_list(struct(col("__g"), col("__term"))))
-          .as("__terms"))
-      .withColumn("__t", expr(
-        "aggregate(transform(__terms, s -> s.__term), " +
-          "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"))
+    orderedSum(byG, Nil, Seq(col("__g")), col("__term"), "__t",
+        count(lit(1)).cast("int").as("k"), sum(col("__ng")).as("n"))
       .crossJoin(ties)
       .withColumn("h_stat", when(col("n") > 1, round(
         col("__t") * 12 / (col("n").cast("double") *
@@ -3603,9 +3567,9 @@ object Relational {
     * treatments present) enter, the standard requirement. Within-block
     * average ranks carried as exact doubled ranks (`r2 = 2·cum − c +
     * 1` over the block's value-grain counts — ties across treatments
-    * share the average); treatment rank sums `R2_j` and `Σ R2_j²` are
-    * exact; `χ²_F = 3·ΣR2_j²/(b·k·(k+1)) − 3·b·(k+1)` is one final
-    * double division at 6 dp. Output: ONE row
+    * share the average; [[blockRankSums]]); treatment rank sums `R2_j`
+    * and `Σ R2_j²` are exact; `χ²_F = 3·ΣR2_j²/(b·k·(k+1)) −
+    * 3·b·(k+1)` is one final double division at 6 dp. Output: ONE row
     * `(k, b, r2_sq_sum, chi2_f)`.
     *
     * Scale: block×treatment-grain aggregates with block-keyed windows
@@ -3614,6 +3578,30 @@ object Relational {
   def friedmanTest(df: DataFrame, blockCol: String, treatmentCol: String,
       valueCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
+    blockRankSums(df, blockCol, treatmentCol, valueCol)
+      .agg(count(lit(1)).cast("int").as("k"),
+        max(col("__bt")).as("b"),
+        coalesce(exactSumProd(col("__R2"), col("__R2")), lit(0L).cast(d38))
+          .as("r2_sq_sum"))
+      .withColumn("chi2_f", when(col("k") > 1 && col("b") > 0, round(
+        col("r2_sq_sum").cast("double") * 3 /
+          (col("b").cast("double") * col("k").cast("double") *
+            (col("k").cast("double") + 1)) -
+          col("b").cast("double") * (col("k").cast("double") + 1) * 3, 6)))
+      .select(col("k"), col("b"), col("r2_sq_sum").cast("long")
+        .as("r2_sq_sum"), col("chi2_f"))
+  }
+
+  /** The complete-block rank sums of [[friedmanTest]] and
+    * [[pageTrendTest]]: cells are the exact micro-means
+    * `S·10⁶ DIV c` per (block, treatment); only blocks holding all k
+    * treatments enter; within a block the cells carry exact doubled
+    * average ranks `r2 = 2·cum − c + 1` over the block's micro-mean
+    * counts (ties share the average). Output per treatment
+    * `(__t, __R2, __bt)`: the doubled rank sum and the block count.
+    */
+  private def blockRankSums(df: DataFrame, blockCol: String,
+      treatmentCol: String, valueCol: String): DataFrame = {
     val cells = df.filter(col(valueCol).isNotNull &&
         col(blockCol).isNotNull && col(treatmentCol).isNotNull)
       .groupBy(col(blockCol).as("__b"), col(treatmentCol).as("__t"))
@@ -3633,21 +3621,10 @@ object Relational {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ranked = mGrain.withColumn("__cum", sum(col("__cm")).over(w))
       .withColumn("__r2", col("__cum") * 2 - col("__cm") + 1)
-    val byT = kept.join(ranked.select(col("__b"), col("__m"), col("__r2")),
+    kept.join(ranked.select(col("__b"), col("__m"), col("__r2")),
         Seq("__b", "__m"))
       .groupBy(col("__t"))
       .agg(sum(col("__r2")).as("__R2"), count(lit(1)).as("__bt"))
-    byT.agg(count(lit(1)).cast("int").as("k"),
-        max(col("__bt")).as("b"),
-        coalesce(exactSumProd(col("__R2"), col("__R2")), lit(0L).cast(d38))
-          .as("r2_sq_sum"))
-      .withColumn("chi2_f", when(col("k") > 1 && col("b") > 0, round(
-        col("r2_sq_sum").cast("double") * 3 /
-          (col("b").cast("double") * col("k").cast("double") *
-            (col("k").cast("double") + 1)) -
-          col("b").cast("double") * (col("k").cast("double") + 1) * 3, 6)))
-      .select(col("k"), col("b"), col("r2_sq_sum").cast("long")
-        .as("r2_sq_sum"), col("chi2_f"))
   }
 
   /** Cliff's delta ordinal effect size (Cliff 1993) of every non-ref
@@ -3947,8 +3924,8 @@ object Relational {
     * ordered lexicographically (position j from a sort_array of the
     * bounded treatment set — the corpus-total broadcast pattern, no
     * global window); cells, complete-block filtering, and exact
-    * doubled within-block ranks are the [[friedmanTest]] machinery
-    * verbatim. `L2 = Σ_j j·R2_j` is exact; `z = (L2/2 − b·k(k+1)²/4)
+    * doubled within-block ranks are [[friedmanTest]]'s
+    * [[blockRankSums]]. `L2 = Σ_j j·R2_j` is exact; `z = (L2/2 − b·k(k+1)²/4)
     * / √(b·k²(k+1)(k²−1)/144)` is the one final double at 6 dp.
     * Output: ONE row `(k, b, l2_stat, z)`.
     *
@@ -3957,29 +3934,7 @@ object Relational {
     */
   def pageTrendTest(df: DataFrame, blockCol: String, treatmentCol: String,
       valueCol: String): DataFrame = {
-    val cells = df.filter(col(valueCol).isNotNull &&
-        col(blockCol).isNotNull && col(treatmentCol).isNotNull)
-      .groupBy(col(blockCol).as("__b"), col(treatmentCol).as("__t"))
-      .agg(sum(col(valueCol).cast("long")).as("__s"),
-        count(lit(1)).as("__c"))
-      .withColumn("__m", expr("__s * 1000000L DIV __c"))
-    val k1 = cells.agg(countDistinct(col("__t")).as("__k"))
-    val complete = cells.groupBy(col("__b"))
-      .agg(count(lit(1)).as("__nt"))
-      .crossJoin(k1)
-      .filter(col("__nt") === col("__k"))
-      .select(col("__b"))
-    val kept = cells.join(complete, Seq("__b"))
-    val mGrain = kept.groupBy(col("__b"), col("__m"))
-      .agg(count(lit(1)).as("__cm"))
-    val w = Window.partitionBy(col("__b")).orderBy(col("__m"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = mGrain.withColumn("__cum", sum(col("__cm")).over(w))
-      .withColumn("__r2", col("__cum") * 2 - col("__cm") + 1)
-    val byT = kept.join(ranked.select(col("__b"), col("__m"), col("__r2")),
-        Seq("__b", "__m"))
-      .groupBy(col("__t"))
-      .agg(sum(col("__r2")).as("__R2"), count(lit(1)).as("__bt"))
+    val byT = blockRankSums(df, blockCol, treatmentCol, valueCol)
     val order = byT.agg(sort_array(collect_list(col("__t"))).as("__ord"))
     byT.crossJoin(order)
       .withColumn("__j", array_position(col("__ord"), col("__t")))
@@ -4468,29 +4423,13 @@ object Relational {
     * harmonic sum — all on the tests frame, not the corpus.
     */
   def byFdr(df: DataFrame, idCol: String, pCol: String,
-      alphaPct: Int): DataFrame = {
-    require(alphaPct >= 1 && alphaPct < 100, "need 1 <= alphaPct < 100")
-    val base = df.filter(col(pCol).isNotNull)
-      .select(col(idCol).as("id"), col(pCol).cast("double").as("p"))
-    val mRow = base.agg(count(lit(1)).as("__m"))
-    val hRow = mRow.select(col("__m"),
-        explode(sequence(lit(1L), col("__m"))).as("__i"))
-      .groupBy(col("__m"))
-      .agg(sum(expr("1000000L DIV __i")).as("__h"))
-    val ranked = globalRank(base, Seq(col("p"), col("id")), "__gr")
-      .withColumn("rank", col("__gr").cast("int")).drop("__gr")
-      .crossJoin(broadcast(hRow))
-      .withColumn("crit", expr(s"CAST(rank AS DOUBLE) " +
-        s"* CAST($alphaPct AS DOUBLE) * 10000 " +
-        s"/ (CAST(__m AS DOUBLE) * CAST(__h AS DOUBLE))"))
-    val kstar = ranked.agg(coalesce(max(when(col("p") <= col("crit"),
-      col("rank"))), lit(0)).as("__kstar"))
-    ranked
-      .crossJoin(broadcast(kstar))
-      .withColumn("discovery", col("rank") <= col("__kstar"))
-      .select(col("id"), col("p"), col("rank"), round(col("crit"), 6)
-        .as("crit"), col("discovery"))
-  }
+      alphaPct: Int): DataFrame =
+    stepUp(rankedP(df, idCol, pCol, alphaPct,
+      s"CAST(rank AS DOUBLE) * CAST($alphaPct AS DOUBLE) * 10000 " +
+        "/ (CAST(__m AS DOUBLE) * CAST(__h AS DOUBLE))",
+      _.select(col("__m"), explode(sequence(lit(1L), col("__m"))).as("__i"))
+        .groupBy(col("__m"))
+        .agg(sum(expr("1000000L DIV __i")).as("__h"))))
 
   /** Disparate-impact audit of a boolean pipeline decision across
     * groups (the EEOC four-fifths rule): per group the pass rate, the

@@ -7,7 +7,7 @@ import graft.functions.PolyHash.polyhash
 import graft.functions.TokenNgrams.tokenNgrams
 import graft.engine.Pins
 import graft.engine.PrefixScan.globalCumSum
-import graft.engine.Relational.exactSumProd
+import graft.engine.Relational.{exactSumProd, orderedSum}
 
 /** Corpus-level curation operators a large-scale training-data run needs
   * beyond per-document filters: cross-document line deduplication (the
@@ -887,13 +887,10 @@ object Curation {
       .withColumn("__t", expr("CASE WHEN __varnum > 0 THEN " +
         "CAST(abs(__fa - __fb) AS DOUBLE) * CAST(__d AS DOUBLE) " +
         "/ sqrt(CAST(__varnum AS DOUBLE)) ELSE CAST(0.0 AS DOUBLE) END"))
-    terms.groupBy(col("__sa"), col("__sb"))
-      .agg(count(lit(1)).as("m_words"),
-        sort_array(collect_list(struct(col("__w"), col("__t"))))
-          .as("__terms"))
-      .withColumn("delta", round(expr(
-        "aggregate(transform(__terms, s -> s.__t), CAST(0.0 AS DOUBLE), " +
-          "(acc, x) -> acc + x) / CAST(m_words AS DOUBLE)"), 6))
+    orderedSum(terms, Seq(col("__sa"), col("__sb")), Seq(col("__w")),
+        col("__t"), "__tsum", count(lit(1)).as("m_words"))
+      .withColumn("delta",
+        round(col("__tsum") / col("m_words").cast("double"), 6))
       .select(col("__sa").as("source_a"), col("__sb").as("source_b"),
         col("m_words"), col("delta"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Pins
+import graft.engine.Relational.orderedSum
 
 /** Evaluation operators — the quality-measurement faces a training-data
   * pipeline runs AGAINST its own artifacts: clustering quality
@@ -286,13 +287,9 @@ object Eval {
       .select(col("query_id"), col("__a"), col("__b"),
         (lit(1.0) - Similarity.cosine(col("__va"), col("__vb")))
           .as("__d"))
-    val perQuery = pairs
-      .groupBy(col("query_id"))
-      .agg(sort_array(collect_list(struct(col("__a"), col("__b"),
-        col("__d")))).as("__arr"))
-      .withColumn("__sum", expr("aggregate(transform(__arr, " +
-        "s -> s.__d), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"))
-      .withColumn("__np", size(col("__arr")))
+    val perQuery = orderedSum(pairs, Seq(col("query_id")),
+      Seq(col("__a"), col("__b")), col("__d"), "__sum",
+      count(lit(1)).as("__np"))
     val counts = l.groupBy(col("query_id"))
       .agg(countDistinct(col("item_id")).cast("int").as("n_items"))
     val coverage = l.agg(countDistinct(col("item_id")).as("__rec"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.PolyHash.polyhash
 import graft.engine.Pins
+import graft.engine.Relational.orderedSum
 
 /** Data-selection operators: the published techniques a training run uses
   * to CHOOSE documents, on top of the dedup/quality filters —
@@ -42,22 +43,6 @@ object Selection {
       .drop("__w")
       .groupBy(col(idCol) +: col("__b") +: extra.map(e => col(e._2)): _*)
       .agg(count(lit(1)).as("__n"))
-
-  /** Deterministic left fold of `valCol` over rows grouped by `grpCols`,
-    * summed in ascending `ordCol` order: collect the (order, value)
-    * pairs, sort, fold. The arrays are bucket-bounded (≤ nBuckets
-    * entries), so this is per-group constant work — the price of an
-    * IEEE sum whose order does not depend on partitioning.
-    */
-  private def orderedSum(df: DataFrame, grpCols: Seq[String],
-      ordCol: String, valCol: String, outCol: String,
-      extraAggs: Seq[Column] = Nil): DataFrame =
-    df.groupBy(grpCols.map(col): _*)
-      .agg(array_sort(collect_list(struct(col(ordCol).as("o"),
-        col(valCol).as("v")))).as("__cs"), extraAggs: _*)
-      .withColumn(outCol, aggregate(col("__cs"), lit(0.0d),
-        (acc, x) => acc + x.getField("v")))
-      .drop("__cs")
 
   /** DSIR-style importance weights: per-document log importance
     * `log p_target(doc) − log p_raw(doc)` under hashed-unigram bag
@@ -106,8 +91,8 @@ object Selection {
       .withColumn("__c", col("__n").cast("double") * col("__lr"))
     // token total rides the SAME doc-grain aggregate as the fold — a
     // separate count + id-keyed join would shuffle the corpus twice
-    val scored = orderedSum(contrib, Seq(idCol), "__b", "__c", "__s",
-      extraAggs = Seq(sum(col("__n")).as("__nt")))
+    val scored = orderedSum(contrib, Seq(col(idCol)), Seq(col("__b")),
+      col("__c"), "__s", sum(col("__n")).as("__nt"))
     docs.select(col(idCol))
       .join(scored, Seq(idCol), "left")
       .select(col(idCol),
@@ -174,7 +159,8 @@ object Selection {
       held.join(broadcast(model.withColumnRenamed("__l", "__pl")),
           Seq("__b"))
         .withColumn("__c2", col("__n").cast("double") * col("__ll")),
-      Seq(idCol, "__true", "__pl"), "__b", "__c2", "__s")
+      Seq(col(idCol), col("__true"), col("__pl")), Seq(col("__b")),
+      col("__c2"), "__s")
     val scoredAll = folded
       .join(broadcast(priors.withColumnRenamed("__l", "__pl")),
         Seq("__pl"))
@@ -374,11 +360,8 @@ object Selection {
     // all-sigma-zero degenerates Neyman to PROPORTIONAL allocation
     // (equal variances make any split optimal; n-proportional is the
     // canonical choice and keeps the seat-dealing total-correct)
-    val tot = g.agg(sort_array(collect_list(struct(col("stratum"),
-        col("__w")))).as("__arr"), sum(col("n")).as("__ntot"))
-      .select(expr("aggregate(transform(__arr, s -> s.__w), " +
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)").as("__wtot"),
-        col("__ntot"))
+    val tot = orderedSum(g, Nil, Seq(col("stratum")), col("__w"), "__wtot",
+      sum(col("n")).as("__ntot"))
     val shared = g.crossJoin(broadcast(tot))
       .withColumn("__share", expr(s"CASE WHEN __wtot > 0 THEN " +
         s"CAST($budget AS DOUBLE) * __w / __wtot " +

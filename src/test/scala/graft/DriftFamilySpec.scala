@@ -50,8 +50,7 @@ class DriftFamilySpec extends SparkSpec {
     // s1: seg at v=5 only: d_exc=2 -> 4*5 = 20 -> E = 2*20/16 = 2.5
     // s2 (unit shift of ref): E = 2*(0.25 + 0.25) = 1.0
     for (nb <- Seq(1, 4, 64)) {
-      val r = Relational.energyDistanceFromPaired(paired(nb),
-          lo = 0d, hi = 12d, nBuckets = nb)
+      val r = Relational.energyDistanceFromPaired(paired(nb))
         .collect().map(x => x.getString(0) -> x).toMap
       assert(r("s1").getLong(3) == 2500000L, s"nb=$nb")
       assert(r("s1").getDouble(4) == 2.5)
@@ -88,15 +87,45 @@ class DriftFamilySpec extends SparkSpec {
       .forall(r => r.getLong(3) == 0L && r.getDouble(4) == 0.0))
     assert(Relational.andersonDarlingFromPaired(e).collect()
       .forall(_.getLong(3) == 0L))
-    assert(Relational.energyDistanceFromPaired(e, 0d, 8d, 4).collect()
+    assert(Relational.energyDistanceFromPaired(e).collect()
       .forall(_.getLong(3) == 0L))
     assert(Relational.kuiperReportFromPaired(e).collect()
       .forall(_.getLong(3) == 0L))
     val eMiss = Relational.ecdfPaired(same, "s", "zzz", "v", 0d, 8d, 4)
     assert(Relational.cvmReportFromPaired(eMiss).count() == 0)
     assert(Relational.andersonDarlingFromPaired(eMiss).count() == 0)
-    assert(Relational.energyDistanceFromPaired(eMiss, 0d, 8d, 4)
+    assert(Relational.energyDistanceFromPaired(eMiss)
       .count() == 0)
     assert(Relational.kuiperReportFromPaired(eMiss).count() == 0)
+  }
+
+  test("drift family: an empty frame, an all-NULL value column and a " +
+      "single row give typed empty reports") {
+    val inputs = Seq(
+      "empty" -> Seq.empty[(String, Long)].toDF("s", "v"),
+      "all-NULL" -> Seq(("s0", None: Option[Long]), ("s1", None))
+        .toDF("s", "v"),
+      "single row" -> Seq(("s1", 4L)).toDF("s", "v"))
+    val reports: Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      "d_num" -> Relational.ksReportFromPaired,
+      "w1_micro" -> Relational.wassersteinReportFromPaired,
+      "cvm_micro" -> Relational.cvmReportFromPaired,
+      "ad_micro" -> Relational.andersonDarlingFromPaired,
+      "energy_micro" -> Relational.energyDistanceFromPaired,
+      "v_num" -> Relational.kuiperReportFromPaired)
+    for ((what, df) <- inputs) {
+      val e = Relational.ecdfPaired(df, "s", "s0", "v", 0d, 8d, 4)
+      for ((num, report) <- reports) {
+        val out = report(e)
+        assert(out.collect().isEmpty, s"$num on $what")
+        assert(out.schema.fields.toSeq.take(4).map(f =>
+            f.name -> f.dataType.typeName) == Seq("split" -> "string",
+          "n_ref" -> "long", "n_cur" -> "long", num -> "long"),
+          s"$num on $what")
+      }
+      val mw = Relational.mannWhitneyReport(df, "s", "s0", "v", 0d, 8d, 4)
+      assert(mw.collect().isEmpty, s"mannWhitney on $what")
+    }
   }
 }

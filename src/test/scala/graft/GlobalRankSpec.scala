@@ -93,6 +93,32 @@ class GlobalRankSpec extends SparkSpec {
       .select("rk").as[Long].collect().toSeq == Seq(1L))
   }
 
+  test("globalRank over a hash-aggregated upstream whose scan reader " +
+      "keeps a column the offset reader prunes (the q287 shape): both " +
+      "readers see one set of range boundaries") {
+    // ids 1..n out of a distinct over exploded edges, plus a payload
+    // only the scan reader outputs. Unpinned, the offset reader's pruned
+    // range exchange differs from the scan reader's, so AQE cannot reuse
+    // one for the other; each samples its own boundaries (past the
+    // per-partition sample size they differ run to run) and offsets land
+    // on the wrong partitions.
+    val n = 20000L
+    val nodes = spark.range(n)
+      .select(explode(array(col("id"), col("id") * 7919 % n)).as("id"))
+      .distinct()
+      .select((col("id") + 1).as("id"))
+      .withColumn("pad", concat(lit("x"), col("id").cast("string")))
+    for (parts <- Seq(3, 13)) atParts(parts) {
+      assertSpread(nodes, Seq(col("id")), parts)
+      val got = PrefixScan.globalRank(nodes, Seq(col("id")), "rk")
+        .select("id", "rk", "pad").as[(Long, Long, String)].collect()
+      assert(got.length == n, s"parts=$parts")
+      val wrong = got.count { case (id, rk, pad) =>
+        rk != id || pad != s"x$id" }
+      assert(wrong == 0, s"parts=$parts: $wrong of $n ranks off")
+    }
+  }
+
   test("globalCumSum == single-partition running sum at every " +
       "tie-block boundary, and total equals the plain sum") {
     val rnd = new scala.util.Random(7)

@@ -45,6 +45,29 @@ class KSampleWaveSpec extends SparkSpec {
     assert(rc.getAs[Long]("r2_sq_sum") == (2L * 2 + 4 * 4 + 6 * 6))
   }
 
+  test("friedman, page, kruskal, anova: an empty frame, an all-NULL " +
+      "value column and a single row give one row with a NULL statistic") {
+    val inputs = Seq(
+      "empty" -> Seq.empty[(String, String, Long)].toDF("b", "t", "v"),
+      "all-NULL" -> Seq(("b1", "t1", None: Option[Long]),
+        ("b1", "t2", None)).toDF("b", "t", "v"),
+      "single row" -> Seq(("b1", "t1", 5L)).toDF("b", "t", "v"))
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      "chi2_f" -> (Relational.friedmanTest(_, "b", "t", "v")),
+      "z" -> (Relational.pageTrendTest(_, "b", "t", "v")),
+      "h_stat" -> (Relational.kruskalWallis(_, "t", "v")),
+      "f_stat" -> (Relational.anovaF(_, "t", "v")))
+    for ((what, df) <- inputs; (stat, op) <- ops) {
+      val rows = op(df).collect()
+      assert(rows.length == 1, s"$stat on $what")
+      assert(rows.head.isNullAt(rows.head.fieldIndex(stat)),
+        s"$stat on $what")
+      assert(rows.head.getAs[Int]("k") == (if (what == "single row") 1
+        else 0), s"$stat on $what")
+    }
+  }
+
   test("cliffsDelta: full dominance +1/-1, partial overlap 0.25, " +
       "ties contribute zero") {
     val df = Seq(

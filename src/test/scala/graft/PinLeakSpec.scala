@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
-import graft.engine.Graph
+import graft.engine.{Graph, Relational}
 import graft.llm.{Dedup, Lexical}
 
 /** No operator leaves pinned blocks behind: for each call, the cached
@@ -31,7 +31,37 @@ class PinLeakSpec extends SparkSpec {
   private def communities = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 2L),
     (5L, 2L), (6L, 2L), (7L, 2L)).toDF("n", "c")
 
+  private def drift = Seq(("s0", 0L), ("s0", 10L), ("s1", 5L), ("s1", 10L),
+    ("s2", 1L), ("s2", 11L)).toDF("s", "v")
+
+  private def paired =
+    Relational.ecdfPaired(drift, "s", "s0", "v", 0d, 12d, 4)
+
+  private def blocks = Seq(("b1", "t1", 1L), ("b1", "t2", 2L),
+    ("b2", "t1", 3L), ("b2", "t2", 1L), ("b3", "t1", 4L)).toDF("b", "t", "v")
+
+  private def pvals = Seq((1L, 0.01), (2L, 0.04), (3L, 0.04), (4L, 0.3))
+    .toDF("id", "p")
+
   private val operators: Seq[(String, () => DataFrame)] = Seq(
+    "ksReportFromPaired" -> (() => Relational.ksReportFromPaired(paired)),
+    "mannWhitneyReport" -> (() =>
+      Relational.mannWhitneyReport(drift, "s", "s0", "v", 0d, 12d, 4)),
+    "wassersteinReportFromPaired" -> (() =>
+      Relational.wassersteinReportFromPaired(paired)),
+    "cvmReportFromPaired" -> (() => Relational.cvmReportFromPaired(paired)),
+    "andersonDarlingFromPaired" -> (() =>
+      Relational.andersonDarlingFromPaired(paired)),
+    "energyDistanceFromPaired" -> (() =>
+      Relational.energyDistanceFromPaired(paired)),
+    "kuiperReportFromPaired" -> (() =>
+      Relational.kuiperReportFromPaired(paired)),
+    "friedmanTest" -> (() => Relational.friedmanTest(blocks, "b", "t", "v")),
+    "pageTrendTest" -> (() =>
+      Relational.pageTrendTest(blocks, "b", "t", "v")),
+    "bhFdr" -> (() => Relational.bhFdr(pvals, "id", "p", 20)),
+    "holmBonferroni" -> (() => Relational.holmBonferroni(pvals, "id", "p", 20)),
+    "byFdr" -> (() => Relational.byFdr(pvals, "id", "p", 20)),
     "skipgramPmi" -> (() =>
       Lexical.skipgramPmi(docs, "doc_id", "text", 2, 1L, 5)),
     "duplicateClusters" -> (() =>

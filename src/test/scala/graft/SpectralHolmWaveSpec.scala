@@ -36,6 +36,43 @@ class SpectralHolmWaveSpec extends SparkSpec {
     assert(bh.values.forall(identity))
   }
 
+  test("bhFdr, holmBonferroni, byFdr: empty, all-NULL and one-row " +
+      "worklists; the three rank one frame identically (NULL p dropped, " +
+      "ties broken by id)") {
+    val corrections: Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      "bhFdr" -> (Relational.bhFdr(_, "id", "p", 20)),
+      "holmBonferroni" -> (Relational.holmBonferroni(_, "id", "p", 20)),
+      "byFdr" -> (Relational.byFdr(_, "id", "p", 20)))
+    val empty = Seq.empty[(Long, Double)].toDF("id", "p")
+    // repartitioned, so the optimizer cannot fold the frame empty
+    val allNull = Seq((1L, None: Option[Double]), (2L, None)).toDF("id", "p")
+      .repartition(2)
+    val one = Seq((7L, 0.01)).toDF("id", "p")
+    val tied = Seq((1L, Some(0.03)), (2L, None), (4L, Some(0.01)),
+      (3L, Some(0.01))).toDF("id", "p")
+    val aqe = "spark.sql.adaptive.enabled"
+    for ((name, fix) <- corrections) {
+      // with AQE on and off: BY's harmonic sum over m = 0 would divide
+      // by zero if its one-row frame were evaluated
+      for (on <- Seq("true", "false")) {
+        val before = spark.conf.get(aqe)
+        spark.conf.set(aqe, on)
+        try {
+          assert(fix(empty).collect().isEmpty, s"$name on empty, AQE $on")
+          assert(fix(allNull).collect().isEmpty,
+            s"$name on all-NULL, AQE $on")
+        } finally spark.conf.set(aqe, before)
+      }
+      // m = 1: every correction's crit is alpha itself
+      assert(fix(one).collect().map(r => (r.getLong(0), r.getInt(2),
+        r.getDouble(3), r.getBoolean(4))).toSeq == Seq((7L, 1, 0.2, true)),
+        s"$name on one row")
+      assert(fix(tied).collect().map(r => r.getLong(0) -> r.getInt(2))
+        .toMap == Map(3L -> 1, 4L -> 2, 1L -> 3), s"$name ranks")
+    }
+  }
+
   test("powerIteration: axis-aligned corpus converges to the heavy " +
       "axis; halving tail each round; lambda = dominant mass") {
     // two rows on dim 0, one on dim 1: A = diag(2e12, 1e12)

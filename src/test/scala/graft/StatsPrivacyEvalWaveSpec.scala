@@ -14,8 +14,7 @@ class StatsPrivacyEvalWaveSpec extends SparkSpec {
   private def wassersteinReport(df: org.apache.spark.sql.DataFrame,
       ref: String, lo: Double, hi: Double, nBuckets: Int) =
     Relational.wassersteinReportFromPaired(
-      Relational.ecdfPaired(df, "s", ref, "v", lo, hi, nBuckets),
-      lo, hi, nBuckets)
+      Relational.ecdfPaired(df, "s", ref, "v", lo, hi, nBuckets))
 
   test("wassersteinReport: hand ECDF areas, shift equals distance, " +
       "partition-invariant across bucket widths") {

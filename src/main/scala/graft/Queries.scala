@@ -3,6 +3,7 @@ package graft
 import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.engine._
 
 /** The driver-contract query registry: one entry per implemented operator
@@ -23,50 +24,52 @@ object Queries {
   type QFn = (SparkSession, String) => DataFrame
   final case class Spec(name: String, fn: QFn, oracle: Option[String])
 
-  /** Table loader. `events.ts` has shipped in two vintages: parquet
-    * TIMESTAMP(NANOS) (Spark 4 reads it only as a raw long via the
-    * nanosAsLong legacy flag — convert back with integer division; ns
-    * epochs exceed 2^53, so a double-division cast would corrupt them)
-    * and TIMESTAMP(MICROS) with isAdjustedToUTC=false (read as an LTZ
-    * instant via inferTimestampNTZ=false: the session TZ is pinned UTC
-    * engine-wide, so the stored micros surface unchanged — same value
-    * and type as the nanos derivation, and native parquet range
-    * pushdown works with no post-scan conversion to see through).
+  /** Table loader. Each table's schema is inferred once per session
+    * (one footer-read job) and memoized with [[Pins.schema]]; every read
+    * after that supplies it, `spark.read.schema(known).parquet(path)`,
+    * and launches no job while the plan is built. A table rewritten in
+    * place (new length or modification time) is inferred again.
     *
-    * Both flags are SCOPED to this one read — saved, set, and restored
-    * around the `spark.read` call — so loading `events` cannot change
-    * how NTZ/nanos timestamp columns in other tables read later in the
-    * same session are typed (no load-order dependence). Restoring
-    * immediately after `spark.read.parquet` is safe because the flags
-    * act at schema-inference time: the relation's resolved schema is
-    * captured in the returned DataFrame and governs the later lazy scan
-    * (verified empirically — post-restore actions return correct LTZ
-    * values while a fresh read reverts to NTZ typing).
+    * `events.ts` has shipped in two vintages: parquet TIMESTAMP(NANOS)
+    * (Spark 4 reads it only as a raw long via the nanosAsLong legacy
+    * flag — convert back with integer division; ns epochs exceed 2^53,
+    * so a double-division cast would corrupt them) and TIMESTAMP(MICROS)
+    * with isAdjustedToUTC=false (read as an LTZ instant via
+    * inferTimestampNTZ=false: the session TZ is pinned UTC engine-wide,
+    * so the stored micros surface unchanged — same value and type as
+    * the nanos derivation, and native parquet range pushdown works with
+    * no post-scan conversion to see through).
+    *
+    * Both flags act at schema-inference time only, so they are set
+    * around the inference read of `events` alone — saved, set, and
+    * restored — and loading `events` cannot change how NTZ/nanos
+    * timestamp columns in other tables are typed (no load-order
+    * dependence). A supplied schema already fixes the type of `ts`, so
+    * the memoized reads need neither flag.
     */
-  def T(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      val prevNanos =
-        spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      val prevNtz =
-        spark.conf.getOption("spark.sql.parquet.inferTimestampNTZ.enabled")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      try {
-        val raw = spark.read.parquet(s"$dir/$name.parquet")
-        raw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-          case _ => raw
-        }
-      } finally {
-        def restore(key: String, prev: Option[String]): Unit = prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => spark.conf.unset(key)
-        }
-        restore("spark.sql.legacy.parquet.nanosAsLong", prevNanos)
-        restore("spark.sql.parquet.inferTimestampNTZ.enabled", prevNtz)
-      }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+  def T(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    def infer = spark.read.parquet(path).schema
+    val known = Pins.schema(spark, path)(
+      if (name == "events") withEventsFlags(spark)(infer) else infer)
+    val raw = spark.read.schema(known).parquet(path)
+    if (name == "events" && known("ts").dataType == LongType)
+      raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    else raw
+  }
+
+  /** Run `body` with the two `events` vintage flags set. */
+  private def withEventsFlags[A](spark: SparkSession)(body: => A): A = {
+    val flags = Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+    val prev = flags.map { case (k, _) => k -> spark.conf.getOption(k) }
+    flags.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 
   private def tmp(name: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_sink/$name"
@@ -233,7 +236,7 @@ object Queries {
         T(s, d, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
           col("l_extendedprice").as("price_f32")), Seq("price_f32"))
       Sinks.writeCompressed(out, tmp("snk1"), Nil)
-      s.read.parquet(tmp("snk1"))
+      s.read.schema(out.schema).parquet(tmp("snk1"))
     },
     Some("""SELECT l_orderkey, l_linenumber,
         CAST(l_extendedprice AS REAL) AS price_f32 FROM lineitem"""))
@@ -253,10 +256,10 @@ object Queries {
   /** OP-SNK-3 — partitioned chunk sink + re-read via partition discovery. */
   private val snk3 = Spec("q06_snk3_partitioned_sink",
     (s, d) => {
-      Sinks.writePartitioned(T(s, d, "lineitem").select(col("l_orderkey"),
-        col("l_quantity"), col("l_returnflag")), tmp("snk3"),
-        Seq("l_returnflag"))
-      Sinks.readPartitioned(s, tmp("snk3"))
+      val out = T(s, d, "lineitem").select(col("l_orderkey"),
+        col("l_quantity"), col("l_returnflag"))
+      Sinks.writePartitioned(out, tmp("snk3"), Seq("l_returnflag"))
+      Sinks.readPartitioned(s, tmp("snk3"), out.schema)
         .groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"),
           max(col("l_quantity")).as("max_qty"))
     },

@@ -3,12 +3,14 @@ package graft.engine
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** The engine's one caching policy. A frame that more than one reader
   * scans is PINNED: materialized into executor blocks by an eager local
@@ -33,7 +35,8 @@ import org.apache.spark.sql.internal.SQLConf
   * Spark's `ContextCleaner`, which drops the blocks once the frame is
   * garbage. A [[memo]] entry outlives both: a frame several registry
   * queries stage identically is built once, outside the query's scope,
-  * and this object holds it for the rest of the JVM.
+  * and this object holds it for the rest of the JVM. So does a
+  * [[schema]] entry, which holds a table's inferred schema, no data.
   *
   * This file is the only place in `src/main` that calls Spark's cache
   * API; `PinGateSpec` fails the build on a raw call anywhere else
@@ -122,6 +125,32 @@ private[graft] object Pins {
       case (None, null) => memos.getOrElseUpdate(key, build)
       case (None, _) =>
         within(s, new Query, rddIds)(memos.getOrElseUpdate(key, build))
+    }
+  }
+
+  private val schemas =
+    TrieMap.empty[(SparkSession, String), ((Long, Long), StructType)]
+
+  /** The schema of the file or directory at `path`: `infer` runs once
+    * per (session, path) and its result is returned by every later call
+    * while the path's length and modification time stay the same. Those
+    * two come from one driver-side stat, no job; when either changes
+    * (the table was rewritten in place) `infer` runs again and its
+    * result replaces the entry. Only `StructType`s are held, never a
+    * frame, so an entry keeps no data alive.
+    */
+  def schema(s: SparkSession, path: String)(
+      infer: => StructType): StructType = {
+    val p = new Path(path)
+    val st = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    val stamp = (st.getLen, st.getModificationTime)
+    schemas.get((s, path)) match {
+      case Some((`stamp`, known)) => known
+      case _ =>
+        val inferred = infer
+        schemas.put((s, path), (stamp, inferred))
+        inferred
     }
   }
 

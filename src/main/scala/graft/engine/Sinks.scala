@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.FloatType
+import org.apache.spark.sql.types.{FloatType, StructType}
 
 /** OP-SNK-1/2/3 — sinks. The reference's NetCDF writers map to Parquet
   * (columnar, compressed, splittable — the lake format the engine's scans
@@ -42,8 +42,15 @@ object Sinks {
       partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
-  def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Read a [[writePartitioned]] directory back with `schema`, the schema
+    * of the written frame: a partition column keeps its written type (a
+    * string region `"01"` does not come back as the int 1, as directory
+    * name inference would type it) and no footer-read job runs. Data
+    * columns come first, then the partition columns.
+    */
+  def readPartitioned(spark: SparkSession, path: String,
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
 
   /** OP-SNK-4 — JSONL sink/source: the training-data interchange format
     * (one JSON object per line — what tokenizer and trainer tooling

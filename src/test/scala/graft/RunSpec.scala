@@ -111,6 +111,22 @@ class RunSpec extends SparkSpec {
     }
   }
 
+  test("after Harness.warm no query builds a schema-inference job; the " +
+      "sink round trips build only their write") {
+    Harness.warm(spark, sf001)
+    val want = Seq("q01_src1_scan_drop" -> 0, "q02_src2_csv_badlines" -> 0,
+      "q56_dedup_minhash_sig" -> 0, "q58_dedup_simhash" -> 0,
+      "q160_group_regression" -> 0, "q329_partial_corr" -> 0,
+      "q04_snk1_f32_sink" -> 1, "q06_snk3_partitioned_sink" -> 1)
+    // a sink that runs nothing: the record's jobs are the build's
+    val got = want.map { case (name, _) =>
+      val r = Run(spark, sf001, name, 1)(_ => ())
+      assert(r.ok, r.error)
+      name -> r.jobs
+    }
+    assert(got == want, "build jobs per query")
+  }
+
   test("jsonString escapes quotes, backslashes and control characters") {
     assert(Run.jsonString("a\"b\\c\n\t\u0001") ==
       "\"a\\\"b\\\\c\\n\\t\\u0001\"")

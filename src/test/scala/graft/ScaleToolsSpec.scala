@@ -106,6 +106,19 @@ class ScaleToolsSpec extends SparkSpec {
     }
   }
 
+  test("readPartitioned: a numeric-looking string partition keeps its " +
+      "written type") {
+    import spark.implicits._
+    import graft.engine.Sinks
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_sink/partitioned_spec"
+    val df = Seq((1L, "01"), (2L, "2"), (3L, "10")).toDF("k", "region")
+    Sinks.writePartitioned(df, dir, Seq("region"))
+    val back = Sinks.readPartitioned(spark, dir, df.schema)
+    assert(back.schema.simpleString == "struct<k:bigint,region:string>")
+    assert(back.as[(Long, String)].collect().toSet ==
+      Set((1L, "01"), (2L, "2"), (3L, "10")))
+  }
+
   test("nearestSpatialJoin: argmin matches brute force, radius respected") {
     import spark.implicits._
     import graft.engine.Geometry
